@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst squared L2 distance between two `array<double>`
   * columns: Σ(x_i − y_i)² accumulated strictly left-to-right —
@@ -14,13 +15,25 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * array TWICE per row (higher-order functions do no CSE across the
   * two ArrayDotProduct references). Participates in whole-stage
   * codegen as one tight primitive loop, like ArrayDotProduct.
-  * Mismatched lengths fail loudly (the zip_with form padded with
-  * nulls and crashed on the unboxing — equally loud, less clear).
+  * Mismatched lengths and null elements fail loudly (the zip_with
+  * form padded with nulls and crashed on the unboxing — equally loud,
+  * less clear); non-double arrays are rejected at analysis time, like
+  * NearestCell / ProbeCells / CentroidErr2.
   */
 case class ArrayL2Dist2(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"ArrayL2Dist2 requires (array<double>, array<double>), got " +
+          s"(${l.catalogString}, ${r.catalogString}) " +
+          "(cast with VectorFunctions.toDouble)")
+    }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -31,6 +44,9 @@ case class ArrayL2Dist2(left: Expression, right: Expression)
     var s = 0.0
     var i = 0
     while (i < n) {
+      // a null element reads as garbage through getDouble — fail loudly
+      if (x.isNullAt(i) || y.isNullAt(i)) throw new IllegalArgumentException(
+        s"ArrayL2Dist2: null element at index $i")
       val t = x.getDouble(i) - y.getDouble(i)
       s += t * t
       i += 1
@@ -52,6 +68,10 @@ case class ArrayL2Dist2(left: Expression, right: Expression)
         }
         double $s = 0.0;
         for (int $i = 0; $i < $n; $i++) {
+          if ($x.isNullAt($i) || $y.isNullAt($i)) {
+            throw new IllegalArgumentException(
+              "ArrayL2Dist2: null element at index " + $i);
+          }
           double $t = $x.getDouble($i) - $y.getDouble($i);
           $s += $t * $t;
         }

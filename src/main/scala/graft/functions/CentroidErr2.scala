@@ -56,14 +56,6 @@ case class CentroidErr2(left: Expression, right: Expression,
     val v = a.asInstanceOf[ArrayData]
     val code = b match { case i: Int => i.toLong; case l: Long => l }
     val d = v.numElements()
-    var z = 0
-    while (z < d) {
-      // null components read as garbage through getDouble — fail loudly
-      // (the literal form NPE'd here; in-repo vectors carry no nulls)
-      if (v.isNullAt(z)) throw new IllegalArgumentException(
-        s"CentroidErr2: null vector component at index $z")
-      z += 1
-    }
     var idx = -1
     var i = 0
     while (idx < 0 && i < cidArr.length) {
@@ -75,6 +67,15 @@ case class CentroidErr2(left: Expression, right: Expression,
       val c = centArr(idx)
       if (c.length != d) throw new IllegalArgumentException(
         s"CentroidErr2: dims mismatch ${c.length} vs $d")
+      // null components read as garbage through getDouble — fail loudly
+      // (the literal form NPE'd here); scanned only after the code
+      // matched, so an unmatched code stays null like the when-chain
+      var z = 0
+      while (z < d) {
+        if (v.isNullAt(z)) throw new IllegalArgumentException(
+          s"CentroidErr2: null vector component at index $z")
+        z += 1
+      }
       var s = 0.0
       var j = 0
       while (j < d) { val t = v.getDouble(j) - c(j); s += t * t; j += 1 }
@@ -96,12 +97,6 @@ case class CentroidErr2(left: Expression, right: Expression,
       val z = ctx.freshName("z")
       s"""
         int $d = $v.numElements();
-        for (int $z = 0; $z < $d; $z++) {
-          if ($v.isNullAt($z)) {
-            throw new IllegalArgumentException(
-              "CentroidErr2: null vector component at index " + $z);
-          }
-        }
         int $idx = -1;
         for (int $i = 0; $idx < 0 && $i < $cidsRef.length; $i++) {
           if (((long) $cidsRef[$i]) == ((long) $code)) $idx = $i;
@@ -113,6 +108,12 @@ case class CentroidErr2(left: Expression, right: Expression,
           if ($c.length != $d) {
             throw new IllegalArgumentException(
               "CentroidErr2: dims mismatch " + $c.length + " vs " + $d);
+          }
+          for (int $z = 0; $z < $d; $z++) {
+            if ($v.isNullAt($z)) {
+              throw new IllegalArgumentException(
+                "CentroidErr2: null vector component at index " + $z);
+            }
           }
           double $s = 0.0;
           for (int $j = 0; $j < $d; $j++) {

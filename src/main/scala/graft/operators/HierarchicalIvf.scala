@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 /** Two-level (hierarchical) centroid index — the documented escape
   * hatch past flat assignment's ~10⁶-cell ceiling (SURVEY §2.4,
   * NearestCell scaladoc; r16 judge "missing #2"): a COARSE router of
-  * `kCoarse` cells (literal argmin — a few hundred cells by
-  * contract) over per-coarse-cell FINE centroid tables of
+  * `kCoarse` cells (a full NearestCell scan per row — a few hundred
+  * cells by contract) over per-coarse-cell FINE centroid tables of
   * `kFinePerCell` cells each, assigned by the codegen'd
   * [[graft.functions.NearestCellRouted]]. Total cells k = kc·kf with
   * per-row cost kc + kf FLOP terms instead of k: at k = 4096 (64×64)
@@ -94,7 +94,9 @@ object HierarchicalIvf {
       dims: Int = 64, sampleRate: Double = -1.0,
       learnBase: Long = 0L): HierModel = {
     require(kCoarse >= 1 && kCoarse <= IvfIndex.LiteralKMax,
-      s"coarse router must stay literal-argmin sized (≤ ${IvfIndex.LiteralKMax})")
+      s"kCoarse must be in [1, ${IvfIndex.LiteralKMax}]: every row scans all " +
+        "coarse centroids before its fine table (per-row cost kCoarse + " +
+        "kFinePerCell), so grow total cells through kFinePerCell")
     require(kFinePerCell >= 1)
     val all = df.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
     val rate =

@@ -4,12 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of the maximal-repeat artifact — the d24
-  * member of the ingest-lifecycle family (SURVEY §2.3): a growing
-  * corpus must fold new docs into the exact-substring report without
-  * re-running the window self-join over 100 TB, exactly as
-  * `IncrementalPassages` maintains d11's pair counts. Repeats are
-  * STRUCTURAL (runs on a diagonal), not counts, so the merge has a
-  * different repair shape — but the same monotonicity makes it exact:
+  * member of the ingest-lifecycle family (SURVEY §2.3). Repeats are
+  * STRUCTURAL (runs on a diagonal), not counts, so the repair differs
+  * from d11's decrements, but the same monotonicity makes it exact:
   * distinct-doc window frequency only GROWS, therefore
   *
   *   - NEW runs must involve a batch doc (old docs' window sets are
@@ -24,16 +21,11 @@ import org.apache.spark.sql.functions._
   *     shrink), so the repair set is `oldRepeats ∩ crossing-pairs` —
   *     bounded by |crossing| · cap², never corpus-sized.
   *
-  * Because a split run's surviving fragments depend on the pair's
-  * FULL match structure (not just the crossed window), at-risk pairs
-  * are RECOMPUTED from a doc-keyed projection of the index — which is
-  * why the module keeps TWO bucketed copies of the (doc, pos, h)
-  * window rows: `<prefix>_wpos` on h (probes, census) and
-  * `<prefix>_wdoc` on doc_id (bounded per-pair recompute). The
-  * recompute evaluates every window's hotness at UNION counts via a
-  * bounded probe of the at-risk docs' own windows (the
-  * pre-existing-oversized lesson from IncrementalMedia's r12
-  * advisory, applied from the start). Merged ≡ full recompute is
+  * A split run's surviving fragments depend on the pair's FULL match
+  * structure, so at-risk pairs are RECOMPUTED from a doc-keyed copy of
+  * the index — hence TWO bucketed copies of the (doc, pos, h) rows:
+  * `<prefix>_wpos` on h (probes, census) and `<prefix>_wdoc` on doc_id
+  * (bounded per-pair recompute). Merged ≡ full recompute is
   * spec-pinned, including a crossing that SPLITS a long run into two
   * shorter surviving fragments.
   */
@@ -41,196 +33,95 @@ object IncrementalExactSubstr {
 
   import ExactSubstr.{Width, runsFromMatches, windowPositions}
 
-  /** Persist the corpus window-position rows under BOTH layouts. */
-  def buildIndexes(wins: DataFrame, prefix: String = "graft_substr",
-      buckets: Int = 32): Unit = {
-    val w = wins.select(col("doc_id"), col("pos"), col("h"))
-    graft.sources.Bucketing.writeBucketed(w, s"${prefix}_wpos", "h", buckets)
-    graft.sources.Bucketing.writeBucketed(w, s"${prefix}_wdoc", "doc_id", buckets)
-  }
-
-  /** Append a merged batch's window rows under both layouts —
-    * IDEMPOTENTLY at doc granularity: each table skips batch docs it
-    * already holds. A duplicated (doc_id, pos, h) row would not fail
+  /** The (doc_id, pos, h) window rows under BOTH layouts, one
+    * tombstone table governing both copies; df counts DISTINCT docs
+    * (a doc repeating a window contributes several rows but one doc).
+    * Appends probe presence per TABLE: a duplicated row would not fail
     * loudly — duplicate `pa` values shift `runsFromMatches`' diagonal
     * row_number chaining and silently UNDERCOUNT run lengths — so a
-    * replayed ingest (retry after a crash, an at-least-once driver)
-    * must be absorbed here, not contracted away. The presence probe is
-    * per TABLE (not one shared set): a crash between the two appends
-    * leaves them divergent, and the retry must heal exactly the table
-    * that missed its append.
+    * crash between the two appends must heal exactly the lagging one.
     */
-  def appendToIndexes(batchWins: DataFrame, prefix: String = "graft_substr",
-      buckets: Int = 32): Unit = {
-    val w = Checkpoints.cut(batchWins.select(col("doc_id"), col("pos"), col("h")))
-    graft.sources.Bucketing.appendBucketed(
-      graft.sources.Bucketing.absentOnly(w, s"${prefix}_wpos", "doc_id"),
-      s"${prefix}_wpos", "h", buckets)
-    graft.sources.Bucketing.appendBucketed(
-      graft.sources.Bucketing.absentOnly(w, s"${prefix}_wdoc", "doc_id"),
-      s"${prefix}_wdoc", "doc_id", buckets)
-    // a re-admit of a retracted doc: both tables still hold its rows
-    // (absentOnly skipped them), so flip the net sign back instead
-    Tombstones.resurrect(w.sparkSession, prefix, w.select(col("doc_id")), "doc_id")
-  }
+  private val Index = PostingIndex(Seq("wpos" -> "h", "wdoc" -> "doc_id"),
+    "doc_id", "h", distinctIds = true)
 
-  /** The LIVE h-keyed index: `_wpos` minus net-dead docs (the
-    * [[Tombstones]] discipline; one tombstone table governs both
-    * physical copies).
-    */
+  private def rows(wins: DataFrame) = wins.select(col("doc_id"), col("pos"), col("h"))
+
+  /** Persist the corpus window-position rows under BOTH layouts. */
+  def buildIndexes(wins: DataFrame, prefix: String = "graft_substr",
+      buckets: Int = 32): Unit =
+    Index.build(rows(wins), prefix, buckets)
+
+  /** Append a merged batch's window rows under both layouts ([[PostingIndex.append]]). */
+  def appendToIndexes(batchWins: DataFrame, prefix: String = "graft_substr"): Unit =
+    Index.append(rows(batchWins), prefix)
+
+  /** The LIVE h-keyed index: `_wpos` minus net-dead docs. */
   def liveWpos(spark: SparkSession, prefix: String = "graft_substr"): DataFrame =
-    Tombstones.live(spark, spark.table(s"${prefix}_wpos"), prefix, "doc_id")
+    Index.live(spark, prefix)
 
   /** The LIVE doc-keyed index: `_wdoc` minus net-dead docs. */
   def liveWdoc(spark: SparkSession, prefix: String = "graft_substr"): DataFrame =
-    Tombstones.live(spark, spark.table(s"${prefix}_wdoc"), prefix, "doc_id")
+    Index.live(spark, prefix, "wdoc")
 
-  /** DISTINCT-doc window frequency > cap at the current live index —
-    * NOT `Bucketing.overCapKeys` (raw row counts): a doc repeating a
-    * window internally contributes several (pos) rows but ONE doc to
-    * df. The distinct + group-by both ride the h bucket layout
-    * exchange-free.
-    */
-  def hotWindows(spark: SparkSession, prefix: String = "graft_substr",
-      cap: Int = 100): DataFrame =
-    liveWpos(spark, prefix)
-      .select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > cap).select(col("h"))
-
-  /** Land the hot census as `<prefix>_hot` (per batch append, never
-    * per micro-batch).
-    */
+  /** Land the distinct-doc hot census as `<prefix>_hot`. */
   def refreshHotWindows(spark: SparkSession, prefix: String = "graft_substr",
-      cap: Int = 100, buckets: Int = 8): Unit = {
-    graft.sources.Bucketing.writeBucketed(
-      hotWindows(spark, prefix, cap), s"${prefix}_hot", "h", buckets)
-    HotRefresh.stamp(spark, s"${prefix}_hot", prefix)
-  }
+      cap: Int = 100): Unit =
+    Index.refreshHot(spark, prefix, cap)
 
-  /** Re-census only when the retraction state moved since the last
-    * refresh ([[HotRefresh]]) — micro-batch-cadence takedown pickup.
-    */
+  /** Re-census only when the retraction state moved since the last refresh. */
   def refreshHotWindowsIfStale(spark: SparkSession,
-      prefix: String = "graft_substr", cap: Int = 100,
-      buckets: Int = 8): Unit =
-    if (HotRefresh.isStale(spark, s"${prefix}_hot", prefix))
-      refreshHotWindows(spark, prefix, cap, buckets)
+      prefix: String = "graft_substr", cap: Int = 100): Unit =
+    Index.refreshHotIfStale(spark, prefix, cap)
 
-  /** Fold the net-dead docs into BOTH window layouts physically and
-    * truncate the tombstone history ([[Tombstones.compact]] rewrites
-    * each table under its own bucket key); the hot census re-derives
-    * on the next IfStale.
-    */
-  def compact(spark: SparkSession, prefix: String = "graft_substr",
-      buckets: Int = 32): Unit =
-    Tombstones.compact(spark, prefix, "doc_id",
-      Seq((s"${prefix}_wpos", "h", buckets),
-        (s"${prefix}_wdoc", "doc_id", buckets)))
+  /** Fold the net-dead docs into BOTH window layouts and truncate the history. */
+  def compact(spark: SparkSession, prefix: String = "graft_substr"): Unit =
+    Index.compact(spark, prefix)
 
-  /** The index a serving consumer (the streaming gate) probes: full
+  /** The index a serving consumer (the streaming gate) probes: live
     * position rows minus the maintained hot exclusion.
     */
   def servableIndex(spark: SparkSession,
       prefix: String = "graft_substr"): DataFrame =
-    liveWpos(spark, prefix)
-      .join(broadcast(spark.table(s"${prefix}_hot")), Seq("h"), "left_anti")
+    Index.servableIndex(spark, prefix)
 
   /** Fold an ingest batch into the repeat table EXACTLY. `batchWins`
-    * is `ExactSubstr.windowPositions` of the NEW docs (ids new to the
-    * corpus — but a REPLAYED batch whose rows already landed in the
-    * indexes is safe: every index read below excludes the batch's own
-    * doc ids, so a crashed-and-retried ingest computes the same merge
-    * whether or not its append happened); `oldRepeats` is the current
-    * artifact at the same (cap, minTok).
+    * is `ExactSubstr.windowPositions` of the NEW docs; `oldRepeats` is
+    * the current artifact at the same (cap, minTok).
     */
   def mergeBatch(spark: SparkSession, batchWins: DataFrame,
       oldRepeats: DataFrame, prefix: String = "graft_substr",
       cap: Int = 100, minTok: Int = 10): DataFrame = {
-    // lineage-cut: the batch frame feeds the census AND both new-pair
-    // sides; old repeats feed the anti-join AND the at-risk semi-join
-    val bw = Checkpoints.cut(batchWins.select(col("doc_id"), col("pos"), col("h")))
-    // the corpus-as-of-before-this-batch view: a replayed batch (its
-    // append already landed) must not see itself in the index, or the
-    // census double-counts it and matches arrive duplicated — the
-    // broadcast anti is a narrow filter over the bucketed scan
-    val batchIds = bw.select(col("doc_id")).distinct()
-    val idx = liveWpos(spark, prefix)
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
+    val bw = Checkpoints.cut(rows(batchWins))
     val oldR = Checkpoints.cut(oldRepeats)
     // batch-scoped census over DISTINCT docs (disjoint ids ⇒ union df
-    // = index df + batch df); corpus side: broadcast semi-probe of
-    // the bucketed index + exchange-free distinct/group-by on h
-    val dfB = bw.select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("df_b"))
-    // ONE bucketed index read restricted to the batch's windows,
-    // shared by the census, the crossing-pair probe and the new-pair
-    // partner side (r20, the t15/q_triangles shared-subtree rule —
-    // previously THREE separate corpus scans each re-paying the
-    // tombstone + batch anti-joins). Scale: the cut materializes only
-    // the postings of batch-held windows — strictly less than the
-    // table one scan of which it replaces twice over.
-    val idxB = Checkpoints.cutBucketed(
-      idx.join(broadcast(dfB.select(col("h"))), Seq("h"), "left_semi"))
-    val dfC = idxB
-      .select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("df_c"))
-    val census = Checkpoints.cut(dfB.join(dfC, Seq("h"), "left")
-      .select(col("h"),
-        coalesce(col("df_c"), lit(0L)).as("df_c"),
-        (coalesce(col("df_c"), lit(0L)) + col("df_b")).as("df_new")))
+    // = index df + batch df)
+    val sc = Index.scope(spark, prefix, bw)
     // hot at union counts, for every window the BATCH contains —
     // exactly the set new-pair matching can meet
-    val hotNew = census.filter(col("df_new") > cap).select(col("h"))
-    val crossing = census.filter(col("df_c") <= cap && col("df_new") > cap)
-      .select(col("h"))
+    val hotNew = sc.hot(cap)
     // at-risk pairs: existing repeat rows whose docs BOTH hold a
     // crossing window (≤ cap docs per crossing window ⇒ ≤ cap² pairs
     // per window); pairs without a row cannot gain one (runs shrink).
-    // crossing ⊆ dfB's windows, so the probe reads the shared idxB cut
-    val crossDocs = idxB.join(broadcast(crossing), Seq("h"))
-      .select(col("h"), col("doc_id")).distinct()
-    val atRisk = Checkpoints.cut(crossDocs.select(col("h"), col("doc_id").as("doc_a"))
-      .join(crossDocs.select(col("h"), col("doc_id").as("doc_b")), "h")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    val atRisk = Checkpoints.cut(crossingPairs(sc, cap)
       .join(oldR.select(col("doc_a"), col("doc_b")).distinct(),
         Seq("doc_a", "doc_b"), "left_semi"))
-    // bounded recompute of the at-risk pairs from the doc-keyed index:
-    // every window's hotness evaluated at UNION counts (a bucket hot
-    // BEFORE the batch and untouched by it must still void matches —
-    // the pre-existing-oversized case), via a probe of the at-risk
-    // docs' OWN windows, never a corpus scan
-    val riskDocs = atRisk.select(col("doc_a").as("doc_id"))
-      .unionByName(atRisk.select(col("doc_b").as("doc_id"))).distinct()
-    val riskWins = Checkpoints.cut(liveWdoc(spark, prefix)
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-      .join(broadcast(riskDocs), "doc_id"))
-    val riskH = riskWins.select(col("h")).distinct()
-    // riskH is bounded (the at-risk docs' own windows) — broadcast it
-    // so the corpus index stays exchange-free, like every sibling
-    // at-risk filter in this family
-    val hotRisk = idx.join(broadcast(riskH), Seq("h"), "left_semi")
-      .select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("df_c_full"))
-      .join(dfB, Seq("h"), "left")
-      .filter(col("df_c_full") + coalesce(col("df_b"), lit(0L)) > cap)
-      .select(col("h"))
-    val okRisk = riskWins.join(broadcast(hotRisk), Seq("h"), "left_anti")
-    val riskMatches = okRisk
-      .select(col("h"), col("doc_id").as("doc_a"), col("pos").as("pa"))
-      .join(okRisk.select(col("h"), col("doc_id").as("doc_b"), col("pos").as("pb")), "h")
-      .filter(col("doc_a") < col("doc_b"))
-      .join(broadcast(atRisk), Seq("doc_a", "doc_b"), "left_semi")
-      .select(col("doc_a"), col("doc_b"), col("pa"), col("pb"))
-    val riskRepaired = runsFromMatches(riskMatches, minTok)
+    // at-risk windows graded at UNION counts: a window hot BEFORE the
+    // batch and untouched by it must still void matches (the
+    // pre-existing-oversized case)
+    val dfB = sc.census.select(col("h"), (col("n_all") - col("n_idx")).as("df_b"))
+    val riskRepaired = repairRuns(spark, prefix, bw, atRisk, minTok) { riskH =>
+      Index.df(sc.index.join(broadcast(riskH), Seq("h"), "left_semi"), "df_c")
+        .join(dfB, Seq("h"), "left")
+        .filter(col("df_c") + coalesce(col("df_b"), lit(0L)) > cap)
+        .select(col("h"))
+    }
     // new runs: batch windows (minus union-hot) probe the index for
     // corpus partners and self-join for batch-batch partners; orient
     // each match so doc_a < doc_b with positions following the swap
     val bOk = bw.join(broadcast(hotNew), Seq("h"), "left_anti")
     // (anti ∘ semi ≡ semi ∘ anti on disjoint filters: the corpus
-    // partner side is the shared idxB cut minus the union-hot set)
-    val partners = idxB.join(broadcast(hotNew), Seq("h"), "left_anti")
+    // partner side is the batch-scoped rows minus the union-hot set)
+    val partners = sc.rows.join(broadcast(hotNew), Seq("h"), "left_anti")
       .unionByName(bOk)
     val fresh = bOk.select(col("h"), col("doc_id").as("bd"), col("pos").as("bp"))
       .join(partners.select(col("h"), col("doc_id").as("od"), col("pos").as("op")), "h")
@@ -245,26 +136,50 @@ object IncrementalExactSubstr {
       .unionByName(runsFromMatches(fresh, minTok))
   }
 
-  /** One-owner ingest (the family's `admitBatch` parity): eager merge
-    * against the PRE-append indexes (a lazy consumer would double-
-    * count the batch in the census), then append both layouts and
-    * refresh the hot exclusion — the NEXT probe/stream micro-batch
-    * sees the admitted docs and any newly-hot window. Returns the
-    * merged repeat table. REPLAY-SAFE end to end: the merge excludes
-    * the batch's ids from its index reads and the appends skip docs
-    * already present per table, so an at-least-once driver retrying
-    * the whole admit reproduces the same merge and duplicates nothing.
+  /** Distinct (doc_a < doc_b) pairs of index docs both holding a
+    * window the batch crosses (admit) or un-crosses (retract) — ≤ cap
+    * holders per such window, so ≤ cap² pairs per window.
+    */
+  private def crossingPairs(sc: BatchScope, cap: Int): DataFrame = {
+    val docs = sc.rows.join(broadcast(sc.crossing(cap)), Seq("h"))
+      .select(col("h"), col("doc_id")).distinct()
+    docs.select(col("h"), col("doc_id").as("doc_a"))
+      .join(docs.select(col("h"), col("doc_id").as("doc_b")), "h")
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+  }
+
+  /** Bounded recompute of the `atRisk` pairs' runs from the doc-keyed
+    * index, over the at-risk docs' OWN windows (never a corpus scan)
+    * minus the windows `hotAt` grades hot among them. The window set is
+    * bounded, so `hotAt` broadcasts it and the h-keyed index side of
+    * its census stays exchange-free.
+    */
+  private def repairRuns(spark: SparkSession, prefix: String, bw: DataFrame,
+      atRisk: DataFrame, minTok: Int)(hotAt: DataFrame => DataFrame): DataFrame = {
+    val riskDocs = atRisk.select(col("doc_a").as("doc_id"))
+      .unionByName(atRisk.select(col("doc_b").as("doc_id"))).distinct()
+    val riskWins = Checkpoints.cut(Index.liveExcept(spark, prefix, bw, "wdoc")
+      .join(broadcast(riskDocs), "doc_id"))
+    val ok = riskWins.join(
+      broadcast(hotAt(riskWins.select(col("h")).distinct())), Seq("h"), "left_anti")
+    runsFromMatches(ok
+      .select(col("h"), col("doc_id").as("doc_a"), col("pos").as("pa"))
+      .join(ok.select(col("h"), col("doc_id").as("doc_b"), col("pos").as("pb")), "h")
+      .filter(col("doc_a") < col("doc_b"))
+      .join(broadcast(atRisk), Seq("doc_a", "doc_b"), "left_semi")
+      .select(col("doc_a"), col("doc_b"), col("pa"), col("pb")), minTok)
+  }
+
+  /** One-owner ingest step ([[PostingIndex.admit]], both layouts).
+    * Returns the merged repeat table.
     */
   def admitBatch(spark: SparkSession, batchWins: DataFrame,
       oldRepeats: DataFrame, prefix: String = "graft_substr",
-      cap: Int = 100, minTok: Int = 10, buckets: Int = 32,
-      hotBuckets: Int = 8): DataFrame = {
-    val bw = Checkpoints.cut(batchWins.select(col("doc_id"), col("pos"), col("h")))
-    val merged = Checkpoints.cut(
-      mergeBatch(spark, bw, oldRepeats, prefix, cap, minTok), eager = true)
-    appendToIndexes(bw, prefix, buckets)
-    refreshHotWindows(spark, prefix, cap, hotBuckets)
-    merged
+      cap: Int = 100, minTok: Int = 10): DataFrame = {
+    val bw = Checkpoints.cut(rows(batchWins))
+    Index.admit(spark, prefix, bw, cap)(
+      mergeBatch(spark, bw, oldRepeats, prefix, cap, minTok))
   }
 
   /** Fold a TAKEDOWN batch out of the maximal-repeat table EXACTLY —
@@ -272,131 +187,66 @@ object IncrementalExactSubstr {
     * DECREASES on removal, so a retraction can only
     *
     *   - DELETE repeat rows involving a batch doc;
-    *   - UN-CROSS windows whose df drops back to ≤ cap — which
-    *     requires the batch to CONTAIN the window. Un-crossing can
-    *     REJOIN split runs, EXTEND fragments, and CREATE repeat rows
-    *     between pairs that had none (their only matches ran through
-    *     hot windows) — so, unlike the admit merge, the at-risk set is
-    *     every pair of remaining docs both holding an un-crossed
-    *     window (≤ cap² per window, never corpus-sized), NOT just
-    *     pairs with existing rows. At-risk pairs are recomputed from
-    *     the doc-keyed index at post-retraction counts, the same
-    *     bounded repair the admit merge runs.
+    *   - UN-CROSS windows the batch CONTAINS back to df ≤ cap, which
+    *     can REJOIN split runs, EXTEND fragments and CREATE rows for
+    *     pairs that had none — so, unlike the admit merge, the at-risk
+    *     set is every remaining-doc pair both holding an un-crossed
+    *     window (≤ cap² per window), recomputed from the doc-keyed
+    *     index at post-retraction counts.
     *
     * `batchWins` must be `windowPositions` of the docs' ORIGINAL text
-    * (immutability is the family contract). Reads the live indexes
-    * MINUS the batch ids, so a replayed retract reproduces the same
-    * result. Retract ≡ `maximalRepeats` full recompute on
-    * corpus-minus-batch is spec-pinned, including a run resurrected
-    * by an un-crossing window.
+    * (immutability is the family contract). Retract ≡ `maximalRepeats`
+    * full recompute on corpus-minus-batch is spec-pinned, including a
+    * run resurrected by an un-crossing window.
     */
   def retractMerge(spark: SparkSession, batchWins: DataFrame,
       oldRepeats: DataFrame, prefix: String = "graft_substr",
       cap: Int = 100, minTok: Int = 10): DataFrame = {
-    val bw = Checkpoints.cut(batchWins.select(col("doc_id"), col("pos"), col("h")))
+    val bw = Checkpoints.cut(rows(batchWins))
     val batchIds = bw.select(col("doc_id")).distinct()
-    // corpus-as-of-after-this-retract, tombstones landed or not
-    val idx = liveWpos(spark, prefix)
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
     val oldR = Checkpoints.cut(oldRepeats)
     // batch-scoped distinct-doc census: only windows the batch's docs
-    // HOLD can un-cross
-    val dfR = bw.select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("df_r"))
-    // ONE bucketed index read restricted to the batch's windows,
-    // projected to distinct (doc, h) — shared by the census and the
-    // un-cross probe (r20, the admit merge's shared-subtree rule;
-    // previously two separate corpus scans)
-    val idxR = Checkpoints.cutBucketed(
-      idx.join(broadcast(dfR.select(col("h"))), Seq("h"), "left_semi")
-        .select(col("doc_id"), col("h")).distinct())
-    val dfA = idxR.groupBy(col("h")).agg(count(lit(1)).as("df_a"))
-    val census = Checkpoints.cut(dfR.join(dfA, Seq("h"), "left")
-      .select(col("h"),
-        coalesce(col("df_a"), lit(0L)).as("df_a"),
-        (coalesce(col("df_a"), lit(0L)) + col("df_r")).as("df_before")))
-    val uncross = census.filter(col("df_before") > cap && col("df_a") <= cap)
-      .select(col("h"))
+    // HOLD can un-cross; the scope's index is the corpus after this
+    // retract, tombstones landed or not
+    val sc = Index.scope(spark, prefix, bw)
     // at-risk pairs: ALL remaining-doc pairs sharing an un-crossed
-    // window (runs can appear where none existed). uncross ⊆ dfR's
-    // windows, so the probe reads the shared idxR cut
-    val crossDocs = idxR.join(broadcast(uncross), Seq("h"))
-      .select(col("h"), col("doc_id"))
-    val atRisk = Checkpoints.cut(
-      crossDocs.select(col("h"), col("doc_id").as("doc_a"))
-        .join(crossDocs.select(col("h"), col("doc_id").as("doc_b")), "h")
-        .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct())
-    // bounded recompute of the at-risk pairs from the doc-keyed index,
-    // hotness at POST-retraction counts over the docs' own windows
-    val riskDocs = atRisk.select(col("doc_a").as("doc_id"))
-      .unionByName(atRisk.select(col("doc_b").as("doc_id"))).distinct()
-    val riskWins = Checkpoints.cut(liveWdoc(spark, prefix)
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-      .join(broadcast(riskDocs), "doc_id"))
-    val riskH = riskWins.select(col("h")).distinct()
-    // broadcast the bounded riskH set — the corpus index side of this
-    // semi-join must never shuffle on h (the admit merge's discipline)
-    val hotRisk = idx.join(broadcast(riskH), Seq("h"), "left_semi")
-      .select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("df_after"))
-      .filter(col("df_after") > cap).select(col("h"))
-    val okRisk = riskWins.join(broadcast(hotRisk), Seq("h"), "left_anti")
-    val riskMatches = okRisk
-      .select(col("h"), col("doc_id").as("doc_a"), col("pos").as("pa"))
-      .join(okRisk.select(col("h"), col("doc_id").as("doc_b"), col("pos").as("pb")), "h")
-      .filter(col("doc_a") < col("doc_b"))
-      .join(broadcast(atRisk), Seq("doc_a", "doc_b"), "left_semi")
-      .select(col("doc_a"), col("doc_b"), col("pa"), col("pb"))
-    val riskRepaired = runsFromMatches(riskMatches, minTok)
+    // window (runs can appear where none existed)
+    val atRisk = Checkpoints.cut(crossingPairs(sc, cap))
+    // at-risk windows graded at POST-retraction counts
+    val riskRepaired = repairRuns(spark, prefix, bw, atRisk, minTok)(
+      sc.hotAmong(_, cap))
     // keep everything else: batch rows deleted, at-risk rows replaced
-    oldR
-      .join(broadcast(batchIds.withColumnRenamed("doc_id", "doc_a")),
-        Seq("doc_a"), "left_anti")
-      .join(broadcast(batchIds.withColumnRenamed("doc_id", "doc_b")),
-        Seq("doc_b"), "left_anti")
+    PostingIndex.dropPairs(oldR, batchIds, "doc_a", "doc_b")
       .join(atRisk, Seq("doc_a", "doc_b"), "left_anti")
-      // using-joins front their keys — restore the repeat schema order
-      .select(col("doc_a"), col("doc_b"), col("a_start"), col("b_start"),
-        col("len_tok"))
       .unionByName(riskRepaired)
   }
 
-  /** One-owner takedown step (admitBatch's reverse parity): eager
-    * retract-merge, signed tombstones ([[Tombstones]] — one table
-    * governing both physical index copies), hot refresh. Returns the
+  /** One-owner takedown step ([[PostingIndex.retract]]). Returns the
     * merged repeat table.
     */
   def retractBatch(spark: SparkSession, batchWins: DataFrame,
       oldRepeats: DataFrame, prefix: String = "graft_substr",
-      cap: Int = 100, minTok: Int = 10, hotBuckets: Int = 8): DataFrame = {
-    val bw = Checkpoints.cut(batchWins.select(col("doc_id"), col("pos"), col("h")))
-    val merged = Checkpoints.cut(
-      retractMerge(spark, bw, oldRepeats, prefix, cap, minTok), eager = true)
-    Tombstones.retract(spark, prefix, bw.select(col("doc_id")), "doc_id")
-    refreshHotWindows(spark, prefix, cap, hotBuckets)
-    merged
+      cap: Int = 100, minTok: Int = 10): DataFrame = {
+    val bw = Checkpoints.cut(rows(batchWins))
+    Index.retract(spark, prefix, bw, cap)(
+      retractMerge(spark, bw, oldRepeats, prefix, cap, minTok))
   }
 
   // ---------------------------------------------------------------
   // Bench fixture: the per-batch cost of keeping the repeats fresh
   // ---------------------------------------------------------------
 
-  private def benchFixture(spark: SparkSession, dir: String): (String, DataFrame) =
-    BenchFixtures.memoized(spark, dir, "bench_ixsub") { prefix =>
+  /** Standing bench artifacts (window indexes over every planted doc
+    * but each 7th, and its repeat table) — Bench warms this before the
+    * timed `d24x` / `d24r` runs.
+    */
+  private[graft] def benchFixture(spark: SparkSession, dir: String): (String, DataFrame) =
+    PostingIndex.fixture(spark, dir, "bench_ixsub") { prefix =>
       val corpus = PipelineQueries.plantedSpanToks(spark, dir)
         .filter(col("doc_id") % 7 =!= 0)
       buildIndexes(ExactSubstr.windowPositions(corpus), prefix = prefix)
       ExactSubstr.maximalRepeats(corpus)
     }
-
-  /** Build the standing artifacts without running a merge — Bench's
-    * warmup calls this so timed `d24x` runs price only per-batch
-    * work (the r13 fixture-pricing rule).
-    */
-  def warmBenchFixture(spark: SparkSession, dir: String): Unit = {
-    benchFixture(spark, dir); ()
-  }
 
   /** Bench entry (`d24x_incremental_merge`): the per-ingest cost of
     * folding an every-7th-doc batch into the maximal-repeat table vs

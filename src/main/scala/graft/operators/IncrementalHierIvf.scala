@@ -11,21 +11,15 @@ import org.apache.spark.sql.functions._
   * the "rebuild on any change" contract the incremental family was
   * built to kill. This module closes it:
   *
-  *   - cell lists are ONE bucketed table `<prefix>_cells`
-  *     (cid, vec_id, v) keyed by the GLOBAL fine cid (the stride
-  *     construction makes fine ids unique across coarse cells, so
-  *     the flat table shape carries the hierarchy for free);
-  *   - appends route through the STANDING model (coarse argmin +
-  *     routed fine argmin — `HierarchicalIvf.assignCells`, zero
-  *     Lloyd jobs), replay-idempotent, resurrection-aware;
-  *   - retractions flip vectors dead through the SHARED
-  *     [[Tombstones]] owner — served reads anti-join the net-dead
-  *     set with the same count-and-degrade broadcast discipline
-  *     every other family uses;
+  *   - cell lists are the FLAT family's `<prefix>_cells` table
+  *     (`IncrementalIvf.Cells`), keyed by the GLOBAL fine cid (the
+  *     stride construction makes fine ids unique across coarse cells),
+  *     so append / tombstone / live / compact / rerank are shared;
+  *   - appends route through the STANDING model
+  *     (`HierarchicalIvf.assignCells`, zero Lloyd jobs);
   *   - the drift census / relearn / compact policy triggers are the
-  *     FLAT family's, delegated: the census only needs
-  *     (cid → centroid) + live lists, and `HierModel.flatFine` IS
-  *     that table — one implementation, spec-pinned equal semantics.
+  *     flat family's too: the census only needs (cid → centroid) +
+  *     live lists, and `HierModel.flatFine` IS that table.
   *
   * The no-relearn drift argument is [[IncrementalIvf]]'s, unchanged:
   * an appended/retracted batch shifts each affected FINE cell's true
@@ -35,8 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalHierIvf {
 
-  private def cellsTable(prefix: String): String =
-    s"${prefix}_cells".toLowerCase(java.util.Locale.ROOT)
+  import IncrementalIvf.Cells
 
   private def assign(df: DataFrame, idCol: String, vecCol: String,
       model: HierarchicalIvf.HierModel): DataFrame =
@@ -52,23 +45,15 @@ object IncrementalHierIvf {
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
       model: HierarchicalIvf.HierModel, prefix: String = "graft_hier",
       buckets: Int = 16): Unit =
-    graft.sources.Bucketing.writeBucketed(
-      assign(corpus, idCol, vecCol, model), cellsTable(prefix), "cid", buckets)
+    Cells.build(assign(corpus, idCol, vecCol, model), prefix, buckets)
 
   /** Fold an ingest batch into the cell lists — O(batch·(kc+kf))
-    * routed assignment against the STANDING model (zero relearning:
-    * the model is a value; no Lloyd job can run here),
-    * replay-idempotent (absentOnly), resurrection-aware.
+    * routed assignment against the STANDING model (zero relearning).
     */
   def appendBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       vecCol: String, model: HierarchicalIvf.HierModel,
-      prefix: String = "graft_hier", buckets: Int = 16): Unit = {
-    val rows = Checkpoints.cut(assign(batch, idCol, vecCol, model))
-    graft.sources.Bucketing.appendBucketed(
-      graft.sources.Bucketing.absentOnly(rows, cellsTable(prefix), "vec_id"),
-      cellsTable(prefix), "cid", buckets)
-    Tombstones.resurrect(spark, prefix, rows.select(col("vec_id")), "vec_id")
-  }
+      prefix: String = "graft_hier"): Unit =
+    Cells.append(assign(batch, idCol, vecCol, model), prefix)
 
   /** Remove a takedown batch from service — O(batch) tombstone
     * append via the shared owner; centroids and router stay (the
@@ -76,13 +61,12 @@ object IncrementalHierIvf {
     */
   def retractBatch(spark: SparkSession, vecIds: DataFrame,
       prefix: String = "graft_hier"): Unit =
-    Tombstones.retract(spark, prefix,
-      vecIds.select(col(vecIds.columns.head).as("vec_id")), "vec_id")
+    IncrementalIvf.retractBatch(spark, vecIds, prefix)
 
   /** The live cell lists — what every serving read starts from. */
   def servedCells(spark: SparkSession,
       prefix: String = "graft_hier"): DataFrame =
-    Tombstones.live(spark, spark.table(cellsTable(prefix)), prefix, "vec_id")
+    Cells.live(spark, prefix)
 
   /** Hierarchical top-k against the SERVED index:
     * `HierarchicalIvf.hierKnn`'s probe (the SHARED probeFineCells
@@ -93,37 +77,18 @@ object IncrementalHierIvf {
   def knnFromIndex(spark: SparkSession, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, model: HierarchicalIvf.HierModel,
       nprobeCoarse: Int = 2, nprobeFine: Int = 2,
-      prefix: String = "graft_hier"): DataFrame = {
-    val c = servedCells(spark, prefix)
-      .select(col("cid"), col("vec_id").as("nid"), col("v").as("cv"))
-    val q = HierarchicalIvf.probeFineCells(queries, idCol, vecCol, model,
-      nprobeCoarse, nprobeFine)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("nid"))
-    c.join(q, Seq("cid"))
-      .filter(col("nid") =!= col("qid"))
-      .withColumn("sim", graft.functions.VectorFunctions
-        .cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("sim"))
-  }
+      prefix: String = "graft_hier"): DataFrame =
+    IncrementalIvf.rerank(spark, prefix, k, HierarchicalIvf.probeFineCells(
+      queries, idCol, vecCol, model, nprobeCoarse, nprobeFine))
 
-  /** Fold the net-dead set into the physical cell lists — DELEGATED
-    * to the flat family's implementation: both families keep the
-    * identical `<prefix>_cells` (cid, vec_id, v) layout, so the
-    * compaction (and its trigger below) are literally the same code
-    * path, not a copy that could drift.
+  /** Fold the net-dead set into the physical cell lists (the flat
+    * family's compaction — same table layout).
     */
-  def compact(spark: SparkSession, prefix: String = "graft_hier",
-      buckets: Int = 16): Unit =
-    IncrementalIvf.compact(spark, prefix, buckets)
+  def compact(spark: SparkSession, prefix: String = "graft_hier"): Unit =
+    IncrementalIvf.compact(spark, prefix)
 
   // ---------------------------------------------------------------
-  // Policy triggers — the flat family's, DELEGATED: the drift census
-  // reads (cid → centroid) + live lists, and the hierarchy's flat
-  // fine view IS that table. One implementation, two families.
+  // Policy triggers — the flat family's, over `model.flatFine`
   // ---------------------------------------------------------------
 
   /** Per-FINE-cell drift census over the live lists — routed cells
@@ -172,16 +137,18 @@ object IncrementalHierIvf {
     * Tombstones owner and compacts the same `<prefix>_cells` table).
     */
   def compactIfDue(spark: SparkSession, prefix: String = "graft_hier",
-      buckets: Int = 16, fraction: Double = 0.5): Boolean =
-    IncrementalIvf.compactIfDue(spark, prefix, buckets, fraction)
+      fraction: Double = 0.5): Boolean =
+    IncrementalIvf.compactIfDue(spark, prefix, fraction)
 
   // ---------------------------------------------------------------
-  // Bench fixture (the r13 pricing rule: standing artifacts built
-  // once; timed runs pay only serving-path work)
+  // Bench fixture
   // ---------------------------------------------------------------
 
-  private def benchFixture(spark: SparkSession, dir: String): String = {
-    val (prefix, _) = BenchFixtures.memoized(spark, dir, "hks") { prefix =>
+  /** Standing bench artifacts (two-level cell lists with every 9th
+    * vector tombstoned) — Bench warms this before the timed `hks` runs.
+    */
+  private[graft] def benchFixture(spark: SparkSession, dir: String): String = {
+    val (prefix, _) = PostingIndex.fixture(spark, dir, "hks") { prefix =>
       val e = graft.GraftSession.table(spark, dir, "embeddings")
       val model = CentroidArtifact.hierModel(spark, dir, kCoarse = 4,
         kFinePerCell = 4)
@@ -191,11 +158,6 @@ object IncrementalHierIvf {
       dead
     }
     prefix
-  }
-
-  /** Warm hook for Bench (fixture built outside timed runs). */
-  def warmBenchFixture(spark: SparkSession, dir: String): Unit = {
-    benchFixture(spark, dir); ()
   }
 
   /** Bench entry (`hks_hier_retract_serve`): the SERVED two-level

@@ -6,30 +6,26 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF cell lists with the full forward + reverse lifecycle
-  * (SURVEY §2.4) — the vector-index member of the incremental family
-  * set: the r15 round gave every doc/asset-keyed family admit +
-  * retract, but the VECTOR index was append-only, so a takedown left
-  * dead vectors in cell lists, SERVED AS NEIGHBORS, until a full
-  * rebuild. This module closes that: cell lists are a bucketed table,
-  * takedowns flip vectors dead through the shared [[Tombstones]]
-  * owner (served reads anti-join the net-dead set; `compact` folds it
-  * into the physical lists), and the zero-relearn argument runs in
-  * BOTH directions — appends assign against the standing centroids
-  * (s6's contract, artifact-served, zero Lloyd jobs warm) and
-  * retractions leave the centroids untouched too: a removed batch
-  * shifts each affected cell's TRUE mean by O(batch/cell), the same
-  * drift bound the append path's no-relearn contract already accepts,
+  * (SURVEY §2.4): `<prefix>_cells` (cid, vec_id, v) bucketed on cid —
+  * probes read only the probed cells' buckets, and the per-cell census
+  * and rerank join ride the layout exchange-free. Takedowns flip
+  * vectors dead (served reads never return them as neighbors;
+  * `compact` folds them into the physical lists), and the zero-relearn
+  * argument runs in BOTH directions: appends assign against the
+  * standing centroids (s6's contract, zero Lloyd jobs warm) and a
+  * removed batch shifts each affected cell's TRUE mean by
+  * O(batch/cell) — the drift bound the append path already accepts —
   * so centroid staleness is symmetric and bounded until the next
   * scheduled relearn.
-  *
-  * Layout: `<prefix>_cells` (cid, vec_id, v) bucketed on cid — probes
-  * read only the probed cells' buckets; the per-cell census and the
-  * rerank join ride the bucket layout exchange-free.
   */
 object IncrementalIvf {
 
-  private def cellsTable(prefix: String): String =
-    s"${prefix}_cells".toLowerCase(java.util.Locale.ROOT)
+  /** The cell lists as a posting index (shared with
+    * [[IncrementalHierIvf]], whose flat fine-cell table has the same
+    * layout): the core's table steps — append, tombstone, live,
+    * compact — with no hot census (probes choose their cells).
+    */
+  private[operators] val Cells = PostingIndex(Seq("cells" -> "cid"), "vec_id", "cid")
 
   /** Nearest-centroid assignment in the index's row shape
     * (cid, vec_id, v) — one codegen'd NearestCell argmin at any k
@@ -49,24 +45,15 @@ object IncrementalIvf {
   def buildIndex(corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Int, Seq[Double])], prefix: String = "graft_ivf",
       buckets: Int = 16): Unit =
-    graft.sources.Bucketing.writeBucketed(
-      assign(corpus, idCol, vecCol, cents), cellsTable(prefix), "cid", buckets)
+    Cells.build(assign(corpus, idCol, vecCol, cents), prefix, buckets)
 
   /** Fold an ingest batch into the cell lists — O(batch·k)
-    * assignment against the STANDING centroids (zero relearning),
-    * replay-idempotent (absentOnly), resurrection-aware (re-admitting
-    * a retracted id flips its tombstone instead of duplicating rows —
-    * docs-are-immutable, so the standing rows are the right ones).
+    * assignment against the STANDING centroids (zero relearning).
     */
   def appendBatch(spark: SparkSession, batch: DataFrame, idCol: String,
       vecCol: String, cents: Seq[(Int, Seq[Double])],
-      prefix: String = "graft_ivf", buckets: Int = 16): Unit = {
-    val rows = Checkpoints.cut(assign(batch, idCol, vecCol, cents))
-    graft.sources.Bucketing.appendBucketed(
-      graft.sources.Bucketing.absentOnly(rows, cellsTable(prefix), "vec_id"),
-      cellsTable(prefix), "cid", buckets)
-    Tombstones.resurrect(spark, prefix, rows.select(col("vec_id")), "vec_id")
-  }
+      prefix: String = "graft_ivf"): Unit =
+    Cells.append(assign(batch, idCol, vecCol, cents), prefix)
 
   /** Remove a takedown batch from service — O(batch) tombstone
     * append; the next served read no longer returns the vectors as
@@ -75,29 +62,34 @@ object IncrementalIvf {
     */
   def retractBatch(spark: SparkSession, vecIds: DataFrame,
       prefix: String = "graft_ivf"): Unit =
-    Tombstones.retract(spark, prefix,
-      vecIds.select(col(vecIds.columns.head).as("vec_id")), "vec_id")
+    Cells.tombstone(spark, prefix,
+      vecIds.select(col(vecIds.columns.head).as("vec_id")))
 
   /** The live cell lists — what every serving read starts from. */
   def servedCells(spark: SparkSession,
       prefix: String = "graft_ivf"): DataFrame =
-    Tombstones.live(spark, spark.table(cellsTable(prefix)), prefix, "vec_id")
+    Cells.live(spark, prefix)
 
   /** IVF top-k against the SERVED index: queries explode into their
     * `nprobe` nearest cells, exact cosine rerank inside probed cells
-    * only — `IvfIndex.ivfKnn`'s plan with the corpus side read from
-    * the standing table (no re-assignment at query time) and
-    * retraction applied.
+    * only (`IvfIndex.ivfKnn`'s plan over the standing table).
     */
   def knnFromIndex(spark: SparkSession, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, cents: Seq[(Int, Seq[Double])],
-      nprobe: Int = 2, prefix: String = "graft_ivf"): DataFrame = {
-    val c = servedCells(spark, prefix)
-      .select(col("cid"), col("vec_id").as("nid"), col("v").as("cv"))
-    val q = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("cid", explode(IvfIndex.probeCids(col("qv"), cents, nprobe)))
+      nprobe: Int = 2, prefix: String = "graft_ivf"): DataFrame =
+    rerank(spark, prefix, k,
+      queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
+        .withColumn("cid", explode(IvfIndex.probeCids(col("qv"), cents, nprobe))))
+
+  /** Exact cosine top-k of probed queries (qid, qv, cid) against the
+    * served cell lists of the probed cells only.
+    */
+  private[operators] def rerank(spark: SparkSession, prefix: String, k: Int,
+      probed: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    c.join(q, Seq("cid"))
+    servedCells(spark, prefix)
+      .select(col("cid"), col("vec_id").as("nid"), col("v").as("cv"))
+      .join(probed, Seq("cid"))
       .filter(col("nid") =!= col("qid"))
       .withColumn("sim", cosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
@@ -106,13 +98,10 @@ object IncrementalIvf {
   }
 
   /** Fold the net-dead set into the physical cell lists and truncate
-    * the tombstone history — [[Tombstones.compact]] on this family's
-    * one table.
+    * the tombstone history ([[PostingIndex.compact]]).
     */
-  def compact(spark: SparkSession, prefix: String = "graft_ivf",
-      buckets: Int = 16): Unit =
-    Tombstones.compact(spark, prefix, "vec_id",
-      Seq((cellsTable(prefix), "cid", buckets)))
+  def compact(spark: SparkSession, prefix: String = "graft_ivf"): Unit =
+    Cells.compact(spark, prefix)
 
   // ---------------------------------------------------------------
   // Policy triggers (r17, judge #5) — the two "schedule it" scaladoc
@@ -208,24 +197,27 @@ object IncrementalIvf {
     * approaches the limit" contract. Returns true when it compacted.
     */
   def compactIfDue(spark: SparkSession, prefix: String = "graft_ivf",
-      buckets: Int = 16, fraction: Double = 0.5): Boolean = {
+      fraction: Double = 0.5): Boolean = {
     val limit = spark.conf
       .get(Tombstones.BroadcastLimitKey, "1000000").toLong
     val dead = Tombstones.deadIds(spark, prefix, "vec_id")
       .map(_.count()).getOrElse(0L)
     val due = dead > 0L && dead >= (limit * fraction).toLong
-    if (due) compact(spark, prefix, buckets)
+    if (due) compact(spark, prefix)
     due
   }
 
   // ---------------------------------------------------------------
-  // Bench fixtures (the r13 fixture-pricing rule: standing artifacts
-  // built once, timed runs pay only serving-path work)
+  // Bench fixtures
   // ---------------------------------------------------------------
 
-  private def benchFixture(spark: SparkSession,
+  /** Standing bench artifacts (cell lists with every 9th vector
+    * tombstoned; the dead ids as the old frame) — Bench warms this
+    * before the timed `s6r` / `tbc` / `ivd` runs.
+    */
+  private[graft] def benchFixture(spark: SparkSession,
       dir: String): (String, DataFrame) =
-    BenchFixtures.memoized(spark, dir, "s6r") { prefix =>
+    PostingIndex.fixture(spark, dir, "s6r") { prefix =>
       import spark.implicits._
       val e = graft.GraftSession.table(spark, dir, "embeddings")
       val cents = CentroidArtifact.embeddingCentroids(spark, dir, k = 16)
@@ -234,11 +226,6 @@ object IncrementalIvf {
       retractBatch(spark, dead, prefix)
       dead.as[Long].toDF("vec_id")
     }
-
-  /** Warm hook for Bench (fixture built outside timed runs). */
-  def warmBenchFixture(spark: SparkSession, dir: String): Unit = {
-    benchFixture(spark, dir); ()
-  }
 
   /** Bench entry (`s6r_ivf_retract_serve`): the SERVED search cost
     * with a standing takedown active — probe + exact rerank over
@@ -273,7 +260,7 @@ object IncrementalIvf {
     */
   def benchCompact(spark: SparkSession, dir: String): DataFrame = {
     val (prefix, dead) = benchFixture(spark, dir)
-    val kept = spark.table(cellsTable(prefix))
+    val kept = spark.table(s"${prefix}_cells")
       .join(dead, Seq("vec_id"), "left_anti")
     graft.sources.Bucketing.writeBucketed(
       kept, s"${prefix}_cbench", "cid", 16)

@@ -3,17 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Incremental maintenance of the pHash near-dup pair table —
-  * SURVEY.md §2.6, the media-side companion of `IncrementalPassages`
-  * (d11) and `IncrementalDedup` (d10): a media corpus ingesting new
-  * assets must not re-band 100 TB of existing hashes per batch.
-  *
-  * The persisted index is `Dedup.hexHashPairs`' banded form: one row
-  * per (asset, band) with the 16-bit chunk and all four parsed band
-  * ints, BUCKETED on the combined `bkey` (band '|' chunk) — census
-  * and probes run with zero corpus-side exchange (d10's layout).
-  *
-  * Bucket sizes only GROW, so (mirroring the passage df argument):
+/** Incremental maintenance of the pHash near-dup pair table
+  * (SURVEY.md §2.6): a media corpus ingesting new assets must not
+  * re-band 100 TB of existing hashes per batch. The index is
+  * `Dedup.hexHashPairs`' banded form — one row per (asset, band) with
+  * the 16-bit chunk and all four parsed band ints, bucketed on `bkey`
+  * (band '|' chunk). Bucket sizes only GROW, so:
   *   - NEW pairs must involve a batch asset — batch band rows probe
   *     the index on bkey, plus the batch-batch self-join; the
   *     oversized-bucket cap is evaluated at the COMBINED (post-batch)
@@ -38,55 +33,19 @@ object IncrementalMedia {
     Dedup.bandedChunks(Dedup.parseBandInts(hashed, idCol, hashCol), idCol)
       .withColumn("bkey", concat_ws("|", col("band"), col("chunk")))
 
+  /** The band index for assets keyed by `idCol` (bucket size = rows). */
+  private def index(idCol: String) = PostingIndex(Seq("band" -> "bkey"), idCol, "bkey")
+
   /** Persist the corpus band postings bucketed on bkey. */
   def buildPhashIndex(hashed: DataFrame, idCol: String = "media_id",
       hashCol: String = "phash", prefix: String = "graft_media",
       buckets: Int = 32): Unit =
-    graft.sources.Bucketing.writeBucketed(
-      bandedRows(hashed, idCol, hashCol), s"${prefix}_band", "bkey", buckets)
+    index(idCol).build(bandedRows(hashed, idCol, hashCol), prefix, buckets)
 
-  /** The LIVE band index: `_band` minus net-dead assets (the
-    * [[Tombstones]] discipline — retraction appends signed
-    * tombstones, never rewrites the by-bkey-bucketed index).
-    */
+  /** The LIVE band index: `_band` minus net-dead assets. */
   def liveBand(spark: SparkSession, prefix: String = "graft_media",
       idCol: String = "media_id"): DataFrame =
-    Tombstones.live(spark, spark.table(s"${prefix}_band"), prefix, idCol)
-
-  /** Append a merged batch's band rows under the existing layout —
-    * idempotently at asset granularity: a replayed ingest is
-    * absorbed, and a RE-ADMIT of a retracted asset resurrects its
-    * still-present physical rows via a +1 tombstone instead of
-    * duplicating them (assets are immutable).
-    */
-  def appendToIndex(batchHashed: DataFrame, idCol: String = "media_id",
-      hashCol: String = "phash", prefix: String = "graft_media",
-      buckets: Int = 32): Unit = {
-    val rows = Checkpoints.cut(bandedRows(batchHashed, idCol, hashCol))
-    graft.sources.Bucketing.appendBucketed(
-      graft.sources.Bucketing.absentOnly(rows, s"${prefix}_band", idCol),
-      s"${prefix}_band", "bkey", buckets)
-    Tombstones.resurrect(rows.sparkSession, prefix, rows.select(col(idCol)), idCol)
-  }
-
-  /** Combined (corpus + batch) census for the BATCH's buckets —
-    * never a corpus scan: a bucket can only cross the cap, and only
-    * then disturb anything, if the batch lands rows in it, and a
-    * bucket the batch doesn't touch can never meet the probe join
-    * either. Corpus counts come from a broadcast semi-probe of the
-    * bucketed index (corpus side unshuffled, rows ∝ postings of the
-    * batch's buckets) + an exchange-free group-by on the bucket key —
-    * so a merge's cost does NOT grow with corpus size.
-    */
-  private def census(index: DataFrame, batchRows: DataFrame): DataFrame = {
-    val b = batchRows.groupBy(col("bkey")).agg(count(lit(1)).as("n_b"))
-    val c = index.join(broadcast(b.select(col("bkey"))), Seq("bkey"), "left_semi")
-      .groupBy(col("bkey")).agg(count(lit(1)).as("n_c"))
-    b.join(c, Seq("bkey"), "left")
-      .select(col("bkey"),
-        coalesce(col("n_c"), lit(0L)).as("n_c"),
-        (coalesce(col("n_c"), lit(0L)) + col("n_b")).as("n_new"))
-  }
+    index(idCol).live(spark, prefix)
 
   private def hamming(a: String, c: String) = (0 until 4)
     .map(b => bit_count(col(s"$a$b").bitwiseXOR(col(s"$c$b"))))
@@ -103,25 +62,33 @@ object IncrementalMedia {
   def crossingBuckets(spark: SparkSession, batchHashed: DataFrame,
       idCol: String = "media_id", hashCol: String = "phash",
       prefix: String = "graft_media", maxBucket: Int = 10000): DataFrame =
-    census(liveBand(spark, prefix, idCol), bandedRows(batchHashed, idCol, hashCol))
-      .filter(col("n_c") <= maxBucket && col("n_new") > maxBucket)
+    index(idCol).scope(spark, prefix, bandedRows(batchHashed, idCol, hashCol))
+      .crossing(maxBucket)
 
-  private def probeFrom(index: DataFrame, batchRows: DataFrame,
-      oversized: DataFrame, idCol: String, maxHamming: Int): DataFrame = {
-    def side(rows: DataFrame, id: String, p: String) =
-      rows.join(broadcast(oversized), Seq("bkey"), "left_anti").select(
-        col("bkey") +: col(idCol).as(id) +:
-          (0 until 4).map(b => col(s"b$b").as(s"$p$b")): _*)
-    val bOk = side(batchRows, "id_new", "a")
-    val partners = side(index, "id_other", "c")
-      .unionByName(side(batchRows, "id_other", "c"))
-    bOk.join(partners, Seq("bkey"))
+  /** Distinct (id_a < id_b, hamming ≤ maxHamming) pairs between the
+    * band rows of `rows` and of `partners` that share a bucket —
+    * Hamming from the carried band ints, no re-hash.
+    */
+  private def colocated(rows: DataFrame, partners: DataFrame, idCol: String,
+      maxHamming: Int): DataFrame = {
+    def side(df: DataFrame, id: String, p: String) = df.select(
+      col("bkey") +: col(idCol).as(id) +: (0 until 4).map(b => col(s"b$b").as(s"$p$b")): _*)
+    side(rows, "id_new", "a").join(side(partners, "id_other", "c"), Seq("bkey"))
       .filter(col("id_new") =!= col("id_other"))
       .select(least(col("id_new"), col("id_other")).as("id_a"),
         greatest(col("id_new"), col("id_other")).as("id_b"),
         hamming("a", "c").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
+  }
+
+  /** New pairs of the batch's band rows against index + batch partners,
+    * buckets in `oversized` excluded.
+    */
+  private def probeFrom(index: DataFrame, batchRows: DataFrame,
+      oversized: DataFrame, idCol: String, maxHamming: Int): DataFrame = {
+    def ok(df: DataFrame) = df.join(broadcast(oversized), Seq("bkey"), "left_anti")
+    colocated(ok(batchRows), ok(index).unionByName(ok(batchRows)), idCol, maxHamming)
   }
 
   /** New near-dup pairs the batch introduces, at the combined-count
@@ -135,18 +102,10 @@ object IncrementalMedia {
     // census AND both probe sides, and its producer is the batch's
     // whole pHash pipeline
     val batchRows = Checkpoints.cut(bandedRows(batchHashed, idCol, hashCol))
-    val index = liveBand(spark, prefix, idCol)
-      .join(broadcast(batchRows.select(col(idCol)).distinct()), Seq(idCol), "left_anti")
-    // ONE bucketed index read restricted to the batch's buckets,
-    // shared by the census and the probe's partner side (r20, the
-    // t15/q_triangles shared-subtree rule). census's own semi-filter
-    // is idempotent on the restricted frame, and the probe joins on
-    // bkey from the batch side, so non-batch buckets never match.
-    val idxB = Checkpoints.cutBucketed(index.join(
-      broadcast(batchRows.select(col("bkey")).distinct()), Seq("bkey"), "left_semi"))
-    val oversized = Checkpoints.cut(census(idxB, batchRows)
-      .filter(col("n_new") > maxBucket).select(col("bkey")))
-    probeFrom(idxB, batchRows, oversized, idCol, maxHamming)
+    // the probe joins on bkey from the batch side, so the batch-scoped
+    // index rows are its whole partner side
+    val sc = index(idCol).scope(spark, prefix, batchRows)
+    probeFrom(sc.rows, batchRows, sc.hot(maxBucket), idCol, maxHamming)
   }
 
   /** Fold a batch into the pair table exactly: `oldPairs` is the
@@ -160,27 +119,17 @@ object IncrementalMedia {
     // lineage-cut: the batch band frame feeds the census and both
     // probe sides; the census feeds the oversized AND crossing sets
     val batchRows = Checkpoints.cut(bandedRows(batchHashed, idCol, hashCol))
-    // corpus-as-of-before-this-batch: live rows minus the batch's own
-    // ids (replay discipline shared with the passage/trigram merges)
-    val index = liveBand(spark, prefix, idCol)
-      .join(broadcast(batchRows.select(col(idCol)).distinct()), Seq(idCol), "left_anti")
-    // ONE bucketed index read restricted to the batch's buckets (r20,
-    // the t15/q_triangles shared-subtree rule): shared by the census,
-    // the crossing probe, the at-risk band-int lookup and the new-pair
-    // partner side — previously four separate corpus scans each
-    // re-paying the tombstone + batch anti-joins. census's semi-filter
-    // is idempotent on the restricted frame; every at-risk asset has a
-    // row in a crossing (⊆ batch) bucket, so its distinct band ints
-    // are present in idxB; and the probe joins on bkey from the batch
-    // side, so non-batch buckets never match.
-    val idxB = Checkpoints.cutBucketed(index.join(
-      broadcast(batchRows.select(col("bkey")).distinct()), Seq("bkey"), "left_semi"))
-    val cen = Checkpoints.cut(census(idxB, batchRows))
-    val oversizedNew = cen.filter(col("n_new") > maxBucket).select(col("bkey"))
+    // batch-scoped census against the live index minus the batch's own
+    // ids (the replay discipline shared with the passage/trigram
+    // merges). Its batch-scoped rows serve the crossing probe, the
+    // at-risk band-int lookup (every at-risk asset has a row in a
+    // crossing ⊆ batch bucket) and the new-pair partner side (the
+    // probe joins on bkey from the batch side)
+    val sc = index(idCol).scope(spark, prefix, batchRows)
+    val idxB = sc.rows
+    val oversizedNew = sc.hot(maxBucket)
     // buckets the batch pushes over the cap — ≤ maxBucket corpus rows each
-    val crossing = cen.filter(col("n_c") <= maxBucket && col("n_new") > maxBucket)
-      .select(col("bkey"))
-    val crossRows = idxB.join(broadcast(crossing), Seq("bkey"))
+    val crossRows = idxB.join(broadcast(sc.crossing(maxBucket)), Seq("bkey"))
     // old pairs CO-LOCATED in a crossing bucket are the only ones at risk
     val atRisk = crossRows.select(col("bkey"), col(idCol).as("id_a"))
       .join(crossRows.select(col("bkey"), col(idCol).as("id_b")), "bkey")
@@ -204,10 +153,7 @@ object IncrementalMedia {
       .distinct())
     val riskBkeys = ints.select(explode(array((0 until 4).map(b =>
       concat_ws("|", lit(b), col(s"b$b"))): _*)).as("bkey")).distinct()
-    val oversizedOld = index
-      .join(broadcast(riskBkeys), Seq("bkey"), "left_semi")
-      .groupBy(col("bkey")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxBucket).select(col("bkey"))
+    val oversizedOld = sc.hotAmong(riskBkeys, maxBucket)
     val oversizedEff = Checkpoints.cut(
       oversizedNew.unionByName(oversizedOld).distinct())
     def intsAs(id: String, p: String) = ints.select(
@@ -228,92 +174,53 @@ object IncrementalMedia {
       .unionByName(probeFrom(idxB, batchRows, oversizedNew, idCol, maxHamming))
   }
 
-  /** Oversized (band, chunk) buckets at the CURRENT index contents —
-    * the bkey-keyed census, exchange-free. Maintained as
-    * `<prefix>_hot` (`refreshHotBuckets`) for serving consumers,
-    * mirroring `IncrementalPassages.hotWindows`.
-    */
-  def hotBuckets(spark: SparkSession, prefix: String = "graft_media",
-      maxBucket: Int = 10000): DataFrame =
-    liveBand(spark, prefix).groupBy(col("bkey"))
-      .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket).select(col("bkey"))
-
-  /** Land the hot-bucket census as `<prefix>_hot` (one exchange-free
-    * scan per batch append — never per micro-batch).
+  /** Land the oversized-bucket census as `<prefix>_hot` for serving
+    * consumers (one exchange-free scan per batch append).
     */
   def refreshHotBuckets(spark: SparkSession, prefix: String = "graft_media",
-      maxBucket: Int = 10000, buckets: Int = 8): Unit = {
-    graft.sources.Bucketing.writeBucketed(
-      hotBuckets(spark, prefix, maxBucket), s"${prefix}_hot", "bkey", buckets)
-    HotRefresh.stamp(spark, s"${prefix}_hot", prefix)
-  }
+      maxBucket: Int = 10000): Unit =
+    index("media_id").refreshHot(spark, prefix, maxBucket)
 
-  /** Re-census only when the retraction state moved since the last
-    * refresh ([[HotRefresh]]) — micro-batch-cadence takedown pickup.
-    */
+  /** Re-census only when the retraction state moved since the last refresh. */
   def refreshHotBucketsIfStale(spark: SparkSession,
-      prefix: String = "graft_media", maxBucket: Int = 10000,
-      buckets: Int = 8): Unit =
-    if (HotRefresh.isStale(spark, s"${prefix}_hot", prefix))
-      refreshHotBuckets(spark, prefix, maxBucket, buckets)
+      prefix: String = "graft_media", maxBucket: Int = 10000): Unit =
+    index("media_id").refreshHotIfStale(spark, prefix, maxBucket)
 
-  /** Fold the net-dead assets into `_band` physically and truncate
-    * the tombstone history ([[Tombstones.compact]]); the hot census
-    * re-derives on the next IfStale.
-    */
+  /** Fold the net-dead assets into `_band` and truncate the history. */
   def compact(spark: SparkSession, prefix: String = "graft_media",
-      idCol: String = "media_id", buckets: Int = 32): Unit =
-    Tombstones.compact(spark, prefix, idCol,
-      Seq((s"${prefix}_band", "bkey", buckets)))
+      idCol: String = "media_id"): Unit =
+    index(idCol).compact(spark, prefix)
 
-  /** The index a SERVING consumer (the streaming gate) probes: full
+  /** The index a SERVING consumer (the streaming gate) probes: live
     * postings minus the maintained hot set — a degenerate bucket
     * (all-zero pHash of trivial assets) would fan every arriving
-    * asset in it out to the whole bucket. The merge keeps reading the
-    * FULL `<prefix>_band` table (its census needs true counts).
+    * asset in it out to the whole bucket.
     */
   def servableIndex(spark: SparkSession,
       prefix: String = "graft_media"): DataFrame =
-    liveBand(spark, prefix)
-      .join(broadcast(spark.table(s"${prefix}_hot")), Seq("bkey"), "left_anti")
+    index("media_id").servableIndex(spark, prefix)
 
-  /** One-owner ingest step — d10-`admitBatch` parity for the media
-    * family, including the CLUSTER artifact the pair table feeds:
-    *
-    *   1. `crossingBuckets` is evaluated against the PRE-append index
-    *      (an eager count — the fold-vs-rebuild decision must read
-    *      pre-batch bucket sizes);
-    *   2. `mergeBatch`, materialized EAGERLY before the append (the
-    *      plan reads `<prefix>_band` by name; deferring it past
-    *      step 3 would double-count the batch in the census);
-    *   3. `appendToIndex` + `refreshHotBuckets` — the NEXT probe or
-    *      stream micro-batch sees the admitted assets and any
-    *      newly-hot bucket's exclusion;
-    *   4. clusters: no crossing ⇒ the merge only ADDED edges, fold
-    *      the new pairs into the standing labels
-    *      (`DedupClusters.mergeBatch` — star-edge merge, exact);
-    *      crossing ⇒ edges were DROPPED, which star merging cannot
-    *      unlink, so rebuild labels from the merged pair table
-    *      (cheap relative to re-hashing the corpus).
-    *
-    * Returns (merged pair table, new cluster labels), both
-    * lineage-cut. Batch asset ids must be disjoint from the corpus'.
+  /** One-owner ingest step ([[PostingIndex.admit]]) including the
+    * CLUSTER artifact the pair table feeds: `crossingBuckets` is read
+    * against the PRE-append index (an eager count); no crossing ⇒ the
+    * merge only ADDED edges, folded into the standing labels
+    * (`DedupClusters.mergeBatch`, exact); crossing ⇒ edges were
+    * DROPPED, which star merging cannot unlink, so labels rebuild
+    * from the merged pair table. Returns (merged pair table, new
+    * cluster labels), both lineage-cut.
     */
   def admitBatch(spark: SparkSession, batchHashed: DataFrame,
       oldPairs: DataFrame, clusters: DataFrame,
       idCol: String = "media_id", hashCol: String = "phash",
       prefix: String = "graft_media", maxHamming: Int = 3,
-      maxBucket: Int = 10000, buckets: Int = 32,
-      hotBuckets: Int = 8): (DataFrame, DataFrame) = {
+      maxBucket: Int = 10000): (DataFrame, DataFrame) = {
     val batch = Checkpoints.cut(batchHashed) // feeds decision, merge, append
     val crossed = crossingBuckets(spark, batch, idCol, hashCol, prefix,
       maxBucket).limit(1).count() > 0
     val op = Checkpoints.cut(oldPairs) // feeds the merge AND the new-edge anti-join
-    val merged = Checkpoints.cut(
-      mergeBatch(spark, batch, op, idCol, hashCol, prefix, maxHamming, maxBucket),
-      eager = true)
-    appendToIndex(batch, idCol, hashCol, prefix, buckets)
-    refreshHotBuckets(spark, prefix, maxBucket, hotBuckets)
+    val merged = index(idCol).admit(spark, prefix,
+      bandedRows(batch, idCol, hashCol), maxBucket)(
+      mergeBatch(spark, batch, op, idCol, hashCol, prefix, maxHamming, maxBucket))
     val labels =
       if (crossed)
         DedupClusters.connectedComponents(merged, "id_a", "id_b")
@@ -329,25 +236,18 @@ object IncrementalMedia {
     * reverse lifecycle. Bucket counts only DECREASE on removal, so a
     * retraction can only
     *
-    *   - DELETE pairs involving a batch asset (broadcast anti-joins
-    *     on both pair sides);
-    *   - UN-OVERSIZE buckets whose count drops back to ≤ maxBucket —
-    *     which requires the batch to have rows IN the bucket. Each
-    *     un-crossed bucket has ≤ maxBucket remaining live rows, so
-    *     the candidate pairs the old cap suppressed are a bounded
-    *     co-location self-join; their Hamming distances come from the
-    *     band ints the index rows carry (no re-hash), and candidates
-    *     already present (they agreed on another live band) dedup via
-    *     an anti-join. No OTHER pair can change: survival predicates
-    *     only improve when the oversized set shrinks, and Hamming is
-    *     immutable.
+    *   - DELETE pairs involving a batch asset;
+    *   - UN-OVERSIZE buckets the batch has rows in back to ≤ maxBucket.
+    *     Each has ≤ maxBucket remaining live rows, so the pairs the old
+    *     cap suppressed are a bounded co-location self-join (Hamming
+    *     from the carried band ints); candidates already present dedup
+    *     via an anti-join. No OTHER pair can change: survival only
+    *     improves as the oversized set shrinks.
     *
     * `batchHashed` must carry the assets' ORIGINAL hashes
-    * (immutability is the family contract). Reads the live index
-    * MINUS the batch ids, so a replayed retract reproduces the same
-    * result. Retract ≡ `hexHashPairs` full recompute on
-    * corpus-minus-batch is spec-pinned, including a pair restored by
-    * an un-crossing bucket.
+    * (immutability is the family contract). Retract ≡ `hexHashPairs`
+    * full recompute on corpus-minus-batch is spec-pinned, including a
+    * pair restored by an un-crossing bucket.
     */
   def retractMerge(spark: SparkSession, batchHashed: DataFrame,
       oldPairs: DataFrame, idCol: String = "media_id",
@@ -355,71 +255,39 @@ object IncrementalMedia {
       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
     val batchRows = Checkpoints.cut(bandedRows(batchHashed, idCol, hashCol))
     val batchIds = batchRows.select(col(idCol)).distinct()
-    // corpus-as-of-after-this-retract, tombstones landed or not
-    val idx = liveBand(spark, prefix, idCol)
-      .join(broadcast(batchIds), Seq(idCol), "left_anti")
     val oldP = Checkpoints.cut(oldPairs)
     // 1. batch-scoped census: only buckets the batch has rows in can
-    // un-cross
-    val nR = batchRows.groupBy(col("bkey")).agg(count(lit(1)).as("n_r"))
-    // ONE bucketed index read restricted to the batch's buckets,
-    // shared by the census and the un-cross candidate probe (r20)
-    val idxR = Checkpoints.cutBucketed(
-      idx.join(broadcast(nR.select(col("bkey"))), Seq("bkey"), "left_semi"))
-    val nA = idxR.groupBy(col("bkey")).agg(count(lit(1)).as("n_a"))
-    val cen = Checkpoints.cut(nR.join(nA, Seq("bkey"), "left")
-      .select(col("bkey"),
-        coalesce(col("n_a"), lit(0L)).as("n_a"),
-        (coalesce(col("n_a"), lit(0L)) + col("n_r")).as("n_before")))
-    val uncross = cen.filter(col("n_before") > maxBucket && col("n_a") <= maxBucket)
-      .select(col("bkey"))
+    // un-cross; the scope's index is the corpus after this retract
+    val sc = index(idCol).scope(spark, prefix, batchRows)
     // 2. candidates the cap suppressed: remaining co-located rows of
     // each un-crossed bucket (≤ maxBucket each), Hamming from the
     // carried band ints
-    // uncross ⊆ the batch's buckets — served by the shared idxR cut
-    val rows2 = Checkpoints.cut(idxR.join(broadcast(uncross), Seq("bkey")))
-    def side(id: String, p: String) = rows2.select(
-      col("bkey") +: col(idCol).as(id) +:
-        (0 until 4).map(b => col(s"b$b").as(s"$p$b")): _*)
-    val restored = side("id_new", "a").join(side("id_other", "c"), Seq("bkey"))
-      .filter(col("id_new") < col("id_other"))
-      .select(col("id_new").as("id_a"), col("id_other").as("id_b"),
-        hamming("a", "c").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    val rows2 = Checkpoints.cut(
+      sc.rows.join(broadcast(sc.crossing(maxBucket)), Seq("bkey")))
+    val restored = colocated(rows2, rows2, idCol, maxHamming)
     // 3. keep non-batch pairs; add restored candidates not already kept
-    val keep = Checkpoints.cut(oldP
-      .join(broadcast(batchIds.withColumnRenamed(idCol, "id_a")),
-        Seq("id_a"), "left_anti")
-      .join(broadcast(batchIds.withColumnRenamed(idCol, "id_b")),
-        Seq("id_b"), "left_anti")
-      // using-joins front their key — restore the pair schema's order
-      .select(col("id_a"), col("id_b"), col("hamming")))
+    val keep = Checkpoints.cut(PostingIndex.dropPairs(oldP, batchIds, "id_a", "id_b"))
     keep.unionByName(
       restored.join(keep.select(col("id_a"), col("id_b")),
         Seq("id_a", "id_b"), "left_anti"))
   }
 
-  /** One-owner takedown step (admitBatch's reverse parity): eager
-    * retract-merge, signed tombstones ([[Tombstones]]), hot refresh,
-    * and a cluster recompute from the merged pairs — node removal can
-    * SPLIT a component (and an un-crossed bucket can add edges), so
-    * the label fold never applies; the recompute runs over the pair
-    * table, cheap relative to re-hashing the corpus. Returns
-    * (merged pair table, new cluster labels).
+  /** One-owner takedown step ([[PostingIndex.retract]]): eager
+    * retract-merge, tombstones, hot refresh, and a cluster recompute
+    * from the merged pairs — node removal can SPLIT a component (and
+    * an un-crossed bucket can add edges), so the label fold never
+    * applies; the recompute runs over the pair table, cheap relative
+    * to re-hashing the corpus. Returns (merged pair table, new
+    * cluster labels).
     */
   def retractBatch(spark: SparkSession, batchHashed: DataFrame,
       oldPairs: DataFrame, idCol: String = "media_id",
       hashCol: String = "phash", prefix: String = "graft_media",
-      maxHamming: Int = 3, maxBucket: Int = 10000,
-      hotBuckets: Int = 8): (DataFrame, DataFrame) = {
+      maxHamming: Int = 3, maxBucket: Int = 10000): (DataFrame, DataFrame) = {
     val batch = Checkpoints.cut(batchHashed)
-    val merged = Checkpoints.cut(
+    val merged = index(idCol).retract(spark, prefix, batch, maxBucket)(
       retractMerge(spark, batch, oldPairs, idCol, hashCol, prefix, maxHamming,
-        maxBucket), eager = true)
-    Tombstones.retract(spark, prefix,
-      batch.select(col(idCol)), idCol)
-    refreshHotBuckets(spark, prefix, maxBucket, hotBuckets)
+        maxBucket))
     val labels = DedupClusters.connectedComponents(merged, "id_a", "id_b")
     (merged, Checkpoints.cut(labels))
   }
@@ -428,41 +296,34 @@ object IncrementalMedia {
   // Bench fixture: the per-batch cost of keeping the pairs fresh
   // ---------------------------------------------------------------
 
-  private def benchFixture(spark: SparkSession, dir: String): (String, DataFrame) =
-    BenchFixtures.memoized(spark, dir, "bench_imedia") { prefix =>
-      val corpus = Dedup.phashChar(
-        graft.GraftSession.table(spark, dir, "documents")
-          .select(col("doc_id").as("media_id"), col("text"))
-          .filter(col("media_id") % 9 =!= 0),
-        "media_id", "text", k = 4)
+  /** Standing bench artifacts (band index over every asset but each
+    * 9th, and its pair table) — Bench warms this before the timed
+    * `m5y` / `m5r` runs.
+    */
+  private[graft] def benchFixture(spark: SparkSession, dir: String): (String, DataFrame) =
+    PostingIndex.fixture(spark, dir, "bench_imedia") { prefix =>
+      val corpus = benchAssets(spark, dir, col("media_id") % 9 =!= 0)
       buildPhashIndex(corpus, prefix = prefix)
       Dedup.hexHashPairs(corpus, "media_id", "phash")
     }
 
-  /** Build the standing artifacts without running a merge — Bench's
-    * warmup calls this so timed `m5y` runs price only per-batch work
-    * (see `IncrementalPassages.warmBenchFixture`).
-    */
-  def warmBenchFixture(spark: SparkSession, dir: String): Unit = {
-    benchFixture(spark, dir); ()
-  }
+  /** pHashes of the documents read as assets, filtered by `keep`. */
+  private def benchAssets(spark: SparkSession, dir: String,
+      keep: org.apache.spark.sql.Column): DataFrame =
+    Dedup.phashChar(
+      graft.GraftSession.table(spark, dir, "documents")
+        .select(col("doc_id").as("media_id"), col("text")).filter(keep),
+      "media_id", "text", k = 4)
 
   /** Bench entry (`m5y_incremental_merge`): the incremental cost of
     * folding an every-9th-asset batch into the pHash pair table —
-    * what a media ingest pays vs m5's full corpus re-hash + re-band.
-    * The band index and old pair table are standing artifacts (built
-    * in Bench's warmup via `warmBenchFixture`; per corpus version in
-    * production); each timed run pays the real per-batch work: pHash
-    * the batch, census, probes, merge.
+    * what a media ingest pays vs m5's full corpus re-hash + re-band:
+    * pHash the batch, census, probes, merge.
     */
   def benchIncrementalMerge(spark: SparkSession, dir: String): DataFrame = {
     val (prefix, oldPairs) = benchFixture(spark, dir)
-    val batch = Dedup.phashChar(
-      graft.GraftSession.table(spark, dir, "documents")
-        .select(col("doc_id").as("media_id"), col("text"))
-        .filter(col("media_id") % 9 === 0),
-      "media_id", "text", k = 4)
-    mergeBatch(spark, batch, oldPairs, prefix = prefix)
+    mergeBatch(spark, benchAssets(spark, dir, col("media_id") % 9 === 0),
+      oldPairs, prefix = prefix)
   }
 
   /** Bench entry (`m5r_retract_merge`): the per-takedown cost of
@@ -472,11 +333,8 @@ object IncrementalMedia {
     */
   def benchRetractMerge(spark: SparkSession, dir: String): DataFrame = {
     val (prefix, oldPairs) = benchFixture(spark, dir)
-    val slice = Dedup.phashChar(
-      graft.GraftSession.table(spark, dir, "documents")
-        .select(col("doc_id").as("media_id"), col("text"))
-        .filter(col("media_id") % 9 =!= 0 && col("media_id") % 5 === 0),
-      "media_id", "text", k = 4)
+    val slice = benchAssets(spark, dir,
+      col("media_id") % 9 =!= 0 && col("media_id") % 5 === 0)
     retractMerge(spark, slice, oldPairs, prefix = prefix)
   }
 }

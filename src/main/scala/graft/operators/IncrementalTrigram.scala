@@ -4,12 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of the trigram contamination-pair artifact
-  * — the d8/d23 member of the ingest-lifecycle family (SURVEY §2.3),
-  * closing the judge's round-13 gap: passage pairs, media pairs,
-  * exact repeats, and clusters all folded ingest batches exactly,
-  * while d8's pair table rebuilt from scratch on every corpus-stamp
-  * change — a full corpus re-shingle per batch for an ingest-heavy
-  * user.
+  * — the d8/d23 member of the ingest-lifecycle family (SURVEY §2.3):
+  * without it d8's pair table re-shingled the whole corpus per batch.
   *
   * The merge is STRICTLY SIMPLER than `IncrementalPassages`' — the
   * pair structure is BIPARTITE (train doc × benchmark doc): the
@@ -25,12 +21,6 @@ import org.apache.spark.sql.functions._
   *     which requires the batch to CONTAIN the trigram (the
   *     batch-scoped census argument shared with d11/d24/m5).
   *
-  * Same replay discipline as `IncrementalExactSubstr` (this round's
-  * advisory): the merge reads the index MINUS the batch's own ids
-  * and appends skip already-present docs, so an at-least-once driver
-  * retrying a whole admit reproduces the same merge and duplicates
-  * nothing.
-  *
   * Merged ≡ full recompute (`PipelineQueries.pairsFromTrigramRows`
   * over the union corpus — the SAME kernel the d8/d23 artifact build
   * runs) is spec-pinned, including a cap-crossing trigram voiding an
@@ -38,86 +28,46 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalTrigram {
 
-  /** Persist the training-corpus trigram rows bucketed on h (the
-    * census and every probe below run exchange-free on the corpus
-    * side) and the panel rows alongside (same layout — the new-pair
-    * join rides it too).
+  /** The training-corpus index: (doc_id, h) rows bucketed on h; rows
+    * are distinct (doc, trigram) pairs, so the raw per-h row count IS
+    * the document frequency.
     */
+  private val Index = PostingIndex(Seq("tri" -> "h"), "doc_id", "h")
+
+  /** The benchmark panel, bucketed on h like the index so the
+    * new-pair join rides the same layout. Bench-keyed and fixed by
+    * contract: never appended to, tombstoned or compacted.
+    */
+  private val Panel = PostingIndex(Seq("panel" -> "h"), "bench_id", "h")
+
+  /** Persist the training-corpus trigram rows and the panel rows. */
   def buildIndex(corpusTris: DataFrame, panel: DataFrame,
       prefix: String = "graft_trigram", buckets: Int = 32): Unit = {
-    graft.sources.Bucketing.writeBucketed(
-      corpusTris.select(col("doc_id"), col("h")), s"${prefix}_tri", "h", buckets)
-    graft.sources.Bucketing.writeBucketed(
-      panel.select(col("bench_id"), col("h")), s"${prefix}_panel", "h", buckets)
+    Index.build(corpusTris.select(col("doc_id"), col("h")), prefix, buckets)
+    Panel.build(panel.select(col("bench_id"), col("h")), prefix, buckets)
   }
 
-  /** The LIVE corpus index: `_tri` minus net-dead docs (the
-    * [[Tombstones]] discipline — retraction is tombstone-append, not
-    * rewrite; the broadcast anti-join preserves the bucket layout, so
-    * every downstream per-h census/probe stays exchange-free).
-    */
+  /** The LIVE corpus index: `_tri` minus net-dead docs. */
   def liveTri(spark: SparkSession, prefix: String = "graft_trigram"): DataFrame =
-    Tombstones.live(spark, spark.table(s"${prefix}_tri"), prefix, "doc_id")
-
-  /** Append a merged batch's trigram rows to the corpus index —
-    * idempotently at doc granularity (replayed ingests are absorbed,
-    * not contracted away). A RE-ADMIT of a previously retracted doc
-    * resurrects it instead: its rows are still physically in `_tri`
-    * (docs are immutable — same id, same trigrams), so the append is
-    * a +1 tombstone row flipping the net sign back to zero, and a
-    * replay of the resurrection sees net ≥ 0 and no-ops.
-    */
-  def appendToIndex(batchTris: DataFrame, prefix: String = "graft_trigram",
-      buckets: Int = 32): Unit = {
-    val bw = Checkpoints.cut(batchTris.select(col("doc_id"), col("h")))
-    graft.sources.Bucketing.appendBucketed(
-      graft.sources.Bucketing.absentOnly(bw, s"${prefix}_tri", "doc_id"),
-      s"${prefix}_tri", "h", buckets)
-    Tombstones.resurrect(bw.sparkSession, prefix,
-      bw.select(col("doc_id")), "doc_id")
-  }
-
-  /** Trigrams with corpus df > cap at the current LIVE index — rows
-    * are distinct (doc, h) by construction, so the raw per-h row
-    * count IS the document frequency (no d24-style distinct needed),
-    * and the group-by rides the bucket layout exchange-free.
-    */
-  def hotTrigrams(spark: SparkSession, prefix: String = "graft_trigram",
-      cap: Int = PipelineQueries.ContamMaxDf): DataFrame =
-    liveTri(spark, prefix).groupBy(col("h"))
-      .agg(count(lit(1)).as("n")).filter(col("n") > cap).select(col("h"))
+    Index.live(spark, prefix)
 
   /** Land the hot census as `<prefix>_hot` — the exclusion the
     * streaming gate (`StreamingTrigram.flagAgainstPanel`) broadcasts
     * per micro-batch instead of re-counting the corpus.
     */
   def refreshHotTrigrams(spark: SparkSession, prefix: String = "graft_trigram",
-      cap: Int = PipelineQueries.ContamMaxDf, buckets: Int = 8): Unit = {
-    graft.sources.Bucketing.writeBucketed(
-      hotTrigrams(spark, prefix, cap), s"${prefix}_hot", "h", buckets)
-    HotRefresh.stamp(spark, s"${prefix}_hot", prefix)
-  }
+      cap: Int = PipelineQueries.ContamMaxDf): Unit =
+    Index.refreshHot(spark, prefix, cap)
 
-  /** Re-census only when the retraction state moved since the last
-    * refresh ([[HotRefresh]]) — the micro-batch-cadence hook that
-    * propagates a mid-stream takedown to the gate's exclusions.
-    */
+  /** Re-census only when the retraction state moved since the last refresh. */
   def refreshHotTrigramsIfStale(spark: SparkSession,
       prefix: String = "graft_trigram",
-      cap: Int = PipelineQueries.ContamMaxDf, buckets: Int = 8): Unit =
-    if (HotRefresh.isStale(spark, s"${prefix}_hot", prefix))
-      refreshHotTrigrams(spark, prefix, cap, buckets)
+      cap: Int = PipelineQueries.ContamMaxDf): Unit =
+    Index.refreshHotIfStale(spark, prefix, cap)
 
-  /** Fold the net-dead docs into `_tri` physically and truncate the
-    * tombstone history ([[Tombstones.compact]] — run when the dead
-    * set approaches the broadcast limit); the hot census re-derives
-    * on the next IfStale (the version reset flips it stale). The
-    * `_panel` table is bench-keyed, never tombstoned, untouched.
-    */
-  def compact(spark: SparkSession, prefix: String = "graft_trigram",
-      buckets: Int = 32): Unit =
-    Tombstones.compact(spark, prefix, "doc_id",
-      Seq((s"${prefix}_tri", "h", buckets)))
+  /** Fold the net-dead docs into `_tri`; the `_panel` table is untouched. */
+  def compact(spark: SparkSession, prefix: String = "graft_trigram"): Unit =
+    Index.compact(spark, prefix)
 
   /** Fold an ingest batch of TRAIN docs into the contamination-pair
     * table EXACTLY. `batchTris` is `PipelineQueries.trigramRows` of
@@ -129,100 +79,63 @@ object IncrementalTrigram {
       cap: Int = PipelineQueries.ContamMaxDf,
       minShared: Int = PipelineQueries.ContamMinShared): DataFrame = {
     val bw = Checkpoints.cut(batchTris.select(col("doc_id"), col("h")))
-    // corpus-as-of-before-this-batch (replay safety — see scaladoc)
-    val batchIds = bw.select(col("doc_id")).distinct()
-    val idx = liveTri(spark, prefix)
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
     val panel = spark.table(s"${prefix}_panel")
     val oldP = Checkpoints.cut(oldPairs)
     // 1. batch-scoped df census: only trigrams the batch CONTAINS can
-    // cross the cap or meet the new-pair join; corpus side is a
-    // broadcast semi-probe of the bucketed index + exchange-free
-    // group-by on the bucket key
-    val dfB = bw.groupBy(col("h")).agg(count(lit(1)).as("df_b"))
-    // ONE bucketed index read restricted to the batch's trigrams,
-    // shared by the census and the decrement probe (r20, the
-    // t15/q_triangles shared-subtree rule — previously two separate
-    // corpus scans each re-paying the tombstone + batch anti-joins)
-    val idxB = Checkpoints.cutBucketed(
-      idx.join(broadcast(dfB.select(col("h"))), Seq("h"), "left_semi"))
-    val dfC = idxB.groupBy(col("h")).agg(count(lit(1)).as("df_c"))
-    val census = Checkpoints.cut(dfB.join(dfC, Seq("h"), "left")
-      .select(col("h"),
-        coalesce(col("df_c"), lit(0L)).as("df_c"),
-        (coalesce(col("df_c"), lit(0L)) + col("df_b")).as("df_new")))
-    val hotNew = census.filter(col("df_new") > cap).select(col("h"))
-    val crossing = census.filter(col("df_c") <= cap && col("df_new") > cap)
-      .select(col("h"))
+    // cross the cap or meet the new-pair join
+    val sc = Index.scope(spark, prefix, bw)
     // 2. decrements: each crossing trigram has ≤ cap old train
     // holders (by the crossing definition) and the panel's holders of
     // it — every such (train, bench) pair loses one shared count;
     // pairs falling below the floor drop out
-    // crossing ⊆ dfB's trigrams — served by the shared idxB cut
-    val crossTrain = idxB.join(broadcast(crossing), Seq("h"))
-    val dec = crossTrain
-      .join(panel.select(col("h"), col("bench_id")), "h")
-      .groupBy(col("doc_id"), col("bench_id"))
-      .agg(count(lit(1)).as("n_lost"))
+    val dec = panelPairs(sc.rows.join(broadcast(sc.crossing(cap)), Seq("h")),
+      panel, "n_lost")
     val adjusted = oldP.join(dec, Seq("doc_id", "bench_id"), "left")
       .select(col("doc_id"), col("bench_id"),
         (col("n_shared") - coalesce(col("n_lost"), lit(0L))).as("n_shared"))
       .filter(col("n_shared") >= minShared)
     // 3. new pairs: batch trigrams (minus union-hot) meet the panel —
     // bipartite, so no self-join and no corpus partners at all
-    val fresh = bw.join(broadcast(hotNew), Seq("h"), "left_anti")
-      .join(panel.select(col("h"), col("bench_id")), "h")
-      .groupBy(col("doc_id"), col("bench_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    val fresh = panelPairs(bw.join(broadcast(sc.hot(cap)), Seq("h"), "left_anti"),
+      panel, "n_shared").filter(col("n_shared") >= minShared)
     adjusted.unionByName(fresh)
   }
 
-  /** One-owner ingest step (the family's `admitBatch` parity): eager
-    * merge against the PRE-append index, then the idempotent append
-    * and the hot-census refresh — the next stream micro-batch reads
-    * an exclusion that covers any trigram this batch pushed over the
-    * cap. Returns the merged pair table.
+  /** (doc_id, bench_id, `as` = shared-trigram count) of train rows
+    * against the panel — bipartite, never a self-join.
+    */
+  private def panelPairs(rows: DataFrame, panel: DataFrame, as: String): DataFrame =
+    rows.join(panel.select(col("h"), col("bench_id")), "h")
+      .groupBy(col("doc_id"), col("bench_id")).agg(count(lit(1)).as(as))
+
+  /** One-owner ingest step ([[PostingIndex.admit]]). Returns the
+    * merged pair table.
     */
   def admitBatch(spark: SparkSession, batchTris: DataFrame, oldPairs: DataFrame,
       prefix: String = "graft_trigram",
       cap: Int = PipelineQueries.ContamMaxDf,
-      minShared: Int = PipelineQueries.ContamMinShared,
-      buckets: Int = 32, hotBuckets: Int = 8): DataFrame = {
+      minShared: Int = PipelineQueries.ContamMinShared): DataFrame = {
     val bw = Checkpoints.cut(batchTris.select(col("doc_id"), col("h")))
-    val merged = Checkpoints.cut(
-      mergeBatch(spark, bw, oldPairs, prefix, cap, minShared), eager = true)
-    appendToIndex(bw, prefix, buckets)
-    refreshHotTrigrams(spark, prefix, cap, hotBuckets)
-    merged
+    Index.admit(spark, prefix, bw, cap)(
+      mergeBatch(spark, bw, oldPairs, prefix, cap, minShared))
   }
 
   /** Fold a TAKEDOWN batch out of the contamination-pair table
-    * EXACTLY — the reverse lifecycle (right-to-be-forgotten / opt-out
-    * batches are routine on a crawl corpus; before this, any removal
-    * forced a full corpus re-shingle). The admit merge's census
-    * argument runs in reverse: corpus dfs only DECREASE, so a
-    * retraction can only
+    * EXACTLY — the reverse lifecycle (opt-out batches are routine on a
+    * crawl corpus). Corpus dfs only DECREASE, so a retraction can only
     *
     *   - DELETE the batch docs' own pairs (a broadcast anti-join);
-    *   - UN-CROSS trigrams whose df drops back to ≤ cap — which
-    *     requires the batch to CONTAIN the trigram (the batch-scoped
-    *     census argument, symmetric to the admit's crossing case).
-    *     Each un-crossed trigram has ≤ cap remaining live holders (by
-    *     the ≤-cap definition), so the affected train docs are a
-    *     BOUNDED set; their pair rows are recomputed from scratch
-    *     against the post-retraction hot set — increments alone can't
-    *     restore a pair the old cap had pushed below `minShared` out
-    *     of the table, but a bounded recompute restores it exactly.
+    *   - UN-CROSS trigrams the batch CONTAINS back to df ≤ cap. Each
+    *     has ≤ cap remaining live holders, so the affected train docs
+    *     are a BOUNDED set whose pair rows are recomputed from scratch
+    *     against the post-retraction hot set — increments can't restore
+    *     a pair the old cap had pushed below `minShared` out of the
+    *     table; a bounded recompute does.
     *
     * `batchTris` must be the trigram rows of the docs' ORIGINAL text
-    * (docs are immutable — the family contract), and the batch docs
-    * must be currently admitted and live; like the admit merge, the
-    * computation reads the live index MINUS the batch's ids, so a
-    * replayed retract (tombstones landed, merge crashed) reproduces
-    * the same result. Retract ≡ full recompute on corpus-minus-batch
-    * is spec-pinned, including a below-`minShared` pair resurrected
-    * by an un-crossing trigram, and admit∘retract round-trips.
+    * (docs are immutable — the family contract). Retract ≡ full
+    * recompute on corpus-minus-batch is spec-pinned, including a
+    * below-`minShared` pair resurrected by an un-crossing trigram.
     */
   def retractMerge(spark: SparkSession, batchTris: DataFrame, oldPairs: DataFrame,
       prefix: String = "graft_trigram",
@@ -230,45 +143,22 @@ object IncrementalTrigram {
       minShared: Int = PipelineQueries.ContamMinShared): DataFrame = {
     val bw = Checkpoints.cut(batchTris.select(col("doc_id"), col("h")))
     val batchIds = bw.select(col("doc_id")).distinct()
-    // corpus-as-of-after-this-retract, whether or not the tombstones
-    // have landed (replay safety)
-    val idx = liveTri(spark, prefix)
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
     val panel = spark.table(s"${prefix}_panel")
     val oldP = Checkpoints.cut(oldPairs)
     // 1. batch-scoped census: only trigrams the batch CONTAINS can
-    // un-cross; df_before = remaining live holders + batch holders
-    val dfR = bw.groupBy(col("h")).agg(count(lit(1)).as("df_r"))
-    // ONE bucketed index read restricted to the batch's trigrams,
-    // shared by the census and the affected-doc probe (r20)
-    val idxR = Checkpoints.cutBucketed(
-      idx.join(broadcast(dfR.select(col("h"))), Seq("h"), "left_semi"))
-    val dfA = idxR.groupBy(col("h")).agg(count(lit(1)).as("df_a"))
-    val census = Checkpoints.cut(dfR.join(dfA, Seq("h"), "left")
-      .select(col("h"),
-        coalesce(col("df_a"), lit(0L)).as("df_a"),
-        (coalesce(col("df_a"), lit(0L)) + col("df_r")).as("df_before")))
-    val uncross = census.filter(col("df_before") > cap && col("df_a") <= cap)
-      .select(col("h"))
+    // un-cross; the scope's index is the corpus after this retract
+    val sc = Index.scope(spark, prefix, bw)
     // 2. affected train docs: the ≤-cap remaining live holders of any
     // un-crossed trigram — recompute their pair rows from scratch
     // against the post-retraction hot set (restricted to the trigrams
     // those docs hold; every other trigram's df is untouched)
-    // uncross ⊆ dfR's trigrams — served by the shared idxR cut
-    val affIds = Checkpoints.cut(
-      idxR.join(broadcast(uncross), Seq("h")).select(col("doc_id")).distinct())
+    val affIds = Checkpoints.cut(sc.rows.join(broadcast(sc.crossing(cap)), Seq("h"))
+      .select(col("doc_id")).distinct())
     val affRows = Checkpoints.cut(
-      idx.join(broadcast(affIds), Seq("doc_id"), "left_semi"))
-    val affH = affRows.select(col("h")).distinct()
-    val hotA = idx.join(broadcast(affH), Seq("h"), "left_semi")
-      .groupBy(col("h")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > cap).select(col("h"))
-    val recomputed = affRows
-      .join(broadcast(hotA), Seq("h"), "left_anti")
-      .join(panel.select(col("h"), col("bench_id")), "h")
-      .groupBy(col("doc_id"), col("bench_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+      sc.index.join(broadcast(affIds), Seq("doc_id"), "left_semi"))
+    val hotA = sc.hotAmong(affRows.select(col("h")).distinct(), cap)
+    val recomputed = panelPairs(affRows.join(broadcast(hotA), Seq("h"), "left_anti"),
+      panel, "n_shared").filter(col("n_shared") >= minShared)
     // 3. keep everything else: batch pairs deleted, affected docs'
     // rows replaced by the recompute
     val keep = oldP
@@ -277,30 +167,28 @@ object IncrementalTrigram {
     keep.unionByName(recomputed)
   }
 
-  /** One-owner takedown step (admitBatch's reverse parity): eager
-    * retract-merge, then the idempotent tombstone append and the hot
-    * refresh — the next stream micro-batch reads an exclusion with
-    * the un-crossed trigrams restored. Returns the merged pair table.
+  /** One-owner takedown step ([[PostingIndex.retract]]). Returns the
+    * merged pair table.
     */
   def retractBatch(spark: SparkSession, batchTris: DataFrame, oldPairs: DataFrame,
       prefix: String = "graft_trigram",
       cap: Int = PipelineQueries.ContamMaxDf,
-      minShared: Int = PipelineQueries.ContamMinShared,
-      hotBuckets: Int = 8): DataFrame = {
+      minShared: Int = PipelineQueries.ContamMinShared): DataFrame = {
     val bw = Checkpoints.cut(batchTris.select(col("doc_id"), col("h")))
-    val merged = Checkpoints.cut(
-      retractMerge(spark, bw, oldPairs, prefix, cap, minShared), eager = true)
-    Tombstones.retract(spark, prefix, bw.select(col("doc_id")), "doc_id")
-    refreshHotTrigrams(spark, prefix, cap, hotBuckets)
-    merged
+    Index.retract(spark, prefix, bw, cap)(
+      retractMerge(spark, bw, oldPairs, prefix, cap, minShared))
   }
 
   // ---------------------------------------------------------------
   // Bench fixture: the per-batch cost of keeping the pairs fresh
   // ---------------------------------------------------------------
 
-  private def benchFixture(spark: SparkSession, dir: String): (String, DataFrame) =
-    BenchFixtures.memoized(spark, dir, "bench_itri") { prefix =>
+  /** Standing bench artifacts (trigram index over every train doc but
+    * each 7th, the panel, and their pair table) — Bench warms this
+    * before the timed `d8x` / `d8r` runs.
+    */
+  private[graft] def benchFixture(spark: SparkSession, dir: String): (String, DataFrame) =
+    PostingIndex.fixture(spark, dir, "bench_itri") { prefix =>
       val corpus = PipelineQueries.trainTrigramRows(spark, dir)
         .filter(col("doc_id") % 7 =!= 0)
       buildIndex(corpus, PipelineQueries.benchPanelRows(spark, dir), prefix = prefix)
@@ -308,14 +196,6 @@ object IncrementalTrigram {
         spark.table(s"${prefix}_panel"),
         PipelineQueries.ContamMaxDf, PipelineQueries.ContamMinShared)
     }
-
-  /** Build the standing artifacts without running a merge — Bench's
-    * warmup calls this so timed `d8x` runs price only per-batch work
-    * (the fixture-pricing rule).
-    */
-  def warmBenchFixture(spark: SparkSession, dir: String): Unit = {
-    benchFixture(spark, dir); ()
-  }
 
   /** Bench entry (`d8x_incremental_merge`): the per-ingest cost of
     * folding an every-7th-train-doc batch into the contamination-pair

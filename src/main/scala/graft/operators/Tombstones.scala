@@ -4,54 +4,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Signed tombstones over an append-only bucketed index — the ONE
-  * owner of the retraction lifecycle's presence discipline, shared by
-  * the trigram / passage / media families (the same single-owner rule
-  * as `Bucketing.absentOnly`): retracting a doc appends a −1 row to
-  * `<prefix>_gone`; re-admitting it appends a +1 RESURRECTION row
-  * (its index rows are still physically present — docs are immutable,
-  * so same id ⇒ same rows); an id is dead iff its net sign is
-  * negative.
+  * owner of the retraction presence discipline (the incremental
+  * families reach it through [[PostingIndex]]; IncrementalDedup
+  * directly): retracting an id appends a −1 row to `<prefix>_gone`,
+  * re-admitting it appends a +1 RESURRECTION row (its index rows are
+  * still physically present — ids are immutable, so same id ⇒ same
+  * rows), and an id is dead iff its net sign is negative.
   *
-  * Everything stays append-only: no index rewrite (a by-key-bucketed
-  * index would touch every bucket for one doc's removal), no in-place
-  * update, and replays are absorbed by net-sign checks rather than
-  * guards the caller must remember. A deployment that never retracts
-  * pays nothing — the tombstone table is created lazily on the first
-  * retract and every reader short-circuits on its absence.
+  * Everything stays append-only: no index rewrite per takedown (a
+  * by-key-bucketed index would touch every bucket for one doc), and
+  * replays are absorbed by net-sign checks. A deployment that never
+  * retracts pays nothing — the table is created on the first retract
+  * and every reader short-circuits on its absence.
   *
   * Retraction targets are filtered by NOT-CURRENTLY-DEAD rather than
   * by a liveness probe of the corpus index: the dead set is
-  * tombstone-sized (broadcast while it fits the threshold, shuffle
-  * anti-join beyond — every dead-set join degrades through the one
-  * `deadSetJoin` owner), while "ids with live index rows" would
-  * shuffle the corpus on the doc key. Tombstoning an id that
-  * was never admitted is harmless — there are no index rows for the
-  * live-reader's anti-join to remove, and the retract-merge maths
-  * stay exact because every recompute runs against the TRUE
-  * post-retraction index (a spurious un-crossing merely recomputes
-  * rows to their current values).
+  * tombstone-sized, while "ids with live index rows" would shuffle the
+  * corpus on the id key. Tombstoning a never-admitted id is harmless —
+  * there are no index rows for `live` to remove, and every recompute
+  * runs against the TRUE post-retraction index.
   */
 object Tombstones {
 
-  /** Net-dead sets up to this many ids broadcast in `live()`; above
-    * it the anti-join shuffles instead (a MASS takedown — a
-    * poisoned-source purge removing a double-digit percentage of the
-    * corpus — is not a broadcastable set, and a hard-wired broadcast
-    * hint would OOM the driver exactly when retraction matters most).
+  /** Net-dead sets up to this many ids broadcast; above it every
+    * dead-set join shuffles instead (a MASS takedown — a poisoned-source
+    * purge — is not a broadcastable set, and a hard-wired broadcast
+    * would OOM the driver exactly when retraction matters most).
     */
   val BroadcastLimitKey = "spark.graft.tombstoneBroadcastLimit"
 
   private def goneTable(prefix: String): String =
     s"${prefix}_gone".toLowerCase(java.util.Locale.ROOT)
 
-  /** Change stamp of the retraction state: the `_gone` row count —
-    * append-only, so every retract/resurrect moves it; `compact`
-    * resets it to 0, and the one `refreshHot*IfStale` that triggers
-    * spuriously right after a compact re-censuses to the identical
-    * result (idempotent). The streaming gates' exclusion refreshes
-    * subscribe to this (judge r15 #5): a takedown landing mid-stream
-    * is picked up at the next stale check instead of waiting for the
-    * next merge.
+  /** Change stamp of the retraction state: the `_gone` row count
+    * (append-only, so every retract/resurrect moves it; `compact`
+    * resets it, and the one spurious hot re-census that follows
+    * reproduces the identical result). The maintained hot censuses
+    * subscribe to it ([[PostingIndex.refreshHotIfStale]]).
     */
   def version(spark: SparkSession, prefix: String): Long =
     if (!spark.catalog.tableExists(goneTable(prefix))) 0L
@@ -66,13 +55,9 @@ object Tombstones {
       .filter(col("net") < 0).select(col(idCol)))
 
   /** `index` minus net-dead ids — an anti-join preserving the index's
-    * bucket layout (downstream bucket-key censuses stay
-    * exchange-free); the identity when no tombstones exist. The dead
-    * set broadcasts while it fits [[BroadcastLimitKey]] (one lineage
-    * cut + tombstone-sized count decides — cheap next to any corpus
-    * read) and degrades to a shuffle anti-join beyond it, so a mass
-    * takedown slows reads instead of killing the driver; `compact`
-    * is the pressure valve that folds the dead set away entirely.
+    * bucket layout (downstream bucket-key censuses stay exchange-free);
+    * the identity when no tombstones exist. `compact` is the pressure
+    * valve that folds the dead set away entirely.
     */
   def live(spark: SparkSession, index: DataFrame, prefix: String,
       idCol: String): DataFrame =
@@ -81,14 +66,10 @@ object Tombstones {
       case None => index
     }
 
-  /** The ONE thresholded dead-set join every reader and writer path
-    * shares (r16 judge #2: `retract`/`resurrect` hard-broadcast the
-    * dead set while `live()` had learned to degrade — the next
-    * retract after a mass takedown would OOM the driver exactly when
-    * retraction matters most): broadcast while the (cut, counted)
-    * dead set fits [[BroadcastLimitKey]], shuffle anti/semi-join
-    * beyond it. The count is tombstone-sized — cheap next to any
-    * index read or append.
+  /** The ONE thresholded dead-set join every reader and writer shares:
+    * broadcast while the (cut, counted) dead set fits
+    * [[BroadcastLimitKey]], shuffle anti/semi-join beyond it. The count
+    * is tombstone-sized — cheap next to any index read or append.
     */
   private[operators] def deadSetJoin(spark: SparkSession, df: DataFrame,
       dead0: DataFrame, idCol: String, joinType: String): DataFrame = {
@@ -117,12 +98,9 @@ object Tombstones {
     val rows = targets.withColumn("sign", lit(-1))
     if (!spark.catalog.tableExists(gone)) {
       // first retract ever: clear any stale managed location a prior
-      // session left behind (dropTableAndLocation — the one owner of
-      // that discipline), then create VIA APPEND mode — append creates
-      // a missing table but never clobbers an existing one, so two
-      // concurrent first retracts cannot silently drop each other's
-      // tombstones (an overwrite here could resurrect the loser's
-      // docs)
+      // session left behind, then create VIA APPEND mode — it never
+      // clobbers an existing table, so two concurrent first retracts
+      // cannot drop (and so resurrect) each other's tombstones
       graft.sources.Bucketing.dropTableAndLocation(spark, gone)
       rows.write.mode("append").format("parquet").saveAsTable(gone)
     } else if (!rows.isEmpty)
@@ -159,31 +137,20 @@ object Tombstones {
     }
   }
 
-  /** Fold the net-dead set INTO the physical indexes — the pressure
-    * valve that keeps both the `_gone` history and `live()`'s
-    * anti-join bounded: each bucketed index table is rewritten minus
-    * the dead ids (same bucket key and count — the layout every
-    * downstream census rides is preserved), then the tombstone
-    * history is truncated. Absence becomes the statement of death:
-    * after compaction, `live()` is the identity again and a compacted
-    * id can only come back via a full re-admit with content
-    * (`resurrect` no longer applies — its rows are physically gone).
+  /** Fold the net-dead set INTO the physical indexes, keeping both the
+    * `_gone` history and `live()`'s anti-join bounded: each table of
+    * `indexTables` = (table, bucketKey, bucketCount) is rewritten
+    * minus the dead ids under the same layout, then the history is
+    * truncated. Afterwards `live()` is the identity and a compacted id
+    * can only come back via a full re-admit with content.
     *
-    * `indexTables` = (table, bucketKey, bucketCount) for every
-    * bucketed table of the family keyed by `idCol` rows.
-    *
-    * Concurrency: lease-serialized per prefix ([[Lease]]); run it
-    * while the family's admit/retract writers are quiescent — the
-    * same single-writer contract those merges already carry.
-    * Crash safety: each rewrite lands in a staging table
-    * `<table>__c` while the original is still readable, then swaps
-    * (drop + rename); a crash between drop and rename is healed on
-    * the next compact entry, and the truncation runs LAST, so a
-    * crashed compact re-runs to the same result.
-    *
-    * Scale: one full rewrite of each index per compaction — by
-    * design (the log-structured fold); schedule it when the dead set
-    * approaches [[BroadcastLimitKey]], not per takedown.
+    * Concurrency: lease-serialized per prefix ([[Lease]]), under the
+    * families' single-writer contract. Crash safety: each rewrite lands
+    * in a staging table `<table>__c` while the original stays readable,
+    * then swaps (drop + rename); a crash in between is healed on the
+    * next entry, and the truncation runs LAST. Scale: one full rewrite
+    * per index — schedule it when the dead set approaches
+    * [[BroadcastLimitKey]], not per takedown.
     */
   def compact(spark: SparkSession, prefix: String, idCol: String,
       indexTables: Seq[(String, String, Int)]): Unit =

@@ -69,32 +69,9 @@ object Bucketing {
       leftTable: String, rightTable: String, key: String): DataFrame =
     spark.table(leftTable).join(spark.table(rightTable), key)
 
-  /** Keys of `table` whose row count exceeds `cap` — the hot-key
-    * census over a bucketed table's own key, exchange-free (the
-    * bucket layout satisfies the grouping). The shared kernel behind
-    * the maintained `_hot` exclusions (IncrementalPassages /
-    * IncrementalMedia).
-    */
-  def overCapKeys(spark: org.apache.spark.sql.SparkSession,
-      table: String, key: String, cap: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.table(table).groupBy(col(key))
-      .agg(count(lit(1)).as("n")).filter(col("n") > cap).select(col(key))
-  }
-
-  /** `table` minus a maintained hot-key table — the servable form a
-    * probing consumer reads (broadcast anti-join; the hot table is
-    * tiny by construction).
-    */
-  def minusHot(spark: org.apache.spark.sql.SparkSession,
-      table: String, hotTable: String, key: String): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    spark.table(table).join(broadcast(spark.table(hotTable)), Seq(key), "left_anti")
-  }
-
   /** `rows` minus those whose `idCol` is already present in `table` —
     * the replay-idempotency probe every incremental family's append
-    * runs (ExactSubstr, Trigram, DfStats): presence is checked against
+    * runs (PostingIndex, IncrementalDedup): presence is checked against
     * THIS table (a crash between two appends must heal exactly the
     * lagging one), via a broadcast semi-probe of the bucketed table
     * (corpus side unshuffled, output ≤ the batch) broadcast back as

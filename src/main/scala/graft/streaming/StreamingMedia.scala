@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *     appended by this very pipeline are probed by the next one —
   *     and a mid-stream takedown is picked up by running
   *     `IncrementalMedia.refreshHotBucketsIfStale` at micro-batch
-  *     cadence (stale iff `Tombstones.version` moved; r16);
+  *     cadence;
   *   - the STREAM side hashes each arriving asset with the
   *     EXPRESSION-FOLD pHash (`simhashHex` over char shingles) — a
   *     pure per-row map, no explode/aggregation, hence no state. The

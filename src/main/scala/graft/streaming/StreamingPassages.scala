@@ -31,17 +31,12 @@ import org.apache.spark.sql.functions._
   * containing it out to 10⁵ corpus docs (the quadratic blowup the
   * batch pipeline's cap exists to prevent) and falsely flag any doc
   * sharing ≥ minShared boilerplate windows. Pass
-  * `IncrementalPassages.servableIndex` as `index`: the full window
-  * table minus the MAINTAINED `<prefix>_hot` census
-  * (`refreshHotWindows`, refreshed at batch-append cadence — one
-  * exchange-free linear scan per batch, never a census per
-  * micro-batch; the incremental merge keeps reading the full table,
-  * whose df census needs true counts). Retraction pickup (r16): a
-  * mid-stream takedown flips the census stale via
-  * `Tombstones.version` — run
+  * `IncrementalPassages.servableIndex` as `index`: the live window
+  * table minus the `<prefix>_hot` census the lifecycle core maintains
+  * per admit / retract ([[graft.operators.PostingIndex]]); run
   * `IncrementalPassages.refreshHotWindowsIfStale` at micro-batch
-  * cadence (cheap no-op when quiescent) so the exclusion and the
-  * served index reflect the takedown within one micro-batch.
+  * cadence (a no-op when quiescent) to pick a mid-stream takedown up
+  * within one micro-batch.
   */
 object StreamingPassages {
 

@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   *     admitted by `admitBatch` are probed by the next one — and a
   *     mid-stream takedown is picked up by running
   *     `IncrementalExactSubstr.refreshHotWindowsIfStale` at
-  *     micro-batch cadence (stale iff `Tombstones.version` moved;
-  *     r16);
+  *     micro-batch cadence;
   *   - STREAM side: tokenize → the family's ONE window-position
   *     kernel (`ExactSubstr.windowPositions`, ts kept through the
   *     explode; watermark attaches BEFORE it so a windowless short

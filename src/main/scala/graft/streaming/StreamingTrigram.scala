@@ -35,13 +35,11 @@ import org.apache.spark.sql.functions._
   * shared-trigram count ≥ `minShared` — d8's row shape at the
   * stream front door.
   *
-  * Retraction pickup (r16): a takedown landing MID-STREAM moves
-  * `Tombstones.version`, which flips the maintained hot census stale
-  * — run `IncrementalTrigram.refreshHotTrigramsIfStale` at
-  * micro-batch cadence (a `foreachBatch` hook; one tiny count + one
-  * properties read when quiescent) and read the hot frame there, so
-  * the exclusion reflects post-retraction document frequencies within
-  * one micro-batch instead of waiting for the next merge.
+  * Retraction pickup: run `IncrementalTrigram.refreshHotTrigramsIfStale`
+  * at micro-batch cadence (a `foreachBatch` hook; a no-op when
+  * quiescent — [[graft.operators.PostingIndex]]) and read the hot
+  * frame there, so a mid-stream takedown reaches the exclusion within
+  * one micro-batch.
   */
 object StreamingTrigram {
 

@@ -49,4 +49,36 @@ class ArrayL2Dist2Spec extends SparkSpec {
     assert(e.getMessage.contains("length mismatch") ||
       Option(e.getCause).exists(_.getMessage.contains("length mismatch")))
   }
+
+  test("non-double arrays are rejected at analysis time") {
+    val df = Seq((Seq(1.0f, 2.0f), Seq(3.0f, 5.0f))).toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(ArrayL2Dist2($"a", $"b")).collect()
+    }
+    assert(e.getMessage.contains("array<double>") ||
+      e.getMessage.contains("ArrayL2Dist2 requires"),
+      s"unexpected: ${e.getMessage.take(200)}")
+  }
+
+  test("a null element fails loudly, never a distance") {
+    val df = Seq((1L, Seq(Some(1.0), None), Seq(Some(3.0), Some(5.0))))
+      .toDF("id", "a", "b")
+    def run(): Unit = {
+      val e = intercept[Exception] {
+        df.select(ArrayL2Dist2($"a", $"b")).collect()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("null element"))), e)
+    }
+    run()
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try run()
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -67,14 +67,19 @@ class CentroidErr2Spec extends SparkSpec {
   }
 
   test("null or unmatched code yields null, like the when-chain") {
-    val df = Seq((1L, Seq(1.0, 2.0, 3.0), Some(2L)),
-      (2L, Seq(1.0, 2.0, 3.0), Some(99L)), // matches no cid
-      (3L, Seq(1.0, 2.0, 3.0), None)).toDF("id", "v", "code")
+    val v = Seq(Some(1.0), Some(2.0), Some(3.0))
+    val df = Seq((1L, v, Some(2L)),
+      (2L, v, Some(99L)), // matches no cid
+      (3L, v, None),
+      // unmatched code: null even with a null component, since the
+      // when-chain's null base never touches the vector
+      (4L, Seq(Some(1.0), None, Some(3.0)), Some(99L))).toDF("id", "v", "code")
     val got = df.select($"id", CentroidErr2($"v", $"code", cents).as("e"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(got(1L).isDefined)
     assert(got(2L).isEmpty, "unmatched code must be null")
     assert(got(3L).isEmpty, "null code must be null")
+    assert(got(4L).isEmpty, "unmatched code must be null before any component check")
     val ref = df.select($"id", literalErr2($"v", $"code").as("e"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(got === ref)

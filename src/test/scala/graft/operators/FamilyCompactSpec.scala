@@ -25,7 +25,7 @@ class FamilyCompactSpec extends SparkSpec {
     val before = IncrementalTrigram.liveTri(spark, prefix)
       .as[(Long, Long)].collect().toSet
     val panelBefore = spark.table(s"${prefix}_panel").count()
-    IncrementalTrigram.compact(spark, prefix, buckets = 4)
+    IncrementalTrigram.compact(spark, prefix)
     assert(!spark.catalog.tableExists(s"${prefix}_gone"))
     assert(spark.table(s"${prefix}_tri").as[(Long, Long)].collect().toSet
       === before)
@@ -46,7 +46,7 @@ class FamilyCompactSpec extends SparkSpec {
       prefix, "doc_id").count()
     val docBefore = Tombstones.live(spark, spark.table(s"${prefix}_wdoc"),
       prefix, "doc_id").count()
-    IncrementalExactSubstr.compact(spark, prefix, buckets = 4)
+    IncrementalExactSubstr.compact(spark, prefix)
     assert(!spark.catalog.tableExists(s"${prefix}_gone"))
     assert(spark.table(s"${prefix}_wpos").count() === posBefore)
     assert(spark.table(s"${prefix}_wdoc").count() === docBefore)

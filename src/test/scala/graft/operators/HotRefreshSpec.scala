@@ -29,38 +29,35 @@ class HotRefreshSpec extends SparkSpec {
     IncrementalTrigram.buildIndex(
       PipelineQueries.trigramRows(train),
       StreamingTrigramFixtures.panelOf(panel), prefix = prefix, buckets = 4)
-    IncrementalTrigram.refreshHotTrigrams(spark, prefix, cap = 2, buckets = 4)
-    assert(!HotRefresh.isStale(spark, s"${prefix}_hot", prefix))
+    IncrementalTrigram.refreshHotTrigrams(spark, prefix, cap = 2)
+    assert(!PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
     val hotBefore = spark.table(s"${prefix}_hot").count()
     assert(hotBefore > 0L, "B's trigrams must be hot at df 3 > cap 2")
     // the takedown lands via the tombstone owner alone (the
     // IncrementalDedup.retractBatch shape — no merge runs)
     Tombstones.retract(spark, prefix, Seq(3L).toDF("doc_id"), "doc_id")
-    assert(HotRefresh.isStale(spark, s"${prefix}_hot", prefix),
+    assert(PostingIndex.isStale(spark, s"${prefix}_hot", prefix),
       "a retract must flip the exclusion stale")
-    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2,
-      buckets = 4)
-    assert(!HotRefresh.isStale(spark, s"${prefix}_hot", prefix))
+    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2)
+    assert(!PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
     assert(spark.table(s"${prefix}_hot").count() === 0L,
       "B at df 2 = cap is no longer hot after the takedown")
     // resurrection moves the version too — stale again, census back
     Tombstones.resurrect(spark, prefix, Seq(3L).toDF("doc_id"), "doc_id")
-    assert(HotRefresh.isStale(spark, s"${prefix}_hot", prefix))
-    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2,
-      buckets = 4)
+    assert(PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
+    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2)
     assert(spark.table(s"${prefix}_hot").count() === hotBefore)
     // quiescent stream: repeated IfStale checks stay cheap no-ops
-    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2,
-      buckets = 4)
-    assert(!HotRefresh.isStale(spark, s"${prefix}_hot", prefix))
+    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2)
+    assert(!PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
   }
 
   test("isStale is true for a missing or unstamped hot table") {
-    assert(HotRefresh.isStale(spark, "hotref_none_hot", "hotref_none"))
+    assert(PostingIndex.isStale(spark, "hotref_none_hot", "hotref_none"))
     val prefix = "hotref_b"
     graft.sources.Bucketing.writeBucketed(
       Seq("x").toDF("h"), s"${prefix}_hot", "h", 2)
-    assert(HotRefresh.isStale(spark, s"${prefix}_hot", prefix),
+    assert(PostingIndex.isStale(spark, s"${prefix}_hot", prefix),
       "an unstamped census (pre-r16 layout) must read as stale")
   }
 }

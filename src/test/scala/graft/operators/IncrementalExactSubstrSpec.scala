@@ -135,7 +135,7 @@ class IncrementalExactSubstrSpec extends SparkSpec {
     val oldRepeats = ExactSubstr.maximalRepeats(corpusDocs, cap = 3)
     val merged = IncrementalExactSubstr.admitBatch(spark,
       ExactSubstr.windowPositions(batchDocs), oldRepeats,
-      prefix = "ixs4", cap = 3, buckets = 4)
+      prefix = "ixs4", cap = 3)
     assert(rows(merged) === Set(
       (1L, 2L, 1L, 1L, 18L), (1L, 2L, 13L, 13L, 18L),
       (5L, 11L, 1L, 3L, 12L), (12L, 13L, 1L, 5L, 12L)))
@@ -218,7 +218,7 @@ class IncrementalExactSubstrSpec extends SparkSpec {
     val oldRepeats = ExactSubstr.maximalRepeats(corpusDocs, cap = 3)
     val batchWins = ExactSubstr.windowPositions(batchDocs)
     val admitted = IncrementalExactSubstr.admitBatch(spark, batchWins, oldRepeats,
-      prefix = "ixr3", cap = 3, buckets = 4)
+      prefix = "ixr3", cap = 3)
     val retracted = IncrementalExactSubstr.retractBatch(spark, batchWins, admitted,
       prefix = "ixr3", cap = 3)
     assert(rows(retracted) === Set((1L, 2L, 1L, 1L, 30L)),
@@ -226,7 +226,7 @@ class IncrementalExactSubstrSpec extends SparkSpec {
     val wposN = spark.table("ixr3_wpos").count()
     val wdocN = spark.table("ixr3_wdoc").count()
     val readmitted = IncrementalExactSubstr.admitBatch(spark, batchWins, retracted,
-      prefix = "ixr3", cap = 3, buckets = 4)
+      prefix = "ixr3", cap = 3)
     assert(rows(readmitted) === Set(
       (1L, 2L, 1L, 1L, 18L), (1L, 2L, 13L, 13L, 18L),
       (5L, 11L, 1L, 3L, 12L), (12L, 13L, 1L, 5L, 12L)),
@@ -260,12 +260,12 @@ class IncrementalExactSubstrSpec extends SparkSpec {
     val oldRepeats = ExactSubstr.maximalRepeats(corpusDocs, cap = 3)
     val batchWins = ExactSubstr.windowPositions(batchDocs)
     val first = IncrementalExactSubstr.admitBatch(spark, batchWins, oldRepeats,
-      prefix = "ixs6", cap = 3, buckets = 4)
+      prefix = "ixs6", cap = 3)
     val wposN = spark.table("ixs6_wpos").count()
     val wdocN = spark.table("ixs6_wdoc").count()
     assert(wposN === wdocN, "both layouts hold the same rows")
     val replay = IncrementalExactSubstr.admitBatch(spark, batchWins, oldRepeats,
-      prefix = "ixs6", cap = 3, buckets = 4)
+      prefix = "ixs6", cap = 3)
     assert(rows(replay) === rows(first),
       "replaying the same batch must reproduce the same merged table")
     assert(spark.table("ixs6_wpos").count() === wposN &&
@@ -276,7 +276,7 @@ class IncrementalExactSubstrSpec extends SparkSpec {
     // exactly the lagging table and leaves the other untouched
     graft.sources.Bucketing.writeBucketed(
       corpusWins.select($"doc_id", $"pos", $"h"), "ixs6_wdoc", "doc_id", 4)
-    IncrementalExactSubstr.appendToIndexes(batchWins, prefix = "ixs6", buckets = 4)
+    IncrementalExactSubstr.appendToIndexes(batchWins, prefix = "ixs6")
     assert(spark.table("ixs6_wpos").count() === wposN &&
       spark.table("ixs6_wdoc").count() === wdocN,
       "the retry must heal the lagging table without double-appending the other")

@@ -178,11 +178,11 @@ class IncrementalIvfSpec extends SparkSpec {
     try {
       // dead = 2; limit 100 → 2 < 50: not due
       spark.conf.set(Tombstones.BroadcastLimitKey, "100")
-      assert(!IncrementalIvf.compactIfDue(spark, prefix, buckets = 2))
+      assert(!IncrementalIvf.compactIfDue(spark, prefix))
       assert(spark.catalog.tableExists(s"${prefix}_gone"))
       // limit 4 → 2 ≥ 2: due — compacts and truncates the history
       spark.conf.set(Tombstones.BroadcastLimitKey, "4")
-      assert(IncrementalIvf.compactIfDue(spark, prefix, buckets = 2))
+      assert(IncrementalIvf.compactIfDue(spark, prefix))
       assert(!spark.catalog.tableExists(s"${prefix}_gone"))
       assert(served(prefix) === Set(2L, 4L, 5L, 6L))
     } finally {

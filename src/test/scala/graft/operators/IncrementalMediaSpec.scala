@@ -178,7 +178,7 @@ class IncrementalMediaSpec extends SparkSpec {
       maxHamming = 3, maxBucket = 3)
     val oldClusters = DedupClusters.connectedComponents(oldPairs, "id_a", "id_b")
     val (merged, labels) = IncrementalMedia.admitBatch(spark, batchHashed,
-      oldPairs, oldClusters, prefix = "imedia8", maxBucket = 3, buckets = 4)
+      oldPairs, oldClusters, prefix = "imedia8", maxBucket = 3)
     assert(merged.select($"id_a", $"id_b", $"hamming".cast("long"))
       .as[(Long, Long, Long)].collect().toSet ===
       Set((1L, 2L, 1L), (7L, 12L, 1L), (13L, 14L, 1L)))
@@ -213,7 +213,7 @@ class IncrementalMediaSpec extends SparkSpec {
     val oldPairs = Dedup.hexHashPairs(corpusHashed, "media_id", "phash")
     val oldClusters = DedupClusters.connectedComponents(oldPairs, "id_a", "id_b")
     val (merged, labels) = IncrementalMedia.admitBatch(spark, batchHashed,
-      oldPairs, oldClusters, prefix = "imedia9", buckets = 4)
+      oldPairs, oldClusters, prefix = "imedia9")
     val truthPairs = Dedup.hexHashPairs(
       corpusHashed.unionByName(batchHashed), "media_id", "phash")
     assert(merged.select($"id_a", $"id_b", $"hamming".cast("long"))
@@ -286,7 +286,7 @@ class IncrementalMediaSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     val oldClusters = DedupClusters.connectedComponents(oldPairs, "id_a", "id_b")
     val (admitted, _) = IncrementalMedia.admitBatch(spark, batchHashed,
-      oldPairs, oldClusters, prefix = "imedr3", maxBucket = 3, buckets = 4)
+      oldPairs, oldClusters, prefix = "imedr3", maxBucket = 3)
     val (retracted, _) = IncrementalMedia.retractBatch(spark, batchHashed,
       admitted, prefix = "imedr3", maxBucket = 3)
     assert(retracted.select($"id_a", $"id_b", $"hamming".cast("long"))
@@ -295,7 +295,7 @@ class IncrementalMediaSpec extends SparkSpec {
     val physN = spark.table("imedr3_band").count()
     val (readmitted, _) = IncrementalMedia.admitBatch(spark, batchHashed,
       retracted, DedupClusters.connectedComponents(retracted, "id_a", "id_b"),
-      prefix = "imedr3", maxBucket = 3, buckets = 4)
+      prefix = "imedr3", maxBucket = 3)
     assert(readmitted.select($"id_a", $"id_b", $"hamming".cast("long"))
       .as[(Long, Long, Long)].collect().toSet ===
       Set((1L, 2L, 1L), (7L, 12L, 1L), (13L, 14L, 1L)),

@@ -67,7 +67,7 @@ class IncrementalPassagesSpec extends SparkSpec {
     val oldPairs = IncrementalPassages.pairsFromWindows(corpusWins, cap = 3)
     val merged = IncrementalPassages.admitBatch(spark,
       IncrementalPassages.windowHashes(batchDocs), oldPairs,
-      prefix = "ippt6", cap = 3, buckets = 4)
+      prefix = "ippt6", cap = 3)
     assert(merged.as[(Long, Long, Long)].collect().toSet === Set(
       (1L, 2L, 5L), (3L, 4L, 3L), (3L, 10L, 3L), (4L, 10L, 3L), (10L, 11L, 3L)))
     // the NEXT micro-batch probes the post-admit servable index:
@@ -91,7 +91,7 @@ class IncrementalPassagesSpec extends SparkSpec {
     val batch2 = Seq((30L, s"$Q ${toks("um", 8)}")).toDF("doc_id", "text")
     val merged2 = IncrementalPassages.admitBatch(spark,
         IncrementalPassages.windowHashes(batch2), merged,
-        prefix = "ippt6", cap = 3, buckets = 4)
+        prefix = "ippt6", cap = 3)
       .as[(Long, Long, Long)].collect().toSet
     val full = IncrementalPassages.pairsFromWindows(
         IncrementalPassages.windowHashes(
@@ -147,7 +147,7 @@ class IncrementalPassagesSpec extends SparkSpec {
     val corpusWins = IncrementalPassages.windowHashes(corpusDocs)
     val batchWins = IncrementalPassages.windowHashes(batchDocs)
     IncrementalPassages.buildWindowIndex(corpusWins, prefix = "ippt3", buckets = 4)
-    IncrementalPassages.appendToIndex(batchWins, prefix = "ippt3", buckets = 4)
+    IncrementalPassages.appendToIndex(batchWins, prefix = "ippt3")
     val fromTable = IncrementalPassages.pairsFromWindows(
         spark.table("ippt3_win"), cap = 3)
       .as[(Long, Long, Long)].collect().toSet
@@ -189,7 +189,7 @@ class IncrementalPassagesSpec extends SparkSpec {
     val oldPairs = IncrementalPassages.pairsFromWindows(corpusWins, cap = 3)
     val oldSet = oldPairs.as[(Long, Long, Long)].collect().toSet
     val admitted = IncrementalPassages.admitBatch(spark, batchWins, oldPairs,
-      prefix = "ippr2", cap = 3, buckets = 4)
+      prefix = "ippr2", cap = 3)
     val retracted = IncrementalPassages.retractBatch(spark, batchWins, admitted,
       prefix = "ippr2", cap = 3)
     assert(retracted.as[(Long, Long, Long)].collect().toSet === oldSet,
@@ -197,7 +197,7 @@ class IncrementalPassagesSpec extends SparkSpec {
     // re-admit: rows still physically present → +1 resurrection, no dup
     val physN = spark.table("ippr2_win").count()
     val readmitted = IncrementalPassages.admitBatch(spark, batchWins, retracted,
-      prefix = "ippr2", cap = 3, buckets = 4)
+      prefix = "ippr2", cap = 3)
     assert(readmitted.as[(Long, Long, Long)].collect().toSet === Set(
       (1L, 2L, 5L), (3L, 4L, 3L), (3L, 10L, 3L), (4L, 10L, 3L), (10L, 11L, 3L)),
       "re-admit after retract ≡ first admit")

@@ -74,7 +74,7 @@ class IncrementalTrigramSpec extends SparkSpec {
     val oldPairs = PipelineQueries.pairsFromTrigramRows(
       tris(trainDocs), panel, maxDf = 3, minShared = 1)
     val merged = IncrementalTrigram.admitBatch(spark, tris(batchDocs), oldPairs,
-      prefix = "itr2", cap = 3, buckets = 4)
+      prefix = "itr2", cap = 3)
     assert(pairs(merged) === mergedExpected)
     // the gate's batch-shape replay: an arrival built from B must stay
     // clean under the REFRESHED hot table; an R copy still flags
@@ -94,7 +94,7 @@ class IncrementalTrigramSpec extends SparkSpec {
     // FIRST merge's output and equals one full recompute
     val batch2 = Seq((30L, s"$Q ${toks("fk", 3)}")).toDF("doc_id", "text")
     val merged2 = IncrementalTrigram.admitBatch(spark, tris(batch2), merged,
-      prefix = "itr2", cap = 3, buckets = 4)
+      prefix = "itr2", cap = 3)
     val full = PipelineQueries.pairsFromTrigramRows(
       tris(trainDocs.unionByName(batchDocs).unionByName(batch2)),
       panel, maxDf = 3, minShared = 1)
@@ -106,10 +106,10 @@ class IncrementalTrigramSpec extends SparkSpec {
     val oldPairs = PipelineQueries.pairsFromTrigramRows(
       tris(trainDocs), panel, maxDf = 3, minShared = 1)
     val first = IncrementalTrigram.admitBatch(spark, tris(batchDocs), oldPairs,
-      prefix = "itr3", cap = 3, buckets = 4)
+      prefix = "itr3", cap = 3)
     val idxN = spark.table("itr3_tri").count()
     val replay = IncrementalTrigram.admitBatch(spark, tris(batchDocs), oldPairs,
-      prefix = "itr3", cap = 3, buckets = 4)
+      prefix = "itr3", cap = 3)
     assert(pairs(replay) === pairs(first),
       "replaying the same batch must reproduce the same merged table")
     assert(spark.table("itr3_tri").count() === idxN,
@@ -195,7 +195,7 @@ class IncrementalTrigramSpec extends SparkSpec {
     val oldPairs = PipelineQueries.pairsFromTrigramRows(
       tris(trainDocs), panel, maxDf = 3, minShared = 1)
     val admitted = IncrementalTrigram.admitBatch(spark, tris(batchDocs), oldPairs,
-      prefix = "itr9", cap = 3, buckets = 4)
+      prefix = "itr9", cap = 3)
     val retracted = IncrementalTrigram.retractBatch(spark, tris(batchDocs), admitted,
       prefix = "itr9", cap = 3)
     assert(pairs(retracted) === oldExpected, "admit then retract must round-trip")
@@ -210,7 +210,7 @@ class IncrementalTrigramSpec extends SparkSpec {
     // resurrects via a +1 tombstone instead of duplicating them
     val physN = spark.table("itr9_tri").count()
     val readmitted = IncrementalTrigram.admitBatch(spark, tris(batchDocs), retracted,
-      prefix = "itr9", cap = 3, buckets = 4)
+      prefix = "itr9", cap = 3)
     assert(pairs(readmitted) === mergedExpected, "re-admit after retract ≡ first admit")
     assert(spark.table("itr9_tri").count() === physN,
       "resurrection must not duplicate physical index rows")
