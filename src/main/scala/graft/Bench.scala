@@ -68,49 +68,82 @@ object Bench {
         IncrementalHierIvf.benchFixture))
   }
 
-  def main(args: Array[String]): Unit = {
-    // optional arg: regex of query names (dev-loop subset timing);
-    // the driver passes no args and benches everything
-    val nameFilter = args.headOption.getOrElse(".*")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core on the box: the driver's contract is local[32]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the status-store listeners run even with the UI off and
-      // retain per-job/stage/task rows for every execution — ~500
-      // executions per bench invocation; keep the retained window
-      // small so late entries don't pay the store's growth
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // derived-scale arms: the MakeScale fixture is a replica flood by
-    // construction, so the artifact saturation gate fires on it
-    // CORRECTLY; a sweep that measures the capped serving behavior
-    // raises the budget explicitly per run (disclosed in SURVEY)
-    sys.env.get("SPARK_GRAFT_SAT_FRAC").foreach(v =>
-      spark.conf.set(operators.Similarity.SaturationMaxDroppedFracKey, v))
-    // warmup: session init, codegen compiler, IO pools, and the
-    // csv/parquet write committers — so the first timed query isn't
-    // charged several seconds of one-time datasource init cost
+  /** One session-level warm-up: session init, codegen compiler, IO
+    * pools, and the csv/parquet write committers — so the first timed
+    * query isn't charged several seconds of one-time datasource init.
+    */
+  private[graft] def warmSession(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000).selectExpr("sum(id)").collect()
-    val warmDir = "/root/repo/target/scratch/bench_warmup"
+    val warmDir = s"${GraftSession.scratchRoot}/bench_warmup"
     spark.read.parquet(s"$sfDir/region.parquet")
       .write.mode("overwrite").option("header", "true").csv(s"$warmDir/csv")
     spark.read.option("header", "true").csv(s"$warmDir/csv")
       .write.mode("overwrite").parquet(s"$warmDir/pq")
     spark.read.parquet(s"$warmDir/pq").count()
+  }
+
+  /** Per-entry run times of one [[measure]] pass (-1 = the run threw). */
+  private[graft] final case class Timings(sfDir: String, runsPer: Int, reruns: Int,
+      results: Map[String, Seq[Double]], errors: Seq[String]) {
+
+    private def f(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
+
+    private def median(ts: Seq[Double]): Double = {
+      val s = ts.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+    }
+
+    /** Median per entry, -1 for an entry with a failed run. */
+    val medians: Map[String, Double] = results.map { case (name, ts) =>
+      name -> (if (ts.exists(_ < 0)) -1.0 else median(ts))
+    }
+
+    private def errJson = errors.distinct
+      .map(e => "\"" + e.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+      .mkString("[", ",", "]")
+
+    /** The per-entry detail (`target/bench_detail.json`'s schema). */
+    def detailJson: String = {
+      val qs = medians.map { case (k, v) => s"\"" + k + "\":" + f(v) }
+        .mkString("{", ",", "}")
+      val detail = results.map { case (k, ts) =>
+        val ok = !ts.exists(_ < 0)
+        val m = if (ok) median(ts) else -1.0
+        val mn = if (ok) ts.min else -1.0
+        s"\"$k\":{\"median\":${f(m)},\"min\":${f(mn)},\"runs\":[${ts.map(f).mkString(",")}]}"
+      }.mkString("{", ",", "}")
+      s"""{"runs_per_query":$runsPer,"reruns":$reruns,"medians":$qs,"queries":$detail,"errors":$errJson,"sf":"$sfDir"}"""
+    }
+
+    /** The one-line stdout summary, naming where the detail went. */
+    def summaryLine(detailPath: String): String = {
+      val total = medians.values.filter(_ >= 0).sum
+      // min-of-3 total alongside the median: a contended driver run
+      // shows a large median/min gap, making machine noise self-
+      // diagnosing instead of reading as a regression
+      val totalMin = results.collect {
+        case (_, ts) if !ts.exists(_ < 0) => ts.min
+      }.sum
+      // explicit contention flag in the headline: per-query max/min
+      // spread — a query whose 3 runs differ by >3× was fighting the
+      // machine, not regressing (r7 and r8 driver runs both had
+      // first-run spikes up to 6× that read as slowdowns until the
+      // detail file was excavated; now the headline says so itself)
+      val spreads = results.collect {
+        case (_, ts) if !ts.exists(_ < 0) && ts.min > 0 => ts.max / ts.min
+      }
+      val contended = spreads.count(_ > 3.0)
+      val maxSpread = if (spreads.isEmpty) 1.0 else spreads.max
+      s"""{"metric":"total","value":${f(total)},"value_min":${f(totalMin)},"unit":"sec","n":${medians.size},"contended":$contended,"reruns":$reruns,"max_spread":${f(maxSpread)},"errors":$errJson,"sf":"$sfDir","detail":"$detailPath"}"""
+    }
+  }
+
+  /** Time every registry entry (`SparkEntry.queries` ++ `extraQueries`)
+    * whose name full-matches `nameFilter` on `sfDir` — the one
+    * measurement loop Bench and ScalingBench share.
+    */
+  private[graft] def measure(spark: SparkSession, sfDir: String,
+      nameFilter: String): Timings = {
     // standing fixtures of the selected entries, built outside the
     // timed runs (memoized: entries sharing a fixture build it once)
     extraQueries.foreach { case (name, e) =>
@@ -123,9 +156,9 @@ object Bench {
     // real regression distinguishable from a noisy run).
     // A throwing query reports -1 sec (sentinel), never its
     // time-to-exception — a broken query must not read as a fast one.
-    // SPARK_GRAFT_RUNS=1: single-pass mode for the §8o scale sweep
-    // (one full run at a 10× SF; medians there would triple an
-    // already-long wall time for no gate the sweep needs)
+    // SPARK_GRAFT_RUNS=1: single-pass mode for scale sweeps (one full
+    // run at a 10× SF; medians there would triple an already-long
+    // wall time for no gate the sweep needs)
     val runsPer = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(3)
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     var reruns = 0
@@ -157,52 +190,28 @@ object Bench {
         val extra = once(recordError = false)
         if (extra >= 0) times = (times :+ extra).sorted.dropRight(1)
       }
-      name -> times
+      name -> (times: Seq[Double])
     }
-    def median(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    def f(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
-    val summary = results.map { case (name, ts) =>
-      name -> (if (ts.exists(_ < 0)) -1.0 else median(ts))
-    }
-    val qs = summary.map { case (k, v) => s"\"" + k + "\":" + f(v) }
-      .mkString("{", ",", "}")
-    val detail = results.map { case (k, ts) =>
-      val ok = !ts.exists(_ < 0)
-      val m = if (ok) median(ts) else -1.0
-      val mn = if (ok) ts.min else -1.0
-      s"\"$k\":{\"median\":${f(m)},\"min\":${f(mn)},\"runs\":[${ts.map(f).mkString(",")}]}"
-    }.mkString("{", ",", "}")
-    val total = summary.values.filter(_ >= 0).sum
-    // min-of-3 total alongside the median: a contended driver run
-    // shows a large median/min gap, making machine noise self-
-    // diagnosing instead of reading as a regression
-    val totalMin = results.collect {
-      case (_, ts) if !ts.exists(_ < 0) => ts.min
-    }.sum
-    // explicit contention flag in the headline: per-query max/min
-    // spread — a query whose 3 runs differ by >3× was fighting the
-    // machine, not regressing (r7 and r8 driver runs both had
-    // first-run spikes up to 6× that read as slowdowns until the
-    // detail file was excavated; now the headline says so itself)
-    val spreads = results.collect {
-      case (_, ts) if !ts.exists(_ < 0) && ts.min > 0 => ts.max / ts.min
-    }
-    val contended = spreads.count(_ > 3.0)
-    val maxSpread = if (spreads.isEmpty) 1.0 else spreads.max
-    val errJson = errors.distinct
-      .map(e => "\"" + e.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
+    Timings(sfDir, runsPer, reruns, results, errors.toSeq)
+  }
+
+  def main(args: Array[String]): Unit = {
+    // optional arg: regex of query names (dev-loop subset timing);
+    // the driver passes no args and benches everything
+    val nameFilter = args.headOption.getOrElse(".*")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // default to every core on the box: the driver's contract is local[32]
+    val cpus = GraftSession.mainCores
+    val spark = GraftSession.forMain(cpus)
+    warmSession(spark, sfDir)
+    val t = measure(spark, sfDir, nameFilter)
     // The stdout contract is ONE SHORT JSON line (the driver tail-captures
     // output; the r3 per-query {median,min,runs} detail AND the r5 flat
     // per-query median map both pushed the line past the capture window and
     // truncated its START, so the driver recorded "parsed": null — twice).
     // The final line therefore carries ONLY the scalar summary; the full
     // per-query medians + detail live in target/bench_detail.json + stderr.
-    val detailJson =
-      s"""{"runs_per_query":$runsPer,"reruns":$reruns,"medians":$qs,"queries":$detail,"errors":$errJson,"sf":"$sfDir"}"""
+    val detailJson = t.detailJson
     System.err.println(detailJson)
     try {
       java.nio.file.Files.write(
@@ -217,7 +226,7 @@ object Bench {
         java.nio.file.Paths.get(s"/root/repo/target/bench_detail_c$cpus.json"),
         detailJson.getBytes("UTF-8"))
     } catch { case _: Throwable => () }
-    println(s"""{"metric":"total","value":${f(total)},"value_min":${f(totalMin)},"unit":"sec","n":${summary.size},"contended":$contended,"reruns":$reruns,"max_spread":${f(maxSpread)},"errors":$errJson,"sf":"$sfDir","detail":"target/bench_detail.json"}""")
+    println(t.summaryLine("target/bench_detail.json"))
     spark.stop()
   }
 }

@@ -1,18 +1,21 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session + table helpers shared by queries, Verify, Bench and the CLI.
+/** Session + table helpers shared by queries, the mains and the CLI.
   *
   * Scale notes: AQE stays on (skew-join splitting, partition
-  * coalescing); shuffle partitions are sized by the caller (driver
-  * mains set them to the local core count — on a real cluster this
-  * would be ~2-3x total cores, and AQE coalesces down).
+  * coalescing); shuffle partitions are sized to the local core count
+  * (on a real cluster this would be ~2-3x total cores, and AQE
+  * coalesces down).
   */
 object GraftSession {
 
-  /** Build a tuned local session (used by the CLI and specs; Verify and
-    * Bench build their own per the driver contract).
+  /** The one session builder: the CLI, the specs, every main (Bench,
+    * Verify, ScalingBench, PlanDump, Probe, MakeScale) and perfbench
+    * all run this engine. Mains that need a different runtime SQL conf
+    * set it on the built session (`spark.conf.set`).
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession
@@ -24,7 +27,11 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
+      // a warehouse the user configured (spark-submit --conf, or a
+      // spark.* system property) wins; otherwise managed tables land
+      // under the local scratch root, never in the working directory
+      .config("spark.sql.warehouse.dir", new SparkConf()
+        .get("spark.sql.warehouse.dir", s"$scratchRoot/warehouse"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Status-store retention caps (r20, promoted from Bench/Verify —
@@ -43,6 +50,31 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Root of every local default location the engine writes to without
+    * being told where: the warehouse, the artifact volume
+    * (`spark.graft.artifactDir`'s default), the conversion entries'
+    * scratch CSVs and the bench warm-up files.
+    */
+  private[graft] def scratchRoot: String =
+    new java.io.File(System.getProperty("java.io.tmpdir"), "graft").getAbsolutePath
+
+  /** The mains' session: `local` at `SPARK_GRAFT_CPUS` cores (default:
+    * every core). `SPARK_GRAFT_SAT_FRAC` raises the artifact
+    * saturation budget: a MakeScale-derived corpus is a replica flood
+    * by construction, so the gate fires on it correctly, and a sweep
+    * that measures the capped serving behavior raises the budget
+    * explicitly per run.
+    */
+  private[graft] def forMain(cores: Int = mainCores): SparkSession = {
+    val spark = local(cores)
+    sys.env.get("SPARK_GRAFT_SAT_FRAC").foreach(v =>
+      spark.conf.set(operators.Similarity.SaturationMaxDroppedFracKey, v))
+    spark
+  }
+
+  private[graft] def mainCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `.explain("formatted")` for declared queries to
@@ -8,6 +7,10 @@ import java.nio.file.{Files, Paths}
   * surface.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> [nameRegex]
+  *
+  * Condensed view (joins, exchanges, pushed filters, windows,
+  * generators, aggregates, sorts):
+  * `grep -E 'Join|Exchange|PushedFilters|Window|Generate|HashAggregate|Sort ' <outDir>/<name>.txt`
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -15,19 +18,7 @@ object PlanDump {
       case Array(s, o)    => (s, o, ".*")
       case Array(s, o, f) => (s, o, f)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
     (SparkEntry.queries ++ Bench.extraQueries).filter(_._1.matches(nameFilter)).foreach {
       case (name, fn) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Dev tool: run ONE declared query N times and print per-job /
@@ -14,19 +13,7 @@ object Probe {
     val sfDir = args(0)
     val name = args(1)
     val runs = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val out = new StringBuilder
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,38 +9,7 @@ object Verify {
       case Array(s, o)    => (s, o, ".*")
       case Array(s, o, f) => (s, o, f)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // SPARK_GRAFT_ANSI=true: audit mode — strict ANSI evaluation makes
-    // any silent int64 wrap / cast truncation THROW instead of
-    // corrupting a result (the p12/t25 class of bug the SF sweeps
-    // cannot reach; SURVEY §5 integer-width rule). Run once per round
-    // over the full entry set; default off matches the driver.
-    val ansi = sys.env.get("SPARK_GRAFT_ANSI").contains("true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.ansi.enabled", ansi.toString)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // status-store retention caps (Bench's r19 note: the listeners
-      // run even with the UI off; 150 dump queries retain task rows)
-      .config("spark.ui.retainedJobs", "200")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // derived-scale sweeps: the MakeScale fixture is a replica flood
-    // by construction, so the artifact saturation gate fires on it
-    // CORRECTLY; a sweep that measures the capped serving behavior
-    // raises the budget explicitly per run (disclosed in SURVEY)
-    sys.env.get("SPARK_GRAFT_SAT_FRAC").foreach(v =>
-      spark.conf.set(operators.Similarity.SaturationMaxDroppedFracKey, v))
+    val spark = GraftSession.forMain()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(_._1.matches(nameFilter)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

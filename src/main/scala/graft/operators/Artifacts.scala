@@ -30,9 +30,9 @@ private[operators] object Artifacts {
     * default) — `path`, the shared-scope gate, and `gc` must agree on
     * the directory or the sweep would silently reap nothing.
     */
-  private def artifactBase(spark: SparkSession): String =
+  private[operators] def artifactBase(spark: SparkSession): String =
     spark.conf.get("spark.graft.artifactDir",
-      "/root/repo/target/scratch/clusters")
+      s"${graft.GraftSession.scratchRoot}/artifacts")
 
   /** Deterministic artifact location under `spark.graft.artifactDir`
     * (any Hadoop-writable path on a cluster; local scratch default).

@@ -15,7 +15,7 @@ object ConversionQueries {
 
   private def scratch(sfDir: String, name: String): String = {
     val sf = new java.io.File(sfDir).getName
-    s"/root/repo/target/scratch/$sf/$name"
+    s"${graft.GraftSession.scratchRoot}/conversion/$sf/$name"
   }
 
   private def typeName(t: ArrowType): String = t match {

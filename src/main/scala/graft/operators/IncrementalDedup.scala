@@ -142,7 +142,7 @@ object IncrementalDedup {
     * rewrite.
     */
   def admitBatch(spark: SparkSession, batch: DataFrame, verdicts: DataFrame,
-      buckets: Int = 32, prefix: String = "graft_dedup",
+      prefix: String = "graft_dedup",
       numHashes: Int = 16, bands: Int = 4): Unit = {
     requireHolderFp(spark, prefix)
     indexBanding(spark, prefix).foreach { case (nh, b) =>
@@ -159,11 +159,11 @@ object IncrementalDedup {
         kept.select(fingerprintMd5(col("text")).as("fp"),
           col("doc_id").as("id_b")).distinct(),
         s"${prefix}_fp", "id_b"),
-      s"${prefix}_fp", "fp", buckets)
+      s"${prefix}_fp", "fp")
     graft.sources.Bucketing.appendBucketed(
       graft.sources.Bucketing.absentOnly(
         bandRows(kept, numHashes, bands), s"${prefix}_bands", "id_b"),
-      s"${prefix}_bands", "bkey", buckets)
+      s"${prefix}_bands", "bkey")
     // a re-admit of a retracted doc: rows still present in both tables
     Tombstones.resurrect(spark, prefix, kept.select(col("doc_id").as("id_b")), "id_b")
   }
@@ -186,11 +186,9 @@ object IncrementalDedup {
     * per-claim (fp, id_b) rows make removal exact: a shared
     * fingerprint keeps its surviving holders' rows).
     */
-  def compact(spark: SparkSession, prefix: String = "graft_dedup",
-      buckets: Int = 32): Unit =
+  def compact(spark: SparkSession, prefix: String = "graft_dedup"): Unit =
     Tombstones.compact(spark, prefix, "id_b",
-      Seq((s"${prefix}_fp", "fp", buckets),
-        (s"${prefix}_bands", "bkey", buckets)))
+      Seq((s"${prefix}_fp", "fp"), (s"${prefix}_bands", "bkey")))
 
   /** Fail fast on an `_fp` index predating the per-holder (fp, id_b)
     * row format: every read and append here resolves `id_b`, so an

@@ -176,7 +176,7 @@ object IncrementalDfStats {
     * scaladoc).
     */
   def admitBatch(spark: SparkSession, batchDocs: DataFrame,
-      prefix: String = "graft_dfstats", buckets: Int = 32): Unit = {
+      prefix: String = "graft_dfstats"): Unit = {
     val b = Checkpoints.cut(batchDocs.select(col("doc_id"), col("text")))
     val bid = opId(spark, prefix, opKey(b, "admit"))
     withLease(spark, prefix, bid) {
@@ -193,10 +193,10 @@ object IncrementalDfStats {
           graft.sources.Bucketing.appendBucketed(
             fresh.select(col("doc_id")).withColumn("batch_id", lit(bid))
               .withColumn("sign", lit(1)),
-            s"${prefix}_docs", "doc_id", buckets)
+            s"${prefix}_docs", "doc_id")
         if (lacks(spark, s"${prefix}_df", bid))
           graft.sources.Bucketing.appendBucketed(
-            dfB.withColumn("batch_id", lit(bid)), s"${prefix}_df", "term", buckets)
+            dfB.withColumn("batch_id", lit(bid)), s"${prefix}_df", "term")
         if (lacks(spark, s"${prefix}_tot", bid))
           totB.withColumn("batch_id", lit(bid))
             .write.mode("append").format("parquet")
@@ -215,7 +215,7 @@ object IncrementalDfStats {
     * no-ops; retract-then-re-admit counts the docs again.
     */
   def retractBatch(spark: SparkSession, batchDocs: DataFrame,
-      prefix: String = "graft_dfstats", buckets: Int = 32): Unit = {
+      prefix: String = "graft_dfstats"): Unit = {
     val b = Checkpoints.cut(batchDocs.select(col("doc_id"), col("text")))
     val rbid = opId(spark, prefix, opKey(b, "retract"))
     withLease(spark, prefix, rbid) {
@@ -230,12 +230,12 @@ object IncrementalDfStats {
           graft.sources.Bucketing.appendBucketed(
             targets.select(col("doc_id")).withColumn("batch_id", lit(rbid))
               .withColumn("sign", lit(-1)),
-            s"${prefix}_docs", "doc_id", buckets)
+            s"${prefix}_docs", "doc_id")
         if (lacks(spark, s"${prefix}_df", rbid))
           graft.sources.Bucketing.appendBucketed(
             dfB.withColumn("df", -col("df"))
               .withColumn("batch_id", lit(rbid)),
-            s"${prefix}_df", "term", buckets)
+            s"${prefix}_df", "term")
         if (lacks(spark, s"${prefix}_tot", rbid))
           totB.select((-col("n_docs")).as("n_docs"), (-col("sum_dl")).as("sum_dl"))
             .withColumn("batch_id", lit(rbid))
@@ -269,9 +269,9 @@ object IncrementalDfStats {
     * a re-run of compact (its lease persists, blocking admits until
     * then) over the pre-fold deltas preserved by the eager cut.
     */
-  def compact(spark: SparkSession, prefix: String = "graft_dfstats",
-      buckets: Int = 32): Unit =
+  def compact(spark: SparkSession, prefix: String = "graft_dfstats"): Unit =
     withLease(spark, prefix, "compact") {
+      val buckets = graft.sources.Bucketing.bucketCount(spark, s"${prefix}_df")
       graft.sources.Bucketing.writeBucketed(
         Checkpoints.cut(
           dfStats(spark, prefix).withColumn("batch_id", lit("compacted")),

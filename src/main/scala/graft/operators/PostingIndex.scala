@@ -66,8 +66,7 @@ final case class PostingIndex(tables: Seq[(String, String)], idCol: String,
     val r = Checkpoints.cut(rows)
     tables.foreach { case (s, k) =>
       val t = name(prefix, s)
-      Bucketing.appendBucketed(Bucketing.absentOnly(r, t, idCol), t, k,
-        PostingIndex.bucketCount(r.sparkSession, t))
+      Bucketing.appendBucketed(Bucketing.absentOnly(r, t, idCol), t, k)
     }
     Tombstones.resurrect(r.sparkSession, prefix, r.select(col(idCol)), idCol)
   }
@@ -81,13 +80,8 @@ final case class PostingIndex(tables: Seq[(String, String)], idCol: String,
     * re-derives at the next `refreshHotIfStale`.
     */
   def compact(spark: SparkSession, prefix: String): Unit =
-    Tombstones.compact(spark, prefix, idCol, tables.map { case (s, k) =>
-      val t = name(prefix, s)
-      // a compact that crashed between drop and rename left only the
-      // staging copy — Tombstones.compact adopts it under the same spec
-      val src = if (spark.catalog.tableExists(t)) t else s"${t}__c"
-      (t, k, PostingIndex.bucketCount(spark, src))
-    })
+    Tombstones.compact(spark, prefix, idCol,
+      tables.map { case (s, k) => (name(prefix, s), k) })
 
   /** Per-key df of `rows`, as column `as`. */
   private[operators] def df(rows: DataFrame, as: String): DataFrame =
@@ -201,13 +195,6 @@ object PostingIndex {
     * taken at.
     */
   private val VersionKey = "graft.gone.version"
-
-  /** The bucket count in `table`'s catalog bucket spec. */
-  private[operators] def bucketCount(spark: SparkSession, table: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalArgumentException(s"$table is not bucketed"))
 
   /** A pair table minus every row whose `a` or `b` id is in the
     * one-column `ids` (broadcast anti-joins; the pair column order is

@@ -1149,8 +1149,8 @@ object Similarity {
     * [[ProbeBroadcastLimitKey]] discipline): default strict (the
     * method's `maxDroppedFrac`), raised EXPLICITLY by a run that
     * measures serving over a corpus it knows is flooded (the
-    * MakeScale replica-derived sweep scales; `SPARK_GRAFT_SAT_FRAC`
-    * plumbs it through Verify/Bench).
+    * MakeScale replica-derived sweep scales; the mains' session,
+    * `GraftSession.forMain`, plumbs it through).
     */
   val SaturationMaxDroppedFracKey = "spark.graft.saturationMaxDroppedFrac"
 

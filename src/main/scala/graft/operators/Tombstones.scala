@@ -139,8 +139,8 @@ object Tombstones {
 
   /** Fold the net-dead set INTO the physical indexes, keeping both the
     * `_gone` history and `live()`'s anti-join bounded: each table of
-    * `indexTables` = (table, bucketKey, bucketCount) is rewritten
-    * minus the dead ids under the same layout, then the history is
+    * `indexTables` = (table, bucketKey) is rewritten minus the dead
+    * ids under the same layout (its catalog bucket count), then the history is
     * truncated. Afterwards `live()` is the identity and a compacted id
     * can only come back via a full re-admit with content.
     *
@@ -153,21 +153,22 @@ object Tombstones {
     * [[BroadcastLimitKey]], not per takedown.
     */
   def compact(spark: SparkSession, prefix: String, idCol: String,
-      indexTables: Seq[(String, String, Int)]): Unit =
+      indexTables: Seq[(String, String)]): Unit =
     Lease.withLease(spark, s"${prefix}_tombstones", "compact") {
-      val tables = indexTables.map { case (t, key, buckets) =>
-        (t.toLowerCase(java.util.Locale.ROOT), key, buckets)
+      val tables = indexTables.map { case (t, key) =>
+        (t.toLowerCase(java.util.Locale.ROOT), key)
       }
-      tables.foreach { case (t, _, _) => healSwap(spark, t) }
+      tables.foreach { case (t, _) => healSwap(spark, t) }
       deadIds(spark, prefix, idCol).foreach { dead0 =>
         val dead = Checkpoints.cut(dead0)
         if (!dead.isEmpty) {
-          tables.foreach { case (t, key, buckets) =>
+          tables.foreach { case (t, key) =>
             val staging = s"${t}__c"
             // the planner chooses broadcast vs shuffle from the dead
             // set's stats (same reasoning as live())
             val kept = spark.table(t).join(dead, Seq(idCol), "left_anti")
-            graft.sources.Bucketing.writeBucketed(kept, staging, key, buckets)
+            graft.sources.Bucketing.writeBucketed(kept, staging, key,
+              graft.sources.Bucketing.bucketCount(spark, t))
             // carry the family's graft.* table properties (banding
             // stamps, hot-census versions) through the swap — a
             // compact must never strip an index's format markers

@@ -50,17 +50,25 @@ object Bucketing {
 
   /** Append rows to an EXISTING bucketed table under the same layout
     * (Spark writes new per-bucket files; the catalog's bucket spec
-    * keeps reads exchange-free). Same name validation as the write —
-    * one owner for the bucketing convention.
+    * keeps reads exchange-free). The bucket count is the table's own,
+    * read from the catalog: only `writeBucketed` chooses one. Same
+    * name validation as the write — one owner for the bucketing
+    * convention.
     */
-  def appendBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit = {
+  def appendBucketed(df: DataFrame, table: String, key: String): Unit = {
     require(table.matches("[A-Za-z][A-Za-z0-9_]*"),
       s"invalid table name: '$table' (expected [A-Za-z][A-Za-z0-9_]*)")
     df.write.mode("append").format("parquet")
-      .bucketBy(buckets, key).sortBy(key)
+      .bucketBy(bucketCount(df.sparkSession, table), key).sortBy(key)
       .saveAsTable(table.toLowerCase(java.util.Locale.ROOT))
   }
+
+  /** The bucket count in `table`'s catalog bucket spec. */
+  def bucketCount(spark: org.apache.spark.sql.SparkSession, table: String): Int =
+    spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .bucketSpec.map(_.numBuckets)
+      .getOrElse(throw new IllegalArgumentException(s"$table is not bucketed"))
 
   /** Join two same-bucketed tables on their bucket key — shuffle-free
     * when both sides were written with the same bucket count.

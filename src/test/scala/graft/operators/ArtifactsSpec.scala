@@ -174,8 +174,7 @@ class ArtifactsSpec extends SparkSpec {
       }
       assert(call().as[(Long, String)].collect().toSet === Set((1L, "A"), (2L, "B")))
       assert(builds === 1)
-      val artBase = spark.conf.get("spark.graft.artifactDir",
-        "/root/repo/target/scratch/clusters")
+      val artBase = Artifacts.artifactBase(spark)
       val fs = new org.apache.hadoop.fs.Path(artBase)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // the layout: one __v_ dir + one .manifest naming it; the
@@ -237,8 +236,7 @@ class ArtifactsSpec extends SparkSpec {
         .write.mode("overwrite").parquet(dir + "/documents.parquet")
       val v2 = call().inputFiles.head.replaceAll("/[^/]*$", "")
       assert(v1 != v2)
-      val artBase = spark.conf.get("spark.graft.artifactDir",
-        "/root/repo/target/scratch/clusters")
+      val artBase = Artifacts.artifactBase(spark)
       val fs = new org.apache.hadoop.fs.Path(artBase)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // an unreferenced OLD race-loser version of the current artifact
@@ -279,8 +277,7 @@ class ArtifactsSpec extends SparkSpec {
       "documents.parquet", Seq("doc_id")) {
       spark.read.parquet(dir + "/documents.parquet")
     }
-    val artBase = spark.conf.get("spark.graft.artifactDir",
-      "/root/repo/target/scratch/clusters")
+    val artBase = Artifacts.artifactBase(spark)
     val fs = new org.apache.hadoop.fs.Path(artBase)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def foreignDir(name: String, scopeName: String, ageMs: Long): String = {
@@ -307,8 +304,7 @@ class ArtifactsSpec extends SparkSpec {
 
   test("gc prunes stale stamps, keeps the current artifact, leaves in-flight temps alone") {
     val dir = tmpDir(s"artifacts_gc_${System.nanoTime()}")
-    val artBase = spark.conf.get("spark.graft.artifactDir",
-      "/root/repo/target/scratch/clusters")
+    val artBase = Artifacts.artifactBase(spark)
     val fs = new org.apache.hadoop.fs.Path(artBase)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     var builds = 0
@@ -375,8 +371,7 @@ class ArtifactsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir + "/documents.parquet")
     call()
     // a foreign driver's committed artifact, same prefix, OLD mtime
-    val artBase = spark.conf.get("spark.graft.artifactDir",
-      "/root/repo/target/scratch/clusters")
+    val artBase = Artifacts.artifactBase(spark)
     val theirs = artBase.stripSuffix("/") + "/gcspec3_feedf00d"
     Artifacts.commitClustered(spark, theirs, Seq("doc_id"),
       key = s"gcspec3|app-OTHER-driver|$dir|some-old-stamp")(

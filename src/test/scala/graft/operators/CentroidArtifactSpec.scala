@@ -23,7 +23,7 @@ class CentroidArtifactSpec extends SparkSpec {
       k = 16, iters = 2, dims = 64)
     assert(a === fresh)
     // and it really is a durable table on disk, not a driver cache
-    val base = new java.io.File("/root/repo/target/scratch/clusters")
+    val base = new java.io.File(Artifacts.artifactBase(spark))
     assert(base.listFiles() != null &&
       base.listFiles().exists(_.getName.startsWith("ivf_")),
       "the (cid, v) parquet artifact must land under the artifact dir")

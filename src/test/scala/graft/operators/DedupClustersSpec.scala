@@ -190,7 +190,7 @@ class DedupClustersSpec extends SparkSpec {
     assert(LlmQueries.documentClusters(spark, sf0).count() > 0)
     val plan = LlmQueries.d16ClusterWeights(spark, sf0)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("scratch/clusters"), "weights must join the artifact")
+    assert(plan.contains(Artifacts.artifactBase(spark)), "weights must join the artifact")
     assert(!plan.contains("array_intersect") && !plan.contains("collect_set"),
       "weights must not re-verify candidate pairs")
   }
@@ -208,12 +208,12 @@ class DedupClustersSpec extends SparkSpec {
       s"second lookup must be a cache hit, ran ${after - before} jobs")
     // the reused frame is a plain scan of the clustered parquet artifact
     val scanPlan = again.queryExecution.executedPlan.toString
-    assert(scanPlan.contains("scratch/clusters"), scanPlan)
+    assert(scanPlan.contains(Artifacts.artifactBase(spark)), scanPlan)
     // d14's composed plan reads the artifact too: no jaccard kernel
     // (array_intersect) and no shingle aggregation anywhere in it
     val d14Plan = LlmQueries.d14Retention(spark, sf0)
       .queryExecution.executedPlan.toString
-    assert(d14Plan.contains("scratch/clusters"), "retention must join the artifact")
+    assert(d14Plan.contains(Artifacts.artifactBase(spark)), "retention must join the artifact")
     assert(!d14Plan.contains("array_intersect") && !d14Plan.contains("collect_set"),
       "retention must not re-verify candidate pairs")
   }

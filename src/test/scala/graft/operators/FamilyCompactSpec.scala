@@ -59,7 +59,7 @@ class FamilyCompactSpec extends SparkSpec {
       .toDF("doc_id", "text")
     IncrementalDedup.buildIndexes(corpus, buckets = 4, prefix = prefix)
     IncrementalDedup.retractBatch(spark, Seq(1L).toDF("doc_id"), prefix)
-    IncrementalDedup.compact(spark, prefix, buckets = 4)
+    IncrementalDedup.compact(spark, prefix)
     assert(!spark.catalog.tableExists(s"${prefix}_gone"))
     // doc 1's claims are physically gone; doc 2 (same fingerprint)
     // keeps its own row — per-claim removal

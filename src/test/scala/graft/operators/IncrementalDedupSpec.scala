@@ -58,7 +58,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val keptIds = verdicts.filter(col("status") === "kept")
       .select(col("doc_id")).as[Long].collect().toSet
     assert(keptIds.nonEmpty)
-    IncrementalDedup.admitBatch(spark, batch, verdicts, buckets = 8,
+    IncrementalDedup.admitBatch(spark, batch, verdicts,
       prefix = "d10_idx4")
     // a second batch re-uploading the ADMITTED docs byte-for-byte
     // must now come back exact_dup — the loop closes without any
@@ -119,7 +119,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val bandN = spark.table("d10_ret_bands").count()
     val readmit = Seq((1L, shared)).toDF("doc_id", "text")
     val v = IncrementalDedup.probeBatch(spark, corpus, readmit, prefix = "d10_ret")
-    IncrementalDedup.admitBatch(spark, readmit, v, buckets = 4, prefix = "d10_ret")
+    IncrementalDedup.admitBatch(spark, readmit, v, prefix = "d10_ret")
     assert(verdictOf() === "exact_dup", "re-admit must restore the match")
     assert(spark.table("d10_ret_fp").count() === fpN &&
       spark.table("d10_ret_bands").count() === bandN,

@@ -47,7 +47,7 @@ class IncrementalDfStatsSpec extends SparkSpec {
 
   test("admitBatch folds df and totals exactly (empty docs count toward n_docs)") {
     IncrementalDfStats.buildIndex(corpus, prefix = "idf1", buckets = 4)
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf1", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf1")
     val union = corpus.unionByName(batch)
     assert(servedDf("idf1") === fullDf(union))
     assert(servedTot("idf1") === fullTotals(union))
@@ -61,7 +61,7 @@ class IncrementalDfStatsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir + "/documents.parquet")
     IncrementalDfStats.buildIndex(corpus.filter($"doc_id" =!= 4L),
       prefix = "idf2", buckets = 4)
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf2", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf2")
     val served = IncrementalDfStats.tfidfTop5(spark,
         spark.read.parquet(dir + "/documents.parquet"), prefix = "idf2")
       .as[(Long, Long, String, Long, Long, Double)].collect().toSet
@@ -73,15 +73,15 @@ class IncrementalDfStatsSpec extends SparkSpec {
 
   test("a REPLAYED admitBatch is absorbed (stats unchanged)") {
     IncrementalDfStats.buildIndex(corpus, prefix = "idf3", buckets = 4)
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf3", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf3")
     val df1 = servedDf("idf3")
     val tot1 = servedTot("idf3")
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf3", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf3")
     assert(servedDf("idf3") === df1)
     assert(servedTot("idf3") === tot1)
     // a PARTIALLY new batch admits only its fresh docs
     val overlap = batch.unionByName(Seq((12L, "zeta")).toDF("doc_id", "text"))
-    IncrementalDfStats.admitBatch(spark, overlap, prefix = "idf3", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, overlap, prefix = "idf3")
     val union = corpus.unionByName(batch)
       .unionByName(Seq((12L, "zeta")).toDF("doc_id", "text"))
     assert(servedDf("idf3") === fullDf(union))
@@ -93,7 +93,7 @@ class IncrementalDfStatsSpec extends SparkSpec {
     // impossible) are simulated by erasing the trailing tables'
     // batch rows after a successful admit, then retrying
     IncrementalDfStats.buildIndex(corpus, prefix = "idf6", buckets = 4)
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf6", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf6")
     val wantDf = servedDf("idf6")
     val wantTot = servedTot("idf6")
     val bid = spark.table("idf6_docs").filter($"batch_id" =!= "corpus")
@@ -109,7 +109,7 @@ class IncrementalDfStatsSpec extends SparkSpec {
 
     // crash AFTER _docs+_df, before _tot
     eraseTot()
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf6", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf6")
     assert(servedDf("idf6") === wantDf,
       "the retry must not re-append df deltas the table already has")
     assert(servedTot("idf6") === wantTot)
@@ -121,7 +121,7 @@ class IncrementalDfStatsSpec extends SparkSpec {
       spark.createDataFrame(spark.sparkContext.parallelize(dfKept.toSeq), dfSchema),
       "idf6_df", "term", 4)
     eraseTot()
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf6", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf6")
     assert(servedDf("idf6") === wantDf,
       "the retry must heal the lagging df and totals tables exactly once")
     assert(servedTot("idf6") === wantTot)
@@ -131,28 +131,28 @@ class IncrementalDfStatsSpec extends SparkSpec {
 
   test("retractBatch ≡ full recompute on corpus-minus-batch; replay no-ops; re-admit counts again") {
     IncrementalDfStats.buildIndex(corpus, prefix = "idf7", buckets = 4)
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf7", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf7")
     // takedown: one corpus doc + one batch doc (alpha loses a holder,
     // epsilon loses its only two → zero net, must vanish)
     val takedown = Seq(
       (2L, "alpha alpha delta"),
       (10L, "alpha epsilon"),
       (11L, "epsilon epsilon beta gamma")).toDF("doc_id", "text")
-    IncrementalDfStats.retractBatch(spark, takedown, prefix = "idf7", buckets = 4)
+    IncrementalDfStats.retractBatch(spark, takedown, prefix = "idf7")
     val remaining = corpus.filter($"doc_id" =!= 2L)
     assert(servedDf("idf7") === fullDf(remaining),
       "retract must reverse exactly what the docs contributed (zero nets dropped)")
     assert(servedTot("idf7") === fullTotals(remaining))
     // a replayed retract is absorbed
-    IncrementalDfStats.retractBatch(spark, takedown, prefix = "idf7", buckets = 4)
+    IncrementalDfStats.retractBatch(spark, takedown, prefix = "idf7")
     assert(servedDf("idf7") === fullDf(remaining))
     assert(servedTot("idf7") === fullTotals(remaining))
     // retracting docs that were never admitted is a no-op
     IncrementalDfStats.retractBatch(spark,
-      Seq((99L, "omega")).toDF("doc_id", "text"), prefix = "idf7", buckets = 4)
+      Seq((99L, "omega")).toDF("doc_id", "text"), prefix = "idf7")
     assert(servedDf("idf7") === fullDf(remaining))
     // admit ∘ retract ∘ admit: the docs count again
-    IncrementalDfStats.admitBatch(spark, takedown, prefix = "idf7", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, takedown, prefix = "idf7")
     val union = corpus.unionByName(batch)
     assert(servedDf("idf7") === fullDf(union),
       "re-admitting retracted docs must count them again")
@@ -161,7 +161,7 @@ class IncrementalDfStatsSpec extends SparkSpec {
 
   test("the lease serializes operations: compact across a mid-retry admit is refused") {
     IncrementalDfStats.buildIndex(corpus, prefix = "idf8", buckets = 4)
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf8", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf8")
     val want = servedDf("idf8")
     val bid = spark.table("idf8_docs").filter($"batch_id" =!= "corpus")
       .select($"batch_id").distinct().as[String].head()
@@ -181,31 +181,31 @@ class IncrementalDfStatsSpec extends SparkSpec {
     // lacks()-guard needs → the retry would re-append → double count.
     // The lease turns that contract violation into an error:
     val e = intercept[IllegalStateException] {
-      IncrementalDfStats.compact(spark, prefix = "idf8", buckets = 4)
+      IncrementalDfStats.compact(spark, prefix = "idf8")
     }
     assert(e.getMessage.contains("in flight"))
     // another batch's admit is refused too (the ADVICE interleaving)
     val e2 = intercept[IllegalStateException] {
       IncrementalDfStats.admitBatch(spark,
-        Seq((12L, "zeta")).toDF("doc_id", "text"), prefix = "idf8", buckets = 4)
+        Seq((12L, "zeta")).toDF("doc_id", "text"), prefix = "idf8")
     }
     assert(e2.getMessage.contains("in flight"))
     // the retry of the SAME batch re-enters its own lease and heals
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf8", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf8")
     assert(servedDf("idf8") === want)
     // lease released → compact runs and preserves the served stats
-    IncrementalDfStats.compact(spark, prefix = "idf8", buckets = 4)
+    IncrementalDfStats.compact(spark, prefix = "idf8")
     assert(servedDf("idf8") === want)
   }
 
   test("compact folds deltas without changing the served stats; reads stay exchange-free") {
     IncrementalDfStats.buildIndex(corpus, prefix = "idf4", buckets = 4)
-    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf4", buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = "idf4")
     val before = servedDf("idf4")
     // pre-compact: alpha has delta rows from the build AND the admit
     assert(spark.table("idf4_df").groupBy($"term").count()
       .filter($"count" > 1).count() > 0, "fixture must exercise real deltas")
-    IncrementalDfStats.compact(spark, prefix = "idf4", buckets = 4)
+    IncrementalDfStats.compact(spark, prefix = "idf4")
     assert(servedDf("idf4") === before)
     assert(spark.table("idf4_df").groupBy($"term").count()
       .filter($"count" > 1).count() === 0, "compaction folds to one row per term")
@@ -221,7 +221,7 @@ class IncrementalDfStatsSpec extends SparkSpec {
     IncrementalDfStats.buildIndex(docs.filter($"doc_id" % 7 =!= 0),
       prefix = "idf5", buckets = 8)
     IncrementalDfStats.admitBatch(spark, docs.filter($"doc_id" % 7 === 0),
-      prefix = "idf5", buckets = 8)
+      prefix = "idf5")
     assert(servedDf("idf5") === fullDf(docs))
     assert(servedTot("idf5") === fullTotals(docs))
   }

@@ -3,10 +3,11 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The lifecycle core reads every append / compact bucket count from
-  * the index's catalog bucket spec: an index built with a non-default
-  * count keeps it through admit, retract and compact, and the bucket-
-  * key census stays exchange-free.
+/** The lifecycle core — and the d10 dedup and dfstats families, which
+  * append their own rows — read every append / compact bucket count
+  * from the index's catalog bucket spec: an index built with a
+  * non-default count keeps it through admit, retract and compact, and
+  * the bucket-key census stays exchange-free.
   */
 class PostingIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -62,5 +63,34 @@ class PostingIndexSpec extends SparkSpec {
     }
     Seq(s"${p}_hot", s"${m}_hot").foreach(t =>
       assert(numBuckets(t) === PostingIndex.HotBuckets))
+  }
+
+  test("d10 dedup and dfstats indexes keep 4 buckets through admit, retract and compact") {
+    val corpus = Seq((1L, toks("m", 12)), (2L, toks("n", 12))).toDF("doc_id", "text")
+    val batch = Seq((10L, toks("q", 12))).toDF("doc_id", "text")
+
+    val d = "pidx_dedup"
+    IncrementalDedup.buildIndexes(corpus, buckets = 4, prefix = d)
+    val verdicts = IncrementalDedup.probeBatch(spark, corpus, batch, prefix = d)
+    IncrementalDedup.admitBatch(spark, batch, verdicts, prefix = d)
+    IncrementalDedup.retractBatch(spark, Seq(1L).toDF("doc_id"), prefix = d)
+    IncrementalDedup.compact(spark, d)
+
+    val s = "pidx_dfstats"
+    IncrementalDfStats.buildIndex(corpus, prefix = s, buckets = 4)
+    IncrementalDfStats.admitBatch(spark, batch, prefix = s)
+    IncrementalDfStats.retractBatch(spark, batch, prefix = s)
+    IncrementalDfStats.compact(spark, s)
+
+    assert(!spark.catalog.tableExists(s"${d}_gone"), "compact truncates the history")
+    assert(spark.table(s"${d}_fp").filter($"id_b" === 1L).isEmpty)
+    assert(!spark.table(s"${d}_fp").filter($"id_b" === 10L).isEmpty)
+    assert(IncrementalDfStats.dfStats(spark, s).filter($"term" === "q1").isEmpty)
+    assert(IncrementalDfStats.totals(spark, s).as[(Long, Long)].head() === ((2L, 24L)))
+    Seq(s"${d}_fp" -> "fp", s"${d}_bands" -> "bkey", s"${s}_df" -> "term",
+        s"${s}_docs" -> "doc_id").foreach { case (t, k) =>
+      assert(numBuckets(t) === 4, s"$t must keep its build-time bucket count")
+      assertCensusExchangeFree(t, k)
+    }
   }
 }

@@ -137,6 +137,15 @@ class PrefixSumSpec extends SparkSpec {
     assert(got === want)
   }
 
+  test("rank under an auto-sized fan-out on ONE source sums to n(n+1)/2") {
+    val n = 3000L
+    val one = spark.range(n).select(lit("hot").as("src"), $"id", ($"id" % 7).as("v"))
+    val rk = PrefixSum.rank(one, Seq("src"), Seq($"v", $"id"), bucketOn = $"v",
+        out = "rk", buckets = 4, targetRowsPerBucket = 100L, tieBreakOn = Some($"id"))
+    assert(rk.agg(sum($"rk")).head().getLong(0) === n * (n + 1) / 2)
+    assert(rk.agg(countDistinct($"rk")).head().getLong(0) === n)
+  }
+
   test("degenerate range (all rows one bucket value, no tie-break) still matches") {
     val one = Seq(("a", 1L, 2L), ("a", 2L, 3L), ("a", 3L, 5L)).toDF("src", "id", "tok")
     val w = Window.partitionBy($"src").orderBy($"id")

@@ -26,7 +26,7 @@ class TombstonesSpec extends SparkSpec {
       .live(spark, spark.table(s"${prefix}_idx"), prefix, "doc_id")
       .as[(Long, String)].collect().toSet
     Tombstones.compact(spark, prefix, "doc_id",
-      Seq((s"${prefix}_idx", "doc_id", 4)))
+      Seq((s"${prefix}_idx", "doc_id")))
     assert(!spark.catalog.tableExists(s"${prefix}_gone"),
       "history must be truncated")
     val physical = spark.table(s"${prefix}_idx").as[(Long, String)]
@@ -56,7 +56,7 @@ class TombstonesSpec extends SparkSpec {
     Tombstones.retract(spark, prefix, Seq(5L).toDF("doc_id"), "doc_id")
     Tombstones.resurrect(spark, prefix, Seq(5L).toDF("doc_id"), "doc_id")
     Tombstones.compact(spark, prefix, "doc_id",
-      Seq((s"${prefix}_idx", "doc_id", 4)))
+      Seq((s"${prefix}_idx", "doc_id")))
     assert(!spark.catalog.tableExists(s"${prefix}_gone"))
     assert(spark.table(s"${prefix}_idx").count() === 20L,
       "net-zero history folds to the identity")
@@ -75,7 +75,7 @@ class TombstonesSpec extends SparkSpec {
     graft.sources.Bucketing.dropTableAndLocation(spark, s"${prefix}_idx")
     // re-entry adopts the staging table and completes the fold
     Tombstones.compact(spark, prefix, "doc_id",
-      Seq((s"${prefix}_idx", "doc_id", 4)))
+      Seq((s"${prefix}_idx", "doc_id")))
     assert(!spark.catalog.tableExists(staging))
     assert(!spark.catalog.tableExists(s"${prefix}_gone"))
     val rows = spark.table(s"${prefix}_idx").select($"doc_id").as[Long]

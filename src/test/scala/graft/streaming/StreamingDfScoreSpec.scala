@@ -83,7 +83,7 @@ class StreamingDfScoreSpec extends SparkSpec {
     val got = runScorer(dir, "sdfs2q", "sdfs2",
       between = () => IncrementalDfStats.admitBatch(spark,
         Seq((50L, "epsilon epsilon")).toDF("doc_id", "text"),
-        prefix = "sdfs2", buckets = 4),
+        prefix = "sdfs2"),
       more = Seq((21L, new java.sql.Timestamp(t0.getTime + 1000), "epsilon alpha")))
     val by = got.groupBy(_._1).view.mapValues(_.head).toMap
     assert(by(20L)._4 === 1L, s"pre-admit arrival must see epsilon unseen: $got")
