@@ -213,19 +213,19 @@ object Bench {
     // per-query medians + detail live in target/bench_detail.json + stderr.
     val detailJson = t.detailJson
     System.err.println(detailJson)
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/target/bench_detail.json"),
-        detailJson.getBytes("UTF-8"))
-      // additions-only copy keyed on the core count (r20, VERDICT r19
-      // item 10): the driver's low-core companion run overwrote
-      // bench_detail.json, leaving the judge only 21 of 164 entries to
-      // diff; a per-cpus path preserves both runs' full detail. The
-      // one-line stdout contract and bench_detail.json stay as-is.
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"/root/repo/target/bench_detail_c$cpus.json"),
-        detailJson.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    for (path <- Seq(
+        "/root/repo/target/bench_detail.json",
+        // additions-only copy keyed on the core count (r20, VERDICT r19
+        // item 10): the driver's low-core companion run overwrote
+        // bench_detail.json, leaving the judge only 21 of 164 entries to
+        // diff; a per-cpus path preserves both runs' full detail. The
+        // one-line stdout contract and bench_detail.json stay as-is.
+        s"/root/repo/target/bench_detail_c$cpus.json"))
+      try java.nio.file.Files.write(java.nio.file.Paths.get(path), detailJson.getBytes("UTF-8"))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] detail not written to $path: $e")
+      }
     println(t.summaryLine("target/bench_detail.json"))
     spark.stop()
   }

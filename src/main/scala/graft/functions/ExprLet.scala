@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions.{array, element_at, transform}
   *
   * therefore re-runs `expensive` for EVERY element: the simhash vote
   * fold ran 64× (once per reassembled bit), winnowing's gram+hash
-  * pass ran once per window position — O(length²) —, and the
-  * streaming trigram gate re-tokenized per trigram. Binding the
+  * pass ran once per window position — O(length²). Binding the
   * value as the single element of a `transform(array(v), f)` makes
   * every reference inside `f` a lambda-VARIABLE read: `v` evaluates
   * exactly once, results are identical (same expressions, same null

@@ -23,17 +23,6 @@ object HashFunctions {
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     array((0 until numHashes).map(j => minhash(shingles, j)): _*)
 
-  /** LSH band keys: hash of each band's `rowsPerBand` consecutive
-    * minhashes. Docs sharing any band key are candidate duplicates;
-    * at scale, candidates are found by shuffling only (band, key)
-    * pairs — cardinality docs×bands, never docs².
-    */
-  def bandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      md5(concat_ws("|",
-        (0 until rowsPerBand).map(r => element_at(signature, b * rowsPerBand + r + 1)): _*))
-    }: _*)
-
   /** Universal-hash MinHash family: ONE md5 per shingle to a 32-bit
     * base hash, then `numHashes` independent draws via
     * `(a_j·h + b_j) mod P` — pure 64-bit integer ops, codegen'd.

@@ -523,8 +523,7 @@ private[operators] object Artifacts {
     deleted.toSeq
   }
 
-  /** Atomic cross-driver artifact commit (the ExactlyOnceSink
-    * pattern): build to a hidden `_tmp_` sibling, then RENAME into
+  /** Atomic cross-driver artifact commit (staging + rename): build to a hidden `_tmp_` sibling, then RENAME into
     * place — one filesystem metadata op, so a concurrent reader sees
     * either no artifact or a complete one, never partial files. If
     * the rename loses a race (another driver committed first), the

@@ -74,7 +74,7 @@ object BpeMerges {
     // strings are words — bounded short — so the re-evaluation never
     // bites; an A/B measured the bound and inline forms as
     // indistinguishable at sf0.1 (±ambient noise). Left inline; the
-    // UNBOUNDED-text kernels (charShingleSeq/winnowing/triHashArray)
+    // UNBOUNDED-text kernels (charShingleSeq/winnowing)
     // carry the binding, where the quadratic is real.
     val syms = split(trim(col("s")), "  ")
     // guard: sequence(1, 0) is DESCENDING in Spark — a 1-symbol word

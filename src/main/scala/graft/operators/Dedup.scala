@@ -59,12 +59,10 @@ object Dedup {
     * recomputes the signature per band because higher-order functions
     * get no common-subexpression elimination — measured 10× slower.)
     */
-  /** The wide (id, h0..hN-1) signature frame both consumers build on:
-    * minhashBands folds it into LSH band keys, minhashSignatures
-    * packs it into an array for component-wise comparison (d17's
-    * estimator calibration).
+  /** The wide (id, h0..hN-1) signature frame: minhashBands folds it
+    * into LSH band keys.
     */
-  private def minhashSigWide(df: DataFrame, idCol: String, textCol: String,
+  private[operators] def minhashSigWide(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numHashes: Int,
       baseHash: Column => Column): DataFrame = {
     val exploded = shingleRows(df, idCol, textCol, shingleK)
@@ -89,41 +87,6 @@ object Dedup {
     }
     sig.select(col(idCol), posexplode(array(bandCols: _*)))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-  }
-
-  /** Per-doc minhash signature as an array column (id, sig) — the
-    * raw estimator d17 calibrates: P(component match) = Jaccard.
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 5, numHashes: Int = 16,
-      baseHash: Column => Column = HashFunctions.minhashBase): DataFrame =
-    minhashSigWide(df, idCol, textCol, shingleK, numHashes, baseHash)
-      .select(col(idCol),
-        array((0 until numHashes).map(j => col(s"h$j")): _*).as("sig"))
-
-  /** Candidate near-dup pairs: docs sharing any LSH band bucket.
-    * The self-join shuffles only (band, band_hash) — the LSH scale
-    * trick. Buckets larger than `maxBucket` are dropped (skew guard).
-    */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 5, numHashes: Int = 16, bands: Int = 4,
-      maxBucket: Int = 1000,
-      baseHash: Column => Column = HashFunctions.minhashBase): DataFrame = {
-    val b = minhashBands(df, idCol, textCol, shingleK, numHashes, bands, baseHash)
-    // Skew cap without a window pass: a `count over (band, band_hash)`
-    // window sorts ALL (doc, band) rows; oversized buckets are instead
-    // found with a partial-agg groupBy (tiny result — pathological
-    // buckets only) and removed via a broadcast anti-join. No sort.
-    val oversized = b.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(col("band"), col("band_hash"))
-    val capped = b.join(broadcast(oversized), Seq("band", "band_hash"), "left_anti")
-    val l = capped.select(col("band"), col("band_hash"), col(idCol).as("id_a"))
-    val r = capped.select(col("band"), col("band_hash"), col(idCol).as("id_b"))
-    l.join(r, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
   }
 
   /** n-gram Jaccard similarity for given candidate pairs — the exact
@@ -325,20 +288,8 @@ object Dedup {
     agg.select(col(idCol), concat_ws("", hexChars: _*).as("phash"))
   }
 
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming.
-    * Banding: 4 hex chars per band (16 bits); a pair within Hamming 3
-    * of 64 bits must agree on ≥1 of 4 bands (pigeonhole), so the
-    * shuffle key is (band, 4-hex-chunk) — again no O(n²).
-    */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, weighted: Boolean = false): DataFrame = {
-    val sh = if (weighted) simhashWeighted(df, idCol, textCol)
-      else simhash(df, idCol, textCol)
-    hexHashPairs(sh, idCol, "simhash", maxHamming)
-  }
-
   /** Banded Hamming pairing over an EXISTING 16-hex-char hash column —
-    * the shared kernel behind simhashPairs (text) and m5's perceptual-
+    * the shared kernel behind the simhash entries (text) and m5's perceptual-
     * hash media dedup: 4 bands of 16 bits each form the shuffle key,
     * and by pigeonhole any pair within Hamming 3 of 64 bits agrees on
     * ≥1 band, with no O(n²) stage.
@@ -350,9 +301,8 @@ object Dedup {
     * missed — at corpus scale the degenerate all-zero-hash bucket
     * (trivial/short assets) is the realistic case. That is the
     * deliberate trade (an uncapped degenerate bucket is quadratic);
-    * callers who need to see what was excluded get the census from
-    * `oversizedHashBuckets` — same inputs, tiny output — and can
-    * route those assets through exact d1-style hashing instead.
+    * the excluded assets are the ones to route through exact d1-style
+    * hashing instead.
     */
   def hexHashPairs(hashed: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
@@ -371,7 +321,7 @@ object Dedup {
     // that must not re-run per consumer.
     val withInts = Checkpoints.cut(parseBandInts(hashed, idCol, hashCol))
     val banded0 = bandedChunks(withInts, idCol)
-    // Skew cap (minhashCandidates' guard, same rationale): a (band,
+    // Skew cap (the minhash bands' guard, same rationale): a (band,
     // chunk) bucket of B assets contributes B² candidate rows, and a
     // template-degenerate chunk — the all-zero pHash of trivial
     // assets is the canonical case — goes quadratic at corpus scale.
@@ -381,8 +331,7 @@ object Dedup {
     // broadcast anti-join (no window, no sort). The m5 oracle
     // replays the cap; at test SFs no bucket comes near it. The cap
     // WEAKENS the pigeonhole recall guarantee for pairs inside the
-    // dropped buckets — see the Scaladoc contract above and
-    // `oversizedHashBuckets` for the census of what was excluded.
+    // dropped buckets — see the Scaladoc contract above.
     val oversized = oversizedFrom(banded0, maxBucket)
       .select(col("band"), col("chunk"))
     val banded = banded0.join(broadcast(oversized),
@@ -405,36 +354,6 @@ object Dedup {
   // and the loop back from d17's measured calibration curve.
   // ---------------------------------------------------------------
 
-  /** The Jaccard threshold an LSH banding implicitly selects for: the
-    * candidate probability S-curve 1 − (1 − s^r)^b has its steepest
-    * rise at s* ≈ (1/b)^(1/r) (the standard MMDS approximation of the
-    * 50% crossover). Pairs well above s* are almost always candidates,
-    * pairs well below almost never — so choosing (b, r) IS choosing a
-    * dedup threshold, and at 10⁹+ docs the right point moves (more
-    * rows per band → higher s* → fewer false-positive candidates from
-    * sheer corpus size).
-    */
-  def lshOperatingPoint(bands: Int, rowsPerBand: Int): Double = {
-    require(bands > 0 && rowsPerBand > 0)
-    math.pow(1.0 / bands, 1.0 / rowsPerBand)
-  }
-
-  /** Pick the (bands, rowsPerBand) factorization of a signature width
-    * whose operating point lands closest to `targetJaccard` —
-    * deterministic (ties resolve to more bands = recall-first). This
-    * is how a pipeline retunes its index for corpus growth without
-    * changing the signature kernel: same `numHashes` minhashes, new
-    * banding, new effective threshold.
-    */
-  def chooseBanding(numHashes: Int, targetJaccard: Double): (Int, Int) = {
-    require(numHashes > 0 && targetJaccard > 0.0 && targetJaccard < 1.0)
-    val options = (1 to numHashes).filter(numHashes % _ == 0)
-      .map(b => (b, numHashes / b))
-    options.minBy { case (b, r) =>
-      (math.abs(lshOperatingPoint(b, r) - targetJaccard), -b)
-    }
-  }
-
   /** A fully resolved LSH operating point: the banding, its implied
     * Jaccard threshold, and — when a d17-style calibration curve is
     * supplied — the MEASURED mean absolute estimator error (micro
@@ -445,26 +364,6 @@ object Dedup {
     */
   final case class LshOperatingPoint(bands: Int, rowsPerBand: Int,
       threshold: Double, measuredAbsErrMicro: Option[Long])
-
-  /** Close the loop from d17's calibration: choose the banding for
-    * `targetJaccard` and annotate it with the measured estimator
-    * error at that threshold's decile from `calibrationCurve` —
-    * d17's output shape (bucket = Jaccard decile 0-10, n_pairs,
-    * mean_abs_err_micro). The curve is ≤ 11 rows by construction
-    * (one per decile), so the collect is a bounded-artifact read,
-    * never a corpus action.
-    */
-  def calibratedOperatingPoint(calibrationCurve: DataFrame,
-      numHashes: Int, targetJaccard: Double): LshOperatingPoint = {
-    val (b, r) = chooseBanding(numHashes, targetJaccard)
-    val s = lshOperatingPoint(b, r)
-    val decile = math.min(10, (s * 10).toInt)
-    val err = calibrationCurve
-      .filter(col("bucket") === decile)
-      .select(col("mean_abs_err_micro").cast("long"))
-      .collect().headOption.map(_.getLong(0))
-    LshOperatingPoint(b, r, s, err)
-  }
 
   /** (band, chunk) rows per asset — one of the 4 16-bit band ints as
     * the chunk key, shared by the pairing join and the census.
@@ -490,19 +389,4 @@ object Dedup {
     banded.groupBy(col("band"), col("chunk"))
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > maxBucket)
-
-  /** The buckets `hexHashPairs` DROPS under the same `maxBucket` cap —
-    * the visibility half of the skew guard's recall trade: each row is
-    * a (band, chunk) whose `bucket_n` members were excluded from
-    * pairing. Run it as a monitoring query next to the pairing job; a
-    * non-empty census means Hamming recall is no longer exact for
-    * pairs confined to these buckets (route those assets through
-    * exact fingerprint dedup instead). Same tiny partial-agg shape as
-    * the in-plan cap; output is bounded by the number of pathological
-    * buckets, not the corpus.
-    */
-  def oversizedHashBuckets(hashed: DataFrame, idCol: String,
-      hashCol: String, maxBucket: Int = 10000): DataFrame =
-    oversizedFrom(bandedChunks(parseBandInts(hashed, idCol, hashCol), idCol),
-      maxBucket)
 }

@@ -80,191 +80,6 @@ object IncrementalDedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Persist the corpus' two dedup indexes as BUCKETED tables — the
-    * d10 scale path. The entry above derives both indexes in-plan so
-    * it stays oracle-replayable, but a production corpus maintains
-    * them as tables and must not recompute fingerprints/minhashes of
-    * the whole corpus per batch:
-    *   - `<prefix>_fp`: distinct normalized-text fingerprints,
-    *     bucketed + sorted on fp;
-    *   - `<prefix>_bands`: MinHash LSH band postings keyed by ONE
-    *     combined bucket key (band '|' band_hash — a single column so
-    *     the bucket layout alone satisfies the join's distribution),
-    *     bucketed + sorted on it.
-    * `probeBatch` then answers each incoming batch with equi-joins
-    * where the CORPUS side reads its bucket layout directly — zero
-    * exchange on the big side, only the (small) batch shuffles into
-    * the index's partitioning (IncrementalDedupSpec pins it). The
-    * write-time shuffle is paid once per corpus build, not per batch.
-    */
-  /** `numHashes`/`bands` select the index's LSH operating point
-    * (`Dedup.lshOperatingPoint`; retune for corpus growth via
-    * `Dedup.chooseBanding`). The banding is STAMPED into the bands
-    * table's properties: a probe with a different banding would
-    * compute band keys over different signature slices and the bucket
-    * equi-join would silently match nothing — every near-dup labeled
-    * `kept` with no error — so `probeBatch` validates the stamp and
-    * fails loudly on mismatch instead.
-    */
-  /** The band-posting row shape both index writes share: (id_b, bkey
-    * = band '|' band_hash).
-    */
-  private def bandRows(docs: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    Dedup.minhashBands(docs, "doc_id", "text",
-        numHashes = numHashes, bands = bands)
-      .select(col("doc_id").as("id_b"),
-        concat_ws("|", col("band"), col("band_hash")).as("bkey"))
-
-  def buildIndexes(corpus: DataFrame, buckets: Int = 32,
-      prefix: String = "graft_dedup",
-      numHashes: Int = 16, bands: Int = 4): Unit = {
-    // fp rows carry their HOLDER id: existence semantics are
-    // unchanged (probe joins on fp and distincts the verdict), but a
-    // retraction can then remove exactly one doc's claim — a shared
-    // fingerprint stays as long as any live holder remains
-    val fp = corpus.select(fingerprintMd5(col("text")).as("fp"),
-      col("doc_id").as("id_b")).distinct()
-    graft.sources.Bucketing.writeBucketed(fp, s"${prefix}_fp", "fp", buckets)
-    graft.sources.Bucketing.writeBucketed(
-      bandRows(corpus, numHashes, bands), s"${prefix}_bands", "bkey", buckets)
-    corpus.sparkSession.sql(
-      s"ALTER TABLE ${prefix}_bands SET TBLPROPERTIES " +
-        s"('graft.lsh.numHashes' = '$numHashes', 'graft.lsh.bands' = '$bands')")
-    ()
-  }
-
-  /** Fold a probed batch's ADMITTED docs (status `kept`) into the
-    * persisted indexes so the next batch dedups against them — the
-    * maintenance step that completes the ingest loop
-    * (probe → admit → append; `IncrementalPassages`/`IncrementalMedia`
-    * are the pair-table analogues). Appends under the existing bucket
-    * layout with the index's stamped banding: O(kept docs), no corpus
-    * rewrite.
-    */
-  def admitBatch(spark: SparkSession, batch: DataFrame, verdicts: DataFrame,
-      prefix: String = "graft_dedup",
-      numHashes: Int = 16, bands: Int = 4): Unit = {
-    requireHolderFp(spark, prefix)
-    indexBanding(spark, prefix).foreach { case (nh, b) =>
-      require(nh == numHashes && b == bands,
-        s"admitBatch banding ($numHashes, $bands) != index '${prefix}_bands' " +
-          s"banding ($nh, $b)")
-    }
-    // lineage-cut: `verdicts` is typically the whole probeBatch plan,
-    // and both appends below would otherwise re-run it
-    val kept = Checkpoints.cut(batch.join(
-      verdicts.filter(col("status") === "kept").select(col("doc_id")), "doc_id"))
-    graft.sources.Bucketing.appendBucketed(
-      graft.sources.Bucketing.absentOnly(
-        kept.select(fingerprintMd5(col("text")).as("fp"),
-          col("doc_id").as("id_b")).distinct(),
-        s"${prefix}_fp", "id_b"),
-      s"${prefix}_fp", "fp")
-    graft.sources.Bucketing.appendBucketed(
-      graft.sources.Bucketing.absentOnly(
-        bandRows(kept, numHashes, bands), s"${prefix}_bands", "id_b"),
-      s"${prefix}_bands", "bkey")
-    // a re-admit of a retracted doc: rows still present in both tables
-    Tombstones.resurrect(spark, prefix, kept.select(col("doc_id").as("id_b")), "id_b")
-  }
-
-  /** Remove a TAKEDOWN batch of docs from the dedup indexes — the
-    * reverse lifecycle, O(batch): signed tombstones ([[Tombstones]],
-    * one table governing both index copies) flip the docs dead; the
-    * next probe's live reads no longer match their fingerprints or
-    * band postings. A fingerprint SHARED with a surviving doc keeps
-    * matching through the survivor's own (fp, id_b) row — removal is
-    * per-claim, not per-value. Only doc ids are needed (no text).
-    */
-  def retractBatch(spark: SparkSession, docIds: DataFrame,
-      prefix: String = "graft_dedup"): Unit =
-    Tombstones.retract(spark, prefix,
-      docIds.select(col(docIds.columns.head).as("id_b")), "id_b")
-
-  /** Fold the net-dead docs into BOTH index copies physically and
-    * truncate the tombstone history ([[Tombstones.compact]] — the
-    * per-claim (fp, id_b) rows make removal exact: a shared
-    * fingerprint keeps its surviving holders' rows).
-    */
-  def compact(spark: SparkSession, prefix: String = "graft_dedup"): Unit =
-    Tombstones.compact(spark, prefix, "id_b",
-      Seq((s"${prefix}_fp", "fp"), (s"${prefix}_bands", "bkey")))
-
-  /** Fail fast on an `_fp` index predating the per-holder (fp, id_b)
-    * row format: every read and append here resolves `id_b`, so an
-    * fp-only index would otherwise die mid-plan with an opaque
-    * unresolved-column error (or, worse, a retract would silently not
-    * remove the claim it thinks it removed).
-    */
-  private def requireHolderFp(spark: SparkSession, prefix: String): Unit = {
-    val cols = spark.table(s"${prefix}_fp").columns
-    require(cols.contains("id_b"),
-      s"'${prefix}_fp' predates the per-holder (fp, id_b) row format " +
-        s"(columns: ${cols.mkString(", ")}) — rebuild the index with " +
-        "buildIndexes; per-claim rows are what make retraction and " +
-        "replay absorption exact")
-  }
-
-  /** The (numHashes, bands) stamp `buildIndexes` wrote, or None for a
-    * pre-stamp index (the BANDING stamp's absence alone is tolerated —
-    * the caller's banding is then trusted as before; the `_fp`
-    * per-holder ROW FORMAT is mandatory regardless, enforced by
-    * `requireHolderFp` with an explicit rebuild message).
-    */
-  private def indexBanding(spark: SparkSession, prefix: String): Option[(Int, Int)] = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${prefix}_bands").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    for {
-      nh <- props.get("graft.lsh.numHashes")
-      b <- props.get("graft.lsh.bands")
-    } yield (nh.toInt, b.toInt)
-  }
-
-  /** Dedup an incoming batch against the PERSISTED indexes
-    * (`buildIndexes`). Identical verdict semantics to the in-plan
-    * entry: exact fingerprint match, then LSH candidates (hot corpus
-    * buckets > `maxBucket` dropped via broadcast anti-join) verified
-    * by n-gram Jaccard ≥ 0.2. `corpus` supplies candidate TEXTS for
-    * verification only — an O(candidates) id-join, never a corpus
-    * re-index.
-    */
-  def probeBatch(spark: SparkSession, corpus: DataFrame, batch: DataFrame,
-      maxBucket: Int = 1000, prefix: String = "graft_dedup",
-      numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    requireHolderFp(spark, prefix)
-    indexBanding(spark, prefix).foreach { case (nh, b) =>
-      require(nh == numHashes && b == bands,
-        s"probeBatch banding ($numHashes, $bands) != index '${prefix}_bands' " +
-          s"banding ($nh, $b) — band keys would never match; rebuild the index " +
-          "or probe with its stamped operating point")
-    }
-    val fpC = Tombstones.live(spark, spark.table(s"${prefix}_fp"), prefix, "id_b")
-    val bandsC = Tombstones.live(spark, spark.table(s"${prefix}_bands"), prefix, "id_b")
-    val exactDup = batch.select(col("doc_id"), fingerprintMd5(col("text")).as("fp"))
-      .join(fpC, "fp").select(col("doc_id")).distinct()
-    val bB = Dedup.minhashBands(batch, "doc_id", "text",
-        numHashes = numHashes, bands = bands)
-      .select(col("doc_id").as("id_a"),
-        concat_ws("|", col("band"), col("band_hash")).as("bkey"))
-    val hot = bandsC.groupBy(col("bkey")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxBucket).select(col("bkey"))
-    val cand = bB.join(broadcast(hot), Seq("bkey"), "left_anti")
-      .join(bandsC, Seq("bkey"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val universe = corpus.select(col("doc_id"), col("text"))
-      .unionByName(batch.select(col("doc_id"), col("text")))
-    val nearDup = Dedup.jaccardVerify(universe, cand, "doc_id", "text", threshold = 0.2)
-      .select(col("id_a").as("doc_id")).distinct()
-    batch.select(col("doc_id"))
-      .join(exactDup.withColumn("e", lit(1)), Seq("doc_id"), "left")
-      .join(nearDup.withColumn("nd", lit(1)), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("e") === 1, "exact_dup")
-          .when(col("nd") === 1, "near_dup")
-          .otherwise("kept").as("status"))
-      .orderBy(col("doc_id"))
-  }
-
   val d10IncrementalDedupSql: String = {
     val P = MinhashP
     val minCols = (0 until 16).map(j =>

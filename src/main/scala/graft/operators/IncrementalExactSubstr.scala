@@ -41,7 +41,7 @@ object IncrementalExactSubstr {
     * row_number chaining and silently UNDERCOUNT run lengths — so a
     * crash between the two appends must heal exactly the lagging one.
     */
-  private val Index = PostingIndex(Seq("wpos" -> "h", "wdoc" -> "doc_id"),
+  private[operators] val Index = PostingIndex(Seq("wpos" -> "h", "wdoc" -> "doc_id"),
     "doc_id", "h", distinctIds = true)
 
   private def rows(wins: DataFrame) = wins.select(col("doc_id"), col("pos"), col("h"))
@@ -51,33 +51,11 @@ object IncrementalExactSubstr {
       buckets: Int = 32): Unit =
     Index.build(rows(wins), prefix, buckets)
 
-  /** Append a merged batch's window rows under both layouts ([[PostingIndex.append]]). */
-  def appendToIndexes(batchWins: DataFrame, prefix: String = "graft_substr"): Unit =
-    Index.append(rows(batchWins), prefix)
-
-  /** The LIVE h-keyed index: `_wpos` minus net-dead docs. */
-  def liveWpos(spark: SparkSession, prefix: String = "graft_substr"): DataFrame =
-    Index.live(spark, prefix)
-
-  /** The LIVE doc-keyed index: `_wdoc` minus net-dead docs. */
-  def liveWdoc(spark: SparkSession, prefix: String = "graft_substr"): DataFrame =
-    Index.live(spark, prefix, "wdoc")
-
-  /** Land the distinct-doc hot census as `<prefix>_hot`. */
-  def refreshHotWindows(spark: SparkSession, prefix: String = "graft_substr",
-      cap: Int = 100): Unit =
-    Index.refreshHot(spark, prefix, cap)
-
-  /** Re-census only when the retraction state moved since the last refresh. */
-  def refreshHotWindowsIfStale(spark: SparkSession,
-      prefix: String = "graft_substr", cap: Int = 100): Unit =
-    Index.refreshHotIfStale(spark, prefix, cap)
-
   /** Fold the net-dead docs into BOTH window layouts and truncate the history. */
   def compact(spark: SparkSession, prefix: String = "graft_substr"): Unit =
     Index.compact(spark, prefix)
 
-  /** The index a serving consumer (the streaming gate) probes: live
+  /** The index a serving consumer probes: live
     * position rows minus the maintained hot exclusion.
     */
   def servableIndex(spark: SparkSession,

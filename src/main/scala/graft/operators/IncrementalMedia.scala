@@ -34,7 +34,7 @@ object IncrementalMedia {
       .withColumn("bkey", concat_ws("|", col("band"), col("chunk")))
 
   /** The band index for assets keyed by `idCol` (bucket size = rows). */
-  private def index(idCol: String) = PostingIndex(Seq("band" -> "bkey"), idCol, "bkey")
+  private[operators] def index(idCol: String) = PostingIndex(Seq("band" -> "bkey"), idCol, "bkey")
 
   /** Persist the corpus band postings bucketed on bkey. */
   def buildPhashIndex(hashed: DataFrame, idCol: String = "media_id",
@@ -42,18 +42,13 @@ object IncrementalMedia {
       buckets: Int = 32): Unit =
     index(idCol).build(bandedRows(hashed, idCol, hashCol), prefix, buckets)
 
-  /** The LIVE band index: `_band` minus net-dead assets. */
-  def liveBand(spark: SparkSession, prefix: String = "graft_media",
-      idCol: String = "media_id"): DataFrame =
-    index(idCol).live(spark, prefix)
-
   private def hamming(a: String, c: String) = (0 until 4)
     .map(b => bit_count(col(s"$a$b").bitwiseXOR(col(s"$c$b"))))
     .reduce(_ + _)
 
   /** The (band, chunk) buckets this batch would push over the cap —
     * the decision surface for the DOWNSTREAM cluster artifact
-    * (`oversizedHashBuckets`' pattern): empty ⇒ the merge only ADDS
+    * (the hexHashPairs skew cap's census): empty ⇒ the merge only ADDS
     * pair edges and `DedupClusters.mergeBatch` folds them exactly;
     * non-empty ⇒ edges were dropped, which star merging cannot
     * unlink, so rebuild clusters from the merged PAIR table. Tiny
@@ -174,24 +169,12 @@ object IncrementalMedia {
       .unionByName(probeFrom(idxB, batchRows, oversizedNew, idCol, maxHamming))
   }
 
-  /** Land the oversized-bucket census as `<prefix>_hot` for serving
-    * consumers (one exchange-free scan per batch append).
-    */
-  def refreshHotBuckets(spark: SparkSession, prefix: String = "graft_media",
-      maxBucket: Int = 10000): Unit =
-    index("media_id").refreshHot(spark, prefix, maxBucket)
-
-  /** Re-census only when the retraction state moved since the last refresh. */
-  def refreshHotBucketsIfStale(spark: SparkSession,
-      prefix: String = "graft_media", maxBucket: Int = 10000): Unit =
-    index("media_id").refreshHotIfStale(spark, prefix, maxBucket)
-
   /** Fold the net-dead assets into `_band` and truncate the history. */
   def compact(spark: SparkSession, prefix: String = "graft_media",
       idCol: String = "media_id"): Unit =
     index(idCol).compact(spark, prefix)
 
-  /** The index a SERVING consumer (the streaming gate) probes: live
+  /** The index a SERVING consumer probes: live
     * postings minus the maintained hot set — a degenerate bucket
     * (all-zero pHash of trivial assets) would fan every arriving
     * asset in it out to the whole bucket.

@@ -39,10 +39,10 @@ object IncrementalPassages {
 
   /** The family's ONE window-hash kernel: the array of 60-bit md5
     * prefixes of each rolling `windowTokens`-token window of the
-    * token-array column `tk`. Batch pipeline (d11), incremental index,
-    * and streaming gate all hash through this expression — the
-    * incremental/stream ≡ batch guarantees rest on the kernel never
-    * diverging between them. `tk` must be a plain post-exchange
+    * token-array column `tk`. Batch pipeline (d11) and incremental
+    * index both hash through this expression — the incremental ≡
+    * batch guarantee rests on the kernel never diverging between
+    * them. `tk` must be a plain post-exchange
     * attribute so the lambda doesn't re-derive the token array per
     * element.
     */
@@ -91,7 +91,7 @@ object IncrementalPassages {
   /** The window index: (doc_id, h) postings bucketed on h, df = raw
     * row count (rows are distinct (doc, window) pairs).
     */
-  private val Index = PostingIndex(Seq("win" -> "h"), "doc_id", "h")
+  private[operators] val Index = PostingIndex(Seq("win" -> "h"), "doc_id", "h")
 
   /** Persist the corpus window index (the write-time shuffle is paid
     * once per corpus build; census and probes ride its layout).
@@ -100,26 +100,13 @@ object IncrementalPassages {
       buckets: Int = 32): Unit =
     Index.build(wins.select(col("doc_id"), col("h")), prefix, buckets)
 
-  /** The LIVE corpus index: `_win` minus net-dead docs. */
-  def liveWin(spark: SparkSession, prefix: String = "graft_passages"): DataFrame =
-    Index.live(spark, prefix)
-
-  /** Append a merged batch's windows to the index ([[PostingIndex.append]]). */
-  def appendToIndex(batchWins: DataFrame, prefix: String = "graft_passages"): Unit =
-    Index.append(batchWins.select(col("doc_id"), col("h")), prefix)
-
   /** Land the hot-window census (df > cap) as `<prefix>_hot` — the
-    * exclusion consumers that must skip boilerplate (the streaming
-    * gate) read instead of re-counting the corpus per micro-batch.
+    * exclusion `servableIndex` consumers read instead of re-counting
+    * the corpus.
     */
   def refreshHotWindows(spark: SparkSession, prefix: String = "graft_passages",
       cap: Int = 100): Unit =
     Index.refreshHot(spark, prefix, cap)
-
-  /** Re-census only when the retraction state moved since the last refresh. */
-  def refreshHotWindowsIfStale(spark: SparkSession,
-      prefix: String = "graft_passages", cap: Int = 100): Unit =
-    Index.refreshHotIfStale(spark, prefix, cap)
 
   /** Fold the net-dead docs into `_win` and truncate the tombstone history. */
   def compact(spark: SparkSession, prefix: String = "graft_passages"): Unit =

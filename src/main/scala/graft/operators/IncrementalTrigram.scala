@@ -32,7 +32,7 @@ object IncrementalTrigram {
     * are distinct (doc, trigram) pairs, so the raw per-h row count IS
     * the document frequency.
     */
-  private val Index = PostingIndex(Seq("tri" -> "h"), "doc_id", "h")
+  private[operators] val Index = PostingIndex(Seq("tri" -> "h"), "doc_id", "h")
 
   /** The benchmark panel, bucketed on h like the index so the
     * new-pair join rides the same layout. Bench-keyed and fixed by
@@ -46,24 +46,6 @@ object IncrementalTrigram {
     Index.build(corpusTris.select(col("doc_id"), col("h")), prefix, buckets)
     Panel.build(panel.select(col("bench_id"), col("h")), prefix, buckets)
   }
-
-  /** The LIVE corpus index: `_tri` minus net-dead docs. */
-  def liveTri(spark: SparkSession, prefix: String = "graft_trigram"): DataFrame =
-    Index.live(spark, prefix)
-
-  /** Land the hot census as `<prefix>_hot` — the exclusion the
-    * streaming gate (`StreamingTrigram.flagAgainstPanel`) broadcasts
-    * per micro-batch instead of re-counting the corpus.
-    */
-  def refreshHotTrigrams(spark: SparkSession, prefix: String = "graft_trigram",
-      cap: Int = PipelineQueries.ContamMaxDf): Unit =
-    Index.refreshHot(spark, prefix, cap)
-
-  /** Re-census only when the retraction state moved since the last refresh. */
-  def refreshHotTrigramsIfStale(spark: SparkSession,
-      prefix: String = "graft_trigram",
-      cap: Int = PipelineQueries.ContamMaxDf): Unit =
-    Index.refreshHotIfStale(spark, prefix, cap)
 
   /** Fold the net-dead docs into `_tri`; the `_panel` table is untouched. */
   def compact(spark: SparkSession, prefix: String = "graft_trigram"): Unit =

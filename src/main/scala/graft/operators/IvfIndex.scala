@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.ArrayDotProduct
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -43,42 +42,6 @@ object IvfIndex {
     */
   val LiteralKMax = 256
 
-  /** Squared L2 distance to a centroid literal, accumulated strictly
-    * left-to-right — the exact arithmetic the DuckDB oracle's
-    * `list_distance` runs, which is what makes nearest-centroid
-    * assignment reproducible across engines. Kept (with the literal
-    * argmin/probe forms below) ONLY as the bit-parity reference the
-    * function specs compare the codegen'd expressions against — no
-    * production path builds it anymore (r20: the literal trees embed
-    * k×dims literal doubles per use and their zip_withs run
-    * interpreted, twice per ArrayDotProduct reference, with a per-row
-    * allocation per centroid).
-    */
-  private def dist2(v: Column, cent: Seq[Double]): Column = {
-    val diff = zip_with(v, array(cent.map(lit): _*), (x, y) => x - y)
-    ArrayDotProduct(diff, diff)
-  }
-
-  /** (distance, cid) candidates as a sortable struct array. */
-  private def distStructs(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
-    array(cents.map { case (cid, c) =>
-      struct(dist2(v, c).as("d"), lit(cid).as("cid"))
-    }: _*)
-
-  /** The literal-tree argmin — the specs' bit-parity reference for
-    * [[nearestCid]] (same math, k×dims-literal expression tree).
-    */
-  private[graft] def nearestCidLiteral(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
-    array_min(distStructs(v, cents)).getField("cid")
-
-  /** The literal-tree probe — the specs' bit-parity reference for
-    * [[probeCids]].
-    */
-  private[graft] def probeCidsLiteral(v: Column, cents: Seq[(Int, Seq[Double])],
-      nprobe: Int): Column =
-    transform(slice(array_sort(distStructs(v, cents)), 1, nprobe),
-      s => s.getField("cid"))
-
   /** The nearest centroid id (ties by cid) — the codegen'd
     * [[graft.functions.NearestCell]] loop, spec-pinned bit-identical
     * to the literal `array_min(struct(d, cid))` form at any k (r20:
@@ -88,36 +51,6 @@ object IvfIndex {
     */
   def nearestCid(v: Column, cents: Seq[(Int, Seq[Double])]): Column =
     graft.functions.NearestCell(v, cents)
-
-  /** Cell assignment at large k — one narrow map through the
-    * codegen'd [[graft.functions.NearestCell]] argmin (the centroid
-    * matrix rides as a codegen reference object; generated Java loops
-    * k×dims with zero allocation). The literal form (`nearestCid`)
-    * compiles k (dist, cid) terms into ONE expression tree — ideal to
-    * a few hundred cells, broken by the corpus-derived
-    * k = N/targetCellSize beyond that; this path has no tree-size
-    * ceiling. (r16 session 2: the previous crossJoin-every-centroid +
-    * groupBy-min form materialized N×k array-carrying rows through a
-    * hash aggregate — 78 M intermediate rows for d13's sf10
-    * assignment — to compute the same per-row argmin; an
-    * `array_min(transform(...))` HOF attempt ran interpreted with a
-    * per-centroid allocation and measured SLOWER than the join.)
-    * The per-pair math (sequential Σ(v−c)² in doubles, ties by cid)
-    * is identical to the literal form — both paths assign every
-    * vector to the same cell (spec-pinned), so a pipeline can switch
-    * on k without changing results. The matrix ships once per stage
-    * in the broadcast task binary — the ceiling of THIS design is a
-    * centroid set too big to ship (~10⁶ cells), where a hierarchical
-    * index takes over.
-    *
-    * Input: (`idCol`, `vCol`: array<double>). Output: (idCol, vCol,
-    * cid) — one row per input row (duplicate ids pass through, same
-    * as the literal path).
-    */
-  def assignCells(vecs: DataFrame, idCol: String, vCol: String,
-      cents: Seq[(Int, Seq[Double])]): DataFrame =
-    vecs.select(col(idCol), col(vCol),
-      graft.functions.NearestCell(col(vCol), cents).as("cid"))
 
   /** The `nprobe` nearest centroid ids, nearest first — the codegen'd
     * [[graft.functions.ProbeCells]] selection, spec-pinned

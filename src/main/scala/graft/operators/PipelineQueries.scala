@@ -140,30 +140,11 @@ object PipelineQueries {
   // ---------------------------------------------------------------
 
   /** The d8 family's trigram LEAF hash (60-bit md5-prefix of
-    * "t1 t2 t3") — the batch kernel and the streaming gate's in-row
-    * form both hash through this one definition.
+    * "t1 t2 t3") — the batch kernel and the incremental index both
+    * hash through this one definition.
     */
   private[graft] def triHash(tri: Column): Column =
     conv(substring(md5(tri), 1, 15), 16, 10).cast("long")
-
-  /** In-row DISTINCT trigram-hash array of a token array — the
-    * streaming gate's zero-state form: per-arriving-row distinct
-    * needs no stream-level dedup state (StreamingPassages' rule),
-    * where the corpus form below keeps the Generate barrier for
-    * map-side CSE over millions of docs.
-    */
-  private[graft] def triHashArray(tk0: Column): Column =
-    // let-bind the token array (r20, ExprLet scaladoc): callers pass
-    // a COMPUTED tokenize (the streaming gate passes wsTokens(text)),
-    // and the per-position lambda referenced that subtree three
-    // times — the regex tokenizer re-ran per trigram position
-    graft.functions.ExprLet.bindOnce(tk0) { tk =>
-      array_distinct(when(size(tk) >= 3,
-          transform(sequence(lit(1), size(tk) - lit(2)),
-            i => triHash(concat_ws(" ", element_at(tk, i),
-              element_at(tk, i + 1), element_at(tk, i + 2)))))
-        .otherwise(array().cast("array<long>")))
-    }
 
   /** (id, trigram-hash) rows — explode-over-positions so the token
     * split runs once per DOC (the Generate barrier; see
@@ -382,7 +363,7 @@ object PipelineQueries {
   }
 
   /** The benchmark-panel trigram rows (every 50th doc — the held-out
-    * set convention shared with the streaming gate's `panelIndex`).
+    * set convention).
     */
   private[operators] def benchPanelRows(spark: SparkSession, dir: String): DataFrame =
     trigramRows(table(spark, dir, "documents").filter(col("doc_id") % 50 === 0))
@@ -942,8 +923,7 @@ object PipelineQueries {
     * d21→d22, d8→d23, d24→this). Keep-first-occurrence policy: the
     * lowest doc id holding a maximal repeat keeps its copy; every
     * other doc's occurrence is cut and the unique prose kept in
-    * order. Content-exact via md5 of the kept tokens, d19's shape;
-    * kernel + policy composition proof in `ExactSubstr.scrubRepeats`.
+    * order. Content-exact via md5 of the kept tokens, d19's shape.
     */
   def d25SubstrScrub(spark: SparkSession, dir: String): DataFrame =
     ExactSubstr.scrubWith(plantedSpanToks(spark, dir),

@@ -33,37 +33,9 @@ object Similarity {
       .select(col("qid"), col("rank"), col("nid"), col("sim"))
   }
 
-  /** Exact cosine near-dup pairs above a threshold — the all-pairs
-    * verification KERNEL. Deliberately quadratic: call it only on a
-    * bucketed/bounded candidate set (multiProbeCosinePairs /
-    * bucketedCosinePairs are the shipped query shapes); as a
-    * standalone whole-corpus query this is a cross join that dies at
-    * scale.
-    */
-  def cosinePairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double): DataFrame = {
-    val a = df.select(col(idCol).as("id_a"), toDouble(col(vecCol)).as("va"))
-    val b = df.select(col(idCol).as("id_b"), toDouble(col(vecCol)).as("vb"))
-    a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .withColumn("sim", cosine(col("va"), col("vb")))
-      .filter(col("sim") > threshold)
-      .select(col("id_a"), col("id_b"), col("sim"))
-  }
-
-  /** The Hamming-≤1 probe set of an SRP bucket id: the bucket itself
-    * plus each one-bit flip.
-    */
-  private def probeSet(bucket: Column, nBits: Int): Column =
-    array_distinct(array(
-      (Seq(bucket) ++ (0 until nBits).map { i =>
-        concat(bucket.substr(lit(1), lit(i)),
-          when(bucket.substr(i + 1, 1) === "1", lit("0")).otherwise(lit("1")),
-          bucket.substr(lit(i + 2), lit(nBits - i - 1)))
-      }): _*))
-
   // -----------------------------------------------------------------
   // Bucket-occupancy governance — the SRP family's analogue of the
-  // minhash discipline (Dedup.maxBucket skew cap + chooseBanding):
+  // minhash discipline (Dedup.maxBucket skew cap):
   // a FIXED nBits makes per-bucket occupancy ~N/2^nBits, so
   // within-bucket candidate work grows quadratically with corpus size
   // (the r15 sweep measured the k-NN graph at 45× for 10× vectors).
@@ -73,48 +45,10 @@ object Similarity {
   // same integer arithmetic, so results stay hash-exact at any scale.
   // -----------------------------------------------------------------
 
-  /** Data-driven SRP hash width: the smallest `nBits` whose 2^nBits
-    * buckets hold ≤ `targetOccupancy` vectors each on average,
-    * clamped to [minBits, maxBits]. Integer arithmetic only
-    * (⌈n/occ⌉ buckets → bit length of buckets−1) so every engine —
-    * and the SQL oracles via floor/bin/length — derives the same
-    * width from the same count. [[srpIndexGoverned]] /
-    * [[mipsIndexGoverned]] pin it into the serving artifact at build
-    * time; the governed corpus-sweep kernels below derive it in-plan
-    * per run.
-    *
-    * SATURATION CONTRACT (the r16 judge's one finding, closed r17 by
-    * widening the default 16 → 24): the width saturates at `maxBits`,
-    * so average occupancy is bounded at `targetOccupancy` only while
-    * n ≤ occ·2^maxBits (16·2^24 ≈ 268M vectors at the defaults —
-    * r16's 16-bit default saturated at ~1M), and past
-    * cap·2^maxBits = capFactor·occ·2^maxBits (≈ 2.1B at the
-    * defaults) the average bucket crosses the degenerate-bucket cap
-    * and the governed kernels would start dropping NON-degenerate
-    * corpus mass. The drop is never silent: every governed kernel's
-    * dropped set is the [[governedDroppedCensus]] — callers sweeping
-    * past the bound see the census explode (the
-    * `Dedup.oversizedHashBuckets` discipline), and
-    * SimilarityScalingBench's saturation arm measures exactly that
-    * flip on the OLD 16-bit width at 10M vectors. The contract is
-    * ENFORCED, not just written (r18): [[saturatedCensus]] /
-    * [[requireNotSaturated]] read the census after a build and
-    * flag/fail past a dropped-fraction threshold — the compactIfDue
-    * pattern applied to width saturation.
-    */
-  def chooseNBits(n: Long, targetOccupancy: Int = 16, minBits: Int = 4,
-      maxBits: Int = 24): Int = {
-    require(targetOccupancy > 0 && minBits >= 1 && maxBits >= minBits)
-    val bucketsNeeded = math.max(1L, (n + targetOccupancy - 1) / targetOccupancy)
-    val bits = 64 - java.lang.Long.numberOfLeadingZeros(
-      math.max(bucketsNeeded - 1, 1L))
-    val raw = if (bucketsNeeded <= 1) 1 else bits
-    math.max(minBits, math.min(maxBits, raw))
-  }
-
-  /** `chooseNBits` as a column over a count column — the exact same
-    * integer arithmetic, phrased so the DuckDB oracle mirrors it
-    * token for token: buckets = floor((n + occ − 1) / occ), nbits =
+  /** The data-driven SRP hash width as a column over a count column:
+    * the smallest width whose buckets hold ≤ `targetOccupancy` vectors
+    * on average, clamped to [minBits, maxBits] — integer arithmetic
+    * phrased so the DuckDB oracle mirrors it token for token: buckets = floor((n + occ − 1) / occ), nbits =
     * clamp(length(bin(max(buckets, 1) − 1))). length(bin(x)) is the
     * bit length of x in both engines (no leading zeros), and
     * length(bin(0)) = 1 clamps to minBits.
@@ -171,48 +105,15 @@ object Similarity {
     b.groupBy(col("bucket")).agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > cap).select(col("bucket"))
 
-  /** The dropped-mass census of the governance — what the
-    * oversized-bucket cap excludes at the given width, surfaced to
-    * callers the way `Dedup.oversizedHashBuckets` surfaces the
-    * minhash cap's drops: one row (n_total, n_dropped, buckets_
-    * dropped, nbits, dropped_frac). Inside the [[chooseNBits]]
-    * saturation bound the dropped mass is degenerate directions only
-    * (template/zero vectors — the cap's purpose); a dropped_frac
-    * climbing past a few percent means the corpus has outgrown
-    * `maxBits` (the r16 16-bit ceiling: near-total drop by 10M
-    * vectors, measured in SimilarityScalingBench's saturation arm)
-    * and the width ceiling must be raised, not the result trusted.
-    */
-  def governedDroppedCensus(df: DataFrame, idCol: String, vecCol: String,
-      targetOccupancy: Int = 16, capFactor: Int = 8, minBits: Int = 4,
-      maxBits: Int = 24, dims: Int = 64): DataFrame = {
-    val cap = capFactor * targetOccupancy
-    // ONE corpus pass: the per-bucket counts already decide oversize,
-    // so total/dropped/bucket counts all derive from the tiny
-    // (bucket, bucket_n) frame — no second semi-join pass
-    governedBuckets(df, idCol, vecCol, targetOccupancy, minBits,
-        maxBits, dims)
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bucket_n"), first(col("nbits")).as("nbits"))
-      .agg(sum(col("bucket_n")).as("n_total"),
-        sum(when(col("bucket_n") > cap, col("bucket_n")).otherwise(0L))
-          .as("n_dropped"),
-        count(when(col("bucket_n") > cap, lit(1))).as("buckets_dropped"),
-        first(col("nbits")).as("nbits"))
-      .select(col("n_total"), col("n_dropped"), col("buckets_dropped"),
-        col("nbits"),
-        (col("n_dropped") / col("n_total")).as("dropped_frac"))
-  }
-
-  /** Governed near-dup pairs — `multiProbeCosinePairs` /
-    * `bucketedCosinePairs` with bucket-occupancy governance: the hash
-    * width tracks the corpus count at `targetOccupancy`, and vectors
+  /** Governed near-dup pairs — SRP-bucketed exact-cosine verification
+    * (Hamming-≤1 multi-probe, or single-bucket with `multiProbe =
+    * false`) with bucket-occupancy governance: the hash width tracks the corpus count at `targetOccupancy`, and vectors
     * whose HOME bucket holds more than `capFactor × targetOccupancy`
     * occupants are excluded from BOTH sides (the oversized-bucket
     * drop, symmetric: a pair is reported iff neither endpoint lives
     * in a degenerate bucket). Join OUTPUT is then bounded by
     * cap × probe rows ≤ cap·(maxBits+2)·N — LINEAR in the corpus,
-    * where the ungoverned fixed-width kernels grow ~N²/2^nBits.
+    * where a fixed-width kernel grows ~N²/2^nBits.
     * Everything — width, truncation, cap, probes, cosine — replays in
     * the DuckDB oracle from the same constants, so d5/d6 stay
     * hash-exact at every scale.
@@ -240,7 +141,7 @@ object Similarity {
       .select(col("id_a"), col("id_b"), col("sim"))
   }
 
-  /** Governed ANN top-k / k-NN graph — `bucketedKnn` with the same
+  /** Governed ANN top-k / k-NN graph — SRP-bucketed exact rerank with
     * occupancy governance: the INDEX side drops oversized home
     * buckets (candidates from degenerate mass are worthless — exact
     * rerank inside them is where the r15 sweep's 45× went), the QUERY
@@ -264,111 +165,6 @@ object Similarity {
       // the in-plan build branch (it is not a landed artifact that
       // could mix versions)
       queries, idCol, vecCol, k, maxBits, dims, checkWidth = false)
-
-  /** Multi-probe SRP near-dup pairs: exact cosine verification over
-    * candidates whose SRP buckets are within Hamming distance 1 —
-    * the scale-shaped form of whole-corpus `cosinePairs`, with higher
-    * recall than single-bucket `bucketedCosinePairs`.
-    *
-    * One side keeps its HOME bucket; the other explodes into the
-    * nBits+1 probe buckets. A pair within Hamming ≤ 1 matches on
-    * exactly one probe row (the probe equal to the home bucket), so
-    * every candidate arises once — no distinct pass. Shuffle
-    * cardinality is (nBits+2)·N on the bucket key; pairwise work runs
-    * only inside matched buckets — but with a FIXED nBits that
-    * within-bucket work is ~N²/2^nBits and grows quadratically with
-    * the corpus. This fixed-width form is for pinned-width callers
-    * (an artifact-served index); corpus sweeps use
-    * [[governedCosinePairs]], whose width tracks the corpus count and
-    * whose oversized-bucket cap bounds join output linearly.
-    */
-  def multiProbeCosinePairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nBits: Int = 8, dims: Int = 64): DataFrame = {
-    // Lineage-CUT the bucketed frame (t15's rule): it feeds BOTH join
-    // sides, and without the cut each side re-runs the cast + nBits
-    // plane dot products over the whole corpus — the same
-    // two-consumer recompute that held d15/d17 2-3× above their warm
-    // numbers before their cuts (d5 measured 3.65 s median with 1.65 s
-    // warm-run headroom at sf0.1).
-    val b = Checkpoints.cut(
-      df.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
-        .withColumn("bucket", srpBucket(col("v"), nBits, dims)))
-    val home = b.select(col("bucket"), col("id").as("id_a"), col("v").as("va"))
-    val probes = b.select(col("id").as("id_b"), col("v").as("vb"),
-      explode(probeSet(col("bucket"), nBits)).as("bucket"))
-    home.join(probes, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", cosine(col("va"), col("vb")))
-      .filter(col("sim") > threshold)
-      .select(col("id_a"), col("id_b"), col("sim"))
-  }
-
-  /** Hamming-≤2 probe buckets: the home bucket, all single-bit flips,
-    * and all double-bit flips — 1 + n + n(n−1)/2 probes (37 for 8
-    * bits). Affordable only for a side that is SMALL (d21's held-out
-    * panel); the corpus side never explodes.
-    */
-  private def probeSet2(bucket: Column, nBits: Int): Column = {
-    def flip(b: Column, i: Int): Column = concat(
-      b.substr(lit(1), lit(i)),
-      when(b.substr(i + 1, 1) === "1", lit("0")).otherwise(lit("1")),
-      b.substr(lit(i + 2), lit(nBits - i - 1)))
-    val singles = (0 until nBits).map(i => flip(bucket, i))
-    val doubles = for (i <- 0 until nBits; j <- i + 1 until nBits)
-      yield flip(flip(bucket, i), j)
-    array_distinct(array((Seq(bucket) ++ singles ++ doubles): _*))
-  }
-
-  /** The held-out panel exploded into its probe buckets at the
-    * width-scaled radius — the static index a contamination gate
-    * probes: batch (d21 joins the bucketed corpus against it) and
-    * streaming (the ingest gate joins each arriving vector's HOME
-    * bucket against it, so the stream side needs no explode and no
-    * state). Columns: (bucket, bench_id) — STRINGS ONLY (r18 for the
-    * batch kernel, r19 here): at radius 3 a probe row carrying the
-    * 65-double query vector multiplies the probe index's mass by
-    * ~25× — the streaming gate re-broadcasts this frame every
-    * micro-batch, so the vectors re-attach by the panel-row-count
-    * [[panelVectors]] join AFTER the bucket match instead of riding
-    * every probe row.
-    *
-    * The radius follows [[RadiusWideBits]]' rule at the PINNED width
-    * (Hamming ≤ 2 below it, ≤ 3 at and above) so a gate pinned to a
-    * batch-derived wide width keeps the batch kernel's re-widened
-    * angular net — batch and stream flag the same pairs at any width,
-    * not just narrow ones (spec-pinned). `radius` overrides the rule
-    * (2 or 3) for callers that promise a fixed radius — and for the
-    * planted-recall spec that MEASURES what the fixed radius misses.
-    */
-  def panelProbeIndex(panel: DataFrame, idCol: String, vecCol: String,
-      nBits: Int = 8, dims: Int = 64, radius: Int = -1): DataFrame =
-    probeIndexFrom(panelVectors(panel, idCol, vecCol), nBits, dims, radius)
-
-  /** The (bench_id, qv) vector side of the contamination gate — the
-    * panel-sized frame that re-attaches query vectors after the
-    * bucket-string probe match ([[panelProbeIndex]]'s slimming).
-    */
-  def panelVectors(panel: DataFrame, idCol: String, vecCol: String): DataFrame =
-    panel.select(col(idCol).as("bench_id"), toDouble(col(vecCol)).as("qv"))
-
-  /** [[panelProbeIndex]] over an already-normalized (bench_id, qv)
-    * frame — the shared body, so the cross-pair kernels can reuse one
-    * lineage-cut panel for probes, vector attach and the degrade
-    * count.
-    */
-  private def probeIndexFrom(p0: DataFrame, nBits: Int, dims: Int,
-      radius: Int): DataFrame = {
-    val r = if (radius > 0) radius else if (nBits >= RadiusWideBits) 3 else 2
-    require(r == 2 || r == 3, s"probe radius must be 2 or 3, got $r")
-    val probes =
-      if (r == 3) array_distinct(concat(array(col("bucket")),
-        probeSinglesDyn(col("bucket"), lit(nBits), nBits),
-        probeDoublesDyn(col("bucket"), lit(nBits), nBits),
-        probeTriplesDyn(col("bucket"), lit(nBits), nBits)))
-      else probeSet2(col("bucket"), nBits)
-    p0.withColumn("bucket", srpBucket(col("qv"), nBits, dims))
-      .select(col("bench_id"), explode(probes).as("bucket"))
-  }
 
   /** Probe-index broadcast ceiling for the contamination kernels —
     * the Tombstones discipline ([[Tombstones.deadSetJoin]]'s
@@ -402,70 +198,12 @@ object Similarity {
   /** Broadcast `df` while the caller's computed `rows` fits `limit`;
     * leave it unhinted past it (Tombstones.deadSetJoin's shape).
     */
-  private def maybeBroadcast(df: DataFrame, rows: Long, limit: Long): DataFrame =
+  private[operators] def maybeBroadcast(df: DataFrame, rows: Long, limit: Long): DataFrame =
     if (rows <= limit) broadcast(df) else df
 
-  private def probeBroadcastLimit(df: DataFrame): Long =
+  private[operators] def probeBroadcastLimit(df: DataFrame): Long =
     df.sparkSession.conf.get(ProbeBroadcastLimitKey,
       ProbeBroadcastLimitDefault.toString).toLong
-
-  /** Cross-SET multi-probe pairs: corpus × panel candidates whose SRP
-    * buckets are within the width-scaled Hamming radius
-    * ([[RadiusWideBits]]: ≤ 2 below 14 bits, ≤ 3 at and above),
-    * exact-cosine verified — the embedding-space contamination kernel
-    * (d21): the PANEL (held-out benchmark, small) explodes into its
-    * probe buckets, the corpus keeps its home bucket, so candidate
-    * cardinality is ∝ bucket collisions and pairwise cosine runs only
-    * inside matched buckets — never corpus×panel. The wider radius
-    * than multiProbeCosinePairs (≤ 1) is the operating point a
-    * contamination gate wants — recall-first, and the panel is tiny
-    * relative to the corpus, so the extra probes are free. A pair
-    * within the radius matches on exactly one probe row, so no
-    * distinct pass.
-    *
-    * Why this kernel keeps a FIXED width while the corpus-sweep and
-    * serving kernels are occupancy-governed: the width at a given
-    * radius IS the angular net the gate promises to cover, and the
-    * candidate count is corpus × panel-collision-rate — LINEAR in
-    * the corpus with no within-bucket quadratic term, because the
-    * corpus side only ever joins the broadcast panel, never itself.
-    * The governed form derives the width from the corpus count and
-    * scales the radius with it; this pinned form is for callers that
-    * pin the width (the streaming gate, pinning the batch-derived
-    * width — the radius rule still applies AT that width, so batch
-    * and stream flag identical pairs). `radius` overrides the rule
-    * (2 or 3) for fixed-radius callers and for the planted-recall
-    * spec that measures what the fixed radius misses.
-    */
-  def multiProbeCrossPairs(corpus: DataFrame, panel: DataFrame,
-      idCol: String, vecCol: String, threshold: Double,
-      nBits: Int = 8, dims: Int = 64, radius: Int = -1): DataFrame = {
-    val c = corpus.select(col(idCol).as("corpus_id"), toDouble(col(vecCol)).as("cv"))
-      .withColumn("bucket", srpBucket(col("cv"), nBits, dims))
-    // the panel is small BY CONTRACT (a benchmark suite), so while
-    // panel × probe-multiplier rows fit [[ProbeBroadcastLimitKey]]
-    // the probe index is force-broadcast and the corpus side never
-    // exchanges AT ALL — one narrow map (bucket) + two broadcast
-    // hash joins (bucket strings, then the panel-sized vector
-    // attach), zero shuffles over 100 TB of vectors
-    // (plan-spec-pinned). Past the limit both hints DROP and the
-    // join degrades to a shuffle on `bucket` — the Tombstones
-    // count-and-degrade discipline (the count is panel-sized: one
-    // lineage cut + a tiny count job, cheap next to any corpus
-    // read). The streaming gate gets the broadcast plan for free
-    // below the limit (stream-static joins broadcast the static
-    // side).
-    val p0 = Checkpoints.cut(panelVectors(panel, idCol, vecCol))
-    val limit = probeBroadcastLimit(corpus)
-    val panelN = p0.count()
-    val probes = probeIndexFrom(p0, nBits, dims, radius)
-    c.join(maybeBroadcast(probes, panelN * probeMultiplier(nBits, radius),
-        limit), Seq("bucket"))
-      .join(maybeBroadcast(p0, panelN, limit), Seq("bench_id"))
-      .withColumn("sim", cosine(col("cv"), col("qv")))
-      .filter(col("sim") > threshold)
-      .select(col("corpus_id"), col("bench_id"), col("sim"))
-  }
 
   /** The width at which the contamination probe radius steps from
     * Hamming ≤ 2 to ≤ 3 (r17 judge #1): a FIXED flip radius at a
@@ -487,7 +225,7 @@ object Similarity {
   private def flipCharDyn(bucket: Column)(i: Column): Column =
     when(bucket.substr(i, lit(1)) === "1", lit("0")).otherwise(lit("1"))
 
-  private def probeSinglesDyn(bucket: Column, nbits: Column,
+  private[operators] def probeSinglesDyn(bucket: Column, nbits: Column,
       maxBits: Int): Column = {
     val fc = flipCharDyn(bucket) _
     transform(sequence(lit(1), nbits), i => concat(
@@ -495,7 +233,7 @@ object Similarity {
       bucket.substr(i + 1, lit(maxBits))))
   }
 
-  private def probeDoublesDyn(bucket: Column, nbits: Column,
+  private[operators] def probeDoublesDyn(bucket: Column, nbits: Column,
       maxBits: Int): Column = {
     val fc = flipCharDyn(bucket) _
     val pos = sequence(lit(1), nbits)
@@ -510,7 +248,7 @@ object Similarity {
     * extension [[RadiusWideBits]] switches on. Same HOF generation
     * as the doubles (one static expression at any width).
     */
-  private def probeTriplesDyn(bucket: Column, nbits: Column,
+  private[operators] def probeTriplesDyn(bucket: Column, nbits: Column,
       maxBits: Int): Column = {
     val fc = flipCharDyn(bucket) _
     val pos = sequence(lit(1), nbits)
@@ -539,8 +277,9 @@ object Similarity {
         probeTriplesDyn(bucket, nbits, maxBits))
         .otherwise(array().cast("array<string>"))))
 
-  /** GOVERNED cross-set contamination pairs — [[multiProbeCrossPairs]]
-    * with the corpus bucket width derived from the corpus count
+  /** GOVERNED cross-set contamination pairs — corpus × panel
+    * candidates within the width-scaled Hamming radius, exact-cosine
+    * verified, with the corpus bucket width derived from the corpus count
     * (r16 judge: at the fixed 8-bit width, corpus-bucket occupancy
     * grows ~N/256, so per-panel-item verify work grows with a
     * constant the governed width cuts 256×) and the probe RADIUS
@@ -584,12 +323,6 @@ object Similarity {
     * (over-limit ≡ broadcast spec-pinned). Width, truncation,
     * radius rule, probes and cosine all replay in the DuckDB oracle
     * (d21/d22) from the same count arithmetic and plane constants.
-    * The pinned-width form above remains for callers that pin the
-    * width — the streaming ingest gate, whose stream side cannot
-    * re-count the corpus per batch (it pins the width the batch
-    * kernel derived at gate-build time; [[panelProbeIndex]] applies
-    * the SAME radius rule at the pinned width, so batch and stream
-    * keep flagging identical pairs).
     */
   def governedCrossPairs(corpus: DataFrame, panel: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
@@ -638,88 +371,19 @@ object Similarity {
       .select(col("corpus_id"), col("bench_id"), col("sim"))
   }
 
-  /** SRP-bucketed near-dup pairs at a PINNED width: candidates are
-    * pairs sharing an LSH bucket (one shuffle on the bucket id),
-    * exact cosine verifies only inside buckets. Recall trades against
-    * `nBits`; the deterministic planes make the whole pipeline
-    * reproducible and SQL-replayable. Within-bucket work grows
-    * ~N²/2^nBits at fixed width — corpus sweeps use
-    * [[governedCosinePairs]] (multiProbe = false), which derives the
-    * width from the count and caps degenerate buckets.
-    */
-  def bucketedCosinePairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nBits: Int = 8, dims: Int = 64): DataFrame = {
-    // same two-consumer lineage cut as multiProbeCosinePairs
-    val b = Checkpoints.cut(
-      df.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
-        .withColumn("bucket", srpBucket(col("v"), nBits, dims)))
-    val l = b.select(col("bucket"), col("id").as("id_a"), col("v").as("va"))
-    val r = b.select(col("bucket"), col("id").as("id_b"), col("v").as("vb"))
-    // each vector lives in exactly one bucket → every pair arises once
-    l.join(r, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", cosine(col("va"), col("vb")))
-      .filter(col("sim") > threshold)
-      .select(col("id_a"), col("id_b"), col("sim"))
-  }
-
-  /** Bucketed ANN top-k (sign-random-projection LSH): corpus and
-    * queries hash to `nBits`-bit buckets; exact rerank runs only
-    * inside matching buckets. One shuffle on the bucket id — the
-    * 100 TB path. Multi-probe: each query also probes the buckets at
-    * Hamming distance 1 (flip one bit), trading `nBits`× candidate
-    * volume for recall.
-    */
-  /** Brute-force MAXIMUM-INNER-PRODUCT top-k: `bruteKnn` with the
-    * inner product as the score. Inner product is the serving-time
-    * objective when embeddings encode popularity/quality in their
-    * NORM (recommender two-tower models, unnormalized retrieval
-    * heads) — cosine deliberately erases exactly that signal. Same
-    * broadcast-queries/no-corpus-shuffle shape as bruteKnn.
-    */
-  def bruteMips(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
-    val q = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("ip").desc, col("nid"))
-    c.crossJoin(broadcast(q))
-      .filter(col("nid") =!= col("qid"))
-      .withColumn("ip", dot(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("ip"))
-  }
-
-  /** Bucketed MIPS top-k via the norm-augmentation reduction to
-    * cosine LSH (Neyshabur & Srebro 2015, "simple-LSH"): corpus
-    * vectors x become unit-norm x̂ = [x/M ; √(1 − ‖x‖²/M²)] (M² = the
-    * corpus max squared norm), queries become [q ; 0] — then
-    * cos(q̂, x̂) orders exactly by q·x, so the existing SRP bucket +
-    * multi-probe + exact-rerank machinery solves MIPS unchanged in
-    * dims+1 dimensions. M² is ONE tiny agg broadcast back (never a
-    * collect); augmentation is a narrow map; one bucket-key shuffle —
-    * the same 100 TB shape as `bucketedKnn`. Rerank scores by the
-    * TRUE inner product q·x (monotone in the augmented cosine, fewer
-    * IEEE ops for the oracle to mirror).
-    */
-  def mipsKnn(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nBits: Int = 8, dims: Int = 64): DataFrame =
-    mipsKnnFromIndex(mipsIndex(corpus, idCol, vecCol, nBits, dims),
-      queries, idCol, vecCol, k, nBits, dims)
-
   /** GOVERNED artifact-served SRP index — what a serving deployment
     * materializes once per corpus version: (bucket, nbits, nid, cv)
     * with the hash width derived from the corpus count at build time
-    * (the [[chooseNBits]] arithmetic, in-plan — one 1-row agg
+    * (the `nBitsCol` arithmetic, in-plan — one 1-row agg
     * broadcast, never a collect) and degenerate home buckets above
     * `capFactor × targetOccupancy` occupants DROPPED at build (the
     * [[governedKnn]] index-side cap, baked into the artifact so
     * serving gets it for free). The width rides IN the index as the
     * constant `nbits` column (RLE-free under parquet), so a serving
     * run reads it from the artifact instead of re-counting the
-    * corpus — a fixed-width index (`srpIndex`) holds ~N/2^8 vectors
-    * per bucket and its per-query rerank grows linearly with corpus
-    * size; this one holds ≤ cap per bucket at any scale.
+    * corpus — a fixed-width index holds ~N/2^8 vectors per bucket and
+    * its per-query rerank grows linearly with corpus size; this one
+    * holds ≤ cap per bucket at any scale.
     */
   def srpIndexGoverned(corpus: DataFrame, idCol: String, vecCol: String,
       targetOccupancy: Int = 16, capFactor: Int = 8, minBits: Int = 4,
@@ -891,10 +555,10 @@ object Similarity {
     * occupied bucket). At the unnarrowed count width the cap stays
     * capFactor × targetOccupancy, the [[srpIndexGoverned]] constant.
     * The price of narrowing is honest rerank cost (occupancy-sized
-    * candidate lists), surfaced via [[mipsGeometryCensus]].
+    * candidate lists).
     * Row: (m2, n, nbits_count, reach_p2, nbits, cap).
     */
-  private def mipsWidthRow(c0: DataFrame, targetOccupancy: Int,
+  private[operators] def mipsWidthRow(c0: DataFrame, targetOccupancy: Int,
       capFactor: Int, minBits: Int, maxBits: Int, dims: Int): DataFrame = {
     // the 1-row stats frame feeds the sample filter, the final
     // width-row select AND mipsIndexGoverned's augmentation — cut the
@@ -956,26 +620,10 @@ object Similarity {
         .otherwise(lit(capFactor.toLong * targetOccupancy)))
   }
 
-  /** The MIPS serving-geometry census — [[mipsWidthRow]] surfaced the
-    * way [[governedDroppedCensus]] surfaces the occupancy cap's
-    * drops: (n, nbits_count, reach_p2, nbits, cap, narrowed). A
-    * `narrowed = true` row is the DETECTION of the pole/equator
-    * collapse the r17 round measured (norm concentration, e.g. one
-    * high-norm outlier inflating M²) — the build already adapted by
-    * narrowing, and the census prices what that costs (average
-    * occupancy ⌈n/2^nbits⌉ candidates per probed bucket at rerank).
-    */
-  def mipsGeometryCensus(corpus: DataFrame, idCol: String, vecCol: String,
-      targetOccupancy: Int = 16, capFactor: Int = 8, minBits: Int = 4,
-      maxBits: Int = 24, dims: Int = 64): DataFrame =
-    mipsWidthRow(
-      corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv")),
-      targetOccupancy, capFactor, minBits, maxBits, dims)
-      .select(col("n"), col("nbits_count"), col("reach_p2"), col("nbits"),
-        col("cap"), (col("nbits") < col("nbits_count")).as("narrowed"))
-
-  /** GOVERNED MIPS index — [[mipsIndex]] with the same build-time
-    * occupancy governance as [[srpIndexGoverned]], PLUS the measured
+  /** GOVERNED MIPS index — the norm-augmentation reduction of MIPS to
+    * cosine SRP (Neyshabur & Srebro 2015, "simple-LSH": corpus vectors
+    * become x̂ = [x/M ; √(1 − ‖x‖²/M²)], queries [q ; 0], so cos(q̂, x̂)
+    * orders exactly by q·x) with the same build-time occupancy governance as [[srpIndexGoverned]], PLUS the measured
     * pole/equator geometry rule (r18, closing the r17 `weak`): the
     * width is the count-derived one capped by the 25th-percentile
     * reachability quantile of p2, minus 1 (see
@@ -1031,67 +679,6 @@ object Similarity {
           srpBucket(concat(col("qv"), array(lit(0.0))), maxBits, dims + 1)),
       dot, "ip", k, maxBits, checkWidth, widenEmpty)
 
-  /** The corpus side of `bucketedKnn` as a standing index at a
-    * PINNED width — (bucket, nid, cv). Per-bucket occupancy is
-    * ~N/2^nBits, so per-query rerank grows linearly with corpus
-    * size; the shipped serving artifact is [[srpIndexGoverned]],
-    * whose width tracks the corpus count. This fixed form remains
-    * for callers that pin the width deliberately (the scaling bench's
-    * ungoverned comparison arm, radius-semantics probes).
-    */
-  def srpIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nBits: Int = 8, dims: Int = 64): DataFrame =
-    corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
-      .withColumn("bucket", srpBucket(col("cv"), nBits, dims))
-      .select(col("bucket"), col("nid"), col("cv"))
-
-  /** `bucketedKnn`'s query side against a PRE-BUCKETED corpus index
-    * (`srpIndex`'s shape) — the artifact-served path: the corpus
-    * never re-buckets at query time and, when the index is landed
-    * clustered on `bucket`, the probe join reads tight row groups.
-    */
-  def bucketedKnnFromIndex(index: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nBits: Int = 8,
-      multiProbe: Boolean = true, dims: Int = 64): DataFrame = {
-    val q0 = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("bucket", srpBucket(col("qv"), nBits, dims))
-    val q =
-      if (!multiProbe) q0
-      else q0.select(col("qid"), col("qv"),
-        explode(probeSet(col("bucket"), nBits)).as("bucket"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid"))
-    index.join(q, Seq("bucket"))
-      .filter(col("nid") =!= col("qid"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("sim"))
-  }
-
-  def bucketedKnn(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nBits: Int = 8, multiProbe: Boolean = true,
-      dims: Int = 64): DataFrame =
-    bucketedKnnFromIndex(srpIndex(corpus, idCol, vecCol, nBits, dims),
-      queries, idCol, vecCol, k, nBits, multiProbe, dims)
-
-  /** The corpus side of `mipsKnn` as a standing index — the
-    * norm-augmented SRP bucket plus the RAW vector for true-inner-
-    * product rerank. M² (the corpus max squared norm) is baked into
-    * the index at build time; queries bucket as [q ; 0], which needs
-    * no M², so serving never recomputes the corpus agg either.
-    * Fixed-width form — the shipped serving artifact is
-    * [[mipsIndexGoverned]].
-    */
-  def mipsIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      nBits: Int = 8, dims: Int = 64): DataFrame = {
-    val c0 = corpus.select(col(idCol).as("nid"), toDouble(col(vecCol)).as("cv"))
-    val m2 = c0.agg(max(norm2(col("cv"))).as("m2"))
-    c0.crossJoin(broadcast(m2))
-      .withColumn("bucket",
-        srpBucket(mipsAug(col("cv"), col("m2")), nBits, dims + 1))
-      .select(col("bucket"), col("nid"), col("cv"))
-  }
-
   // -----------------------------------------------------------------
   // Serving-artifact policy checks (r17 judge #6 + ADVICE): the two
   // written contracts — "validate the width at artifact load" and
@@ -1123,27 +710,6 @@ object Similarity {
     widths.headOption
   }
 
-  /** Saturation policy trigger (r16→r17's written saturation contract
-    * ENFORCED — the compactIfDue pattern): reads the
-    * [[governedDroppedCensus]] after an index build and returns the
-    * census row when `dropped_frac` crosses `maxDroppedFrac` — the
-    * signal that the corpus has outgrown `maxBits` (see
-    * [[chooseNBits]]'s saturation contract: past cap·2^maxBits the
-    * cap starts dropping NON-degenerate corpus mass) and the width
-    * ceiling must be raised, not the result trusted. None = healthy
-    * (the drop is the degenerate mass the cap exists for). A
-    * build pipeline calls [[requireNotSaturated]] where a takedown
-    * pipeline calls compactIfDue.
-    */
-  def saturatedCensus(df: DataFrame, idCol: String, vecCol: String,
-      maxDroppedFrac: Double = 0.05, targetOccupancy: Int = 16,
-      capFactor: Int = 8, minBits: Int = 4, maxBits: Int = 24,
-      dims: Int = 64): Option[org.apache.spark.sql.Row] = {
-    val row = governedDroppedCensus(df, idCol, vecCol, targetOccupancy,
-      capFactor, minBits, maxBits, dims).collect().headOption
-    row.filter(r => !r.isNullAt(4) && r.getDouble(4) > maxDroppedFrac)
-  }
-
   /** Session-conf override for [[requireIndexNotSaturated]]'s
     * dropped-mass budget — the per-deployment knob (the
     * [[ProbeBroadcastLimitKey]] discipline): default strict (the
@@ -1154,20 +720,15 @@ object Similarity {
     */
   val SaturationMaxDroppedFracKey = "spark.graft.saturationMaxDroppedFrac"
 
-  /** The saturation gate AT ARTIFACT LOAD (r19 — r18 judge #3:
-    * [[requireNotSaturated]] was spec'd machinery no shipped build
-    * path invoked): the dropped fraction computed EXACTLY from two
-    * counts — the BUILT index (whose build already dropped every
-    * over-cap bucket) against the source corpus — so the enforcement
-    * re-runs no bucketing and needs no estimator: whatever the
-    * build's occupancy cap excluded IS the saturation mass the
-    * census-based gate measures. Both counts are parquet
-    * footer-statistics jobs (the index is a materialized artifact;
-    * the corpus count pushes down), so the check is metadata-cheap at
-    * any corpus size — cheaper than the sample-governed census and
-    * exact where the sampled estimator loses power at large sample
-    * exponents. Wired into the srpg/srpmg artifact validate hooks
-    * (LlmQueries), it fires once per (process, corpus version) —
+  /** The saturation gate AT ARTIFACT LOAD: the dropped fraction
+    * computed EXACTLY from two counts — the BUILT index (whose build
+    * already dropped every over-cap bucket) against the source
+    * corpus — so the enforcement re-runs no bucketing and needs no
+    * estimator: whatever the build's occupancy cap excluded IS the
+    * saturation mass. Both counts are parquet footer-statistics jobs
+    * (the index is a materialized artifact; the corpus count pushes
+    * down), so the check is metadata-cheap at any corpus size.
+    * Wired into the srpg/srpmg artifact validate hooks (LlmQueries), it fires once per (process, corpus version) —
     * automatic, not a deployment's memory. The narrowed-MIPS cap
     * lift composes for free: a build that lifted its cap to n
     * dropped nothing and passes by construction.
@@ -1196,40 +757,5 @@ object Similarity {
         s"outgrown maxBits=$maxBits OR a template direction floods its " +
         s"bucket; raise the width ceiling (or route through per-cell " +
         s"pairing) instead of trusting the capped index")
-  }
-
-  /** [[saturatedCensus]] as a loud gate: throws with the census in
-    * the message when the dropped fraction crosses the threshold.
-    */
-  def requireNotSaturated(df: DataFrame, idCol: String, vecCol: String,
-      maxDroppedFrac: Double = 0.05, targetOccupancy: Int = 16,
-      capFactor: Int = 8, minBits: Int = 4, maxBits: Int = 24,
-      dims: Int = 64): Unit =
-    saturatedCensus(df, idCol, vecCol, maxDroppedFrac, targetOccupancy,
-      capFactor, minBits, maxBits, dims).foreach { r =>
-      throw new IllegalStateException(
-        s"SRP width governance saturated: dropped_frac=${r.getDouble(4)} " +
-          s"> $maxDroppedFrac at nbits=${r.getInt(3)} " +
-          s"(n_total=${r.getLong(0)}, n_dropped=${r.getLong(1)}, " +
-          s"buckets_dropped=${r.getLong(2)}) — the corpus has outgrown " +
-          s"maxBits=$maxBits; raise the width ceiling (or route through " +
-          s"per-cell pairing) instead of trusting the capped result")
-    }
-
-  /** `mipsKnn`'s query side against a pre-built `mipsIndex`. */
-  def mipsKnnFromIndex(index: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nBits: Int = 8, dims: Int = 64): DataFrame = {
-    val q0 = queries.select(col(idCol).as("qid"), toDouble(col(vecCol)).as("qv"))
-      .withColumn("bucket",
-        srpBucket(concat(col("qv"), array(lit(0.0))), nBits, dims + 1))
-    val q = q0.select(col("qid"), col("qv"),
-      explode(probeSet(col("bucket"), nBits)).as("bucket"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("ip").desc, col("nid"))
-    index.join(q, Seq("bucket"))
-      .filter(col("nid") =!= col("qid"))
-      .withColumn("ip", dot(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("nid"), col("ip"))
   }
 }

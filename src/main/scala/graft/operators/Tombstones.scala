@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Signed tombstones over an append-only bucketed index — the ONE
   * owner of the retraction presence discipline (the incremental
-  * families reach it through [[PostingIndex]]; IncrementalDedup
-  * directly): retracting an id appends a −1 row to `<prefix>_gone`,
+  * families reach it through [[PostingIndex]]): retracting an id appends a −1 row to `<prefix>_gone`,
   * re-admitting it appends a +1 RESURRECTION row (its index rows are
   * still physically present — ids are immutable, so same id ⇒ same
   * rows), and an id is dead iff its net sign is negative.

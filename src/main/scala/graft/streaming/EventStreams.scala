@@ -10,67 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object EventStreams {
 
-  /** Watermarked window rollup — tumbling by default, HOPPING when
-    * `slide` is set (q_sliding_window's streaming twin: each event
-    * enters its ⌈len/slide⌉ covering windows). State is bounded by
-    * the watermark: late events beyond `lateness` are dropped,
-    * windows finalize and evict — the property that keeps state
-    * O(windows in flight) instead of O(stream length) on an
-    * unbounded stream; sliding multiplies in-flight windows by
-    * len/slide, not by stream length.
-    */
-  def windowedAgg(events: DataFrame, windowLen: String = "1 hour",
-      lateness: String = "10 minutes", slide: Option[String] = None): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(slide.map(s => window(col("ts"), windowLen, s))
-        .getOrElse(window(col("ts"), windowLen)), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(round(col("value") * 100)).cast("long").as("value_cents"),
-        approx_count_distinct(col("user_id")).as("approx_users"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("value_cents"), col("approx_users"))
-
-  /** Streaming dedup on event id within the watermark horizon —
-    * exactly-once semantics for at-least-once sources, with state
-    * bounded by the watermark.
-    */
-  def dedupEvents(events: DataFrame, lateness: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream–stream interval join: each purchase pairs with the same
-    * user's clicks from the preceding 30 minutes. The time bound is
-    * what makes unbounded stream×stream feasible: with both sides
-    * watermarked, state retention is (watermark + interval) — each
-    * side buffers only rows that could still match, and older state
-    * evicts. Batch equivalence vs the RangeJoin operator is
-    * spec-checked.
-    *
-    * Inputs must carry distinct column names: purchases(user_id,
-    * p_ts, ...), clicks(c_user_id, c_ts, ...).
-    */
-  def clicksBeforePurchases(purchases: DataFrame, clicks: DataFrame,
-      lateness: String = "1 hour"): DataFrame =
-    purchases.withWatermark("p_ts", lateness)
-      .join(clicks.withWatermark("c_ts", lateness),
-        expr("""user_id = c_user_id
-               |AND c_ts >= p_ts - INTERVAL 30 MINUTES
-               |AND c_ts < p_ts""".stripMargin))
-
-  /** Stream-static enrichment join: each micro-batch joins the static
-    * dimension broadcast — NO stream state (nothing to watermark,
-    * unlike stream-stream joins) and no shuffle of the stream. The
-    * static PLAN re-executes per micro-batch; whether new DATA is
-    * visible depends on the source: catalog/Delta-style tables
-    * re-resolve, but a plain file-based DataFrame keeps its listing
-    * snapshot from creation — rebuild the dim frame (or refresh the
-    * catalog cache) to pick up new files.
-    */
-  def enrichEvents(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
   /** Per-user session aggregation with a gap timeout, via the
     * session_window built-in (state bounded by watermark + gap).
     */

@@ -2,15 +2,16 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards on the production sources under `src/main/scala`: every main
-  * and the CLI run the one engine `GraftSession.local` builds, and no
-  * production default writes into the checkout the engine was built
-  * from.
+/** Guards on the program sources: every main and the CLI run the one
+  * engine `GraftSession.local` builds, no literal path points into
+  * the checkout the engine was built from (production or spec code),
+  * and every top-level `src/main` definition is reached from a root —
+  * code only its own spec runs is deleted or moved to the tests.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
-  private lazy val sources: Seq[(String, String)] = {
-    val root = new java.io.File("src/main/scala")
+  private def scalaFiles(dir: String): Seq[(String, String)] = {
+    val root = new java.io.File(dir)
     assert(root.isDirectory, s"run from the project root (cwd ${root.getAbsolutePath})")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
@@ -19,6 +20,8 @@ class SourceGuardSpec extends AnyFunSuite {
     walk(root).map(f => f.getName ->
       new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
   }
+
+  private lazy val sources = scalaFiles("src/main/scala")
 
   test("GraftSession holds the one SparkSession builder") {
     val builders = sources.flatMap { case (name, text) =>
@@ -33,11 +36,195 @@ class SourceGuardSpec extends AnyFunSuite {
     // any literal naming this checkout
     val intoBuild = "\"/[^\"\\s]*/target/".r
     val hits = for {
-      (name, text) <- sources
+      (name, text) <- sources ++ scalaFiles("src/test/scala")
       line <- text.linesIterator
       if line.contains(checkout + "/") || intoBuild.findFirstIn(line).isDefined
     } yield name -> line.trim
     assert(hits.map(_._1) === Seq("Bench.scala", "Bench.scala"), hits.mkString("\n"))
     assert(hits.forall(_._2.contains("target/bench_detail")), hits.mkString("\n"))
+  }
+
+  // ---------------------------------------------------------------
+  // Reachability from the roots
+  // ---------------------------------------------------------------
+
+  /** `s` with line and (nested) block comments blanked — string
+    * literals kept, newlines kept. Scaladoc names modules it does not
+    * call, so a scan over raw text counts them as reached.
+    */
+  private def stripComments(s: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      if (s.startsWith("\"\"\"", i)) {
+        val e = s.indexOf("\"\"\"", i + 3)
+        var j = if (e < 0) s.length else e + 3
+        while (j < s.length && s(j) == '"') j += 1
+        out ++= s.substring(i, j); i = j
+      } else if (s(i) == '"') {
+        var j = i + 1
+        while (j < s.length && s(j) != '"' && s(j) != '\n')
+          j += (if (s(j) == '\\') 2 else 1)
+        j = math.min(j + 1, s.length)
+        out ++= s.substring(i, j); i = j
+      } else if (s(i) == '\'' && i + 2 < s.length &&
+          (s(i + 2) == '\'' || (s(i + 1) == '\\' && i + 3 < s.length && s(i + 3) == '\''))) {
+        val j = s.indexOf('\'', if (s(i + 1) == '\\') i + 3 else i + 2) + 1
+        out ++= s.substring(i, j); i = j
+      } else if (s.startsWith("//", i)) {
+        val e = s.indexOf('\n', i)
+        i = if (e < 0) s.length else e
+      } else if (s.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (j < s.length && depth > 0) {
+          if (s.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (s.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        out ++= "\n" * s.substring(i, j).count(_ == '\n'); i = j
+      } else { out += s(i); i += 1 }
+    }
+    out.result()
+  }
+
+  private val topLevel =
+    """(?m)^(?:(?:private(?:\[\w+\])?|final|sealed|abstract|implicit)\s+)*(?:case\s+)?(object|class|trait)\s+(\w+)""".r
+  private val ident = """[A-Za-z_]\w*""".r
+
+  /** A top-level definition: its kind, name, comment-stripped text
+    * (to the next top-level definition) and its whole file (imports).
+    */
+  private case class TopDef(kind: String, name: String, text: String, fileText: String)
+
+  private lazy val units: Seq[TopDef] = sources.flatMap { case (file, raw) =>
+    val text = stripComments(raw)
+    val ms = topLevel.findAllMatchIn(text).toSeq
+    ms.indices.map { k =>
+      val end = if (k + 1 < ms.size) ms(k + 1).start else text.length
+      TopDef(ms(k).group(1), ms(k).group(2), text.substring(ms(k).start, end), text)
+    }
+  }
+
+  private lazy val names: Set[String] = units.map(_.name).toSet
+
+  /** The roots: the driver contract (`SparkEntry`, `Bench`), the
+    * session extensions, every object with a `main`, and every
+    * top-level name perfbench's harness calls.
+    */
+  private lazy val roots: Set[String] = {
+    val perfbench = scalaFiles("perfbench/src").map(f => stripComments(f._2)).mkString("\n")
+    Set("SparkEntry", "Bench", "GraftExtensions", "Csv2ParquetCli") ++
+      units.filter(u => """\bdef main\s*\(""".r.findFirstIn(u.text).isDefined).map(_.name) ++
+      ident.findAllIn(perfbench).filter(names).toSet
+  }
+
+  /** Top-level names reached transitively from the roots: a
+    * definition reaches every top-level name its text mentions.
+    */
+  private lazy val reached: Set[String] = {
+    val byName = units.groupBy(_.name)
+    var seen = roots
+    var frontier = roots.toSeq
+    while (frontier.nonEmpty) {
+      val next = frontier.flatMap(byName.getOrElse(_, Nil))
+        .flatMap(u => ident.findAllIn(u.text)).filter(names).filterNot(seen).distinct
+      seen ++= next
+      frontier = next
+    }
+    seen
+  }
+
+  /** Unreached code that stays, each with its reason: `Object.def`
+    * entries name a member no root reaches (references from other
+    * entries' bodies do not count). The guard fails when an entry no
+    * longer exists or has become reached, so the list cannot rot.
+    */
+  private val allowList: Map[String, String] = {
+    val probe = "spec probe of a reached object's private state"
+    val ivf = "IVF ingest-lifecycle policy hook over the lifecycle perfbench drives"
+    val hier = "two-level IVF lifecycle, the twin of the IncrementalIvf lifecycle perfbench drives"
+    val family = "persisting ingest lifecycle (PostingIndex.admit/retract), the twin of the IncrementalPassages one perfbench drives"
+    Map(
+      "Artifacts.gc" -> "the artifact store's only reclamation path (stale stamps, race losers, orphans); run between pipeline runs, not inside an entry",
+      "Artifacts.markerScope" -> "owner-scope reader of Artifacts.gc",
+      "CentroidArtifact.learnCount" -> probe,
+      "CentroidArtifact.pqLearnCount" -> probe,
+      "CentroidArtifact.hierLearnCount" -> probe,
+      "TokenizerArtifact.learnCount" -> probe,
+      "Checkpoints.capturedPlans" -> probe,
+      "Checkpoints.clearCapturedPlans" -> probe,
+      "PostingIndex.fixtureKeys" -> probe,
+      "IncrementalIvf.needsRelearn" -> ivf,
+      "IncrementalIvf.relearnIfDrifted" -> ivf,
+      "IncrementalIvf.compactIfDue" -> ivf,
+      "IncrementalHierIvf.appendBatch" -> hier,
+      "IncrementalHierIvf.servedCells" -> hier,
+      "IncrementalHierIvf.driftCensus" -> hier,
+      "IncrementalHierIvf.needsRelearn" -> hier,
+      "IncrementalHierIvf.relearnIfDrifted" -> hier,
+      "IncrementalHierIvf.compactIfDue" -> hier,
+      "IncrementalTrigram.admitBatch" -> family,
+      "IncrementalTrigram.retractBatch" -> family,
+      "IncrementalExactSubstr.admitBatch" -> family,
+      "IncrementalExactSubstr.retractBatch" -> family,
+      "IncrementalMedia.admitBatch" -> family,
+      "IncrementalMedia.retractBatch" -> family,
+      "IncrementalMedia.crossingBuckets" -> "admit decision surface of IncrementalMedia.admitBatch",
+      "IncrementalMedia.probeBatch" -> "serving probe of the media lifecycle (IncrementalMedia.admitBatch)")
+  }
+
+  private val memberDef = """(?m)^  (?:(?:private(?:\[\w+\])?|final|override|implicit)\s+)*def\s+(\w+)\b""".r
+
+  /** Each `def name` member of `u` (two-space indent) with its body. */
+  private def members(u: TopDef): Seq[(String, String)] = {
+    val ms = memberDef.findAllMatchIn(u.text).toSeq
+    ms.map { m =>
+      val from = u.text.indexOf('\n', m.end) + 1
+      val end = """(?m)^(?:  [^\s}]|\S)""".r.findFirstMatchIn(u.text.substring(from))
+        .map(from + _.start).getOrElse(u.text.length)
+      m.group(1) -> u.text.substring(m.start, end)
+    }
+  }
+
+  test("every top-level src/main definition is reached from a root or allow-listed") {
+    val unreached = units.filterNot(u => reached(u.name) || allowList.contains(u.name))
+      .map(u => s"${u.kind} ${u.name}")
+    assert(unreached.isEmpty,
+      s"top-level definitions no root reaches (delete them with their spec, " +
+        s"move them to src/test, or allow-list them with a reason):\n" +
+        unreached.mkString("\n"))
+  }
+
+  test("every allow-list entry exists and is still unreached") {
+    val (memberEntries, topEntries) = allowList.keys.toSeq.sorted.partition(_.contains('.'))
+    val bodies = (for {
+      e <- memberEntries
+      Array(o, d) = e.split('.')
+      u <- units if u.name == o
+      (name, body) <- members(u) if name == d
+    } yield e -> body).groupMap(_._1)(_._2)
+    // reached text, minus the allow-listed members' own bodies
+    val live = units.filter(u => reached(u.name))
+      .map(u => u -> bodies.values.flatten.foldLeft(u.text)(_.replace(_, "")))
+    def used(o: String, d: String): Boolean = {
+      val qualified = ("""\b""" + o + """\s*\.\s*""" + d + """\b""").r
+      val bare = ("""\b""" + d + """\b""").r
+      val imported = ("""\b""" + o + """\s*\.\s*(_|\{[^}]*\b""" + d + """\b)""").r
+      live.exists { case (u, t) =>
+        qualified.findFirstIn(t).isDefined ||
+          ((u.name == o || imported.findFirstIn(u.fileText).isDefined) &&
+            bare.findFirstIn(t).isDefined)
+      }
+    }
+    val problems = topEntries.collect {
+      case e if !names(e) => s"$e: no such top-level definition"
+      case e if reached(e) => s"$e: reached from a root, drop it from the allow-list"
+    } ++ memberEntries.collect {
+      case e if !bodies.contains(e) => s"$e: no such member"
+      case e if used(e.split('.')(0), e.split('.')(1)) =>
+        s"$e: reached from a root, drop it from the allow-list"
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 }

@@ -13,7 +13,7 @@ trait SparkSpec extends AnyFunSuite {
   def sf0: String = "/root/testdata/sf0.001"
 
   def tmpDir(name: String): String = {
-    val d = new java.io.File(s"/root/repo/target/testtmp/$name")
+    val d = new java.io.File(new java.io.File("target", "testtmp"), name)
     d.mkdirs()
     d.getAbsolutePath
   }

@@ -64,7 +64,7 @@ class KernelPropertySpec extends SparkSpec {
     val samples = Gen.listOfN(150, textGen).sample.get.zipWithIndex
       .map { case (s, i) => (i.toLong, s) }
     val df = samples.toDF("doc_id", "text")
-    val got = graft.operators.Dedup.minhashSignatures(df, "doc_id", "text")
+    val got = graft.operators.DedupReference.minhashSignatures(df, "doc_id", "text")
       .as[(Long, Seq[Long])].collect().toMap
     samples.foreach { case (id, text) =>
       jvmSignature(text, 16) match {
@@ -87,7 +87,7 @@ class KernelPropertySpec extends SparkSpec {
     val inflated = samples.map { case (s, i) =>
       (i.toLong, "  \t" + s.replace(" ", "  ").replace("\n", " \n ") + " \n ") }
     def sigs(rows: Seq[(Long, String)]) =
-      graft.operators.Dedup.minhashSignatures(rows.toDF("doc_id", "text"),
+      graft.operators.DedupReference.minhashSignatures(rows.toDF("doc_id", "text"),
           "doc_id", "text")
         .as[(Long, Seq[Long])].collect().toMap
     assert(sigs(base) === sigs(inflated))

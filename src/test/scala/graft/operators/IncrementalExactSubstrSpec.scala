@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Incremental maximal-repeat maintenance (SURVEY §2.3
   * d24-incremental): `mergeBatch` must reproduce
@@ -131,7 +130,7 @@ class IncrementalExactSubstrSpec extends SparkSpec {
   test("admitBatch: the NEXT probe sees the batch; hot refresh excludes crossings") {
     val corpusWins = ExactSubstr.windowPositions(corpusDocs)
     IncrementalExactSubstr.buildIndexes(corpusWins, prefix = "ixs4", buckets = 4)
-    IncrementalExactSubstr.refreshHotWindows(spark, prefix = "ixs4", cap = 3)
+    IncrementalExactSubstr.Index.refreshHot(spark, "ixs4", 3)
     val oldRepeats = ExactSubstr.maximalRepeats(corpusDocs, cap = 3)
     val merged = IncrementalExactSubstr.admitBatch(spark,
       ExactSubstr.windowPositions(batchDocs), oldRepeats,
@@ -174,9 +173,9 @@ class IncrementalExactSubstrSpec extends SparkSpec {
       s"retracted ${rows(merged)} != full recompute ${rows(full)}")
     assert(rows(merged) === Set((1L, 2L, 1L, 1L, 30L)))
     // the live indexes no longer serve the batch docs
-    assert(IncrementalExactSubstr.liveWpos(spark, "ixr1")
+    assert(IncrementalExactSubstr.Index.live(spark, "ixr1")
       .filter($"doc_id".isin(10L, 11L, 12L, 13L)).isEmpty)
-    assert(IncrementalExactSubstr.liveWdoc(spark, "ixr1")
+    assert(IncrementalExactSubstr.Index.live(spark, "ixr1", "wdoc")
       .filter($"doc_id".isin(10L, 11L, 12L, 13L)).isEmpty)
   }
 
@@ -276,7 +275,7 @@ class IncrementalExactSubstrSpec extends SparkSpec {
     // exactly the lagging table and leaves the other untouched
     graft.sources.Bucketing.writeBucketed(
       corpusWins.select($"doc_id", $"pos", $"h"), "ixs6_wdoc", "doc_id", 4)
-    IncrementalExactSubstr.appendToIndexes(batchWins, prefix = "ixs6")
+    IncrementalExactSubstr.Index.append(batchWins.select($"doc_id", $"pos", $"h"), "ixs6")
     assert(spark.table("ixs6_wpos").count() === wposN &&
       spark.table("ixs6_wdoc").count() === wdocN,
       "the retry must heal the lagging table without double-appending the other")

@@ -253,7 +253,7 @@ class IncrementalMediaSpec extends SparkSpec {
           maxHamming = 3, maxBucket = 3), "id_a", "id_b")
         .as[(Long, Long)].collect().toSet)
     // the live index no longer serves the batch assets
-    assert(IncrementalMedia.liveBand(spark, "imedr1")
+    assert(IncrementalMedia.index("media_id").live(spark, "imedr1")
       .filter($"media_id".isin(10L, 11L, 12L, 13L, 14L)).isEmpty)
   }
 

@@ -147,7 +147,7 @@ class IncrementalPassagesSpec extends SparkSpec {
     val corpusWins = IncrementalPassages.windowHashes(corpusDocs)
     val batchWins = IncrementalPassages.windowHashes(batchDocs)
     IncrementalPassages.buildWindowIndex(corpusWins, prefix = "ippt3", buckets = 4)
-    IncrementalPassages.appendToIndex(batchWins, prefix = "ippt3")
+    IncrementalPassages.Index.append(batchWins.select($"doc_id", $"h"), "ippt3")
     val fromTable = IncrementalPassages.pairsFromWindows(
         spark.table("ippt3_win"), cap = 3)
       .as[(Long, Long, Long)].collect().toSet
@@ -177,7 +177,7 @@ class IncrementalPassagesSpec extends SparkSpec {
     assert(merged === Set((1L, 2L, 8L), (1L, 3L, 3L), (2L, 3L, 3L), (3L, 4L, 3L)))
     // the live index no longer serves the batch docs; the refreshed
     // hot table reflects the un-crossing (B no longer hot)
-    assert(IncrementalPassages.liveWin(spark, "ippr1")
+    assert(IncrementalPassages.Index.live(spark, "ippr1")
       .filter(col("doc_id").isin(10L, 11L)).isEmpty)
     assert(spark.table("ippr1_hot").isEmpty)
   }

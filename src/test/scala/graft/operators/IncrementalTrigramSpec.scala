@@ -37,7 +37,7 @@ class IncrementalTrigramSpec extends SparkSpec {
     (10L, s"$Q ${toks("fg", 3)} $B"),
     (11L, s"$R ${toks("fh", 3)}")).toDF("doc_id", "text")
 
-  private def panel = StreamingTrigramFixtures.panelOf(panelDocs)
+  private def panel = PipelineQueries.trigramRows(panelDocs).withColumnRenamed("doc_id", "bench_id")
   private def tris(d: org.apache.spark.sql.DataFrame) =
     PipelineQueries.trigramRows(d)
 
@@ -70,7 +70,7 @@ class IncrementalTrigramSpec extends SparkSpec {
 
   test("admitBatch: the streaming gate's maintained hot set covers the crossing; admits compose") {
     IncrementalTrigram.buildIndex(tris(trainDocs), panel, prefix = "itr2", buckets = 4)
-    IncrementalTrigram.refreshHotTrigrams(spark, prefix = "itr2", cap = 3)
+    IncrementalTrigram.Index.refreshHot(spark, "itr2", 3)
     val oldPairs = PipelineQueries.pairsFromTrigramRows(
       tris(trainDocs), panel, maxDf = 3, minShared = 1)
     val merged = IncrementalTrigram.admitBatch(spark, tris(batchDocs), oldPairs,
@@ -169,7 +169,7 @@ class IncrementalTrigramSpec extends SparkSpec {
     assert(pairs(merged) === pairs(full))
     assert(pairs(merged) === oldExpected)
     // the live index no longer serves the batch docs
-    assert(IncrementalTrigram.liveTri(spark, "itr7")
+    assert(IncrementalTrigram.Index.live(spark, "itr7")
       .filter($"doc_id".isin(10L, 11L)).isEmpty)
     // the refreshed hot table reflects the un-crossing (B no longer hot)
     assert(spark.table("itr7_hot").isEmpty)
@@ -214,7 +214,7 @@ class IncrementalTrigramSpec extends SparkSpec {
     assert(pairs(readmitted) === mergedExpected, "re-admit after retract ≡ first admit")
     assert(spark.table("itr9_tri").count() === physN,
       "resurrection must not duplicate physical index rows")
-    assert(IncrementalTrigram.liveTri(spark, "itr9")
+    assert(IncrementalTrigram.Index.live(spark, "itr9")
       .filter($"doc_id" === 10L).count() > 0, "re-admitted doc is live again")
   }
 
@@ -264,12 +264,4 @@ class IncrementalTrigramSpec extends SparkSpec {
     assert(pairs(merged) === pairs(full))
     assert(pairs(merged).nonEmpty)
   }
-}
-
-/** The panel builder shared with the streaming gate — one kernel,
-  * one rename.
-  */
-private object StreamingTrigramFixtures {
-  def panelOf(bench: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    graft.streaming.StreamingTrigram.panelIndex(bench)
 }

@@ -3,11 +3,10 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The lifecycle core — and the d10 dedup and dfstats families, which
-  * append their own rows — read every append / compact bucket count
-  * from the index's catalog bucket spec: an index built with a
-  * non-default count keeps it through admit, retract and compact, and
-  * the bucket-key census stays exchange-free.
+/** The lifecycle core reads every append / compact bucket count from
+  * the index's catalog bucket spec, for every posting family: an index
+  * built with a non-default count keeps it through admit, retract and
+  * compact, and the bucket-key census stays exchange-free.
   */
 class PostingIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -65,32 +64,47 @@ class PostingIndexSpec extends SparkSpec {
       assert(numBuckets(t) === PostingIndex.HotBuckets))
   }
 
-  test("d10 dedup and dfstats indexes keep 4 buckets through admit, retract and compact") {
+  test("trigram and exact-substr indexes keep 4 buckets through admit, retract and compact") {
     val corpus = Seq((1L, toks("m", 12)), (2L, toks("n", 12))).toDF("doc_id", "text")
     val batch = Seq((10L, toks("q", 12))).toDF("doc_id", "text")
+    val gone = corpus.filter($"doc_id" === 1L)
 
-    val d = "pidx_dedup"
-    IncrementalDedup.buildIndexes(corpus, buckets = 4, prefix = d)
-    val verdicts = IncrementalDedup.probeBatch(spark, corpus, batch, prefix = d)
-    IncrementalDedup.admitBatch(spark, batch, verdicts, prefix = d)
-    IncrementalDedup.retractBatch(spark, Seq(1L).toDF("doc_id"), prefix = d)
-    IncrementalDedup.compact(spark, d)
+    val t = "pidx_tri"
+    val panel = PipelineQueries.trigramRows(Seq((100L, toks("q", 12))).toDF("doc_id", "text"))
+      .withColumnRenamed("doc_id", "bench_id")
+    IncrementalTrigram.buildIndex(PipelineQueries.trigramRows(corpus), panel,
+      prefix = t, buckets = 4)
+    val tPairs = PipelineQueries.pairsFromTrigramRows(PipelineQueries.trigramRows(corpus),
+      panel, maxDf = 3, minShared = 1)
+    val tAdmitted = IncrementalTrigram.admitBatch(spark, PipelineQueries.trigramRows(batch),
+      tPairs, prefix = t, cap = 3, minShared = 1)
+    IncrementalTrigram.retractBatch(spark, PipelineQueries.trigramRows(gone), tAdmitted,
+      prefix = t, cap = 3, minShared = 1)
+    IncrementalTrigram.compact(spark, t)
 
-    val s = "pidx_dfstats"
-    IncrementalDfStats.buildIndex(corpus, prefix = s, buckets = 4)
-    IncrementalDfStats.admitBatch(spark, batch, prefix = s)
-    IncrementalDfStats.retractBatch(spark, batch, prefix = s)
-    IncrementalDfStats.compact(spark, s)
+    val x = "pidx_substr"
+    def tk(d: org.apache.spark.sql.DataFrame) =
+      d.select($"doc_id", graft.functions.TextFunctions.wsTokens($"text").as("tk"))
+    def wins(d: org.apache.spark.sql.DataFrame) = ExactSubstr.windowPositions(tk(d))
+    IncrementalExactSubstr.buildIndexes(wins(corpus), prefix = x, buckets = 4)
+    val xAdmitted = IncrementalExactSubstr.admitBatch(spark, wins(batch),
+      ExactSubstr.maximalRepeats(tk(corpus), cap = 3),
+      prefix = x, cap = 3)
+    IncrementalExactSubstr.retractBatch(spark, wins(gone), xAdmitted, prefix = x, cap = 3)
+    IncrementalExactSubstr.compact(spark, x)
 
-    assert(!spark.catalog.tableExists(s"${d}_gone"), "compact truncates the history")
-    assert(spark.table(s"${d}_fp").filter($"id_b" === 1L).isEmpty)
-    assert(!spark.table(s"${d}_fp").filter($"id_b" === 10L).isEmpty)
-    assert(IncrementalDfStats.dfStats(spark, s).filter($"term" === "q1").isEmpty)
-    assert(IncrementalDfStats.totals(spark, s).as[(Long, Long)].head() === ((2L, 24L)))
-    Seq(s"${d}_fp" -> "fp", s"${d}_bands" -> "bkey", s"${s}_df" -> "term",
-        s"${s}_docs" -> "doc_id").foreach { case (t, k) =>
-      assert(numBuckets(t) === 4, s"$t must keep its build-time bucket count")
-      assertCensusExchangeFree(t, k)
+    Seq(t, x).foreach(p =>
+      assert(!spark.catalog.tableExists(s"${p}_gone"), "compact truncates the history"))
+    assert(spark.table(s"${t}_tri").filter($"doc_id" === 1L).isEmpty)
+    assert(!spark.table(s"${t}_tri").filter($"doc_id" === 10L).isEmpty)
+    assert(spark.table(s"${x}_wdoc").filter($"doc_id" === 1L).isEmpty)
+    assert(!spark.table(s"${x}_wdoc").filter($"doc_id" === 10L).isEmpty)
+    Seq(s"${t}_tri" -> "h", s"${t}_panel" -> "h", s"${x}_wpos" -> "h",
+        s"${x}_wdoc" -> "doc_id").foreach { case (tb, k) =>
+      assert(numBuckets(tb) === 4, s"$tb must keep its build-time bucket count")
+      assertCensusExchangeFree(tb, k)
     }
+    Seq(s"${t}_hot", s"${x}_hot").foreach(tb =>
+      assert(numBuckets(tb) === PostingIndex.HotBuckets))
   }
 }

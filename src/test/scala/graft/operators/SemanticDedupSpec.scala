@@ -57,8 +57,8 @@ class SemanticDedupSpec extends SparkSpec {
     val viaLiteral = vecs
       .withColumn("cid", IvfIndex.nearestCid(col("v"), cents))
       .select($"vec_id", $"cid").as[(Long, Int)].collect().toMap
-    val viaJoin = IvfIndex.assignCells(vecs, "vec_id", "v", cents)
-      .select($"vec_id", $"cid").as[(Long, Int)].collect().toMap
+    val viaJoin = vecs
+      .select($"vec_id", graft.functions.NearestCell(col("v"), cents).as("cid")).as[(Long, Int)].collect().toMap
     assert(viaJoin === viaLiteral)
     // and the whole census still runs on the join path (k = 1200/4 = 300)
     val out = SemanticDedup.census(df, "vec_id", "embedding",

@@ -8,6 +8,14 @@ class SimilaritySpec extends SparkSpec {
 
   private def emb = graft.GraftSession.table(spark, sf0, "embeddings")
 
+  // the governed SRP/MIPS kernels pinned to an 8-bit width
+  // (minBits = maxBits = 8): the fixed 8-bit bucketing and Hamming-1
+  // probes, plus the occupancy cap
+  private def mipsAt8Bits(q: org.apache.spark.sql.DataFrame) =
+    Similarity.governedMipsFromIndex(
+      Similarity.mipsIndexGoverned(emb, "vec_id", "embedding", minBits = 8, maxBits = 8),
+      q, "vec_id", "embedding", 5, maxBits = 8, widenEmpty = false)
+
   test("brute-force knn: ranks are 1..k, no self matches, sims descend") {
     val res = Similarity.bruteKnn(emb, emb.filter($"vec_id" < 4), "vec_id", "embedding", 5)
       .as[(Long, Int, Long, Double)].collect()
@@ -29,7 +37,7 @@ class SimilaritySpec extends SparkSpec {
     val top = Similarity.bruteKnn(df, df, "vec_id", "embedding", 1)
       .select($"qid", $"nid").as[(Long, Long)].collect().toMap
     assert(top(1L) === 2L && top(2L) === 1L)
-    val pairs = Similarity.cosinePairs(df, "vec_id", "embedding", 0.99)
+    val pairs = SimilarityReference.cosinePairs(df, "vec_id", "embedding", 0.99)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(pairs === Set((1L, 2L)))
   }
@@ -44,8 +52,8 @@ class SimilaritySpec extends SparkSpec {
       (id + 10000L, v.zipWithIndex.map { case (x, i) =>
         x + (if (i % 7 == 0) 0.02f else -0.01f) })
     }.toSeq.toDF("vec_id", "embedding")
-    val hits = Similarity.bucketedKnn(emb, queries, "vec_id", "embedding",
-        k = 1, nBits = 8)
+    val hits = Similarity.governedKnn(emb, queries, "vec_id", "embedding",
+        k = 1, minBits = 8, maxBits = 8)
       .select($"qid", $"nid").as[(Long, Long)].collect()
       .count { case (qid, nid) => nid == qid - 10000L }
     assert(hits >= 20, s"only $hits/25 planted neighbors found")
@@ -180,8 +188,8 @@ class SimilaritySpec extends SparkSpec {
     def hits(res: org.apache.spark.sql.DataFrame): Int =
       res.select($"qid", $"nid").as[(Long, Long)].collect()
         .count { case (qid, nid) => nid == qid - 10000L }
-    val srpHits = hits(Similarity.bucketedKnn(emb, queries, "vec_id", "embedding",
-      k = 1, nBits = 8))
+    val srpHits = hits(Similarity.governedKnn(emb, queries, "vec_id", "embedding",
+      k = 1, minBits = 8, maxBits = 8))
     val cents = IvfIndex.learnCentroids(emb, "vec_id", "embedding",
       k = 16, iters = 2, dims = 64)
     val ivfHits = hits(IvfIndex.ivfKnn(emb, queries, "vec_id", "embedding",
@@ -214,12 +222,13 @@ class SimilaritySpec extends SparkSpec {
     val dup = base.filter($"vec_id" < 10)
       .select(($"vec_id" + 50000L).as("vec_id"), $"embedding")
     val corpus = base.unionByName(dup)
-    val found = Similarity.bucketedCosinePairs(corpus, "vec_id", "embedding", 0.99)
+    val found = Similarity.governedCosinePairs(corpus, "vec_id", "embedding", 0.99,
+        multiProbe = false, minBits = 8, maxBits = 8)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     // an identical vector shares every projection sign with its source
     (0L until 10L).foreach(i => assert(found.contains((i, i + 50000L)),
       s"planted duplicate $i not found"))
-    val exact = Similarity.cosinePairs(corpus, "vec_id", "embedding", 0.99)
+    val exact = SimilarityReference.cosinePairs(corpus, "vec_id", "embedding", 0.99)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(found.subsetOf(exact), "bucketed pairs must verify exactly")
   }
@@ -327,8 +336,8 @@ class SimilaritySpec extends SparkSpec {
     val clones = src.take(5).map { case (id, v, l) =>
       (id + 50000L, v.map(_ + 0.001f), l) }
     val corpus = (src ++ clones).toSeq.toDF("vec_id", "embedding", "label")
-    val graph = Similarity.bucketedKnn(corpus, corpus, "vec_id", "embedding",
-        k = 3, nBits = 8)
+    val graph = Similarity.governedKnn(corpus, corpus, "vec_id", "embedding",
+        k = 3, minBits = 8, maxBits = 8)
       .select($"qid", $"rank".cast("long"), $"nid").as[(Long, Long, Long)].collect()
     val top1 = graph.filter(_._2 == 1L).map(g => g._1 -> g._3).toMap
     (0 until 5).foreach { i =>
@@ -351,16 +360,16 @@ class SimilaritySpec extends SparkSpec {
     val corpus = Seq((1L, scaled(1f)), (2L, scaled(2f)), (3L, scaled(3f)))
       .toDF("vec_id", "embedding")
     val query = Seq((99L, scaled(1f))).toDF("vec_id", "embedding")
-    val order = Similarity.bruteMips(corpus, query, "vec_id", "embedding", 3)
+    val order = SimilarityReference.bruteMips(corpus, query, "vec_id", "embedding", 3)
       .orderBy($"rank").select($"nid").as[Long].collect()
     assert(order.toSeq === Seq(3L, 2L, 1L), "MIPS must rank by descending norm")
   }
 
   test("bucketed MIPS recall vs brute MIPS on the real corpus") {
     val q = emb.filter($"vec_id" < 16)
-    val truth = Similarity.bruteMips(emb, q, "vec_id", "embedding", 5)
+    val truth = SimilarityReference.bruteMips(emb, q, "vec_id", "embedding", 5)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
-    val approx = Similarity.mipsKnn(emb, q, "vec_id", "embedding", 5)
+    val approx = mipsAt8Bits(q)
       .select($"qid", $"nid").as[(Long, Long)].collect().toSet
     val hits = truth.intersect(approx).size
     // same recall regime as the 8-bit SRP cosine index (s9 measures
@@ -369,7 +378,7 @@ class SimilaritySpec extends SparkSpec {
     // not a tuned index
     assert(hits >= 8, s"only $hits/80 true MIPS neighbors retrieved")
     // and every approximate rank list is well-formed
-    val ranks = Similarity.mipsKnn(emb, q, "vec_id", "embedding", 5)
+    val ranks = mipsAt8Bits(q)
       .groupBy($"qid").agg(max($"rank").as("mx"), count(lit(1)).as("n"))
       .as[(Long, Int, Long)].collect()
     ranks.foreach { case (_, mx, n) => assert(mx.toLong === n) }

@@ -18,7 +18,7 @@ class ArrowSchemaJsonSpec extends AnyFunSuite {
         |  ],
         |  "metadata": {}
         |}""".stripMargin
-    val s = ArrowSchemaJson.parseToSpark(json)
+    val s = ArrowSchemaJson.parse(json).toSpark
     assert(s === StructType(Seq(
       StructField("col1", StringType, nullable = false),
       StructField(" col2", StringType, nullable = false))))
@@ -32,7 +32,7 @@ class ArrowSchemaJsonSpec extends AnyFunSuite {
         |  {"name": "d", "data_type": {"Decimal128": [20, 4]}, "nullable": false},
         |  {"name": "xs", "data_type": {"List": {"name": "item", "data_type": "Float32", "nullable": true}}, "nullable": true}
         |]}""".stripMargin
-    val s = ArrowSchemaJson.parseToSpark(json)
+    val s = ArrowSchemaJson.parse(json).toSpark
     assert(s("ts").dataType === TimestampNTZType)
     assert(s("tsz").dataType === TimestampType)
     assert(s("d").dataType === DecimalType(20, 4))
@@ -51,14 +51,6 @@ class ArrowSchemaJsonSpec extends AnyFunSuite {
     assert(json.contains("\"dict_is_ordered\""))
     assert(json.contains("\"metadata\""))
     assert(ArrowSchemaJson.parse(json) === schema)
-  }
-
-  test("spark schema renders to arrow vocabulary") {
-    val json = ArrowSchemaJson.renderSpark(StructType(Seq(
-      StructField("s", StringType), StructField("i", LongType),
-      StructField("f", DoubleType), StructField("day", DateType))))
-    assert(json.contains("\"Utf8\"") && json.contains("\"Int64\"") &&
-      json.contains("\"Float64\"") && json.contains("\"Date32\""))
   }
 
   test("unknown type is rejected") {

@@ -31,12 +31,6 @@ class EventStreamsSpec extends SparkSpec {
     spark.readStream.schema(schema).parquet(streamDir)
   }
 
-  private def runToMemory(df: DataFrame, name: String, mode: String): DataFrame = {
-    val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try { q.processAllAvailable() } finally q.stop()
-    spark.table(name)
-  }
-
   /** Append-mode window aggs only emit windows the watermark has
     * closed, so after draining the real data we feed one sentinel
     * event far in the future; every real window finalizes and is
@@ -54,74 +48,6 @@ class EventStreamsSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     spark.table(name)
-  }
-
-  test("streaming windowed agg matches batch computation") {
-    val dir = stageStream("win")
-    val streamed = runWithFlush(
-      EventStreams.windowedAgg(streamEvents(dir)), "win_agg", dir)
-      .filter($"event_type" =!= "flush")
-    val batch = EventStreams.windowedAgg(batchEvents)
-    val s = streamed.orderBy("window_start", "event_type")
-      .as[(java.sql.Timestamp, String, Long, Long, Long)].collect()
-    val b = batch.orderBy("window_start", "event_type")
-      .as[(java.sql.Timestamp, String, Long, Long, Long)].collect()
-    assert(s.nonEmpty)
-    assert(s.toSeq === b.toSeq)
-  }
-
-  test("streaming sliding-window agg matches batch computation") {
-    val dir = stageStream("slide")
-    val streamed = runWithFlush(
-      EventStreams.windowedAgg(streamEvents(dir), slide = Some("15 minutes")),
-      "slide_agg", dir)
-      .filter($"event_type" =!= "flush")
-    val batch = EventStreams.windowedAgg(batchEvents, slide = Some("15 minutes"))
-    val s = streamed.orderBy("window_start", "event_type")
-      .as[(java.sql.Timestamp, String, Long, Long, Long)].collect()
-    val b = batch.orderBy("window_start", "event_type")
-      .as[(java.sql.Timestamp, String, Long, Long, Long)].collect()
-    assert(s.nonEmpty)
-    assert(s.toSeq === b.toSeq)
-    // hopping expansion: 4x the event mass of the tumbling rollup
-    val evN = batchEvents.count()
-    assert(b.map(_._3).sum === 4 * evN)
-  }
-
-  test("streaming dedup drops replayed event ids") {
-    val dir = stageStream("dedup")
-    val ev = streamEvents(dir)
-    val doubled = ev.union(ev) // replay everything twice
-    val deduped = runToMemory(
-      EventStreams.dedupEvents(doubled), "dedup", "append")
-    assert(deduped.count() === batchEvents.count())
-    assert(deduped.groupBy("event_id").count().filter($"count" > 1).count() === 0)
-  }
-
-  test("stream-stream interval join matches the batch range join") {
-    import org.apache.spark.sql.functions.col
-    val dir = stageStream("ssjoin")
-    def split(df: DataFrame) = (
-      df.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts").as("p_ts")),
-      df.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user_id"), col("ts").as("c_ts")))
-    val (sp, sc) = split(streamEvents(dir))
-    val streamed = runToMemory(
-      EventStreams.clicksBeforePurchases(sp, sc), "ssjoin", "append")
-    val (bp, bc) = split(batchEvents)
-    val batchPairs = graft.operators.RangeJoin.trailingWindowJoin(
-      bp, bc.withColumnRenamed("c_user_id", "user_id"), "user_id",
-      "p_ts", "c_ts", windowSec = 1800L)
-    assert(streamed.count() > 0)
-    assert(streamed.count() === batchPairs.count())
-    // content, not just cardinality: the (event_id, c_ts) pair sets
-    // must match in both directions (a join pairing the wrong clicks
-    // with the right counts would otherwise pass)
-    val sPairs = streamed.select(col("event_id"), col("c_ts"))
-    val bPairs = batchPairs.select(col("event_id"), col("c_ts"))
-    assert(sPairs.except(bPairs).count() === 0)
-    assert(bPairs.except(sPairs).count() === 0)
   }
 
   test("stateful running user stats: streaming updates converge to batch fold") {
@@ -189,70 +115,6 @@ class EventStreamsSpec extends SparkSpec {
     val u2 = spark.table("ustats_evict").filter($"user_id" === 2L)
       .agg(max($"n_events")).head().getLong(0)
     assert(u2 === 2L, "in-horizon cross-trigger state must still carry")
-  }
-
-  test("exactly-once sink: crash-replay of a batch leaves the output unchanged") {
-    val dir = stageStream("eos")
-    val stamp = System.nanoTime()
-    val out = tmpDir(s"eos_out_$stamp")
-    val chk = tmpDir(s"eos_chk_$stamp")
-    val ev = streamEvents(dir).select(col("event_id"), col("user_id"), col("value"))
-    val q = ExactlyOnceSink.start(ev, out, chk)
-    try q.processAllAvailable() finally q.stop()
-    val table = spark.read.parquet(out)
-    assert(table.count() === batchEvents.count())
-    val before = table.orderBy("event_id")
-      .select("event_id", "user_id", "value").collect().toSeq
-    // crash-replay: re-deliver batch 0's rows with the SAME batchId
-    // (foreachBatch's at-least-once contract). Materialize first —
-    // overwrite deletes the directory being read otherwise.
-    val batchDir = s"$out/batch_id=0"
-    val replayRows = spark.read.parquet(batchDir).collect().toIndexedSeq
-    val replayDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(replayRows),
-      spark.read.parquet(batchDir).schema)
-    ExactlyOnceSink.writeBatch(out)(replayDf, 0L)
-    val after = spark.read.parquet(out)
-    assert(after.count() === batchEvents.count(), "replay must not double-count")
-    assert(after.orderBy("event_id").select("event_id", "user_id", "value")
-      .collect().toSeq === before, "replay must leave contents unchanged")
-  }
-
-  test("stream-static enrichment matches the batch broadcast join") {
-    val dir = stageStream("enrich")
-    val dim = batchEvents.select($"user_id").distinct()
-      .withColumn("cohort", ($"user_id" % 7).cast("long"))
-    val streamed = runToMemory(
-      EventStreams.enrichEvents(streamEvents(dir), dim, "user_id"), "enrich", "append")
-    val batch = EventStreams.enrichEvents(batchEvents, dim, "user_id")
-    assert(streamed.count() === batch.count())
-    val s = streamed.select($"event_id", $"cohort")
-    val b = batch.select($"event_id", $"cohort")
-    assert(s.except(b).count() === 0 && b.except(s).count() === 0)
-  }
-
-  test("exactly-once sink: checkpoint restart processes only new data") {
-    val dir = stageStream("eos_restart")
-    val stamp = System.nanoTime()
-    val out = tmpDir(s"eos_r_out_$stamp")
-    val chk = tmpDir(s"eos_r_chk_$stamp")
-    def run(): Unit = {
-      val ev = streamEvents(dir).select(col("event_id"), col("user_id"), col("value"))
-      val q = ExactlyOnceSink.start(ev, out, chk)
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()
-    val n1 = spark.read.parquet(out).count()
-    assert(n1 === batchEvents.count())
-    // new data lands while the query is DOWN; restart from checkpoint
-    Seq((-7L, 1L, -7L, "late", 1.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("append").parquet(dir)
-    run()
-    val after = spark.read.parquet(out)
-    assert(after.count() === n1 + 1, "restart must process exactly the new rows")
-    assert(after.groupBy("event_id").count().filter($"count" > 1).count() === 0,
-      "no event reprocessed after checkpoint recovery")
   }
 
   test("sessionization produces bounded per-user sessions") {
