@@ -214,13 +214,11 @@ object Bench {
     val detailJson = t.detailJson
     System.err.println(detailJson)
     for (path <- Seq(
-        "/root/repo/target/bench_detail.json",
-        // additions-only copy keyed on the core count (r20, VERDICT r19
-        // item 10): the driver's low-core companion run overwrote
-        // bench_detail.json, leaving the judge only 21 of 164 entries to
-        // diff; a per-cpus path preserves both runs' full detail. The
-        // one-line stdout contract and bench_detail.json stay as-is.
-        s"/root/repo/target/bench_detail_c$cpus.json"))
+        "target/bench_detail.json",
+        // a copy keyed on the core count: a low-core run after a full
+        // one overwrites bench_detail.json, and the per-cpus path keeps
+        // both runs' detail
+        s"target/bench_detail_c$cpus.json"))
       try java.nio.file.Files.write(java.nio.file.Paths.get(path), detailJson.getBytes("UTF-8"))
       catch {
         case scala.util.control.NonFatal(e) =>

@@ -288,8 +288,20 @@ object Dedup {
     agg.select(col(idCol), concat_ws("", hexChars: _*).as("phash"))
   }
 
+  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming.
+    * Banding: 4 hex chars per band (16 bits); a pair within Hamming 3
+    * of 64 bits must agree on ≥1 of 4 bands (pigeonhole), so the
+    * shuffle key is (band, 4-hex-chunk) — again no O(n²).
+    */
+  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
+      maxHamming: Int = 3, weighted: Boolean = false): DataFrame = {
+    val sh = if (weighted) simhashWeighted(df, idCol, textCol)
+      else simhash(df, idCol, textCol)
+    hexHashPairs(sh, idCol, "simhash", maxHamming)
+  }
+
   /** Banded Hamming pairing over an EXISTING 16-hex-char hash column —
-    * the shared kernel behind the simhash entries (text) and m5's perceptual-
+    * the shared kernel behind simhashPairs (text) and m5's perceptual-
     * hash media dedup: 4 bands of 16 bits each form the shuffle key,
     * and by pigeonhole any pair within Hamming 3 of 64 bits agrees on
     * ≥1 band, with no O(n²) stage.
@@ -301,8 +313,9 @@ object Dedup {
     * missed — at corpus scale the degenerate all-zero-hash bucket
     * (trivial/short assets) is the realistic case. That is the
     * deliberate trade (an uncapped degenerate bucket is quadratic);
-    * the excluded assets are the ones to route through exact d1-style
-    * hashing instead.
+    * callers who need to see what was excluded get the census from
+    * `oversizedHashBuckets` — same inputs, tiny output — and can
+    * route those assets through exact d1-style hashing instead.
     */
   def hexHashPairs(hashed: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
@@ -331,7 +344,8 @@ object Dedup {
     // broadcast anti-join (no window, no sort). The m5 oracle
     // replays the cap; at test SFs no bucket comes near it. The cap
     // WEAKENS the pigeonhole recall guarantee for pairs inside the
-    // dropped buckets — see the Scaladoc contract above.
+    // dropped buckets — see the Scaladoc contract above and
+    // `oversizedHashBuckets` for the census of what was excluded.
     val oversized = oversizedFrom(banded0, maxBucket)
       .select(col("band"), col("chunk"))
     val banded = banded0.join(broadcast(oversized),
@@ -354,6 +368,36 @@ object Dedup {
   // and the loop back from d17's measured calibration curve.
   // ---------------------------------------------------------------
 
+  /** The Jaccard threshold an LSH banding implicitly selects for: the
+    * candidate probability S-curve 1 − (1 − s^r)^b has its steepest
+    * rise at s* ≈ (1/b)^(1/r) (the standard MMDS approximation of the
+    * 50% crossover). Pairs well above s* are almost always candidates,
+    * pairs well below almost never — so choosing (b, r) IS choosing a
+    * dedup threshold, and at 10⁹+ docs the right point moves (more
+    * rows per band → higher s* → fewer false-positive candidates from
+    * sheer corpus size).
+    */
+  def lshOperatingPoint(bands: Int, rowsPerBand: Int): Double = {
+    require(bands > 0 && rowsPerBand > 0)
+    math.pow(1.0 / bands, 1.0 / rowsPerBand)
+  }
+
+  /** Pick the (bands, rowsPerBand) factorization of a signature width
+    * whose operating point lands closest to `targetJaccard` —
+    * deterministic (ties resolve to more bands = recall-first). This
+    * is how a pipeline retunes its index for corpus growth without
+    * changing the signature kernel: same `numHashes` minhashes, new
+    * banding, new effective threshold.
+    */
+  def chooseBanding(numHashes: Int, targetJaccard: Double): (Int, Int) = {
+    require(numHashes > 0 && targetJaccard > 0.0 && targetJaccard < 1.0)
+    val options = (1 to numHashes).filter(numHashes % _ == 0)
+      .map(b => (b, numHashes / b))
+    options.minBy { case (b, r) =>
+      (math.abs(lshOperatingPoint(b, r) - targetJaccard), -b)
+    }
+  }
+
   /** A fully resolved LSH operating point: the banding, its implied
     * Jaccard threshold, and — when a d17-style calibration curve is
     * supplied — the MEASURED mean absolute estimator error (micro
@@ -364,6 +408,26 @@ object Dedup {
     */
   final case class LshOperatingPoint(bands: Int, rowsPerBand: Int,
       threshold: Double, measuredAbsErrMicro: Option[Long])
+
+  /** Close the loop from d17's calibration: choose the banding for
+    * `targetJaccard` and annotate it with the measured estimator
+    * error at that threshold's decile from `calibrationCurve` —
+    * d17's output shape (bucket = Jaccard decile 0-10, n_pairs,
+    * mean_abs_err_micro). The curve is ≤ 11 rows by construction
+    * (one per decile), so the collect is a bounded-artifact read,
+    * never a corpus action.
+    */
+  def calibratedOperatingPoint(calibrationCurve: DataFrame,
+      numHashes: Int, targetJaccard: Double): LshOperatingPoint = {
+    val (b, r) = chooseBanding(numHashes, targetJaccard)
+    val s = lshOperatingPoint(b, r)
+    val decile = math.min(10, (s * 10).toInt)
+    val err = calibrationCurve
+      .filter(col("bucket") === decile)
+      .select(col("mean_abs_err_micro").cast("long"))
+      .collect().headOption.map(_.getLong(0))
+    LshOperatingPoint(b, r, s, err)
+  }
 
   /** (band, chunk) rows per asset — one of the 4 16-bit band ints as
     * the chunk key, shared by the pairing join and the census.
@@ -389,4 +453,19 @@ object Dedup {
     banded.groupBy(col("band"), col("chunk"))
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > maxBucket)
+
+  /** The buckets `hexHashPairs` DROPS under the same `maxBucket` cap —
+    * the visibility half of the skew guard's recall trade: each row is
+    * a (band, chunk) whose `bucket_n` members were excluded from
+    * pairing. Run it as a monitoring query next to the pairing job; a
+    * non-empty census means Hamming recall is no longer exact for
+    * pairs confined to these buckets (route those assets through
+    * exact fingerprint dedup instead). Same tiny partial-agg shape as
+    * the in-plan cap; output is bounded by the number of pathological
+    * buckets, not the corpus.
+    */
+  def oversizedHashBuckets(hashed: DataFrame, idCol: String,
+      hashCol: String, maxBucket: Int = 10000): DataFrame =
+    oversizedFrom(bandedChunks(parseBandInts(hashed, idCol, hashCol), idCol),
+      maxBucket)
 }

@@ -125,4 +125,50 @@ object DedupClusters {
       col(dstCol).cast("long").as("d"))
     connectedComponents(star.unionByName(e), "s", "d")
   }
+
+  /** Remove a TAKEDOWN batch of nodes from an existing cluster
+    * assignment — the reverse lifecycle. Node removal can only SPLIT
+    * components (or strip their min-id labels), which the star fold
+    * cannot express, but the damage is LOCAL: only the removed nodes'
+    * OWN components can change. So the recompute is bounded to those
+    * components — their surviving members are relabeled by a
+    * connected-components run over the surviving edges among them,
+    * every untouched component's labels pass through verbatim, and
+    * the corpus pipeline is never touched.
+    *
+    * `remainingEdges` is the pair table WITHOUT the removed docs'
+    * pairs (the pair family's own retract produces it). Edges a
+    * retraction ADDS (an un-crossed cap restoring suppressed pairs)
+    * are `mergeBatch`'s contract — compose `retractBatch` then
+    * `mergeBatch(…, addedEdges)`; the min-reachable-id fixpoint is
+    * unique per edge set, so the composition equals one recompute
+    * (spec-pinned). Survivors left with no edge drop out of the
+    * table, matching `connectedComponents`' nodes-from-edges domain.
+    */
+  def retractBatch(labels: DataFrame, removedIds: DataFrame,
+      remainingEdges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val removed = removedIds.select(col(removedIds.columns.head)
+      .cast("long").as("node")).distinct()
+    // components the removal touches — bounded by the batch size
+    val affected = labels.join(broadcast(removed), Seq("node"), "left_semi")
+      .select(col("cluster_id")).distinct()
+    val untouched = labels
+      .join(broadcast(affected), Seq("cluster_id"), "left_anti")
+      .select(col("node"), col("cluster_id"))
+    // surviving members of the affected components
+    val keep = labels.join(broadcast(affected), Seq("cluster_id"), "left_semi")
+      .join(broadcast(removed), Seq("node"), "left_anti")
+      .select(col("node"))
+    // surviving edges among them: components are node-disjoint, so an
+    // edge with one endpoint inside an affected component has both
+    // inside (remainingEdges carries no removed-doc pairs). `keep` is
+    // bounded by COMPONENT size, not batch size — retracting one node
+    // from a multi-million-doc cluster makes it huge — so no broadcast
+    // hint here: the planner picks broadcast from stats when small and
+    // a shuffle join when the survivor set outgrows the threshold
+    val sub = remainingEdges
+      .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("d"))
+      .join(keep.withColumnRenamed("node", "s"), Seq("s"), "left_semi")
+    untouched.unionByName(connectedComponents(sub, "s", "d"))
+  }
 }

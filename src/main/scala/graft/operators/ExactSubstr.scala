@@ -114,11 +114,33 @@ object ExactSubstr {
     runsFromMatches(matches, minTok)
   }
 
+  /** The ACTION the repeat report feeds (§2.3 d25) — keep-FIRST-
+    * occurrence exact-substring dedup, Lee et al.'s deployed policy:
+    * for every maximal repeat, the LOWEST doc id keeps its copy and
+    * every higher doc's occurrence is cut. Pairwise lowest-keeps
+    * composes to exactly that: a repeat shared by docs {A&lt;B&lt;C}
+    * cuts B (via A,B) and C (via A,C) and keeps A only. Cross-doc
+    * only — a doc's internal duplicate of its own kept copy stays
+    * (d18/d19 own within-doc coverage).
+    *
+    * Shape: the repeat table's cut side collapses per doc, merged
+    * islands (`IntervalMerge` — overlapping cuts from different
+    * partners union), then d19's codegen'd index-filter cut — the
+    * corpus is never exploded into token rows. One row per doc out:
+    * (doc_id, n_tok, kept: array&lt;string&gt;).
+    */
+  def scrubRepeats(toks: DataFrame, cap: Int = 100,
+      minTok: Int = 10): DataFrame = {
+    val cut = Checkpoints.cut(toks.select(col("doc_id"), col("tk")))
+    scrubWith(cut, repeatsFrom(cut, cap, minTok))
+  }
+
   /** The cut applied against an EXISTING repeat table — the serving
     * form when the repeats are a materialized corpus artifact (d24's
     * product): tokenize/plant is a narrow map and the window
     * self-join never re-runs. `toks` is consumed once (no lineage cut
-    * needed here).
+    * needed here; `scrubRepeats` cuts because its frame also feeds
+    * the repeat derivation).
     */
   def scrubWith(toks: DataFrame, repeats: DataFrame): DataFrame = {
     val cuts = repeats

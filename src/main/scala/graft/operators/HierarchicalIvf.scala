@@ -210,7 +210,7 @@ object HierarchicalIvf {
 
   /** Near-dup pairs ROUTED THROUGH the two-level cells — the
     * documented handoff PAST the SRP pair kernels' governance ceiling
-    * (r17 judge stretch: the count-derived SRP width bounds occupancy only to
+    * (the count-derived SRP width bounds occupancy only to
     * occ·2^maxBits ≈ 268M vectors; past it, the bucketing that keeps
     * scaling is the LEARNED cell family, whose cell count k grows
     * with the corpus at a pinned target cell size). Candidates are

@@ -77,6 +77,37 @@ object Multimodal {
     }
   }
 
+  /** STUB RESIZE — deterministic fake: a real implementation decodes,
+    * scales, re-encodes; the fake keeps every k-th content byte
+    * (k from the pixel ratio) so output size tracks target size and
+    * the result is reproducible. Tags record the target box (the
+    * metadata a downstream trainer filters on).
+    */
+  def resizeStub(m: MediaFile, w: Int, h: Int): MediaFile = {
+    val d = decodeStub(m)
+    val ratio = math.max(1.0,
+      (d.width.toLong * d.height) / math.max(1.0, w.toLong * h))
+    val k = math.max(1, math.ceil(ratio).toInt)
+    m.copy(
+      content = m.content.grouped(k).map(_.head).toArray,
+      tags = m.tags + ("resized" -> s"${w}x$h"))
+  }
+
+  /** Batched resize with the same byte-budget partition sizing as
+    * `decodeAll` (resizing is also payload-memory-bound).
+    */
+  def resizeAll(ds: Dataset[MediaFile], w: Int, h: Int,
+      targetPartitionBytes: Long = 128L << 20): Dataset[MediaFile] = {
+    import ds.sparkSession.implicits._
+    val totalBytes = ds.queryExecution.optimizedPlan.stats.sizeInBytes
+    val unknown = BigInt(ds.sparkSession.sessionState.conf.defaultSizeInBytes)
+    val sized =
+      if (totalBytes >= unknown) ds
+      else ds.repartition(((totalBytes + targetPartitionBytes - 1) /
+        targetPartitionBytes).max(1).min(1 << 20).toInt)
+    sized.mapPartitions(_.map(resizeStub(_, w, h)))
+  }
+
   /** A sampled frame reference: which frames of which media object a
     * downstream stage should decode (frame EXTRACTION would go
     * through the stub codec; the reference list is the plumbing).
@@ -93,6 +124,13 @@ object Multimodal {
     require(stride > 0, s"stride must be positive, got $stride")
     feats.flatMap(f => (0 until f.nFrames by stride).map(FrameRef(f.id, _)))
   }
+
+  /** Attach media features back to a DataFrame by id (broadcast-safe
+    * when the media side is the small one).
+    */
+  def withFeatures(df: DataFrame, features: Dataset[MediaFeatures],
+      idCol: String): DataFrame =
+    df.join(features.toDF(), df(idCol) === features("id"), "left")
 
   /** Build a MediaFile dataset from a text corpus (test/demo helper —
     * binary column materialized from text bytes).

@@ -33,6 +33,28 @@ object PageRank {
   val Iters = 5
   val Unit = 1000000L
 
+  /** `edges`: (src, dst) rows; `nodes`: one `node` column. Returns
+    * (node, rank6) with Σrank ≈ n (node-count scaling). `outDeg` must
+    * be the constant out-degree of every src (regular graphs — one
+    * join fewer per iteration); `ranksByDegree` is the general form.
+    */
+  def ranks(nodes: DataFrame, edges: DataFrame, outDeg: Int): DataFrame = {
+    var r = Checkpoints.cut(nodes.select(col("node"), lit(Unit).as("u")))
+    val e = Checkpoints.cut(edges.select(col("src"), col("dst")))
+    val base = (1 - Damping) * Unit
+    for (_ <- 1 to Iters) {
+      val contrib = e.join(r, e("src") === r("node"))
+        .select(col("dst"), col("u"))
+        .groupBy(col("dst")).agg(sum(col("u")).as("in_sum"))
+      r = Checkpoints.cut(
+        nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+          .select(nodes("node"),
+            round(lit(base) + lit(Damping) * coalesce(col("in_sum"), lit(0L)) / outDeg)
+              .cast("long").as("u")))
+    }
+    r.select(col("node"), (col("u") / (Unit.toDouble)).as("rank6"))
+  }
+
   /** General-graph PageRank: per-node out-degrees from a precomputed
     * degree table (one extra agg up front + one narrow join per
     * iteration — same single-shuffle shape as the regular form).

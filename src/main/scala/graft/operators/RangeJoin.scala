@@ -42,6 +42,12 @@ object RangeJoin {
       .drop("__rkey", "__rbkt", "__bkt")
   }
 
+  /** Matched (left, right) pairs only — inner trailing-window join. */
+  def trailingWindowJoin(left: DataFrame, right: DataFrame, key: String,
+      leftTs: String, rightTs: String, windowSec: Long): DataFrame =
+    candidateJoin(left, right, key, leftTs, rightTs, windowSec)
+      .filter(col(rightTs).isNotNull)
+
   /** Count of right-side rows in the trailing window per left row —
     * the common "clicks in the last N minutes before each purchase"
     * shape. Zero-match left rows report 0 (`count` skips the null

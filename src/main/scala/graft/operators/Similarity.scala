@@ -105,6 +105,38 @@ object Similarity {
     b.groupBy(col("bucket")).agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > cap).select(col("bucket"))
 
+  /** The dropped-mass census of the governance — what the
+    * oversized-bucket cap excludes at the given width, surfaced to
+    * callers the way `Dedup.oversizedHashBuckets` surfaces the
+    * minhash cap's drops: one row (n_total, n_dropped, buckets_
+    * dropped, nbits, dropped_frac). Inside the width rule's
+    * (`nBitsCol`) saturation bound the dropped mass is degenerate
+    * directions only (template/zero vectors — the cap's purpose); a
+    * dropped_frac climbing past a few percent means the corpus has
+    * outgrown `maxBits` and the width ceiling must be raised, not the
+    * result trusted.
+    */
+  def governedDroppedCensus(df: DataFrame, idCol: String, vecCol: String,
+      targetOccupancy: Int = 16, capFactor: Int = 8, minBits: Int = 4,
+      maxBits: Int = 24, dims: Int = 64): DataFrame = {
+    val cap = capFactor * targetOccupancy
+    // ONE corpus pass: the per-bucket counts already decide oversize,
+    // so total/dropped/bucket counts all derive from the tiny
+    // (bucket, bucket_n) frame — no second semi-join pass
+    governedBuckets(df, idCol, vecCol, targetOccupancy, minBits,
+        maxBits, dims)
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("bucket_n"), first(col("nbits")).as("nbits"))
+      .agg(sum(col("bucket_n")).as("n_total"),
+        sum(when(col("bucket_n") > cap, col("bucket_n")).otherwise(0L))
+          .as("n_dropped"),
+        count(when(col("bucket_n") > cap, lit(1))).as("buckets_dropped"),
+        first(col("nbits")).as("nbits"))
+      .select(col("n_total"), col("n_dropped"), col("buckets_dropped"),
+        col("nbits"),
+        (col("n_dropped") / col("n_total")).as("dropped_frac"))
+  }
+
   /** Governed near-dup pairs — SRP-bucketed exact-cosine verification
     * (Hamming-≤1 multi-probe, or single-bucket with `multiProbe =
     * false`) with bucket-occupancy governance: the hash width tracks the corpus count at `targetOccupancy`, and vectors
@@ -758,4 +790,39 @@ object Similarity {
         s"bucket; raise the width ceiling (or route through per-cell " +
         s"pairing) instead of trusting the capped index")
   }
+
+  /** Saturation policy trigger over a corpus (the census-based twin
+    * of the artifact-load gate above): reads the
+    * [[governedDroppedCensus]] and returns the census row when
+    * `dropped_frac` crosses `maxDroppedFrac` — the signal that the
+    * corpus has outgrown `maxBits` (past cap·2^maxBits the cap starts
+    * dropping NON-degenerate corpus mass). None = healthy (the drop
+    * is the degenerate mass the cap exists for).
+    */
+  def saturatedCensus(df: DataFrame, idCol: String, vecCol: String,
+      maxDroppedFrac: Double = 0.05, targetOccupancy: Int = 16,
+      capFactor: Int = 8, minBits: Int = 4, maxBits: Int = 24,
+      dims: Int = 64): Option[org.apache.spark.sql.Row] = {
+    val row = governedDroppedCensus(df, idCol, vecCol, targetOccupancy,
+      capFactor, minBits, maxBits, dims).collect().headOption
+    row.filter(r => !r.isNullAt(4) && r.getDouble(4) > maxDroppedFrac)
+  }
+
+  /** [[saturatedCensus]] as a loud gate: throws with the census in
+    * the message when the dropped fraction crosses the threshold.
+    */
+  def requireNotSaturated(df: DataFrame, idCol: String, vecCol: String,
+      maxDroppedFrac: Double = 0.05, targetOccupancy: Int = 16,
+      capFactor: Int = 8, minBits: Int = 4, maxBits: Int = 24,
+      dims: Int = 64): Unit =
+    saturatedCensus(df, idCol, vecCol, maxDroppedFrac, targetOccupancy,
+      capFactor, minBits, maxBits, dims).foreach { r =>
+      throw new IllegalStateException(
+        s"SRP width governance saturated: dropped_frac=${r.getDouble(4)} " +
+          s"> $maxDroppedFrac at nbits=${r.getInt(3)} " +
+          s"(n_total=${r.getLong(0)}, n_dropped=${r.getLong(1)}, " +
+          s"buckets_dropped=${r.getLong(2)}) — the corpus has outgrown " +
+          s"maxBits=$maxBits; raise the width ceiling (or route through " +
+          s"per-cell pairing) instead of trusting the capped result")
+    }
 }

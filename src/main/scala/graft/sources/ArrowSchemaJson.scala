@@ -110,6 +110,27 @@ object ArrowType {
       o
     case unit => m.getNodeFactory.textNode(typeNames(unit))
   }
+
+  /** Spark → Arrow for schema printing of non-inferred frames. */
+  def fromSpark(dt: DataType): ArrowType = dt match {
+    case BooleanType => ABool
+    case ByteType => AInt8
+    case ShortType => AInt16
+    case IntegerType => AInt32
+    case LongType => AInt64
+    case FloatType => AFloat32
+    case DoubleType => AFloat64
+    case StringType => AUtf8
+    case BinaryType => ABinary
+    case DateType => ADate32
+    case TimestampType => ATimestamp("Microsecond", Some("UTC"))
+    case TimestampNTZType => ATimestamp("Microsecond", None)
+    case d: DecimalType => ADecimal128(d.precision, d.scale)
+    case ArrayType(e, n) => AList(ArrowField("item", fromSpark(e), n))
+    case StructType(fs) =>
+      AStruct(fs.toSeq.map(f => ArrowField(f.name, fromSpark(f.dataType), f.nullable)))
+    case other => throw new IllegalArgumentException(s"No Arrow mapping for Spark type $other")
+  }
 }
 
 /** One field of the reference schema format: `main.rs` Readme example —
@@ -183,4 +204,8 @@ object ArrowSchemaJson {
     root.set[ObjectNode]("metadata", mapper.createObjectNode())
     mapper.writer(new SerdePrettyPrinter).writeValueAsString(root)
   }
+
+  def renderSpark(schema: StructType): String =
+    render(ArrowSchema(schema.toSeq.map(f =>
+      ArrowField(f.name, ArrowType.fromSpark(f.dataType), f.nullable))))
 }

@@ -10,8 +10,7 @@ import org.apache.spark.sql.types.StructType
   * dataset.
   *
   * Structured Streaming's file source tracks seen files in the
-  * checkpoint, so a crash/restart resumes WITHOUT reconverting (the
-  * same exactly-once property spec'd for ExactlyOnceSink); the
+  * checkpoint, so a crash/restart resumes WITHOUT reconverting; the
   * parquet sink commits atomically per batch. The schema must be
   * explicit — the scale path for conversion anyway (infer once with
   * `SchemaInference`, then stream with the pinned schema so a

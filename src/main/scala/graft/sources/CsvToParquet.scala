@@ -160,6 +160,30 @@ object CsvToParquet {
     Conversion(schema, json, Some(spark.read.parquet(outPath)))
   }
 
+  /** The interchange direction OUT, CSV form: parquet → (compressed)
+    * CSV with the reference's header/delimiter conventions — with
+    * `exportJsonl` this closes the conversion matrix (csv ⇄ parquet,
+    * jsonl ⇄ parquet). Narrow map per split; optional shuffle-free
+    * coalesce. Only flat schemas are CSV-representable — nested
+    * columns fail fast here rather than as a mid-write task error.
+    */
+  def exportCsv(df: DataFrame, outPath: String, header: Boolean = true,
+      delimiter: Char = ',', compression: Option[String] = None,
+      partitions: Option[Int] = None): Unit = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType => ST}
+    val nested = df.schema.fields.filter(_.dataType match {
+      case _: ST | _: ArrayType | _: MapType => true
+      case _ => false
+    })
+    require(nested.isEmpty,
+      s"CSV cannot represent nested columns: ${nested.map(_.name).mkString(", ")}")
+    val coalesced = partitions.fold(df)(n => df.coalesce(n))
+    val w = coalesced.write.mode("overwrite")
+      .option("header", header.toString)
+      .option("delimiter", delimiter.toString)
+    compression.fold(w)(c => w.option("compression", c)).csv(outPath)
+  }
+
   /** Reference-compatible single-FILE output (`csv2parquet in.csv
     * out.parquet` writes one file, `main.rs:178`): convert into a
     * scratch directory with one output partition and move the part

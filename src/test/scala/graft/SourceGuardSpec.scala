@@ -40,8 +40,8 @@ class SourceGuardSpec extends AnyFunSuite {
       line <- text.linesIterator
       if line.contains(checkout + "/") || intoBuild.findFirstIn(line).isDefined
     } yield name -> line.trim
-    assert(hits.map(_._1) === Seq("Bench.scala", "Bench.scala"), hits.mkString("\n"))
-    assert(hits.forall(_._2.contains("target/bench_detail")), hits.mkString("\n"))
+    // Bench's two detail files resolve under the working directory too
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   // ---------------------------------------------------------------
@@ -108,7 +108,7 @@ class SourceGuardSpec extends AnyFunSuite {
 
   private lazy val names: Set[String] = units.map(_.name).toSet
 
-  /** The roots: the driver contract (`SparkEntry`, `Bench`), the
+  /** The roots: the entry registry (`SparkEntry`, `Bench`), the
     * session extensions, every object with a `main`, and every
     * top-level name perfbench's harness calls.
     */
@@ -145,6 +145,11 @@ class SourceGuardSpec extends AnyFunSuite {
     val ivf = "IVF ingest-lifecycle policy hook over the lifecycle perfbench drives"
     val hier = "two-level IVF lifecycle, the twin of the IncrementalIvf lifecycle perfbench drives"
     val family = "persisting ingest lifecycle (PostingIndex.admit/retract), the twin of the IncrementalPassages one perfbench drives"
+    val convOut = "export direction of the conversion (parquet → text), library API the CLI does not expose"
+    val zorder = "two-column z-order layout writer, the multi-predicate twin of clusteredWriter"
+    val lsh = "LSH operating-point tuning: banding ↔ Jaccard threshold, measured on d17's curve"
+    val census = "census of what a skew cap drops, run as a monitoring query next to the pairing job"
+    val media = "media stub pipeline steps (resize, feature join-back)"
     Map(
       "Artifacts.gc" -> "the artifact store's only reclamation path (stale stamps, race losers, orphans); run between pipeline runs, not inside an entry",
       "Artifacts.markerScope" -> "owner-scope reader of Artifacts.gc",
@@ -171,7 +176,35 @@ class SourceGuardSpec extends AnyFunSuite {
       "IncrementalMedia.admitBatch" -> family,
       "IncrementalMedia.retractBatch" -> family,
       "IncrementalMedia.crossingBuckets" -> "admit decision surface of IncrementalMedia.admitBatch",
-      "IncrementalMedia.probeBatch" -> "serving probe of the media lifecycle (IncrementalMedia.admitBatch)")
+      "IncrementalMedia.probeBatch" -> "serving probe of the media lifecycle (IncrementalMedia.admitBatch)",
+      "CsvStreamToParquet" -> "continuous CSV → Parquet conversion, the streaming form of the CLI's job",
+      "CsvToParquet.exportCsv" -> convOut,
+      "JsonlToParquet.exportJsonl" -> convOut,
+      "ArrowType.fromSpark" -> "Spark → reference-JSON schema printing for frames that were not inferred",
+      "ArrowSchemaJson.renderSpark" -> "Spark → reference-JSON schema printing for frames that were not inferred",
+      "Layout.zOrderedWriter" -> zorder,
+      "Layout.mortonInterleave" -> zorder,
+      "Layout.scaleToBits" -> zorder,
+      "Bucketing.bucketedJoin" -> "read side of writeBucketed: the shuffle-free join of two bucketed tables",
+      "RuntimeFilters" -> "opt-in bloom runtime filters for fact scans below Spark's 10 GB application-side floor",
+      "GraftSession.registerTables" -> "SQL entry: the tables as temp views for spark.sql",
+      "Dedup.simhashPairs" -> "text simhash pairing over the hexHashPairs kernel",
+      "Dedup.lshOperatingPoint" -> lsh,
+      "Dedup.chooseBanding" -> lsh,
+      "Dedup.calibratedOperatingPoint" -> lsh,
+      "LlmQueries.minhashCalibration" -> lsh,
+      "Dedup.oversizedHashBuckets" -> census,
+      "Similarity.governedDroppedCensus" -> census,
+      "Similarity.saturatedCensus" -> census,
+      "Similarity.requireNotSaturated" -> census,
+      "DedupClusters.retractBatch" -> "takedown side of the cluster lifecycle, the reverse of mergeBatch",
+      "ExactSubstr.scrubRepeats" -> "one-shot keep-first scrub (derive repeats, then cut); the entries cut from the repeat artifact",
+      "Multimodal.resizeStub" -> media,
+      "Multimodal.resizeAll" -> media,
+      "Multimodal.withFeatures" -> media,
+      "PageRank.ranks" -> "regular-graph PageRank, one join fewer per iteration than ranksByDegree",
+      "RangeJoin.trailingWindowJoin" -> "matched-pairs form of the trailing-window join trailingWindowCount counts",
+      "Sampling.temperatureRates" -> "temperature mixture rates that feed stratifiedSample")
   }
 
   private val memberDef = """(?m)^  (?:(?:private(?:\[\w+\])?|final|override|implicit)\s+)*def\s+(\w+)\b""".r

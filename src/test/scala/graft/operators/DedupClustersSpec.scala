@@ -121,6 +121,46 @@ class DedupClustersSpec extends SparkSpec {
     assert(merged.filter(_._2 == 1L).keySet === Set(1L, 2L, 3L, 10L, 11L))
   }
 
+  test("retractBatch: removal splits a component; untouched labels pass through") {
+    import spark.implicits._
+    // chain 1-2-3-4-5 (cluster 1), pair 10-11 (cluster 10), pair
+    // 20-21 untouched
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L), (20L, 21L))
+    val labels = DedupClusters.connectedComponents(edges.toDF("a", "b"), "a", "b")
+    // remove node 3 (splits the chain) and node 10 (strips the pair's
+    // min id; 11 is left edge-less and drops out, matching CC's
+    // nodes-from-edges domain)
+    val removed = Seq(3L, 10L).toDF("doc_id")
+    val remaining = edges.filterNot { case (a, b) =>
+      Set(a, b).exists(Set(3L, 10L)) }.toDF("a", "b")
+    val out = DedupClusters.retractBatch(labels, removed, remaining, "a", "b")
+      .as[(Long, Long)].collect().toMap
+    val full = DedupClusters.connectedComponents(remaining, "a", "b")
+      .as[(Long, Long)].collect().toMap
+    assert(out === full, "bounded retract must equal full recompute")
+    assert(out === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L,
+      20L -> 20L, 21L -> 20L))
+  }
+
+  test("retract∘merge composition: removal + restored edges ≡ one recompute") {
+    import spark.implicits._
+    // the pair-family shape: retracting docs deletes their edges AND
+    // un-crosses a cap, restoring a suppressed edge between survivors
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+    val labels = DedupClusters.connectedComponents(edges.toDF("a", "b"), "a", "b")
+    val removed = Seq(2L).toDF("doc_id")
+    val remaining = Seq((10L, 11L)).toDF("a", "b")
+    val restored = Seq((1L, 3L)).toDF("a", "b") // an un-crossed cap's gift
+    val out = DedupClusters.mergeBatch(
+      DedupClusters.retractBatch(labels, removed, remaining, "a", "b"),
+      restored, "a", "b").as[(Long, Long)].collect().toMap
+    val full = DedupClusters.connectedComponents(
+      Seq((10L, 11L), (1L, 3L)).toDF("a", "b"), "a", "b")
+      .as[(Long, Long)].collect().toMap
+    assert(out === full)
+    assert(out === Map(1L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
+
   test("d16 soft-dedup weights: 1/n per planted cluster member, singletons keep 1e6") {
     import spark.implicits._
     val dir = tmpDir("d16_fixture")

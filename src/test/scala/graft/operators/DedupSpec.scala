@@ -89,6 +89,16 @@ class DedupSpec extends SparkSpec {
     assert(jac((1L, 2L)) < 0.5)
   }
 
+  test("simhash pairs: near-identical docs within hamming radius (both weightings)") {
+    for (weighted <- Seq(false, true)) {
+      val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3,
+          weighted = weighted)
+        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+      assert(pairs.contains((3L, 100L)), s"identical docs have hamming 0 (weighted=$weighted)")
+      assert(!pairs.exists(p => p._1 == 102L || p._2 == 102L), s"weighted=$weighted")
+    }
+  }
+
   test("simhash of identical text is identical; different text differs") {
     val sh = Dedup.simhash(docs, "doc_id", "text")
       .as[(Long, String)].collect().toMap

@@ -81,6 +81,28 @@ class LshParamSpec extends SparkSpec {
     }
   }
 
+  test("d17 calibration at a non-default width: exact copies estimate with zero error") {
+    // same-source, id-gap-≤60 docs so the candidate panel includes the
+    // exact-copy pair; numHashes = 8 is a retuned (cheaper) width
+    val docs = corpus.map { case (id, t) => (id, t, "src") }
+      .toDF("doc_id", "text", "source")
+    val curve = LlmQueries.minhashCalibration(docs, numHashes = 8)
+      .as[(Int, Long, Long)].collect()
+      .map { case (b, n, e) => b -> ((n, e)) }.toMap
+    // the exact-copy pair (1,2) sits in the jaccard-1.0 decile with a
+    // perfect estimate: every signature component matches
+    val (n10, e10) = curve(10)
+    assert(n10 >= 1L && e10 === 0L, s"bucket 10: n=$n10 err=$e10")
+    // micro step is exact: 8 divides 1e6 (125000/match); an illegal
+    // width fails loudly instead of drifting
+    intercept[IllegalArgumentException] {
+      LlmQueries.minhashCalibration(docs, numHashes = 12)
+    }
+    intercept[IllegalArgumentException] {
+      Dedup.minhashBands(docs, "doc_id", "text", numHashes = 16, bands = 5)
+    }
+  }
+
   test("d10 index + probe at a retuned banding still classifies the planted batch") {
     val docs = corpus.toDF("doc_id", "text")
     // rows-per-band 3 of 24 → operating point (1/8)^(1/3) ≈ 0.5
@@ -109,5 +131,29 @@ class LshParamSpec extends SparkSpec {
     assert(out(101L) === "exact_dup")
     assert(out(102L) === "near_dup")
     assert(out(103L) === "kept")
+  }
+
+  test("operating point algebra + calibrated loop from a d17-shaped curve") {
+    // more rows per band → stricter threshold (monotone)
+    val t1 = Dedup.lshOperatingPoint(8, 2)
+    val t2 = Dedup.lshOperatingPoint(4, 4)
+    val t3 = Dedup.lshOperatingPoint(2, 8)
+    assert(t1 < t2 && t2 < t3)
+    assert(math.abs(t2 - math.pow(0.25, 0.25)) < 1e-12)
+    // chooseBanding scans the divisor lattice for the closest point
+    assert(Dedup.chooseBanding(16, 0.95) === (2, 8))   // (1/2)^(1/8) ≈ 0.917
+    assert(Dedup.chooseBanding(16, 0.70) === (4, 4))   // ≈ 0.707
+    assert(Dedup.chooseBanding(16, 0.35) === (8, 2))   // ≈ 0.354
+    assert(Dedup.chooseBanding(24, 0.50) === (8, 3))   // (1/8)^(1/3) = 0.5 exactly
+    // the calibrated loop: banding + threshold + the MEASURED
+    // estimator error in the threshold's decile from d17's curve
+    val curve = Seq((3, 10L, 41000L), (5, 20L, 52000L), (7, 9L, 33000L))
+      .toDF("bucket", "n_pairs", "mean_abs_err_micro")
+    val op = Dedup.calibratedOperatingPoint(curve, 16, 0.70)
+    assert(op.bands === 4 && op.rowsPerBand === 4)
+    assert(math.abs(op.threshold - math.pow(0.25, 0.25)) < 1e-12)
+    assert(op.measuredAbsErrMicro === Some(33000L)) // decile 7 of ≈ 0.707
+    // a decile the curve has no pairs for → no measurement, not a lie
+    assert(Dedup.calibratedOperatingPoint(curve, 16, 0.95).measuredAbsErrMicro === None)
   }
 }

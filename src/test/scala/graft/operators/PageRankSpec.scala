@@ -34,4 +34,18 @@ class PageRankSpec extends SparkSpec {
     // 0's mass since deg(0) = 1)
     Seq(4L, 5L, 6L, 9L).foreach(n => assert(got(0L) > got(n)))
   }
+
+  test("regular-graph fast path and degree form agree when degrees are constant") {
+    // a 2-regular ring: i -> i+1, i -> i+2 (mod 12)
+    val nodes = (0L until 12L).toSeq
+    val edges = nodes.flatMap(i => Seq((i, (i + 1) % 12), (i, (i + 2) % 12)))
+    val a = PageRank.ranks(nodes.toDF("node"), edges.toDF("src", "dst"), outDeg = 2)
+      .as[(Long, Double)].collect().toMap
+    val b = PageRank.ranksByDegree(nodes.toDF("node"), edges.toDF("src", "dst"))
+      .as[(Long, Double)].collect().toMap
+    // formulas differ only in where the /deg rounding happens; on a
+    // symmetric regular ring both converge to uniform mass exactly
+    assert(a === b)
+    assert(a.values.forall(v => math.abs(v - 1.0) < 0.01))
+  }
 }

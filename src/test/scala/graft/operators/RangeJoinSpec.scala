@@ -26,6 +26,13 @@ class RangeJoinSpec extends SparkSpec {
     assert(out === Map(10L -> 3L, 11L -> 1L, 12L -> 0L))
   }
 
+  test("trailing window join: each match appears exactly once") {
+    val out = RangeJoin.trailingWindowJoin(purchases, clicks, "user_id",
+        "p_ts", "c_ts", windowSec = 600L)
+    assert(out.count() === 4L)
+    assert(out.select("event_id").distinct().count() === 2L)
+  }
+
   test("cross-user isolation: matches never cross the key") {
     val c2 = clicks.withColumn("user_id", lit(2L))
     val out = RangeJoin.trailingWindowCount(purchases, c2, "user_id",

@@ -34,6 +34,22 @@ class SamplingSpec extends SparkSpec {
     assert(counts.keySet === Set("train", "val", "test"))
   }
 
+  test("temperature rates: T=1 is proportional, higher T upweights small strata") {
+    // skewed strata: 400 'en', 80 'zh', 20 'ko'
+    val df = ((1 to 400).map(i => (i.toLong, "en")) ++
+      (401 to 480).map(i => (i.toLong, "zh")) ++
+      (481 to 500).map(i => (i.toLong, "ko"))).toDF("doc_id", "lang")
+    val t1 = Sampling.temperatureRates(df, "lang", temperature = 1.0, targetRows = 100)
+    // natural proportions: every stratum keeps the same fraction
+    assert(math.abs(t1("en") - t1("zh")) < 1e-9 && math.abs(t1("zh") - t1("ko")) < 1e-9)
+    val t3 = Sampling.temperatureRates(df, "lang", temperature = 3.0, targetRows = 100)
+    assert(t3("ko") > t3("zh") && t3("zh") > t3("en"),
+      s"higher T must upweight small strata: $t3")
+    // rates actually deliver ~target when applied
+    val kept = Sampling.stratifiedSample(df, "doc_id", "lang", t3, defaultRate = 0.0).count()
+    assert(kept > 60 && kept < 140, s"kept $kept of target 100")
+  }
+
   test("train order: every row placed once, positions contiguous per shard, order reproducible") {
     val out = Sampling.trainOrder(docs.select($"doc_id"), "doc_id", shardChars = 1)
     assert(out.count() === docs.count(), "a permutation loses nothing")

@@ -223,6 +223,24 @@ class CsvToParquetSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 25)
   }
 
+  test("export: parquet back out as CSV, lossless roundtrip, nested schemas fail fast") {
+    import spark.implicits._
+    val li = graft.GraftSession.table(spark, sf0, "lineitem")
+      .select($"l_orderkey", $"l_quantity", $"l_returnflag").orderBy($"l_orderkey")
+    val out = tmpDir("conv") + "/csv_export"
+    CsvToParquet.exportCsv(li, out, compression = Some("gzip"), partitions = Some(1))
+    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv.gz"))
+    assert(files.length === 1, "coalesce(1) + gzip must land one compressed file")
+    val back = spark.read.option("header", "true")
+      .schema(li.schema).csv(out)
+    assert(back.count() === li.count())
+    // lossless: every (key, qty, flag) row survives the text roundtrip
+    assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
+    // nested columns cannot be represented — fail at call time, not mid-write
+    val nested = Seq((1L, Seq("a", "b"))).toDF("id", "arr")
+    intercept[IllegalArgumentException](CsvToParquet.exportCsv(nested, out + "_n"))
+  }
+
   test("RFC4180 quoting: commas, doubled quotes, newlines in fields") {
     val p = java.nio.file.Paths.get(tmpDir("conv"), "quoted.csv")
     java.nio.file.Files.writeString(p,

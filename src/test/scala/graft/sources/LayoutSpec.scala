@@ -52,6 +52,53 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
+  test("z-order clusters BOTH dimensions: probes on either column skip row groups") {
+    val li = GraftSession.table(spark, sf0, "lineitem")
+      .select(org.apache.spark.sql.functions.col("l_orderkey"),
+        org.apache.spark.sql.functions.col("l_partkey"))
+    val zdir = tmpDir("layout") + "/zorder"
+    val kdir = tmpDir("layout") + "/keyonly"
+    Layout.zOrderedWriter(li, "l_orderkey", "l_partkey", partitions = Some(4))
+      .option("parquet.block.row.count.limit", "500")
+      .mode("overwrite").parquet(zdir)
+    Layout.clusteredWriter(li, Seq("l_orderkey"), partitions = Some(4))
+      .option("parquet.block.row.count.limit", "500")
+      .mode("overwrite").parquet(kdir)
+    assert(spark.read.parquet(zdir).count() === li.count())
+    // fraction of row groups a point probe on `column` touches
+    def touchFrac(dir: String, column: String): Double = {
+      val rs = rowGroupRanges(dir, column)
+      val probe = (rs.map(_._1).min + rs.map(_._2).max) / 2
+      rs.count(r => r._1 <= probe && probe <= r._2).toDouble / rs.size
+    }
+    // single-key layout: perfect on the cluster key, useless on the other
+    assert(touchFrac(kdir, "l_orderkey") <= 0.25)
+    assert(touchFrac(kdir, "l_partkey") > 0.9,
+      "a key-only layout cannot prune the second column")
+    // z-order: real pruning on BOTH columns
+    assert(touchFrac(zdir, "l_orderkey") <= 0.5,
+      s"z-order must prune on dim A, got ${touchFrac(zdir, "l_orderkey")}")
+    assert(touchFrac(zdir, "l_partkey") <= 0.5,
+      s"z-order must prune on dim B, got ${touchFrac(zdir, "l_partkey")}")
+  }
+
+  test("z-order on empty or all-null cluster columns degrades to a plain write") {
+    import spark.implicits._
+    val base = tmpDir("layout_degenerate")
+    val empty = GraftSession.table(spark, sf0, "lineitem")
+      .select(org.apache.spark.sql.functions.col("l_orderkey"),
+        org.apache.spark.sql.functions.col("l_partkey"))
+      .filter("l_orderkey < 0")
+    Layout.zOrderedWriter(empty, "l_orderkey", "l_partkey")
+      .mode("overwrite").parquet(base + "/empty")
+    assert(spark.read.parquet(base + "/empty").count() === 0)
+    val allNull = Seq((1L, Option.empty[Long]), (2L, Option.empty[Long]))
+      .toDF("a", "b")
+    Layout.zOrderedWriter(allNull, "a", "b")
+      .mode("overwrite").parquet(base + "/allnull")
+    assert(spark.read.parquet(base + "/allnull").count() === 2)
+  }
+
   test("schema evolution: mergeSchema unifies old and new file generations") {
     import spark.implicits._
     val dir = tmpDir("layout_evolution") + "/table"
