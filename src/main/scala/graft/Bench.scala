@@ -195,6 +195,16 @@ object Bench {
     Timings(sfDir, runsPer, reruns, results, errors.toSeq)
   }
 
+  /** Where a run's detail lands: `target/bench_detail.json`, plus a
+    * copy keyed on the core count for a full run only — a low-core
+    * run after a full one overwrites bench_detail.json, and the
+    * per-cpus copy keeps both runs' detail, so a dev-loop subset run
+    * (a name filter) must not replace it.
+    */
+  private[graft] def detailPaths(subset: Boolean, cpus: Int): Seq[String] =
+    "target/bench_detail.json" +:
+      (if (subset) Nil else Seq(s"target/bench_detail_c$cpus.json"))
+
   def main(args: Array[String]): Unit = {
     // optional arg: regex of query names (dev-loop subset timing);
     // the driver passes no args and benches everything
@@ -213,12 +223,7 @@ object Bench {
     // per-query medians + detail live in target/bench_detail.json + stderr.
     val detailJson = t.detailJson
     System.err.println(detailJson)
-    for (path <- Seq(
-        "target/bench_detail.json",
-        // a copy keyed on the core count: a low-core run after a full
-        // one overwrites bench_detail.json, and the per-cpus path keeps
-        // both runs' detail
-        s"target/bench_detail_c$cpus.json"))
+    for (path <- detailPaths(subset = args.nonEmpty, cpus))
       try java.nio.file.Files.write(java.nio.file.Paths.get(path), detailJson.getBytes("UTF-8"))
       catch {
         case scala.util.control.NonFatal(e) =>

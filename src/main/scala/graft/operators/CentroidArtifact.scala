@@ -26,16 +26,10 @@ import org.apache.spark.sql.SparkSession
   */
 object CentroidArtifact {
 
-  private val paths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val loaded =
     scala.collection.concurrent.TrieMap.empty[String, Seq[(Int, Seq[Double])]]
-  private val pqPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val pqLoaded =
     scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[(Int, Seq[Double])]]]
-  private val hierPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val hierLoaded =
     scala.collection.concurrent.TrieMap.empty[String, HierarchicalIvf.HierModel]
   private val learns = new java.util.concurrent.atomic.AtomicLong
@@ -58,14 +52,6 @@ object CentroidArtifact {
     */
   def hierLearnCount: Long = hierLearns.get
 
-  // staleness stamp + deterministic path shared with every other
-  // artifact (Artifacts.scala) — one aging rule for all of them
-  private def corpusStamp(spark: SparkSession, src: String): String =
-    Artifacts.corpusStamp(spark, src)
-
-  private def artifactPath(spark: SparkSession, prefix: String, key: String): String =
-    Artifacts.path(spark, prefix, key)
-
   /** Centroids for the embeddings corpus at `dir`, learned at most
     * once per (session, corpus version, config). The default
     * NEGATIVE `sampleRate` is the GOVERNED learning set
@@ -80,22 +66,17 @@ object CentroidArtifact {
       learnBase: Long = 0L): Seq[(Int, Seq[Double])] = {
     val src = s"$dir/embeddings.parquet"
     val srKey = if (sampleRate < 0) "gov" else sampleRate.toString
-    val key = s"${spark.sparkContext.applicationId}|$src|${corpusStamp(spark, src)}" +
+    val key = s"${spark.sparkContext.applicationId}|$src|${Artifacts.corpusStamp(spark, src)}" +
       s"|k=$k|it=$iters|d=$dims|sr=$srKey|lb=$learnBase"
-    // single-flight (the documentClusters rule): concurrent suites
-    // sharing the session must not race two learnings onto the same
-    // deterministic output path
-    val path = paths.synchronized(paths.getOrElseUpdate(key, {
+    val path = Artifacts.materialize(spark, "ivf", key) { out =>
       val e = table(spark, dir, "embeddings")
       val cents = IvfIndex.learnCentroids(e, "vec_id", "embedding",
         k = k, iters = iters, dims = dims, sampleRate = sampleRate,
         learnBase = learnBase)
       learns.incrementAndGet()
-      val out = artifactPath(spark, "ivf", key)
       import spark.implicits._
-      cents.toDF("cid", "v").coalesce(1).write.mode("overwrite").parquet(out)
-      out
-    }))
+      cents.toDF("cid", "v").coalesce(1).write.parquet(out)
+    }
     loaded.getOrElseUpdate(path,
       spark.read.parquet(path).collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1))
@@ -112,20 +93,18 @@ object CentroidArtifact {
       sampleRate: Double = -1.0): Seq[Seq[(Int, Seq[Double])]] = {
     val src = s"$dir/embeddings.parquet"
     val srKey = if (sampleRate < 0) "gov" else sampleRate.toString
-    val key = s"${spark.sparkContext.applicationId}|$src|${corpusStamp(spark, src)}" +
+    val key = s"${spark.sparkContext.applicationId}|$src|${Artifacts.corpusStamp(spark, src)}" +
       s"|pq|m=$m|k=$k|it=$iters|d=$dims|sr=$srKey"
-    val path = pqPaths.synchronized(pqPaths.getOrElseUpdate(key, {
+    val path = Artifacts.materialize(spark, "pq", key) { out =>
       val e = table(spark, dir, "embeddings")
       val books = ProductQuantizer.learnCodebooks(e, "vec_id", "embedding",
         m = m, dims = dims, k = k, iters = iters, sampleRate = sampleRate)
       pqLearns.incrementAndGet()
-      val out = artifactPath(spark, "pq", key)
       import spark.implicits._
       books.zipWithIndex.flatMap { case (book, j) =>
         book.map { case (cid, v) => (j, cid, v) }
-      }.toDF("sub", "cid", "v").coalesce(1).write.mode("overwrite").parquet(out)
-      out
-    }))
+      }.toDF("sub", "cid", "v").coalesce(1).write.parquet(out)
+    }
     pqLoaded.getOrElseUpdate(path, {
       val rows = spark.read.parquet(path).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
@@ -148,22 +127,20 @@ object CentroidArtifact {
       kFinePerCell: Int, iters: Int = 2,
       dims: Int = 64): HierarchicalIvf.HierModel = {
     val src = s"$dir/embeddings.parquet"
-    val key = s"${spark.sparkContext.applicationId}|$src|${corpusStamp(spark, src)}" +
+    val key = s"${spark.sparkContext.applicationId}|$src|${Artifacts.corpusStamp(spark, src)}" +
       s"|hier|kc=$kCoarse|kf=$kFinePerCell|it=$iters|d=$dims"
-    val path = hierPaths.synchronized(hierPaths.getOrElseUpdate(key, {
+    val path = Artifacts.materialize(spark, "hier", key) { out =>
       val e = table(spark, dir, "embeddings")
       val model = HierarchicalIvf.learn(e, "vec_id", "embedding",
         kCoarse = kCoarse, kFinePerCell = kFinePerCell, iters = iters,
         dims = dims)
       hierLearns.incrementAndGet()
-      val out = artifactPath(spark, "hier", key)
       import spark.implicits._
       (model.coarse.map { case (c, v) => (c, 0, v) } ++
         model.fine.flatMap { case (c, cells) =>
           cells.map { case (fid, v) => (c, fid, v) } })
-        .toDF("ccid", "fid", "v").coalesce(1).write.mode("overwrite").parquet(out)
-      out
-    }))
+        .toDF("ccid", "fid", "v").coalesce(1).write.parquet(out)
+    }
     hierLoaded.getOrElseUpdate(path, {
       val rows = spark.read.parquet(path).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
@@ -175,8 +152,6 @@ object CentroidArtifact {
     })
   }
 
-  private val adaptivePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val adaptiveLoaded = scala.collection.concurrent.TrieMap
     .empty[String, (Long, HierarchicalIvf.HierModel)]
 
@@ -203,9 +178,9 @@ object CentroidArtifact {
       vecCol: String, kCoarse: Int, kfOf: Long => Int, iters: Int = 2,
       dims: Int = 64): (Long, HierarchicalIvf.HierModel) = {
     val src = s"$dir/embeddings.parquet"
-    val key = s"${spark.sparkContext.applicationId}|$src|${corpusStamp(spark, src)}" +
+    val key = s"${spark.sparkContext.applicationId}|$src|${Artifacts.corpusStamp(spark, src)}" +
       s"|hier-ad|$tag|kc=$kCoarse|it=$iters|d=$dims"
-    val path = adaptivePaths.synchronized(adaptivePaths.getOrElseUpdate(key, {
+    val path = Artifacts.materialize(spark, "hierad", key) { out =>
       val c = corpus
       val n = c.count()
       val kf = kfOf(n)
@@ -214,16 +189,14 @@ object CentroidArtifact {
         sampleRate = IvfIndex.governedLearnRate(n,
           IvfIndex.governedLearnBase(kCoarse * kf)))
       hierLearns.incrementAndGet()
-      val out = artifactPath(spark, "hierad", key)
       import spark.implicits._
       ((-1, -1, Seq(n.toDouble)) +:
         (model.coarse.map { case (cc, v) => (cc, 0, v) } ++
           model.fine.flatMap { case (cc, cells) =>
             cells.map { case (fid, v) => (cc, fid, v) }
           }))
-        .toDF("ccid", "fid", "v").coalesce(1).write.mode("overwrite").parquet(out)
-      out
-    }))
+        .toDF("ccid", "fid", "v").coalesce(1).write.parquet(out)
+    }
     adaptiveLoaded.getOrElseUpdate(path, {
       val rows = spark.read.parquet(path).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))

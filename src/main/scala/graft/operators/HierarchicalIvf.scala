@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{NearestCell, NearestCellRouted}
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

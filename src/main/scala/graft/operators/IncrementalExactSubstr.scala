@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalExactSubstr {
 
-  import ExactSubstr.{Width, runsFromMatches, windowPositions}
+  import ExactSubstr.runsFromMatches
 
   /** The (doc_id, pos, h) window rows under BOTH layouts, one
     * tombstone table governing both copies; df counts DISTINCT docs

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
 final case class PostingIndex(tables: Seq[(String, String)], idCol: String,
     key: String, distinctIds: Boolean = false) {
 
-  private def name(prefix: String, suffix: String = tables.head._1) =
+  private def name(prefix: String, suffix: String) =
     s"${prefix}_$suffix"
 
   /** Write `rows` as every table of the index, each bucketed on its key. */

@@ -16,8 +16,6 @@ import org.apache.spark.sql.SparkSession
   */
 object TokenizerArtifact {
 
-  private val paths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private val loaded =
     scala.collection.concurrent.TrieMap.empty[String, Seq[BpeMerges.Merge]]
   private val learns = new java.util.concurrent.atomic.AtomicLong
@@ -33,20 +31,15 @@ object TokenizerArtifact {
     val src = s"$dir/documents.parquet"
     val key = s"${spark.sparkContext.applicationId}|$src|" +
       s"${Artifacts.corpusStamp(spark, src)}|bpe|r=$rounds"
-    // single-flight (the documentClusters rule): concurrent suites
-    // sharing the session must not race two learnings onto the same
-    // deterministic output path
-    val path = paths.synchronized(paths.getOrElseUpdate(key, {
+    val path = Artifacts.materialize(spark, "bpe", key) { out =>
       val merges = BpeMerges.learn(table(spark, dir, "documents"),
         "text", rounds)
       learns.incrementAndGet()
-      val out = Artifacts.path(spark, "bpe", key)
       import spark.implicits._
       merges.map(m => (m.round, m.lhs, m.rhs, m.count))
         .toDF("round", "lhs", "rhs", "count")
-        .coalesce(1).write.mode("overwrite").parquet(out)
-      out
-    }))
+        .coalesce(1).write.parquet(out)
+    }
     loaded.getOrElseUpdate(path,
       spark.read.parquet(path).collect()
         .map(r => BpeMerges.Merge(r.getInt(0), r.getString(1),

@@ -5,7 +5,7 @@ import org.apache.avro.hadoop.io.AvroSerialization
 import org.apache.avro.mapred.AvroKey
 import org.apache.avro.mapreduce.{AvroJob, AvroKeyInputFormat, AvroKeyOutputFormat}
 import org.apache.hadoop.io.NullWritable
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Avro container-file leg of the conversion matrix (SURVEY §2.1 /

@@ -36,7 +36,6 @@ object SchemaInference {
   private val BIT_INT = 8L
   private val BIT_DATE64 = 16L
   private val BIT_DATE32 = 32L
-  private val BIT_UTF8 = 64L
 
   /** Read a CSV with every column typed Utf8 (the reference's raw
     * record view). Headerless naming matches arrow: `column_1..n`.

@@ -44,6 +44,15 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("the spark.graft.* conf keys in src/main are exactly the known seven") {
+    // a new knob is a change to this list, never an unnoticed literal
+    val keys = sources.flatMap { case (_, text) =>
+      """"spark\.graft\.(\w+)""".r.findAllMatchIn(text).map(_.group(1))
+    }.distinct.sorted
+    assert(keys === Seq("artifactDir", "artifactScope", "capturePlans", "checkpointDir",
+      "probeBroadcastLimit", "saturationMaxDroppedFrac", "tombstoneBroadcastLimit"))
+  }
+
   // ---------------------------------------------------------------
   // Reachability from the roots
   // ---------------------------------------------------------------
@@ -152,7 +161,6 @@ class SourceGuardSpec extends AnyFunSuite {
     val media = "media stub pipeline steps (resize, feature join-back)"
     Map(
       "Artifacts.gc" -> "the artifact store's only reclamation path (stale stamps, race losers, orphans); run between pipeline runs, not inside an entry",
-      "Artifacts.markerScope" -> "owner-scope reader of Artifacts.gc",
       "CentroidArtifact.learnCount" -> probe,
       "CentroidArtifact.pqLearnCount" -> probe,
       "CentroidArtifact.hierLearnCount" -> probe,

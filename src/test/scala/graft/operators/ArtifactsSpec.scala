@@ -11,6 +11,13 @@ import org.apache.spark.sql.functions._
 class ArtifactsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A foreign driver's artifact at `p`, committed under `key`; the
+    * served version dir.
+    */
+  private def plant(p: String, key: String): String =
+    Artifacts.commitManifest(spark, p, key)(graft.sources.Layout.writeClustered(
+      Seq((9L, "z")).toDF("doc_id", "text"), _, Seq("doc_id")))
+
   test("materializedClustered builds once per corpus stamp and serves from the scan") {
     val dir = tmpDir("artifacts_fixture")
     Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
@@ -66,102 +73,51 @@ class ArtifactsSpec extends SparkSpec {
     assert(call().count() === 1L && calls === 2)
   }
 
-  test("two racing commits land one consistent artifact (atomic rename)") {
+  test("two racing commits land one consistent artifact") {
     // simulates two DRIVERS sharing spark.graft.artifactDir: both
-    // build the same deterministic path concurrently via the
-    // cross-driver commit (bypassing the in-JVM single-flight memo).
-    // Exactly one rename wins; the loser discards its temp and serves
-    // the winner; a reader never sees a partial artifact.
-    // nanoTime-unique: a prior session's committed artifact at a fixed
-    // path would make every commit a valid no-op and void the race
+    // build the same deterministic path concurrently via the manifest
+    // commit (bypassing the in-JVM single-flight memo). One exclusive
+    // manifest create wins; the loser discards its version dir and
+    // serves the winner's; a reader never sees a partial artifact.
+    // nanoTime-unique: a prior session's manifest at a fixed path
+    // would make every commit a valid no-op and void the race
     val dir = tmpDir(s"artifacts_race_${System.nanoTime()}")
     val out = dir + "/artifact_dest"
+    def commit(rows: org.apache.spark.sql.DataFrame) =
+      Artifacts.commitManifest(spark, out, "race")(
+        graft.sources.Layout.writeClustered(rows, _, Seq("doc_id")))
     val df = Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val races = (1 to 2).map(_ => Future {
-      Artifacts.commitClustered(spark, out, Seq("doc_id"))(df)
-    })
-    Await.result(Future.sequence(races), 120.seconds)
-    assert(spark.read.parquet(out).as[(Long, String)].collect().toSet ===
+    val served = Await.result(Future.sequence((1 to 2).map(_ => Future(commit(df)))),
+      120.seconds)
+    assert(served.distinct.size === 1, s"both racers must serve one version: $served")
+    assert(spark.read.parquet(served.head).as[(Long, String)].collect().toSet ===
       Set((1L, "x"), (2L, "y")), "the committed artifact must be complete")
-    assert(new java.io.File(out, "_SUCCESS").exists(),
-      "the artifact must carry the parquet job marker")
-    assert(new java.io.File(out, "_GRAFT_COMMITTED").exists(),
-      "the artifact must carry the post-rename commit marker — _SUCCESS " +
-        "alone can be visible over a partial copy on object stores")
-    val leftovers = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("_tmp_"))
-    assert(leftovers.isEmpty, s"losing temp dirs must be cleaned: ${leftovers.toSeq}")
-    // the Hadoop rename-onto-existing-dir trap: the loser's rename
-    // "succeeds" by moving its temp INSIDE the winner's artifact —
-    // the commit must detect and remove the nested copy (it is
-    // underscore-hidden from readers, but it would permanently
-    // double the artifact's storage on every race)
-    val nested = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("_tmp_"))
-    assert(nested.isEmpty,
-      s"losing build must not survive nested inside the artifact: ${nested.toSeq}")
-    // a crashed writer's marker-less leftover is replaced, not served
-    new java.io.File(out, "_SUCCESS").delete()
-    Artifacts.commitClustered(spark, out, Seq("doc_id"))(
-      Seq((9L, "z")).toDF("doc_id", "text"))
-    assert(spark.read.parquet(out).as[(Long, String)].collect().toSet ===
-      Set((9L, "z")), "a marker-less dir must be rebuilt over")
-    // a writer that crashed BETWEEN the rename and the post-rename
-    // marker stamp (dir complete, _SUCCESS present, commit marker
-    // absent) is equally uncommitted — rebuilt over, never served
-    new java.io.File(out, "_GRAFT_COMMITTED").delete()
-    Artifacts.commitClustered(spark, out, Seq("doc_id"))(
-      Seq((10L, "w")).toDF("doc_id", "text"))
-    assert(spark.read.parquet(out).as[(Long, String)].collect().toSet ===
-      Set((10L, "w")), "a dir without the post-rename marker must be rebuilt over")
-  }
-
-  test("shared scope with a FORCED rename commit is refused on object stores; manifest is the default there") {
-    // scope=shared under the rename protocol means two drivers race
-    // one path and readers trust the rename's atomicity; on s3a-style
-    // stores rename is a copy, so that combination must be rejected —
-    // but the DEFAULT commit mode on those stores is `manifest`, which
-    // never renames and is allowed
-    val prevScope = spark.conf.getOption(Artifacts.ScopeKey)
-    val prevDir = spark.conf.getOption("spark.graft.artifactDir")
-    val prevMode = spark.conf.getOption(Artifacts.CommitModeKey)
-    try {
-      spark.conf.set(Artifacts.ScopeKey, "shared")
-      spark.conf.set("spark.graft.artifactDir", "s3a://some-bucket/artifacts")
-      assert(Artifacts.commitMode(spark) === "manifest",
-        "object-store schemes must default to the manifest protocol")
-      spark.conf.set(Artifacts.CommitModeKey, "rename")
-      val e = intercept[IllegalArgumentException] {
-        Artifacts.materializedClustered(spark, "aspec_gate",
-          tmpDir("artifacts_gate"), "documents.parquet", Seq("doc_id")) {
-          fail("the gate must fire before any build"); null
-        }
-      }
-      assert(e.getMessage.contains("atomic-rename"))
-    } finally {
-      prevScope.fold(spark.conf.unset(Artifacts.ScopeKey))(
-        spark.conf.set(Artifacts.ScopeKey, _))
-      prevDir.fold(spark.conf.unset("spark.graft.artifactDir"))(
-        spark.conf.set("spark.graft.artifactDir", _))
-      prevMode.fold(spark.conf.unset(Artifacts.CommitModeKey))(
-        spark.conf.set(Artifacts.CommitModeKey, _))
-    }
+    assert(new java.io.File(served.head, "_SUCCESS").exists(),
+      "the served version must carry the parquet job marker")
+    val versions = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.contains("__v_")).toSeq
+    assert(versions === Seq(new org.apache.hadoop.fs.Path(served.head).getName),
+      s"the losing version dir must be discarded: $versions")
+    // a manifest naming a version that lost its job marker (a crashed
+    // or reaped build) resolves to absent: rebuilt over, never served
+    new java.io.File(served.head, "_SUCCESS").delete()
+    val rebuilt = commit(Seq((9L, "z")).toDF("doc_id", "text"))
+    assert(rebuilt != served.head)
+    assert(spark.read.parquet(rebuilt).as[(Long, String)].collect().toSet ===
+      Set((9L, "z")), "a dangling manifest must be rebuilt over")
   }
 
   test("manifest commit: readers resolve only complete versions — a mid-copy dir is invisible") {
-    // the object-store protocol, forced on local fs: data lands in an
-    // immutable uniquely-named dir, a one-file manifest names it, and
-    // a reader NEVER lists the deterministic path itself — so the
-    // partial state a non-atomic rename would expose (files appearing
-    // one by one) cannot be observed through the manifest
-    val prevMode = spark.conf.getOption(Artifacts.CommitModeKey)
+    // data lands in an immutable uniquely-named dir, a one-file
+    // manifest names it, and a reader NEVER lists the deterministic
+    // path itself — so the partial state a non-atomic copy would
+    // expose (files appearing one by one) cannot be observed
     val prevScope = spark.conf.getOption(Artifacts.ScopeKey)
     try {
-      spark.conf.set(Artifacts.CommitModeKey, "manifest")
-      spark.conf.set(Artifacts.ScopeKey, "shared") // allowed under manifest
+      spark.conf.set(Artifacts.ScopeKey, "shared")
       val dir = tmpDir(s"artifacts_mf_${System.nanoTime()}")
       Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
         .write.mode("overwrite").parquet(dir + "/documents.parquet")
@@ -211,57 +167,48 @@ class ArtifactsSpec extends SparkSpec {
       fs.delete(mfPath, false)
       fs.delete(new org.apache.hadoop.fs.Path(artBase, vdirs.head), true)
     } finally {
-      prevMode.fold(spark.conf.unset(Artifacts.CommitModeKey))(
-        spark.conf.set(Artifacts.CommitModeKey, _))
       prevScope.fold(spark.conf.unset(Artifacts.ScopeKey))(
         spark.conf.set(Artifacts.ScopeKey, _))
     }
   }
 
   test("manifest commit: gc reaps unreferenced race-loser versions and stale manifests") {
-    val prevMode = spark.conf.getOption(Artifacts.CommitModeKey)
-    try {
-      spark.conf.set(Artifacts.CommitModeKey, "manifest")
-      val dir = tmpDir(s"artifacts_mfgc_${System.nanoTime()}")
-      def call() = Artifacts.materializedClustered(spark, "mfgc", dir,
-        "documents.parquet", Seq("doc_id")) {
-        spark.read.parquet(dir + "/documents.parquet")
-      }
-      // corpus v1 → manifest M1 + dir V1; corpus v2 → M2 + V2
-      Seq((1L, "a")).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(dir + "/documents.parquet")
-      val v1 = call().inputFiles.head.replaceAll("/[^/]*$", "")
-      Thread.sleep(1100)
-      Seq((2L, "b")).toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(dir + "/documents.parquet")
-      val v2 = call().inputFiles.head.replaceAll("/[^/]*$", "")
-      assert(v1 != v2)
-      val artBase = Artifacts.artifactBase(spark)
-      val fs = new org.apache.hadoop.fs.Path(artBase)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // an unreferenced OLD race-loser version of the current artifact
-      val loser = new org.apache.hadoop.fs.Path(artBase,
-        new org.apache.hadoop.fs.Path(v2).getName.split("__v_").head + "__v_loser")
-      fs.mkdirs(loser)
-      fs.setTimes(loser, System.currentTimeMillis() - 7200000L, -1)
-      val deleted = Artifacts.gc(spark,
-        live = Seq(("mfgc", dir, "documents.parquet")),
-        keepStamps = 0, graceMs = 60000L)
-      def gone(p: String) = !fs.exists(new org.apache.hadoop.fs.Path(p))
-      assert(gone(v1), s"stale-stamp version dir must be pruned (deleted: $deleted)")
-      assert(gone(v1.replaceAll("__v_.*$", "") + ".manifest"),
-        "the stale stamp's manifest must be pruned with it")
-      assert(gone(loser.toString), "an old unreferenced race-loser must be pruned")
-      assert(!gone(v2), "the current version must survive")
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-        v2.replaceAll("__v_.*$", "") + ".manifest")),
-        "the current manifest must survive")
-      // serving still works from the intact memo/manifest
-      assert(call().as[(Long, String)].collect().toSet === Set((2L, "b")))
-    } finally {
-      prevMode.fold(spark.conf.unset(Artifacts.CommitModeKey))(
-        spark.conf.set(Artifacts.CommitModeKey, _))
+    val dir = tmpDir(s"artifacts_mfgc_${System.nanoTime()}")
+    def call() = Artifacts.materializedClustered(spark, "mfgc", dir,
+      "documents.parquet", Seq("doc_id")) {
+      spark.read.parquet(dir + "/documents.parquet")
     }
+    // corpus v1 → manifest M1 + dir V1; corpus v2 → M2 + V2
+    Seq((1L, "a")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(dir + "/documents.parquet")
+    val v1 = call().inputFiles.head.replaceAll("/[^/]*$", "")
+    Thread.sleep(1100)
+    Seq((2L, "b")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(dir + "/documents.parquet")
+    val v2 = call().inputFiles.head.replaceAll("/[^/]*$", "")
+    assert(v1 != v2)
+    val artBase = Artifacts.artifactBase(spark)
+    val fs = new org.apache.hadoop.fs.Path(artBase)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // an unreferenced OLD race-loser version of the current artifact
+    val loser = new org.apache.hadoop.fs.Path(artBase,
+      new org.apache.hadoop.fs.Path(v2).getName.split("__v_").head + "__v_loser")
+    fs.mkdirs(loser)
+    fs.setTimes(loser, System.currentTimeMillis() - 7200000L, -1)
+    val deleted = Artifacts.gc(spark,
+      live = Seq(("mfgc", dir, "documents.parquet")),
+      keepStamps = 0, graceMs = 60000L)
+    def gone(p: String) = !fs.exists(new org.apache.hadoop.fs.Path(p))
+    assert(gone(v1), s"stale-stamp version dir must be pruned (deleted: $deleted)")
+    assert(gone(v1.replaceAll("__v_.*$", "") + ".manifest"),
+      "the stale stamp's manifest must be pruned with it")
+    assert(gone(loser.toString), "an old unreferenced race-loser must be pruned")
+    assert(!gone(v2), "the current version must survive")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(
+      v2.replaceAll("__v_.*$", "") + ".manifest")),
+      "the current manifest must survive")
+    // serving still works from the intact memo/manifest
+    assert(call().as[(Long, String)].collect().toSet === Set((2L, "b")))
   }
 
   test("gc orphan TTL: a dead application's artifacts age out; young foreigners survive") {
@@ -282,12 +229,9 @@ class ArtifactsSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def foreignDir(name: String, scopeName: String, ageMs: Long): String = {
       val p = artBase.stripSuffix("/") + "/" + name
-      Artifacts.commitClustered(spark, p, Seq("doc_id"),
-        key = s"gcspec4|$scopeName|$dir|stamp-$name")(
-        Seq((9L, "z")).toDF("doc_id", "text"))
-      fs.setTimes(new org.apache.hadoop.fs.Path(p),
-        System.currentTimeMillis() - ageMs, -1)
-      p
+      val served = plant(p, s"gcspec4|$scopeName|$dir|stamp-$name")
+      fs.setTimes(Artifacts.manifestFor(p), System.currentTimeMillis() - ageMs, -1)
+      served
     }
     val deadApp = foreignDir("gcspec4_deadapp1", "app-DEAD-driver", 86400000L)
     val youngApp = foreignDir("gcspec4_young001", "app-YOUNG-driver", 3600000L)
@@ -298,8 +242,9 @@ class ArtifactsSpec extends SparkSpec {
     assert(!exists(deadApp), "a foreign app's artifact past the orphan TTL is debris")
     assert(exists(youngApp), "a foreign app's artifact inside the TTL must survive")
     assert(exists(fleet), "shared-scope artifacts are the fleet's, never orphans")
-    fs.delete(new org.apache.hadoop.fs.Path(youngApp), true)
-    fs.delete(new org.apache.hadoop.fs.Path(fleet), true)
+    Seq(youngApp, fleet).foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
+    Seq("gcspec4_young001", "gcspec4_fleet001").foreach(n =>
+      fs.delete(Artifacts.manifestFor(artBase.stripSuffix("/") + "/" + n), false))
   }
 
   test("gc prunes stale stamps, keeps the current artifact, leaves in-flight temps alone") {
@@ -323,11 +268,12 @@ class ArtifactsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(dir + "/documents.parquet")
     val a2 = call().inputFiles.head.replaceAll("/[^/]*$", "")
     assert(a1 != a2 && builds === 2)
-    // an in-flight temp (young — a commit in progress) and a crashed
-    // writer's marker-less dir (old — debris)
-    val temp = new org.apache.hadoop.fs.Path(artBase, "_tmp_gcspec_feed_12ab34cd")
+    // unreferenced version dirs: a young one (a build in flight, its
+    // manifest not yet published) and an old one (a crashed writer's
+    // debris)
+    val temp = new org.apache.hadoop.fs.Path(artBase, "gcspec_feed12ab__v_inflight")
     fs.mkdirs(temp)
-    val crashed = new org.apache.hadoop.fs.Path(artBase, "gcspec_deadbeef")
+    val crashed = new org.apache.hadoop.fs.Path(artBase, "gcspec_deadbeef__v_crashed")
     fs.mkdirs(crashed)
     fs.setTimes(crashed, System.currentTimeMillis() - 7200000L, -1)
     val deleted = Artifacts.gc(spark,
@@ -336,9 +282,9 @@ class ArtifactsSpec extends SparkSpec {
     def gone(p: String) =
       !fs.exists(new org.apache.hadoop.fs.Path(p))
     assert(gone(a1), s"the stale-stamp artifact must be pruned (deleted: $deleted)")
-    assert(gone(crashed.toString), "old marker-less debris must be pruned")
+    assert(gone(crashed.toString), "an old unreferenced version dir must be pruned")
     assert(!gone(a2), "the current-stamp artifact must survive")
-    assert(fs.exists(temp), "a young in-flight temp must be left alone")
+    assert(fs.exists(temp), "a young unreferenced version dir must be left alone")
     // serving still works and did not rebuild (A2's memo entry is intact)
     assert(call().as[(Long, String)].collect().toSet === Set((2L, "b")))
     assert(builds === 2, "gc must not invalidate the current artifact")
@@ -355,7 +301,7 @@ class ArtifactsSpec extends SparkSpec {
   test("gc never reaps another driver's artifact (marker records the owner scope)") {
     // two drivers share one volume under the default app scope: their
     // same-prefix artifact names are mutually opaque hashes, so the
-    // commit marker's embedded key is what tells the sweep whose dir
+    // manifest's embedded key is what tells the sweep whose dir
     // is whose — another app's artifact must survive even when it is
     // older than this app's stale stamps
     val dir = tmpDir(s"artifacts_gc3_${System.nanoTime()}")
@@ -372,14 +318,11 @@ class ArtifactsSpec extends SparkSpec {
     call()
     // a foreign driver's committed artifact, same prefix, OLD mtime
     val artBase = Artifacts.artifactBase(spark)
-    val theirs = artBase.stripSuffix("/") + "/gcspec3_feedf00d"
-    Artifacts.commitClustered(spark, theirs, Seq("doc_id"),
-      key = s"gcspec3|app-OTHER-driver|$dir|some-old-stamp")(
-      Seq((9L, "z")).toDF("doc_id", "text"))
+    val theirsPath = artBase.stripSuffix("/") + "/gcspec3_feedf00d"
+    val theirs = plant(theirsPath, s"gcspec3|app-OTHER-driver|$dir|some-old-stamp")
     val fs = new org.apache.hadoop.fs.Path(artBase)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.setTimes(new org.apache.hadoop.fs.Path(theirs),
-      System.currentTimeMillis() - 86400000L, -1)
+    fs.setTimes(Artifacts.manifestFor(theirsPath), System.currentTimeMillis() - 86400000L, -1)
     Artifacts.gc(spark, live = Seq(("gcspec3", dir, "documents.parquet")),
       keepStamps = 0, graceMs = 60000L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(mine1)),
@@ -387,6 +330,7 @@ class ArtifactsSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(theirs)),
       "another app's artifact is not this sweep's to reap")
     fs.delete(new org.apache.hadoop.fs.Path(theirs), true)
+    fs.delete(Artifacts.manifestFor(theirsPath), false)
   }
 
   test("gc keepStamps retains a rollback margin of recent stale artifacts") {
