@@ -76,10 +76,6 @@ object GraftSession {
   private[graft] def mainCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Normalize an events frame's `ts` to session-timezone TimestampType.
     *
     * events.ts has shipped in two physical forms across testdata
@@ -133,10 +129,6 @@ object GraftSession {
       if (name == "events") normalizeEventTs(df) else df
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` works too. */
-  def registerTables(spark: SparkSession, sfDir: String): Unit =
-    tableNames.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
 }
 
 /** Per-session memo for analyzed frames (r20, VERDICT r19 item 6).

@@ -288,21 +288,8 @@ object Dedup {
     agg.select(col(idCol), concat_ws("", hexChars: _*).as("phash"))
   }
 
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming.
-    * Banding: 4 hex chars per band (16 bits); a pair within Hamming 3
-    * of 64 bits must agree on ≥1 of 4 bands (pigeonhole), so the
-    * shuffle key is (band, 4-hex-chunk) — again no O(n²).
-    */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, weighted: Boolean = false): DataFrame = {
-    val sh = if (weighted) simhashWeighted(df, idCol, textCol)
-      else simhash(df, idCol, textCol)
-    hexHashPairs(sh, idCol, "simhash", maxHamming)
-  }
-
   /** Banded Hamming pairing over an EXISTING 16-hex-char hash column —
-    * the shared kernel behind simhashPairs (text) and m5's perceptual-
-    * hash media dedup: 4 bands of 16 bits each form the shuffle key,
+    * the kernel behind m5's perceptual-hash media dedup: 4 bands of 16 bits each form the shuffle key,
     * and by pigeonhole any pair within Hamming 3 of 64 bits agrees on
     * ≥1 band, with no O(n²) stage.
     *
@@ -312,10 +299,7 @@ object Dedup {
     * pair whose ONLY agreeing bands all sit in oversized buckets is
     * missed — at corpus scale the degenerate all-zero-hash bucket
     * (trivial/short assets) is the realistic case. That is the
-    * deliberate trade (an uncapped degenerate bucket is quadratic);
-    * callers who need to see what was excluded get the census from
-    * `oversizedHashBuckets` — same inputs, tiny output — and can
-    * route those assets through exact d1-style hashing instead.
+    * deliberate trade (an uncapped degenerate bucket is quadratic).
     */
   def hexHashPairs(hashed: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
@@ -344,9 +328,10 @@ object Dedup {
     // broadcast anti-join (no window, no sort). The m5 oracle
     // replays the cap; at test SFs no bucket comes near it. The cap
     // WEAKENS the pigeonhole recall guarantee for pairs inside the
-    // dropped buckets — see the Scaladoc contract above and
-    // `oversizedHashBuckets` for the census of what was excluded.
-    val oversized = oversizedFrom(banded0, maxBucket)
+    // dropped buckets — see the Scaladoc contract above.
+    val oversized = banded0.groupBy(col("band"), col("chunk"))
+      .agg(count(lit(1)).as("bucket_n"))
+      .filter(col("bucket_n") > maxBucket)
       .select(col("band"), col("chunk"))
     val banded = banded0.join(broadcast(oversized),
       Seq("band", "chunk"), "left_anti")
@@ -363,78 +348,9 @@ object Dedup {
       .distinct()
   }
 
-  // ---------------------------------------------------------------
-  // LSH operating point: the (bands, rows) ↔ Jaccard-threshold map,
-  // and the loop back from d17's measured calibration curve.
-  // ---------------------------------------------------------------
-
-  /** The Jaccard threshold an LSH banding implicitly selects for: the
-    * candidate probability S-curve 1 − (1 − s^r)^b has its steepest
-    * rise at s* ≈ (1/b)^(1/r) (the standard MMDS approximation of the
-    * 50% crossover). Pairs well above s* are almost always candidates,
-    * pairs well below almost never — so choosing (b, r) IS choosing a
-    * dedup threshold, and at 10⁹+ docs the right point moves (more
-    * rows per band → higher s* → fewer false-positive candidates from
-    * sheer corpus size).
-    */
-  def lshOperatingPoint(bands: Int, rowsPerBand: Int): Double = {
-    require(bands > 0 && rowsPerBand > 0)
-    math.pow(1.0 / bands, 1.0 / rowsPerBand)
-  }
-
-  /** Pick the (bands, rowsPerBand) factorization of a signature width
-    * whose operating point lands closest to `targetJaccard` —
-    * deterministic (ties resolve to more bands = recall-first). This
-    * is how a pipeline retunes its index for corpus growth without
-    * changing the signature kernel: same `numHashes` minhashes, new
-    * banding, new effective threshold.
-    */
-  def chooseBanding(numHashes: Int, targetJaccard: Double): (Int, Int) = {
-    require(numHashes > 0 && targetJaccard > 0.0 && targetJaccard < 1.0)
-    val options = (1 to numHashes).filter(numHashes % _ == 0)
-      .map(b => (b, numHashes / b))
-    options.minBy { case (b, r) =>
-      (math.abs(lshOperatingPoint(b, r) - targetJaccard), -b)
-    }
-  }
-
-  /** A fully resolved LSH operating point: the banding, its implied
-    * Jaccard threshold, and — when a d17-style calibration curve is
-    * supplied — the MEASURED mean absolute estimator error (micro
-    * units) in the threshold's Jaccard decile on the caller's own
-    * corpus. The error is what the threshold is worth in practice: an
-    * operating point of 0.7 with ±0.15 measured estimator error is a
-    * very different index than one with ±0.02.
-    */
-  final case class LshOperatingPoint(bands: Int, rowsPerBand: Int,
-      threshold: Double, measuredAbsErrMicro: Option[Long])
-
-  /** Close the loop from d17's calibration: choose the banding for
-    * `targetJaccard` and annotate it with the measured estimator
-    * error at that threshold's decile from `calibrationCurve` —
-    * d17's output shape (bucket = Jaccard decile 0-10, n_pairs,
-    * mean_abs_err_micro). The curve is ≤ 11 rows by construction
-    * (one per decile), so the collect is a bounded-artifact read,
-    * never a corpus action.
-    */
-  def calibratedOperatingPoint(calibrationCurve: DataFrame,
-      numHashes: Int, targetJaccard: Double): LshOperatingPoint = {
-    val (b, r) = chooseBanding(numHashes, targetJaccard)
-    val s = lshOperatingPoint(b, r)
-    val decile = math.min(10, (s * 10).toInt)
-    val err = calibrationCurve
-      .filter(col("bucket") === decile)
-      .select(col("mean_abs_err_micro").cast("long"))
-      .collect().headOption.map(_.getLong(0))
-    LshOperatingPoint(b, r, s, err)
-  }
-
-  /** (band, chunk) rows per asset — one of the 4 16-bit band ints as
-    * the chunk key, shared by the pairing join and the census.
-    */
   /** The four 16-bit band ints of a 16-hex-char hash, parsed once per
-    * asset — shared by hexHashPairs, the oversized census, and the
-    * incremental media index (IncrementalMedia).
+    * asset — shared by hexHashPairs and the incremental media index
+    * (IncrementalMedia).
     */
   private[operators] def parseBandInts(hashed: DataFrame, idCol: String,
       hashCol: String): DataFrame =
@@ -443,29 +359,12 @@ object Dedup {
         conv(col(hashCol).substr(b * 4 + 1, 4), 16, 10)
           .cast("long").as(s"b$b")): _*)
 
+  /** (band, chunk) rows per asset — one of the 4 16-bit band ints as
+    * the chunk key, shared by the pairing join and the skew census.
+    */
   private[operators] def bandedChunks(withInts: DataFrame, idCol: String): DataFrame =
     withInts.select(
       col(idCol) +: (0 until 4).map(b => col(s"b$b")) :+
         posexplode(array((0 until 4).map(b => col(s"b$b")): _*)): _*)
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "chunk"))
-
-  private[operators] def oversizedFrom(banded: DataFrame, maxBucket: Int): DataFrame =
-    banded.groupBy(col("band"), col("chunk"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-
-  /** The buckets `hexHashPairs` DROPS under the same `maxBucket` cap —
-    * the visibility half of the skew guard's recall trade: each row is
-    * a (band, chunk) whose `bucket_n` members were excluded from
-    * pairing. Run it as a monitoring query next to the pairing job; a
-    * non-empty census means Hamming recall is no longer exact for
-    * pairs confined to these buckets (route those assets through
-    * exact fingerprint dedup instead). Same tiny partial-agg shape as
-    * the in-plan cap; output is bounded by the number of pathological
-    * buckets, not the corpus.
-    */
-  def oversizedHashBuckets(hashed: DataFrame, idCol: String,
-      hashCol: String, maxBucket: Int = 10000): DataFrame =
-    oversizedFrom(bandedChunks(parseBandInts(hashed, idCol, hashCol), idCol),
-      maxBucket)
 }

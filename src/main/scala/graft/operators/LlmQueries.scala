@@ -50,8 +50,7 @@ object LlmQueries {
   // replaced, at 1/16th of the digest cost.
   /** The d2 oracle, parameterized over the LSH operating point — the
     * oracle generator and `Dedup.minhashBands` take the SAME
-    * (numHashes, bands), so a pipeline that retunes its banding for
-    * corpus growth (`Dedup.chooseBanding`) regenerates a matching
+    * (numHashes, bands), so a retuned banding regenerates a matching
     * oracle from the same universal-hash constants. The shipped d2
     * entry runs the (16, 4) default.
     */
@@ -423,27 +422,11 @@ object LlmQueries {
     calibrationFrom(docs, shSig, 16)
   }
 
-  /** The d17 kernel, parameterized over the signature width — the
-    * measurement half of `Dedup.calibratedOperatingPoint`'s loop: a
-    * pipeline that retunes (numHashes, banding) for corpus growth
-    * re-runs this curve at the new width to know what the new
-    * operating point's estimate is worth on its corpus. `numHashes`
-    * must divide 10⁶ so the per-match micro step stays an exact
-    * integer (the entry's 16 → 62 500; 8/20/25/32/40/50/64… also
-    * qualify — the micro-unit convention of SURVEY §5).
-    */
-  def minhashCalibration(docs: DataFrame, numHashes: Int = 16): DataFrame =
-    calibrationFrom(docs,
-      Checkpoints.cut(Dedup.shingleSetWithSignature(docs, "doc_id", "text",
-        numHashes = numHashes)),
-      numHashes)
-
   /** The calibration compare/rollup over a prepared (doc_id, sh,
-    * h0..h{n−1}) frame — split out so the d17 ENTRY can serve the
+    * h0..h{n−1}) frame — split out so the d17 entry can serve the
     * corpus pass from a materialized artifact (the fused shingle-set
     * + signature frame is the expensive part and is corpus-version
-    * stable; d11/d20's rule) while the width-parameterized kernel
-    * stays self-contained for retuning runs.
+    * stable; d11/d20's rule).
     */
   private def calibrationFrom(docs: DataFrame, shSig: DataFrame,
       numHashes: Int): DataFrame = {
@@ -2214,8 +2197,8 @@ object LlmQueries {
     * `Dedup.hexHashPairs` then shuffles on (band, 16-bit chunk) — by
     * pigeonhole a Hamming-≤3 pair agrees on ≥1 of 4 bands, so recall
     * at the radius is exact for pairs outside capped buckets (the
-    * oversized-bucket skew guard drops degenerate buckets; census via
-    * `Dedup.oversizedHashBuckets`) with candidates ∝ band collisions,
+    * oversized-bucket skew guard drops degenerate buckets) with
+    * candidates ∝ band collisions,
     * not n². Verify is four bit_count(xor) int ops.
     */
   def m5PhashNeardup(spark: SparkSession, dir: String): DataFrame = {

@@ -1218,8 +1218,8 @@ object PipelineQueries {
     * per-source epoch factor epochs = min(cap, target/available),
     * exact in micro-units (integer `div`; `//` in the oracle — both
     * floor on nonnegative operands, and every operand here is a
-    * count). The output IS the sampling directive p3's
-    * temperature/rate sampler consumes — mixture planning and
+    * count). The output IS the sampling directive p3's rate
+    * sampler consumes — mixture planning and
     * sampling compose as two operators, not one monolith.
     *
     * Overflow discipline: the naive `tgt_tok * 1000000 div n_tok`

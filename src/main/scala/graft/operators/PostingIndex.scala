@@ -22,10 +22,7 @@ import org.apache.spark.sql.functions._
   *     evaluated after the append would count the batch twice), then
   *     append or tombstone, then refresh the hot census — so the NEXT
   *     probe sees the batch and every key it pushed over or back under
-  *     the cap;
-  *   - the `<prefix>_hot` census is stamped with the retraction version
-  *     it was taken at, so `refreshHotIfStale` picks up a mid-stream
-  *     takedown at micro-batch cadence.
+  *     the cap.
   *
   * @param tables (table suffix, bucket key); the first table is the
   *   one the census, hot set and live reads use
@@ -76,8 +73,8 @@ final case class PostingIndex(tables: Seq[(String, String)], idCol: String,
     Tombstones.retract(spark, prefix, batch.select(col(idCol)), idCol)
 
   /** Fold the net-dead ids into every table at its own bucket key and
-    * count, and truncate the tombstone history; the hot census
-    * re-derives at the next `refreshHotIfStale`.
+    * count, and truncate the tombstone history (the live index, and so
+    * the hot census, is unchanged).
     */
   def compact(spark: SparkSession, prefix: String): Unit =
     Tombstones.compact(spark, prefix, idCol,
@@ -89,23 +86,12 @@ final case class PostingIndex(tables: Seq[(String, String)], idCol: String,
       .groupBy(col(key)).agg(count(lit(1)).as(as))
 
   /** Land the keys with df > cap at the current live index as
-    * `<prefix>_hot`, stamped with the retraction version it was taken at.
+    * `<prefix>_hot`.
     */
-  def refreshHot(spark: SparkSession, prefix: String, cap: Long): Unit = {
+  def refreshHot(spark: SparkSession, prefix: String, cap: Long): Unit =
     Bucketing.writeBucketed(
       df(live(spark, prefix), "n").filter(col("n") > cap).select(col(key)),
       s"${prefix}_hot", key, PostingIndex.HotBuckets)
-    spark.sql(s"ALTER TABLE ${prefix}_hot SET TBLPROPERTIES " +
-      s"('${PostingIndex.VersionKey}' = '${Tombstones.version(spark, prefix)}')")
-    ()
-  }
-
-  /** Re-census only when the retraction state moved since the last
-    * refresh — cheap enough for micro-batch cadence.
-    */
-  def refreshHotIfStale(spark: SparkSession, prefix: String, cap: Long): Unit =
-    if (PostingIndex.isStale(spark, s"${prefix}_hot", prefix))
-      refreshHot(spark, prefix, cap)
 
   /** What a SERVING consumer probes: live postings minus the hot set
     * (a hot key fans a probe out to every holder). Merges read the
@@ -191,11 +177,6 @@ object PostingIndex {
   /** Bucket count of every `<prefix>_hot` table (tiny by construction). */
   val HotBuckets = 8
 
-  /** Table property carrying the retraction version a hot census was
-    * taken at.
-    */
-  private val VersionKey = "graft.gone.version"
-
   /** A pair table minus every row whose `a` or `b` id is in the
     * one-column `ids` (broadcast anti-joins; the pair column order is
     * kept) — the retract merges' "delete the takedown's own rows".
@@ -207,16 +188,6 @@ object PostingIndex {
       .select(pairs.columns.toIndexedSeq.map(col): _*)
   }
 
-  /** True when `hotTable` is missing, unstamped, or stamped at a
-    * different retraction version than `prefix` currently has.
-    */
-  def isStale(spark: SparkSession, hotTable: String, prefix: String): Boolean =
-    !spark.catalog.tableExists(hotTable) || {
-      val props = spark.sql(s"SHOW TBLPROPERTIES $hotTable").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      !props.get(VersionKey).contains(Tombstones.version(spark, prefix).toString)
-    }
-
   private val fixtures =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
@@ -225,23 +196,24 @@ object PostingIndex {
 
   /** The standing bench fixture: `build` receives a table prefix
     * derived from (seed, application, dir), creates the index tables
-    * under it and returns the old-artifact frame, which is landed as
-    * parquet and force-read ONCE per key — timed runs then price only
-    * per-batch work, and two sf dirs benched in one session can never
-    * pair one dir's artifact with the other's tables.
+    * under it and returns the old-artifact frame, which is landed
+    * through the artifact store (one build per key) and force-read
+    * ONCE per key — timed runs then price only per-batch work, and two
+    * sf dirs benched in one session can never pair one dir's artifact
+    * with the other's tables.
     */
   def fixture(spark: SparkSession, dir: String, seed: String)(
       build: String => DataFrame): (String, DataFrame) = {
     val memoKey = s"$seed|${spark.sparkContext.applicationId}|$dir"
     val prefix = seed + "_" + java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(memoKey).toLong & 0xffffffffL)
-    val old = fixtures.synchronized(fixtures.getOrElseUpdate(memoKey, {
-      val out = Artifacts.path(spark, s"${seed}_old", memoKey)
-      build(prefix).write.mode("overwrite").parquet(out)
-      val back = spark.read.parquet(out)
+    val old = fixtures.getOrElseUpdate(memoKey, {
+      val served = Artifacts.materialize(spark, s"${seed}_old", memoKey)(
+        out => build(prefix).write.parquet(out))
+      val back = spark.read.parquet(served)
       back.count() // pay file listing + footer reads here, not in a timed run
       back
-    }))
+    })
     (prefix, old)
   }
 }

@@ -39,29 +39,6 @@ object Sampling {
         .otherwise(lit("test")))
   }
 
-  /** Temperature-based mixture rates (the multilingual-mix standard):
-    * stratum s with n_s rows gets sampling weight p_s ∝ n_s^(1/T), so
-    * T = 1 reproduces natural proportions and T > 1 upweights small
-    * strata (n^(1/T) flattens). Returns per-stratum keep RATES that
-    * deliver ~`targetRows` total when fed to `stratifiedSample`.
-    * One count pass (partial-agg groupBy over few strata) + a
-    * driver-side map of k entries — the standard two-pass shape.
-    */
-  def temperatureRates(df: DataFrame, strataCol: String, temperature: Double,
-      targetRows: Long): Map[String, Double] = {
-    require(temperature > 0, "temperature must be positive")
-    // null strata can never match stratifiedSample's equality test, so
-    // rating them would silently shift the mixture — drop them here
-    val counts = df.filter(col(strataCol).isNotNull)
-      .groupBy(col(strataCol).cast("string")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val weights = counts.map { case (s, n) => s -> math.pow(n.toDouble, 1.0 / temperature) }
-    val z = weights.values.sum
-    counts.map { case (s, n) =>
-      s -> math.min(1.0, targetRows * (weights(s) / z) / n.toDouble)
-    }
-  }
-
   /** Deterministic training-order materialization: every row gets a
     * (shard, position) in a reproducible pseudo-random global order.
     * Shard = leading `shardChars` hex chars of md5 (16^chars shards —

@@ -35,16 +35,6 @@ object Tombstones {
   private def goneTable(prefix: String): String =
     s"${prefix}_gone".toLowerCase(java.util.Locale.ROOT)
 
-  /** Change stamp of the retraction state: the `_gone` row count
-    * (append-only, so every retract/resurrect moves it; `compact`
-    * resets it, and the one spurious hot re-census that follows
-    * reproduces the identical result). The maintained hot censuses
-    * subscribe to it ([[PostingIndex.refreshHotIfStale]]).
-    */
-  def version(spark: SparkSession, prefix: String): Long =
-    if (!spark.catalog.tableExists(goneTable(prefix))) 0L
-    else spark.table(goneTable(prefix)).count()
-
   /** Net-dead ids — None when no retraction has ever happened. */
   def deadIds(spark: SparkSession, prefix: String,
       idCol: String): Option[DataFrame] =

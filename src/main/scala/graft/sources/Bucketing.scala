@@ -70,13 +70,6 @@ object Bucketing {
       .bucketSpec.map(_.numBuckets)
       .getOrElse(throw new IllegalArgumentException(s"$table is not bucketed"))
 
-  /** Join two same-bucketed tables on their bucket key — shuffle-free
-    * when both sides were written with the same bucket count.
-    */
-  def bucketedJoin(spark: org.apache.spark.sql.SparkSession,
-      leftTable: String, rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
-
   /** `rows` minus those whose `idCol` is already present in `table` —
     * the replay-idempotency probe every incremental family's append
     * runs (PostingIndex, IncrementalDedup): presence is checked against

@@ -83,7 +83,10 @@ object Csv2ParquetCli {
   }
 
   def main(args: Array[String]): Unit = {
-    val (opts, pos) = parseArgs(args.toList, ConvertOptions(), Nil)
+    val (opts, pos) =
+      try parseArgs(args.toList, ConvertOptions(), Nil)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"error: ${e.getMessage}\n\n$usage"); sys.exit(2) }
     val (input, output) = pos match {
       case in :: out :: Nil => (in, out)
       case in :: Nil if opts.dry => (in, "")
@@ -94,19 +97,15 @@ object Csv2ParquetCli {
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).isDefined
     val spark = GraftSession.local()
     try {
-      // Schema resolution happens once; `dry` short-circuits inside
-      // convert before any write (`main.rs:161-168` ordering).
+      // Schema resolution happens once, shared by the print and the
+      // write; `dry` exits before any write (`main.rs:161-168` ordering).
+      lazy val schema = CsvToParquet.resolveSchema(spark, input, opts)
       if (opts.printSchema || opts.dry) {
-        val schema = CsvToParquet.resolveSchema(spark, input, opts)
         System.err.println("Schema:")
         println(ArrowSchemaJson.render(schema))
       }
-      if (!opts.dry) {
-        // reference parity: <PARQUET> is a single FILE (`main.rs:178`)
-        CsvToParquet.convertToSingleFile(spark, input, output,
-          opts.copy(printSchema = false, dry = false))
-        ()
-      }
+      // reference parity: <PARQUET> is a single FILE (`main.rs:178`)
+      if (!opts.dry) CsvToParquet.writeSingleFile(spark, input, output, opts)(schema)
     } finally if (!preExisting) spark.stop() // embedded callers keep their session
   }
 }

@@ -36,7 +36,14 @@ final case class ConvertOptions(
     // output — `col=value/` directories the reader prunes BEFORE
     // touching any file. The storage-layout half of what makes a
     // 100 TB table queryable; directory form only.
-    partitionBy: Seq[String] = Nil)
+    partitionBy: Seq[String] = Nil) {
+  require(compression.forall(ConvertOptions.compressions),
+    s"unknown compression '${compression.mkString}'")
+  require(encoding.forall(ConvertOptions.encodings),
+    s"unknown encoding '${encoding.mkString}'")
+  require(statistics.forall(ConvertOptions.statisticsModes),
+    s"unknown statistics mode '${statistics.mkString}'")
+}
 
 object ConvertOptions {
   val compressions: Set[String] =
@@ -134,13 +141,6 @@ object CsvToParquet {
     */
   def convert(spark: SparkSession, csvPath: String, outPath: String,
       opts: ConvertOptions = ConvertOptions()): Conversion = {
-    require(opts.compression.forall(ConvertOptions.compressions),
-      s"unknown compression ${opts.compression}")
-    require(opts.encoding.forall(ConvertOptions.encodings),
-      s"unknown encoding ${opts.encoding}")
-    require(opts.statistics.forall(ConvertOptions.statisticsModes),
-      s"unknown statistics mode ${opts.statistics}")
-
     val schema = resolveSchema(spark, csvPath, opts)
     val json = ArrowSchemaJson.render(schema)
     if (opts.dry) return Conversion(schema, json, None)
@@ -160,35 +160,12 @@ object CsvToParquet {
     Conversion(schema, json, Some(spark.read.parquet(outPath)))
   }
 
-  /** The interchange direction OUT, CSV form: parquet → (compressed)
-    * CSV with the reference's header/delimiter conventions — with
-    * `exportJsonl` this closes the conversion matrix (csv ⇄ parquet,
-    * jsonl ⇄ parquet). Narrow map per split; optional shuffle-free
-    * coalesce. Only flat schemas are CSV-representable — nested
-    * columns fail fast here rather than as a mid-write task error.
-    */
-  def exportCsv(df: DataFrame, outPath: String, header: Boolean = true,
-      delimiter: Char = ',', compression: Option[String] = None,
-      partitions: Option[Int] = None): Unit = {
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType => ST}
-    val nested = df.schema.fields.filter(_.dataType match {
-      case _: ST | _: ArrayType | _: MapType => true
-      case _ => false
-    })
-    require(nested.isEmpty,
-      s"CSV cannot represent nested columns: ${nested.map(_.name).mkString(", ")}")
-    val coalesced = partitions.fold(df)(n => df.coalesce(n))
-    val w = coalesced.write.mode("overwrite")
-      .option("header", header.toString)
-      .option("delimiter", delimiter.toString)
-    compression.fold(w)(c => w.option("compression", c)).csv(outPath)
-  }
-
   /** Reference-compatible single-FILE output (`csv2parquet in.csv
     * out.parquet` writes one file, `main.rs:178`): convert into a
     * scratch directory with one output partition and move the part
     * file to the exact target path. The CLI uses this; the library
-    * API keeps the directory form, which is what scales.
+    * API keeps the directory form, which is what scales. `dry`
+    * writes nothing.
     *
     * All file operations go through Hadoop's FileSystem resolved
     * from the OUTPUT path, and the scratch directory is staged
@@ -197,7 +174,16 @@ object CsvToParquet {
     * local-disk round-trip.
     */
   def convertToSingleFile(spark: SparkSession, csvPath: String, outFile: String,
-      opts: ConvertOptions = ConvertOptions()): Conversion = {
+      opts: ConvertOptions = ConvertOptions()): Unit =
+    if (!opts.dry) writeSingleFile(spark, csvPath, outFile, opts)(
+      resolveSchema(spark, csvPath, opts))
+
+  /** The single-file write for a schema the caller resolved (the CLI
+    * resolves once for `--print-schema` and the write); `schema` is
+    * evaluated after the option checks.
+    */
+  private[sources] def writeSingleFile(spark: SparkSession, csvPath: String,
+      outFile: String, opts: ConvertOptions)(schema: => ArrowSchema): Unit = {
     require(opts.partitionBy.isEmpty,
       "partitioned output needs the directory form (a single file has no partition dirs)")
     import org.apache.hadoop.fs.Path
@@ -206,13 +192,11 @@ object CsvToParquet {
     val parent = Option(outP.getParent).getOrElse(new Path("."))
     val tmpP = new Path(parent, s".graft_c2p_${java.util.UUID.randomUUID()}")
     try {
-      val schema = resolveSchema(spark, csvPath, opts)
-      if (opts.dry) return Conversion(schema, ArrowSchemaJson.render(schema), None)
-      val header = opts.header.getOrElse(true)
-      val df = readTyped(spark, csvPath, schema.toSpark, header, opts.delimiter,
-        opts.multiLine, opts.permissive)
+      val s = schema
+      val df = readTyped(spark, csvPath, s.toSpark, opts.header.getOrElse(true),
+        opts.delimiter, opts.multiLine, opts.permissive)
         .coalesce(1)
-      convertFrame(df, schema, tmpP.toString, opts)
+      convertFrame(df, s, tmpP.toString, opts)
       val part = fs.globStatus(new Path(tmpP, "part-*.parquet")).head.getPath
       // atomic overwrite: FileContext.rename(OVERWRITE) replaces the
       // target in ONE metadata op (HDFS and local both implement it),
@@ -223,7 +207,6 @@ object CsvToParquet {
         fs.getUri, spark.sparkContext.hadoopConfiguration)
       fc.rename(fs.makeQualified(part), fs.makeQualified(outP),
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      Conversion(schema, ArrowSchemaJson.render(schema), Some(spark.read.parquet(outFile)))
     } finally {
       fs.delete(tmpP, true); ()
     }

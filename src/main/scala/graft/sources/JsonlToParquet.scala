@@ -34,19 +34,4 @@ object JsonlToParquet {
     val back = spark.read.parquet(outPath)
     JsonlResult(back, back.schema)
   }
-
-  /** The EXPORT direction: parquet-curated data out as (optionally
-    * gzip'd) JSONL for tokenizer/training pipelines that consume text
-    * lines, not parquet. A narrow map — each parquet split serializes
-    * its rows independently, no shuffle; `partitions` coalesces for
-    * fewer/larger output files (coalesce, not repartition: merging
-    * needs no shuffle either).
-    */
-  def exportJsonl(df: DataFrame, outPath: String,
-      compression: Option[String] = None,
-      partitions: Option[Int] = None): Unit = {
-    val coalesced = partitions.fold(df)(n => df.coalesce(n))
-    val w = coalesced.write.mode("overwrite")
-    compression.fold(w)(c => w.option("compression", c)).json(outPath)
-  }
 }

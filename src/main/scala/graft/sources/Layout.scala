@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 
 /** Data-layout control for write-time clustering (SURVEY.md §2.8).
@@ -39,59 +39,6 @@ object Layout {
   def writeClustered(df: DataFrame, out: String, clusterCols: Seq[String],
       partitions: Option[Int] = None): Unit =
     clusteredWriter(df, clusterCols, partitions).mode("overwrite").parquet(out)
-
-  /** Morton (Z-order) bit interleave of two pre-scaled non-negative
-    * `bits`-bit values: a's bit i lands at position 2i, b's at 2i+1.
-    * Pure codegen'd integer Column algebra (2·bits shift/or terms).
-    */
-  def mortonInterleave(a: Column, b: Column, bits: Int): Column =
-    (0 until bits).map { i =>
-      shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i)
-        .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }.reduce(_ bitwiseOR _)
-
-  /** Min-max scale a numeric column onto [0, 2^bits): rank-free linear
-    * scaling — one pass over nothing (min/max are inputs), monotone,
-    * so z-curve locality follows value locality. The double cast means
-    * values with |v| > 2^53 can collapse adjacent keys into one z-cell
-    * — a layout-quality (clustering granularity) caveat only, never a
-    * correctness one: rows are complete either way.
-    */
-  def scaleToBits(c: Column, mn: Long, mx: Long, bits: Int): Column =
-    least(lit((1L << bits) - 1),
-      floor((c.cast("double") - mn) / (mx - mn + 1).toDouble * (1L << bits))
-        .cast("long"))
-
-  /** Z-ORDERED writer: multi-dimensional clustering. Range-clustering
-    * on one key (`clusteredWriter`) gives perfect row-group pruning on
-    * that key and NONE on any other; interleaving the bits of two keys
-    * puts rows close in BOTH dimensions into the same row groups, so
-    * point/range probes on EITHER column skip most of the table — the
-    * layout a 100 TB table scanned by more than one predicate column
-    * wants. Cost: one tiny min/max agg (4 longs to the driver, for
-    * scaling) + the same single range shuffle + local sort as any
-    * clustered write.
-    */
-  def zOrderedWriter(df: DataFrame, colA: String, colB: String,
-      bits: Int = 16, partitions: Option[Int] = None): DataFrameWriter[Row] = {
-    val mm = df.agg(min(col(colA)).cast("long"), max(col(colA)).cast("long"),
-      min(col(colB)).cast("long"), max(col(colB)).cast("long")).head()
-    // empty input or an all-null cluster column has no min/max — there
-    // is nothing to cluster BY, so degrade to a plain (unclustered)
-    // write instead of NPEing on the null stats row
-    if ((0 until 4).exists(mm.isNullAt)) return df.write
-    val (aMn, aMx, bMn, bMx) = (mm.getLong(0), mm.getLong(1), mm.getLong(2), mm.getLong(3))
-    val z = mortonInterleave(
-      scaleToBits(col(colA), aMn, aMx, bits),
-      scaleToBits(col(colB), bMn, bMx, bits), bits)
-    val zed = df.withColumn("__z", z)
-    val ranged = partitions match {
-      case Some(n) => zed.repartitionByRange(n, col("__z"))
-      case None => zed.repartitionByRange(col("__z"))
-    }
-    // the trailing projection drops __z without disturbing the sort
-    ranged.sortWithinPartitions(col("__z")).drop("__z").write
-  }
 
   /** Compact a small-files parquet dataset (the debris a micro-batch
     * sink accumulates: thousands of KB-sized files whose open/footer

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupStateTimeout
 
 /** Typed event row for the stateful operators (TimestampType µs). */
 final case class UserEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
@@ -88,9 +88,4 @@ object StatefulStats {
           }
       }
   }
-
-  /** Streaming form: update-mode sink required (one updated row per
-    * key per trigger).
-    */
-  val outputMode: OutputMode = OutputMode.Update()
 }

@@ -299,15 +299,6 @@ class PlanSpec extends SparkSpec {
       s"d17 must read the shingle/signature artifact:\n${serve.take(2000)}")
   }
 
-  test("sql entry: registered views answer spark.sql") {
-    GraftSession.registerTables(spark, sf0)
-    val n = spark.sql(
-      """SELECT count(*) AS n FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderstatus = 'F'""".stripMargin).head().getLong(0)
-    assert(n > 0)
-  }
-
   test("array_dot is callable from SQL via GraftExtensions") {
     val v = spark.sql(
       "SELECT array_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")

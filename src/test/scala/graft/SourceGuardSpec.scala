@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards on the program sources: every main and the CLI run the one
   * engine `GraftSession.local` builds, no literal path points into
   * the checkout the engine was built from (production or spec code),
-  * and every top-level `src/main` definition is reached from a root —
-  * code only its own spec runs is deleted or moved to the tests.
+  * and every top-level `src/main` definition, and every public member
+  * of a reached one, is reached from a root — code only its own spec
+  * runs is deleted or moved to the tests.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -121,8 +122,10 @@ class SourceGuardSpec extends AnyFunSuite {
     * session extensions, every object with a `main`, and every
     * top-level name perfbench's harness calls.
     */
+  private lazy val perfbench: String =
+    scalaFiles("perfbench/src").map(f => stripComments(f._2)).mkString("\n")
+
   private lazy val roots: Set[String] = {
-    val perfbench = scalaFiles("perfbench/src").map(f => stripComments(f._2)).mkString("\n")
     Set("SparkEntry", "Bench", "GraftExtensions", "Csv2ParquetCli") ++
       units.filter(u => """\bdef main\s*\(""".r.findFirstIn(u.text).isDefined).map(_.name) ++
       ident.findAllIn(perfbench).filter(names).toSet
@@ -154,11 +157,6 @@ class SourceGuardSpec extends AnyFunSuite {
     val ivf = "IVF ingest-lifecycle policy hook over the lifecycle perfbench drives"
     val hier = "two-level IVF lifecycle, the twin of the IncrementalIvf lifecycle perfbench drives"
     val family = "persisting ingest lifecycle (PostingIndex.admit/retract), the twin of the IncrementalPassages one perfbench drives"
-    val convOut = "export direction of the conversion (parquet → text), library API the CLI does not expose"
-    val zorder = "two-column z-order layout writer, the multi-predicate twin of clusteredWriter"
-    val lsh = "LSH operating-point tuning: banding ↔ Jaccard threshold, measured on d17's curve"
-    val census = "census of what a skew cap drops, run as a monitoring query next to the pairing job"
-    val media = "media stub pipeline steps (resize, feature join-back)"
     Map(
       "Artifacts.gc" -> "the artifact store's only reclamation path (stale stamps, race losers, orphans); run between pipeline runs, not inside an entry",
       "CentroidArtifact.learnCount" -> probe,
@@ -184,47 +182,25 @@ class SourceGuardSpec extends AnyFunSuite {
       "IncrementalMedia.admitBatch" -> family,
       "IncrementalMedia.retractBatch" -> family,
       "IncrementalMedia.crossingBuckets" -> "admit decision surface of IncrementalMedia.admitBatch",
-      "IncrementalMedia.probeBatch" -> "serving probe of the media lifecycle (IncrementalMedia.admitBatch)",
-      "CsvStreamToParquet" -> "continuous CSV → Parquet conversion, the streaming form of the CLI's job",
-      "CsvToParquet.exportCsv" -> convOut,
-      "JsonlToParquet.exportJsonl" -> convOut,
-      "ArrowType.fromSpark" -> "Spark → reference-JSON schema printing for frames that were not inferred",
-      "ArrowSchemaJson.renderSpark" -> "Spark → reference-JSON schema printing for frames that were not inferred",
-      "Layout.zOrderedWriter" -> zorder,
-      "Layout.mortonInterleave" -> zorder,
-      "Layout.scaleToBits" -> zorder,
-      "Bucketing.bucketedJoin" -> "read side of writeBucketed: the shuffle-free join of two bucketed tables",
-      "RuntimeFilters" -> "opt-in bloom runtime filters for fact scans below Spark's 10 GB application-side floor",
-      "GraftSession.registerTables" -> "SQL entry: the tables as temp views for spark.sql",
-      "Dedup.simhashPairs" -> "text simhash pairing over the hexHashPairs kernel",
-      "Dedup.lshOperatingPoint" -> lsh,
-      "Dedup.chooseBanding" -> lsh,
-      "Dedup.calibratedOperatingPoint" -> lsh,
-      "LlmQueries.minhashCalibration" -> lsh,
-      "Dedup.oversizedHashBuckets" -> census,
-      "Similarity.governedDroppedCensus" -> census,
-      "Similarity.saturatedCensus" -> census,
-      "Similarity.requireNotSaturated" -> census,
-      "DedupClusters.retractBatch" -> "takedown side of the cluster lifecycle, the reverse of mergeBatch",
-      "ExactSubstr.scrubRepeats" -> "one-shot keep-first scrub (derive repeats, then cut); the entries cut from the repeat artifact",
-      "Multimodal.resizeStub" -> media,
-      "Multimodal.resizeAll" -> media,
-      "Multimodal.withFeatures" -> media,
-      "PageRank.ranks" -> "regular-graph PageRank, one join fewer per iteration than ranksByDegree",
-      "RangeJoin.trailingWindowJoin" -> "matched-pairs form of the trailing-window join trailingWindowCount counts",
-      "Sampling.temperatureRates" -> "temperature mixture rates that feed stratifiedSample")
+      "IncrementalMedia.probeBatch" -> "serving probe of the media lifecycle (IncrementalMedia.admitBatch)")
   }
 
-  private val memberDef = """(?m)^  (?:(?:private(?:\[\w+\])?|final|override|implicit)\s+)*def\s+(\w+)\b""".r
+  private val memberDef =
+    """(?m)^  ((?:(?:private|protected)(?:\[\w+\])?\s+|(?:final|override|implicit|lazy)\s+)*)(?:def|val)\s+(\w+)\b""".r
 
-  /** Each `def name` member of `u` (two-space indent) with its body. */
-  private def members(u: TopDef): Seq[(String, String)] = {
+  /** A `def`/`val` member of a top-level unit: name, modifiers, body. */
+  private case class Member(name: String, mods: String, body: String) {
+    def public: Boolean = """\b(private|protected|override)\b""".r.findFirstIn(mods).isEmpty
+  }
+
+  /** Each `def`/`val` member of `u` (two-space indent) with its body. */
+  private def members(u: TopDef): Seq[Member] = {
     val ms = memberDef.findAllMatchIn(u.text).toSeq
     ms.map { m =>
       val from = u.text.indexOf('\n', m.end) + 1
       val end = """(?m)^(?:  [^\s}]|\S)""".r.findFirstMatchIn(u.text.substring(from))
         .map(from + _.start).getOrElse(u.text.length)
-      m.group(1) -> u.text.substring(m.start, end)
+      Member(m.group(2), m.group(1), u.text.substring(m.start, end))
     }
   }
 
@@ -243,8 +219,8 @@ class SourceGuardSpec extends AnyFunSuite {
       e <- memberEntries
       Array(o, d) = e.split('.')
       u <- units if u.name == o
-      (name, body) <- members(u) if name == d
-    } yield e -> body).groupMap(_._1)(_._2)
+      m <- members(u) if m.name == d
+    } yield e -> m.body).groupMap(_._1)(_._2)
     // reached text, minus the allow-listed members' own bodies
     val live = units.filter(u => reached(u.name))
       .map(u => u -> bodies.values.flatten.foldLeft(u.text)(_.replace(_, "")))
@@ -267,5 +243,24 @@ class SourceGuardSpec extends AnyFunSuite {
         s"$e: reached from a root, drop it from the allow-list"
     }
     assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("every public member of a reached src/main unit is reached or allow-listed") {
+    // bare-name rule: a member is reached when its name occurs in a
+    // reached unit outside its own body, or anywhere in perfbench/src
+    val live = units.filter(u => reached(u.name))
+    val uses = (live.map(_.text) :+ perfbench).flatMap(ident.findAllIn)
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val unreached = for {
+      u <- live
+      m <- members(u)
+      if m.public && m.name != "main" && m.name != "apply"
+      if !allowList.contains(s"${u.name}.${m.name}")
+      if uses.getOrElse(m.name, 0) <= ident.findAllIn(m.body).count(_ == m.name)
+    } yield s"${u.name}.${m.name}"
+    assert(unreached.isEmpty,
+      s"public members no root reaches (delete them with their spec, " +
+        s"make them private, or allow-list them with a reason):\n" +
+        unreached.distinct.mkString("\n"))
   }
 }

@@ -66,35 +66,6 @@ class ExactSubstrSpec extends SparkSpec {
       (6L, 7L, 18L, 23L, 20L)), s"unexpected: $out")
   }
 
-  test("scrub keeps the FIRST occurrence and cuts the rest, exact to the token") {
-    val out = ExactSubstr.scrubRepeats(fixture)
-      .select($"doc_id", $"n_tok", $"kept")
-      .as[(Long, Long, Seq[String])].collect().map(r => r._1 -> r).toMap
-    // doc 1 (lowest id holding S) keeps everything; doc 2 loses S
-    assert(out(1L)._3 === toks("u", 5) ++ S, "lowest id keeps its copy")
-    assert(out(2L)._3 === toks("v", 9), s"doc 2's S must be cut: ${out(2L)._3}")
-    // doc 3's 8-token coincidence is below minTok — untouched
-    assert(out(3L)._3 === toks("w", 4) ++ S.take(8))
-    // doc 4 keeps T; doc 5 loses it
-    assert(out(4L)._3 === T ++ toks("z", 3))
-    assert(out(5L)._3 === toks("y", 2), s"doc 5's T must be cut: ${out(5L)._3}")
-    assert(out.values.forall(r => r._2 === fixture.filter($"doc_id" === r._1)
-      .select(size($"tk")).as[Int].head().toLong), "n_tok reports the pre-cut length")
-  }
-
-  test("scrub composes keep-one across 3+ holders (pairwise lowest-keeps)") {
-    // S held by docs 1 < 2 < 8: only doc 1 keeps it
-    val crowd = Seq(
-      (1L, toks("u", 5) ++ S),
-      (2L, toks("v", 9) ++ S),
-      (8L, S ++ toks("x", 6))).toDF("doc_id", "tk")
-    val kept = ExactSubstr.scrubRepeats(crowd)
-      .select($"doc_id", $"kept").as[(Long, Seq[String])].collect().toMap
-    assert(kept(1L) === toks("u", 5) ++ S)
-    assert(kept(2L) === toks("v", 9))
-    assert(kept(8L) === toks("x", 6))
-  }
-
   test("matches plan: hash self-join, hot cap broadcast, no cartesian") {
     val plan = ExactSubstr.maximalRepeats(fixture)
       .queryExecution.executedPlan.toString

@@ -136,25 +136,6 @@ class MediaRankingSpec extends SparkSpec {
     }
   }
 
-  test("phash oversized-bucket census: dropped buckets are visible to callers") {
-    val degenerate = (1L to 5L).map(i => (i, "template template template template"))
-    val healthy = Seq((100L, "a genuinely unique document body here"),
-      (101L, "a genuinely unique document body here"))
-    val hashed = Dedup.phashChar(
-      (degenerate ++ healthy).toDF("doc_id", "text"), "doc_id", "text", 4)
-    // the five identical assets fill all four of their bands past a
-    // cap of 3 — the census must report exactly those four buckets
-    // with bucket_n = 5, and nothing from the healthy pair
-    val census = Dedup.oversizedHashBuckets(hashed, "doc_id", "phash",
-        maxBucket = 3)
-      .as[(Int, Long, Long)].collect().toSeq
-    assert(census.length === 4, s"got $census")
-    assert(census.map(_._1).sorted === (0 until 4))
-    assert(census.forall(_._3 === 5L))
-    // default cap: nothing oversized on this corpus — empty census
-    assert(Dedup.oversizedHashBuckets(hashed, "doc_id", "phash").count() === 0L)
-  }
-
   test("phash banding: no cartesian in the plan — candidates come from a band equi-join") {
     val plan = LlmQueries.m5PhashNeardup(spark, sf0)
       .queryExecution.executedPlan.toString

@@ -53,27 +53,6 @@ class MultimodalSpec extends SparkSpec {
     assert(feats.count() === docs.count()) // content scanned only now
   }
 
-  test("resize: deterministic, shrinks payload toward the target box, tags the result") {
-    val media = Multimodal.fromText(spark, docs.limit(100), "doc_id", "text", "image")
-    val small = Multimodal.resizeAll(media, 32, 32, targetPartitionBytes = 64 << 10)
-    val byId = small.collect().map(r => r.id -> r).toMap
-    val origById = media.collect().map(r => r.id -> r).toMap
-    assert(byId.keySet === origById.keySet)
-    byId.values.foreach { m =>
-      assert(m.tags("resized") === "32x32")
-      assert(m.content.length <= origById(m.id).content.length)
-      assert(m.content.nonEmpty)
-    }
-    // deterministic content byte-for-byte
-    val again = Multimodal.resizeAll(media, 32, 32, targetPartitionBytes = 64 << 10)
-      .collect().map(r => r.id -> r).toMap
-    assert(byId.forall { case (id, m) => m.content.sameElements(again(id).content) })
-    // a target at least as large as the source keeps every byte (k = 1)
-    val noop = Multimodal.resizeAll(media, 4096, 4096).collect().map(r => r.id -> r).toMap
-    assert(noop.forall { case (id, m) =>
-      m.content.sameElements(origById(id).content) })
-  }
-
   test("frame sampling fans each object out to ceil(nFrames/stride) references") {
     val media = Multimodal.fromText(spark, docs.limit(100), "doc_id", "text", "video")
     val feats = Multimodal.decodeAll(media, targetPartitionBytes = 64 << 10)
@@ -86,14 +65,6 @@ class MultimodalSpec extends SparkSpec {
       assert(rs.map(_.frameIdx).sorted.toSeq === (0 until nFrames(id) by 25))
     }
     intercept[IllegalArgumentException](Multimodal.frameSample(feats, 0))
-  }
-
-  test("features join back broadcast-safe") {
-    val media = Multimodal.fromText(spark, docs.limit(50), "doc_id", "text", "audio")
-    val feats = Multimodal.decodeAll(media)
-    val joined = Multimodal.withFeatures(docs.limit(50), feats, "doc_id")
-    assert(joined.count() === 50)
-    assert(joined.filter($"nFrames" >= 1).count() === 50)
   }
 
   test("m4 shard plan: per-source shards are contiguous and conserve bytes") {

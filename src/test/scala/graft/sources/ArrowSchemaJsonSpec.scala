@@ -53,14 +53,6 @@ class ArrowSchemaJsonSpec extends AnyFunSuite {
     assert(ArrowSchemaJson.parse(json) === schema)
   }
 
-  test("spark schema renders to arrow vocabulary") {
-    val json = ArrowSchemaJson.renderSpark(StructType(Seq(
-      StructField("s", StringType), StructField("i", LongType),
-      StructField("f", DoubleType), StructField("day", DateType))))
-    assert(json.contains("\"Utf8\"") && json.contains("\"Int64\"") &&
-      json.contains("\"Float64\"") && json.contains("\"Date32\""))
-  }
-
   test("unknown type is rejected") {
     intercept[IllegalArgumentException] {
       ArrowSchemaJson.parse("""{"fields":[{"name":"x","data_type":"Frob","nullable":true}]}""")

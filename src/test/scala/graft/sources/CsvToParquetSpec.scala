@@ -188,6 +188,64 @@ class CsvToParquetSpec extends SparkSpec {
     }
   }
 
+  test("ConvertOptions validates itself: the CLI parser rejects a bogus mode too") {
+    intercept[IllegalArgumentException](ConvertOptions(statistics = Some("bogus")))
+    intercept[IllegalArgumentException](ConvertOptions(compression = Some("bogus")))
+    intercept[IllegalArgumentException](ConvertOptions(encoding = Some("bogus")))
+    intercept[IllegalArgumentException] {
+      Csv2ParquetCli.parseArgs(List("--statistics", "bogus", "a.csv", "b.parquet"),
+        ConvertOptions(), Nil)
+    }
+    val (opts, pos) = Csv2ParquetCli.parseArgs(
+      List("--statistics", "page", "a.csv", "b.parquet"), ConvertOptions(), Nil)
+    assert(opts.statistics === Some("page") && pos === List("a.csv", "b.parquet"))
+  }
+
+  /** Jobs `body` starts on this thread, counted by a listener; a
+    * sentinel job in another group flushes the (FIFO) listener bus.
+    */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => n.incrementAndGet(); ()
+          case "flush" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("flush", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      n.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("CLI -p infers the schema once and reads no output back") {
+    val csv = writeCsv("once.csv", 200)
+    val dir = tmpDir("conv")
+    val schema = CsvToParquet.resolveSchema(spark, csv, ConvertOptions())
+    val infer = jobsOf("infer")(CsvToParquet.resolveSchema(spark, csv, ConvertOptions()))
+    val write = jobsOf("write")(
+      CsvToParquet.writeSingleFile(spark, csv, s"$dir/once_w.parquet", ConvertOptions())(schema))
+    val plain = jobsOf("plain")(Csv2ParquetCli.main(Array(csv, s"$dir/once_a.parquet")))
+    val printed = Console.withOut(new java.io.ByteArrayOutputStream()) {
+      jobsOf("print")(Csv2ParquetCli.main(Array("-p", csv, s"$dir/once_b.parquet")))
+    }
+    assert(infer >= 1 && write >= 1)
+    // one inference scan, the write, nothing else: -p adds no job
+    assert(plain === infer + write, s"infer $infer, write $write")
+    assert(printed === plain)
+    assert(spark.read.parquet(s"$dir/once_b.parquet").count() === 200)
+  }
+
   test("CLI: --dry prints reference-format schema, writes nothing") {
     val csv = writeCsv("cli.csv", 20)
     val outBuf = new java.io.ByteArrayOutputStream()
@@ -221,24 +279,6 @@ class CsvToParquetSpec extends SparkSpec {
     CsvToParquet.convertToSingleFile(spark, writeCsv("re2.csv", 25), out)
     assert(new java.io.File(out).isFile, "still a single file")
     assert(spark.read.parquet(out).count() === 25)
-  }
-
-  test("export: parquet back out as CSV, lossless roundtrip, nested schemas fail fast") {
-    import spark.implicits._
-    val li = graft.GraftSession.table(spark, sf0, "lineitem")
-      .select($"l_orderkey", $"l_quantity", $"l_returnflag").orderBy($"l_orderkey")
-    val out = tmpDir("conv") + "/csv_export"
-    CsvToParquet.exportCsv(li, out, compression = Some("gzip"), partitions = Some(1))
-    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv.gz"))
-    assert(files.length === 1, "coalesce(1) + gzip must land one compressed file")
-    val back = spark.read.option("header", "true")
-      .schema(li.schema).csv(out)
-    assert(back.count() === li.count())
-    // lossless: every (key, qty, flag) row survives the text roundtrip
-    assert(back.exceptAll(li).isEmpty && li.exceptAll(back).isEmpty)
-    // nested columns cannot be represented — fail at call time, not mid-write
-    val nested = Seq((1L, Seq("a", "b"))).toDF("id", "arr")
-    intercept[IllegalArgumentException](CsvToParquet.exportCsv(nested, out + "_n"))
   }
 
   test("RFC4180 quoting: commas, doubled quotes, newlines in fields") {

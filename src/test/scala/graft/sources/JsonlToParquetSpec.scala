@@ -5,27 +5,6 @@ import java.nio.file.{Files, Paths}
 
 class JsonlToParquetSpec extends SparkSpec {
 
-  test("export: parquet-curated docs out as gzip JSONL, lossless roundtrip, no shuffle") {
-    import org.apache.spark.sql.functions.col
-    val docs = graft.GraftSession.table(spark, sf0, "documents")
-      .select(col("doc_id"), col("source"), col("text"))
-    val out = tmpDir("jsonl") + "/export"
-    JsonlToParquet.exportJsonl(docs, out, compression = Some("gzip"),
-      partitions = Some(2))
-    val files = new java.io.File(out).listFiles()
-      .filter(f => f.getName.startsWith("part-")).map(_.getName)
-    // coalesce only ever DECREASES partition count (the one-split test
-    // input stays one file); the cap and the codec suffix are the contract
-    assert(files.nonEmpty && files.length <= 2 && files.forall(_.endsWith(".json.gz")))
-    val back = spark.read.json(out)
-    assert(back.count() == docs.count())
-    assert(back.select("doc_id", "source", "text").except(docs).count() == 0 &&
-      docs.except(back.select("doc_id", "source", "text")).count() == 0)
-    // a narrow map: the export plan must contain no Exchange
-    val plan = docs.coalesce(2).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), "export must not shuffle")
-  }
-
   test("nested JSONL (structs, arrays) round-trips through parquet") {
     val p = Paths.get(tmpDir("jsonl"), "nested.jsonl")
     Files.writeString(p,

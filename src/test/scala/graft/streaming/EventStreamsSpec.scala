@@ -91,7 +91,7 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[UserEvent]
     val stream = mem.toDS().withWatermark("ts", "0 seconds")
     val q = StatefulStats.runningUserStats(stream, horizonDays = 30)
-      .writeStream.outputMode(StatefulStats.outputMode)
+      .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
       .format("memory").queryName("ustats_evict").start()
     try {
       // day 0: user 1's only event (100 cents)
