@@ -1,9 +1,12 @@
 package graft.operators
 
 import java.util.concurrent.{CompletableFuture, CompletionException}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The artifact store every corpus-version-keyed materialized
   * artifact (cluster tables, pair tables, IVF centroids, PQ codebooks,
@@ -48,22 +51,25 @@ private[operators] object Artifacts {
     spark.conf.get("spark.graft.artifactDir",
       s"${graft.GraftSession.scratchRoot}/artifacts")
 
+  /** `<prefix>_<32-bit hash of key>`: a deterministic name. */
+  private[operators] def name(prefix: String, key: String): String =
+    prefix + "_" + java.lang.Long.toHexString(
+      scala.util.hashing.MurmurHash3.stringHash(key).toLong & 0xffffffffL)
+
   /** Deterministic artifact location under `spark.graft.artifactDir`
     * (any Hadoop-writable path on a cluster; local scratch default).
     */
   def path(spark: SparkSession, prefix: String, key: String): String =
-    artifactBase(spark).stripSuffix("/") + "/" + prefix + "_" +
-      java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(key).toLong & 0xffffffffL)
+    artifactBase(spark).stripSuffix("/") + "/" + name(prefix, key)
 
-  /** Artifact sharing scope: `app` (default) keys every artifact by
-    * applicationId — each driver builds and serves its own copies, so
-    * a code change between sessions can never serve a stale artifact
-    * built by older logic (the safe mode while the engine itself is
-    * evolving). `shared` drops the applicationId: drivers sharing
-    * `spark.graft.artifactDir` REUSE each other's artifacts for the
-    * same (prefix, dir, corpus stamp) — the production mode for a
-    * fleet running ONE engine version, on any filesystem.
+  /** Artifact sharing scope: `app` (default) keys every artifact
+    * (clustered tables and learned models alike) by applicationId —
+    * each driver builds and serves its own copies, so a code change
+    * between sessions can never serve a stale artifact built by older
+    * logic (the safe mode while the engine itself is evolving).
+    * `shared` drops it: drivers sharing `spark.graft.artifactDir`
+    * REUSE each other's artifacts for the same [[key]] — the
+    * production mode for a fleet running ONE engine version.
     */
   val ScopeKey = "spark.graft.artifactScope"
 
@@ -71,9 +77,19 @@ private[operators] object Artifacts {
     if (spark.conf.get(ScopeKey, "app") == "shared") "shared"
     else spark.sparkContext.applicationId
 
+  /** The ONE artifact key, `prefix|scope|dir|corpus stamp[|config]`:
+    * every family keys through here, so the scope reaches every
+    * artifact and `gc` reads owner and corpus version back off the
+    * first four fields of any manifest. `config` names a learned
+    * model's learning parameters; clustered artifacts have none.
+    */
+  private[operators] def key(spark: SparkSession, prefix: String, dir: String,
+      stampSrc: String, config: String = ""): String =
+    s"$prefix|${scope(spark)}|$dir|${corpusStamp(spark, s"$dir/$stampSrc")}" +
+      (if (config.isEmpty) "" else s"|$config")
+
   /** Served dir per (prefix, key): one in-flight build per key. */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), CompletableFuture[String]]
+  private val memo = TrieMap.empty[(String, String), CompletableFuture[String]]
 
   /** Analyzed-frame memo for immutable (content-stamped) artifact
     * paths — metadata reuse only; see the load site below. Keyed on
@@ -82,52 +98,64 @@ private[operators] object Artifacts {
     */
   private val loadedFrames = new graft.SessionMemo[String, DataFrame]
 
+  /** Decoded learned models per served path (immutable per key). */
+  private val decoded = TrieMap.empty[String, Any]
+
+  private val builds = TrieMap.empty[String, AtomicLong]
+
+  /** Builds [[materialize]] has run per prefix in this JVM (manifest
+    * misses) — the spec hook pinning that a warm call builds nothing.
+    */
+  def buildCount(prefix: String): Long = builds.get(prefix).fold(0L)(_.get)
+
   /** Once-per-(process, artifact-version) post-load validation guard
     * for [[materializedClustered]]'s `validate` hook — keyed by the
     * stamped key, so a new corpus version re-validates and a repeated
     * serve call never re-pays the check (width integrity belongs at
-    * artifact LOAD, not per query run). One future per key: the build
-    * memo's winner-installs / losers-join pattern, so validation runs
-    * exactly once per key and every concurrent loader waits for it.
+    * artifact LOAD, not per query run), run through [[once]].
     */
-  private val validated =
-    new java.util.concurrent.ConcurrentHashMap[String, CompletableFuture[Unit]]()
+  private val validated = TrieMap.empty[String, CompletableFuture[Unit]]
 
-  /** Join a winner's future rethrowing the ORIGINAL failure: a bare
-    * `join()` wraps it in CompletionException, so a loser racing a
-    * failed build/validation would observe a different exception TYPE
-    * than the winner (callers intercepting the saturation gate's
-    * IllegalStateException must see it on both sides of the race).
+  /** At most one `compute` per key of `futures`: the winner installs
+    * its future and every concurrent caller joins it. A failure
+    * removes the future, so a later call retries, and a joiner
+    * rethrows the ORIGINAL failure: a bare `join()` wraps it in
+    * CompletionException, so a loser racing a failed build/validation
+    * would observe a different exception TYPE than the winner
+    * (callers intercepting the saturation gate's IllegalStateException
+    * must see it on both sides of the race).
     */
-  private def joinRaw[T](f: CompletableFuture[T]): T =
-    try f.join()
-    catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+  private def once[K, T](futures: TrieMap[K, CompletableFuture[T]], k: K)(compute: => T): T = {
+    val fresh = new CompletableFuture[T]()
+    futures.putIfAbsent(k, fresh) match {
+      case Some(winner) =>
+        try winner.join()
+        catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+      case None =>
+        try { val v = compute; fresh.complete(v); v }
+        catch {
+          case e: Throwable =>
+            fresh.completeExceptionally(e)
+            futures.remove(k, fresh)
+            throw e
+        }
+    }
+  }
 
   /** The one build path of the store: at most one build per
     * (prefix, key) in this JVM, committed through the manifest, and
     * the served data dir returned. `write` receives the fresh version
     * dir and lands the artifact there. Same-key callers wait for the
-    * one builder; DISTINCT keys build concurrently; a failed build
-    * removes its latch so a later call can retry.
+    * one builder ([[once]]); DISTINCT keys build concurrently.
     */
   private[operators] def materialize(spark: SparkSession, prefix: String,
-      key: String)(write: String => Unit): String = {
-    val fresh = new CompletableFuture[String]()
-    memo.putIfAbsent((prefix, key), fresh) match {
-      case Some(inFlight) => joinRaw(inFlight)
-      case None =>
-        try {
-          val served = commitManifest(spark, path(spark, prefix, key), key)(write)
-          fresh.complete(served)
-          served
-        } catch {
-          case e: Throwable =>
-            fresh.completeExceptionally(e)
-            memo.remove((prefix, key), fresh)
-            throw e
-        }
+      key: String)(write: String => Unit): String =
+    once(memo, (prefix, key)) {
+      commitManifest(spark, path(spark, prefix, key), key) { out =>
+        write(out)
+        builds.getOrElseUpdate(prefix, new AtomicLong).incrementAndGet()
+      }
     }
-  }
 
   /** The materialize-once discipline every corpus-version artifact
     * (document clusters, media clusters, passage pairs) follows:
@@ -142,8 +170,8 @@ private[operators] object Artifacts {
   def materializedClustered(spark: SparkSession, prefix: String, dir: String,
       stampSrc: String, clusterCols: Seq[String],
       validate: DataFrame => Unit = _ => ())(frame: => DataFrame): DataFrame = {
-    val key = s"$prefix|${scope(spark)}|$dir|${corpusStamp(spark, s"$dir/$stampSrc")}"
-    val p = materialize(spark, prefix, key)(
+    val k = key(spark, prefix, dir, stampSrc)
+    val p = materialize(spark, prefix, k)(
       graft.sources.Layout.writeClustered(frame, _, clusterCols))
     // artifact paths are content-stamped (immutable per key), so the
     // ANALYZED frame memoizes per (session, path) — re-resolving the
@@ -151,25 +179,29 @@ private[operators] object Artifacts {
     // was driver-side wall on every artifact consumer's every run;
     // the scan still reads the artifact parquet per action
     val out = loadedFrames.getOrCompute(spark, p)(spark.read.parquet(p))
-    // complete the future only AFTER validate succeeds, and REMOVE it
-    // on failure: a thrown validation must re-run on the next load,
-    // or a broken artifact would be cached as "validated" and served
-    // unchecked for the process's lifetime (the checkWidth=false
-    // serve paths trust this guard). A concurrent loser joins the
-    // winner's future — it never reads past a mid-flight validate.
-    val vf = new CompletableFuture[Unit]()
-    validated.putIfAbsent(key, vf) match {
-      case null =>
-        try { validate(out); vf.complete(()) }
-        catch {
-          case e: Throwable =>
-            vf.completeExceptionally(e)
-            validated.remove(key, vf)
-            throw e
-        }
-      case winner => joinRaw(winner)
-    }
+    // a thrown validation must re-run on the next load, or a broken
+    // artifact would be cached as "validated" and served unchecked
+    // for the process's lifetime (the checkWidth=false serve paths
+    // trust this guard); a concurrent loser never reads past a
+    // mid-flight validate
+    once(validated, k)(validate(out))
     out
+  }
+
+  /** The one learned-model loader (IVF centroids, PQ codebooks,
+    * two-level models, BPE merges): learn `frame` at most once per
+    * [[key]] (the corpus at `dir/stampSrc` plus the learning
+    * `config`), land it as ONE parquet file through [[materialize]],
+    * and `decode` its collected rows once per served path. Cold and
+    * warm calls both serve the parquet roundtrip (learned values are
+    * 6-decimal rounded, so it is exact). A warm call pays one
+    * [[corpusStamp]] and two memo hits.
+    */
+  private[operators] def learned[T](spark: SparkSession, prefix: String, dir: String,
+      stampSrc: String, config: String)(frame: => DataFrame)(decode: Array[Row] => T): T = {
+    val p = materialize(spark, prefix, key(spark, prefix, dir, stampSrc, config))(
+      frame.coalesce(1).write.parquet(_))
+    decoded.getOrElseUpdate(p, decode(spark.read.parquet(p).collect())).asInstanceOf[T]
   }
 
   // ---------------------------------------------------------------
@@ -228,39 +260,36 @@ private[operators] object Artifacts {
     * names, or build a new immutable version dir with `write`, publish
     * the manifest naming it with an exclusive create, and serve
     * whatever the manifest names afterwards. The manifest records the
-    * artifact's full key (`prefix|scope|dir|stamp` for clustered
-    * artifacts), so `gc` can read ownership back. Returns the served
-    * data dir.
+    * artifact's full [[key]], so `gc` can read owner and corpus
+    * version back. Returns the served data dir.
     */
   private[operators] def commitManifest(spark: SparkSession, out: String,
       key: String)(write: String => Unit): String = {
     val dest = new Path(out)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    resolveManifest(fs, dest) match {
-      case Some(dir) => return dir.toString
-      case None =>
-    }
-    val ver = new Path(parentOf(dest),
-      s"${dest.getName}__v_${java.util.UUID.randomUUID().toString.take(8)}")
-    write(ver.toString)
-    if (!fs.exists(new Path(ver, "_SUCCESS")))
-      throw new java.io.IOException(
-        s"artifact build failed: $ver lacks its parquet job marker")
-    // read-repair: a manifest that still resolves to absent (it names
-    // a dir without `_SUCCESS`, or a writer crashed mid-create) is
-    // debris — delete it so the exclusive create can land
-    val mf = manifestFor(out)
-    if (fs.exists(mf) && awaitManifest(fs, dest).isEmpty) fs.delete(mf, false)
-    try {
-      val mfOut = fs.create(mf, false)
-      try mfOut.write(s"${ver.getName}\n$key".getBytes("UTF-8"))
-      finally mfOut.close()
-    } catch { case _: FileAlreadyExistsException => () }
-    // serve what the manifest names: our version if the create won,
-    // the winner's if it lost (then ours is discarded)
-    val served = awaitManifest(fs, dest).getOrElse(ver)
-    if (served.getName != ver.getName) fs.delete(ver, true)
-    served.toString
+    resolveManifest(fs, dest).getOrElse {
+      val ver = new Path(parentOf(dest),
+        s"${dest.getName}__v_${java.util.UUID.randomUUID().toString.take(8)}")
+      write(ver.toString)
+      if (!fs.exists(new Path(ver, "_SUCCESS")))
+        throw new java.io.IOException(
+          s"artifact build failed: $ver lacks its parquet job marker")
+      // read-repair: a manifest still resolving to absent (it names a
+      // dir without `_SUCCESS`, or a writer crashed mid-create) is
+      // debris — delete it so the exclusive create can land
+      val mf = manifestFor(out)
+      if (fs.exists(mf) && awaitManifest(fs, dest).isEmpty) fs.delete(mf, false)
+      try {
+        val mfOut = fs.create(mf, false)
+        try mfOut.write(s"${ver.getName}\n$key".getBytes("UTF-8"))
+        finally mfOut.close()
+      } catch { case _: FileAlreadyExistsException => () }
+      // serve what the manifest names: our version if the create won,
+      // the winner's if it lost (then ours is discarded)
+      val served = awaitManifest(fs, dest).getOrElse(ver)
+      if (served.getName != ver.getName) fs.delete(ver, true)
+      served
+    }.toString
   }
 
   /** Retention sweep over `spark.graft.artifactDir` — the garbage
@@ -271,18 +300,21 @@ private[operators] object Artifacts {
     * daily-rebuilt corpus leaks its artifact volume daily).
     *
     * `live` lists the artifact families this deployment serves, as
-    * the same (prefix, dir, stampSrc) triples their builders pass to
-    * `materializedClustered` — the sweep recomputes each CURRENT key
-    * under the session's scope and never touches those manifests. For
-    * every other manifest or version dir under a managed prefix:
+    * the same (prefix, dir, stampSrc) triples their builders key by
+    * — the sweep recomputes each CURRENT `prefix|scope|dir|stamp`
+    * under the session's scope and never touches a manifest whose
+    * recorded key starts with one (every config of a current learned
+    * model included). For every other manifest or version dir under a
+    * managed prefix:
     *
     *   - non-current manifests OWNED BY THIS SCOPE (the manifest
     *     records its key's scope — under `app` scope another driver's
     *     same-prefix artifacts are hash-opaque but their manifests
-    *     say whose they are, and they are NOT ours to reap): the
-    *     `keepStamps` most recently modified survive (rollback margin
-    *     — and protection for a racer committing under a stamp this
-    *     sweep predates), the rest are deleted with the dir they name;
+    *     say whose they are, and they are NOT ours to reap): those of
+    *     the `keepStamps` most recently modified keys survive, every
+    *     config of a key together (rollback margin — and protection
+    *     for a racer committing under a stamp this sweep predates),
+    *     the rest are deleted with the dir they name;
     *   - another application's manifests older than `orphanTtlMs`
     *     (a dead application never sweeps its own leavings;
     *     `shared`-scope artifacts are the fleet's, never orphans);
@@ -309,9 +341,8 @@ private[operators] object Artifacts {
     val base = fs.makeQualified(unqualified)
     if (!fs.exists(base)) return Nil
     val scope = this.scope(spark)
-    val liveNames = live.map { case (prefix, dir, stampSrc) =>
-      val stamp = corpusStamp(spark, s"$dir/$stampSrc")
-      new Path(path(spark, prefix, s"$prefix|$scope|$dir|$stamp")).getName
+    val liveKeys = live.map { case (prefix, dir, stampSrc) =>
+      key(spark, prefix, dir, stampSrc)
     }.toSet
     val managedPrefixes = live.map(_._1).toSet
     def prefixOf(name: String): String = {
@@ -323,9 +354,6 @@ private[operators] object Artifacts {
     // pads) the grace/TTL windows — the defaults (1 h grace, 7 d TTL)
     // dwarf realistic skew, but a caller tightening graceMs below
     // minutes on an object store should account for it
-    def orphan(ownerScope: Option[String], mtime: Long): Boolean =
-      ownerScope.exists(s => s != scope && s != "shared") &&
-        (System.currentTimeMillis() - mtime) > orphanTtlMs
     val now = System.currentTimeMillis()
     val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
     def reap(st: FileStatus): Unit = {
@@ -342,12 +370,6 @@ private[operators] object Artifacts {
       try (st.getModificationTime +:
         fs.listStatus(st.getPath).map(_.getModificationTime).toSeq).max
       catch { case _: java.io.IOException => st.getModificationTime }
-    def mfBase(st: FileStatus): String = st.getPath.getName.stripSuffix(".manifest")
-    def mfScope(st: FileStatus): Option[String] =
-      readManifest(fs, st.getPath).map(_._2).flatMap(_.split('|') match {
-        case parts if parts.length >= 4 => Some(parts(1))
-        case _ => None
-      })
     def reapManifest(st: FileStatus): Unit = {
       // referenced dir first, then the pointer — a crash between the
       // two leaves a dangling manifest that resolves to ABSENT
@@ -357,17 +379,21 @@ private[operators] object Artifacts {
       }
       reap(st)
     }
-    val referenced = manifests
-      .flatMap(st => readManifest(fs, st.getPath).map(_._1)).toSet
-    manifests.groupBy(st => prefixOf(mfBase(st))).foreach {
-      case (pfx, group) if managedPrefixes.contains(pfx) =>
-        val stale = group.filterNot(st => liveNames.contains(mfBase(st)))
-        stale.filter(st => mfScope(st).contains(scope))
-          .sortBy(-_.getModificationTime).drop(keepStamps).foreach(reapManifest)
-        stale.filter(st => orphan(mfScope(st), st.getModificationTime))
-          .foreach(reapManifest)
-      case _ => ()
+    val recorded = manifests.flatMap(st => readManifest(fs, st.getPath).map(st -> _))
+    val referenced = recorded.map(_._2._1).toSet
+    // each readable manifest of a managed prefix whose recorded key,
+    // up to its corpus stamp (prefix, owner scope, dir, stamp), is not
+    // a live one
+    val stale = recorded.map { case (st, (_, k)) => st -> k.split('|').toSeq.take(4) }
+      .filter { case (_, k) =>
+        k.length == 4 && managedPrefixes(k.head) && !liveKeys(k.mkString("|")) }
+    stale.filter(_._2(1) == scope).groupBy(_._2.head).values.foreach { mine =>
+      mine.groupBy(_._2).values.toSeq.sortBy(-_.map(_._1.getModificationTime).max)
+        .drop(keepStamps).flatten.foreach(t => reapManifest(t._1))
     }
+    stale.filter { case (st, k) =>
+      k(1) != scope && k(1) != "shared" && now - st.getModificationTime > orphanTtlMs
+    }.foreach(t => reapManifest(t._1))
     // unreferenced versioned dirs — race losers and crashed builds
     // (their manifest names another version or never landed); grace-
     // gated so a build racing this sweep keeps its not-yet-published

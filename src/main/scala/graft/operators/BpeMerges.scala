@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed BPE (byte-pair-encoding) merge learning — tokenizer
@@ -113,6 +113,20 @@ object BpeMerges {
       .persist()
     try learnOnVocab(v0, rounds) finally v0.unpersist()
   }
+
+  /** The merge sequence for the documents corpus at `dir` as a
+    * MATERIALIZED artifact ([[Artifacts.learned]]): learned once per
+    * (scope, corpus version, rounds), landed as (round, lhs, rhs,
+    * count) parquet — the `merges.txt` of a production tokenizer —
+    * and served to every consumer (t18's report, t19's corpus encode)
+    * instead of re-running the learning rounds.
+    */
+  def materialized(spark: SparkSession, dir: String, rounds: Int): Seq[Merge] =
+    Artifacts.learned(spark, "bpe", dir, "documents.parquet", s"r=$rounds") {
+      import spark.implicits._
+      learn(graft.GraftSession.table(spark, dir, "documents"), "text", rounds).toDF()
+    }(_.map(r => Merge(r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+      .toSeq.sortBy(_.round))
 
   /** The merge-round loop over an already-materialized (s, cnt)
     * symbol-string vocab — split out so the scaling bench can time

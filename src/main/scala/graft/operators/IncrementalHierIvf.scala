@@ -127,8 +127,7 @@ object IncrementalHierIvf {
         kCoarse = kCoarse, kFinePerCell = kFinePerCell, iters = iters,
         dims = dims)
       buildIndex(live, "vec_id", "v", next, prefix, buckets)
-      graft.sources.Bucketing.dropTableAndLocation(spark,
-        s"${prefix}_gone".toLowerCase(java.util.Locale.ROOT))
+      Tombstones.dropHistory(spark, prefix)
       Some(next)
     }
 

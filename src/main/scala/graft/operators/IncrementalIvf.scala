@@ -186,8 +186,7 @@ object IncrementalIvf {
       buildIndex(live, "vec_id", "v", next, prefix, buckets)
       // the rebuild assigned only live rows — the tombstone history
       // is folded away exactly as a compact would have
-      graft.sources.Bucketing.dropTableAndLocation(spark,
-        s"${prefix}_gone".toLowerCase(java.util.Locale.ROOT))
+      Tombstones.dropHistory(spark, prefix)
       Some(next)
     }
 
@@ -198,11 +197,9 @@ object IncrementalIvf {
     */
   def compactIfDue(spark: SparkSession, prefix: String = "graft_ivf",
       fraction: Double = 0.5): Boolean = {
-    val limit = spark.conf
-      .get(Tombstones.BroadcastLimitKey, "1000000").toLong
     val dead = Tombstones.deadIds(spark, prefix, "vec_id")
       .map(_.count()).getOrElse(0L)
-    val due = dead > 0L && dead >= (limit * fraction).toLong
+    val due = dead > 0L && dead >= (Tombstones.broadcastLimit(spark) * fraction).toLong
     if (due) compact(spark, prefix)
     due
   }

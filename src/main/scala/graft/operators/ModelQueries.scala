@@ -172,7 +172,7 @@ object ModelQueries {
     */
   def t18BpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    TokenizerArtifact.bpeMerges(spark, dir, BpeRounds)
+    BpeMerges.materialized(spark, dir, BpeRounds)
       .map(m => (m.round, m.lhs, m.rhs, m.lhs + m.rhs, m.count))
       .toDF("round", "lhs", "rhs", "merged", "pair_count")
       .orderBy(col("round"))
@@ -236,7 +236,7 @@ object ModelQueries {
     */
   def t19BpeTokenize(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val merges = TokenizerArtifact.bpeMerges(spark, dir, BpeRounds)
+    val merges = BpeMerges.materialized(spark, dir, BpeRounds)
     val vocab0 = BpeMerges.wordVocab(docs, "text")
       .select(col("word"), BpeMerges.symInit(col("word")).as("s"))
     val finalVocab = merges.foldLeft(vocab0)((v, m) =>

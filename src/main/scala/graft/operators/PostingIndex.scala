@@ -205,8 +205,7 @@ object PostingIndex {
   def fixture(spark: SparkSession, dir: String, seed: String)(
       build: String => DataFrame): (String, DataFrame) = {
     val memoKey = s"$seed|${spark.sparkContext.applicationId}|$dir"
-    val prefix = seed + "_" + java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(memoKey).toLong & 0xffffffffL)
+    val prefix = Artifacts.name(seed, memoKey)
     val old = fixtures.getOrElseUpdate(memoKey, {
       val served = Artifacts.materialize(spark, s"${seed}_old", memoKey)(
         out => build(prefix).write.parquet(out))

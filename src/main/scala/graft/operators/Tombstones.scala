@@ -32,8 +32,21 @@ object Tombstones {
     */
   val BroadcastLimitKey = "spark.graft.tombstoneBroadcastLimit"
 
+  /** The dead-set size [[BroadcastLimitKey]] sets (1,000,000 by default). */
+  private[operators] def broadcastLimit(spark: SparkSession): Long =
+    spark.conf.get(BroadcastLimitKey, "1000000").toLong
+
   private def goneTable(prefix: String): String =
     s"${prefix}_gone".toLowerCase(java.util.Locale.ROOT)
+
+  /** Drop the `<prefix>_gone` history with its managed location —
+    * once the dead rows are physically gone (a compact, or a rebuild
+    * that assigned only live rows) net-≥0 ids are live by presence,
+    * and before the first retract a prior session's stale location
+    * would fail the create.
+    */
+  private[operators] def dropHistory(spark: SparkSession, prefix: String): Unit =
+    graft.sources.Bucketing.dropTableAndLocation(spark, goneTable(prefix))
 
   /** Net-dead ids — None when no retraction has ever happened. */
   def deadIds(spark: SparkSession, prefix: String,
@@ -63,11 +76,10 @@ object Tombstones {
   private[operators] def deadSetJoin(spark: SparkSession, df: DataFrame,
       dead0: DataFrame, idCol: String, joinType: String): DataFrame = {
     val dead = Checkpoints.cut(dead0)
-    val limit = spark.conf.get(BroadcastLimitKey, "1000000").toLong
     val n = dead.count()
     if (n == 0L) {
       if (joinType == "left_anti") df else df.limit(0)
-    } else if (n <= limit) df.join(broadcast(dead), Seq(idCol), joinType)
+    } else if (n <= broadcastLimit(spark)) df.join(broadcast(dead), Seq(idCol), joinType)
     else df.join(dead, Seq(idCol), joinType)
   }
 
@@ -79,18 +91,14 @@ object Tombstones {
   def retract(spark: SparkSession, prefix: String, batchIds: DataFrame,
       idCol: String): Unit = {
     val gone = goneTable(prefix)
-    val ids = batchIds.select(col(idCol)).distinct()
-    val targets = deadIds(spark, prefix, idCol) match {
-      case Some(dead) => deadSetJoin(spark, ids, dead, idCol, "left_anti")
-      case None => ids
-    }
-    val rows = targets.withColumn("sign", lit(-1))
+    val rows = live(spark, batchIds.select(col(idCol)).distinct(), prefix, idCol)
+      .withColumn("sign", lit(-1))
     if (!spark.catalog.tableExists(gone)) {
       // first retract ever: clear any stale managed location a prior
       // session left behind, then create VIA APPEND mode — it never
       // clobbers an existing table, so two concurrent first retracts
       // cannot drop (and so resurrect) each other's tombstones
-      graft.sources.Bucketing.dropTableAndLocation(spark, gone)
+      dropHistory(spark, prefix)
       rows.write.mode("append").format("parquet").saveAsTable(gone)
     } else if (!rows.isEmpty)
       rows.write.mode("append").format("parquet").saveAsTable(gone)
@@ -174,10 +182,7 @@ object Tombstones {
             spark.sql(s"ALTER TABLE $staging RENAME TO $t")
           }
         }
-        // history now redundant: dead rows are physically gone and
-        // net-≥0 ids are live by presence
-        graft.sources.Bucketing.dropTableAndLocation(spark, goneTable(prefix))
-        ()
+        dropHistory(spark, prefix)
       }
     }
 }

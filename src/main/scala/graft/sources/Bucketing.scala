@@ -10,10 +10,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed, sorted parquet table registered in the
-    * session catalog (bucket metadata lives in the catalog, which is
-    * why this is `saveAsTable`, not a path write).
-    */
   /** True-overwrite preparation for a managed table: drop the catalog
     * entry AND its managed location — a stale location from a prior
     * session otherwise fails the next write with
@@ -40,6 +36,10 @@ object Bucketing {
     t
   }
 
+  /** Write `df` as a bucketed, sorted parquet table registered in the
+    * session catalog (bucket metadata lives in the catalog, which is
+    * why this is `saveAsTable`, not a path write).
+    */
   def writeBucketed(df: DataFrame, table: String, key: String,
       buckets: Int): Unit = {
     val t = dropTableAndLocation(df.sparkSession, table)

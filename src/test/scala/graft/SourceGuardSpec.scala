@@ -54,6 +54,21 @@ class SourceGuardSpec extends AnyFunSuite {
       "probeBroadcastLimit", "saturationMaxDroppedFrac", "tombstoneBroadcastLimit"))
   }
 
+  test("applicationId occurs in src/main only in Artifacts' scope and PostingIndex.fixture") {
+    // the artifact key is built in one place, so the artifact scope
+    // reaches every artifact; the bench fixture's catalog tables are
+    // per application by design
+    val appId = """\bapplicationId\b""".r
+    val sites = units.flatMap { u =>
+      val in = members(u).filter(m => appId.findFirstIn(m.body).isDefined)
+      val outside = appId.findAllIn(u.text).size >
+        in.map(m => appId.findAllIn(m.body).size).sum
+      in.map(m => s"${u.name}.${m.name}") ++ (if (outside) Seq(u.name) else Nil)
+    }
+    assert(sites.sorted === Seq("Artifacts.scope", "PostingIndex.fixture"),
+      "an artifact key built outside Artifacts.key: " + sites.sorted.mkString(", "))
+  }
+
   // ---------------------------------------------------------------
   // Reachability from the roots
   // ---------------------------------------------------------------
@@ -159,10 +174,7 @@ class SourceGuardSpec extends AnyFunSuite {
     val family = "persisting ingest lifecycle (PostingIndex.admit/retract), the twin of the IncrementalPassages one perfbench drives"
     Map(
       "Artifacts.gc" -> "the artifact store's only reclamation path (stale stamps, race losers, orphans); run between pipeline runs, not inside an entry",
-      "CentroidArtifact.learnCount" -> probe,
-      "CentroidArtifact.pqLearnCount" -> probe,
-      "CentroidArtifact.hierLearnCount" -> probe,
-      "TokenizerArtifact.learnCount" -> probe,
+      "Artifacts.buildCount" -> probe,
       "Checkpoints.capturedPlans" -> probe,
       "Checkpoints.clearCapturedPlans" -> probe,
       "PostingIndex.fixtureKeys" -> probe,

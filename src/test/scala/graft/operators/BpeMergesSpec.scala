@@ -160,19 +160,19 @@ class BpeMergesSpec extends SparkSpec {
   test("tokenizer artifact: learned once per corpus, warm t18/t19 calls learn nothing") {
     // cold or warm from earlier tests — force materialization once
     ModelQueries.t18BpeMerges(spark, sf0).count()
-    val before = TokenizerArtifact.learnCount
+    val before = Artifacts.buildCount("bpe")
     // warm paths: the report AND the encode side must both serve the
     // artifact instead of re-running the merge rounds
     ModelQueries.t18BpeMerges(spark, sf0).count()
     ModelQueries.t19BpeTokenize(spark, sf0).count()
-    assert(TokenizerArtifact.learnCount === before,
+    assert(Artifacts.buildCount("bpe") === before,
       "warm t18/t19 must not relearn the merge table")
     // and the artifact roundtrip is exact: the served merges equal a
     // direct learning on the same corpus
     val direct = BpeMerges.learn(
       graft.GraftSession.table(spark, sf0, "documents"), "text",
       ModelQueries.BpeRounds)
-    assert(TokenizerArtifact.bpeMerges(spark, sf0, ModelQueries.BpeRounds)
+    assert(BpeMerges.materialized(spark, sf0, ModelQueries.BpeRounds)
       === direct)
   }
 
